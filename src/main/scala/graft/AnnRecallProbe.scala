@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{AnnIndex, Similarity}
+import graft.ops.AnnIndex.{Pq, Prefix, Sq8, TwoLevel}
 
 /** ANN recall probe: measure recall@k of every approximate serving
   * path against the brute-force cosine baseline on one embeddings
@@ -20,20 +21,21 @@ import graft.ops.{AnnIndex, Similarity}
   * Paths probed:
   *  - `indexed`   — [[AnnIndex.topK]] over the persisted IVF index
   *                  (√n md5-sampled cells), nProbe swept
-  *  - `indexed_sq`— [[AnnIndex.topKSq]], the stored IVF×SQ8 read path,
-  *                  (nProbe, rerank) swept — where rerank ≥ k·probed
-  *                  candidates exist, recall equals `indexed`'s at the
-  *                  same nProbe (SQ error only reorders BELOW the
-  *                  rerank cut; the exact rerank restores the top)
-  *  - `ivf2`      — [[AnnIndex.topK2]], the PERSISTED two-level
-  *                  index (the path production serves from — the
-  *                  inline [[Similarity.topKIvf2]] is spec-pinned
-  *                  identical, so sweeping the stored probe measures
-  *                  both), (nProbeCoarse, nProbeFine) swept
-  *  - `ivf2_sq`   — [[AnnIndex.topK2Sq]], the byte-bounded two-level
-  *                  read path; with rerank = 2k it must match `ivf2`
-  *                  at every dial (the flat tier's zero-loss result,
-  *                  one level down)
+  *  - `indexed_sq`— [[AnnIndex.topK]] with [[AnnIndex.Sq8]], the
+  *                  stored IVF×SQ8 read path, (nProbe, rerank)
+  *                  swept — where rerank ≥ k·probed candidates exist,
+  *                  recall equals `indexed`'s at the same nProbe (SQ
+  *                  error only reorders BELOW the rerank cut; the
+  *                  exact rerank restores the top)
+  *  - `ivf2`      — [[AnnIndex.topK]] on [[AnnIndex.TwoLevel]], the
+  *                  PERSISTED two-level index (the path production
+  *                  serves from — the inline [[Similarity.topKIvf2]]
+  *                  is spec-pinned identical, so sweeping the stored
+  *                  probe measures both), (nProbe, nProbeFine) swept
+  *  - `ivf2_sq`   — the two-level [[AnnIndex.Sq8]] probe, the
+  *                  byte-bounded two-level read path; with rerank =
+  *                  2k it must match `ivf2` at every dial (the flat
+  *                  tier's zero-loss result, one level down)
   *  - `indexed_deleted` — [[AnnIndex.topK]] over a TOMBSTONED
   *                  generation (vec_id % 10 == 7 retired), measured
   *                  against brute force over the SURVIVORS
@@ -77,12 +79,12 @@ object AnnRecallProbe {
 
     AnnIndex.ensureBuilt(spark, dir)
     Seq(1, 2, 4, 8, 16).foreach { nProbe =>
-      val r = recall(AnnIndex.topK(spark, dir, nQueries, k = k, nProbe = nProbe))
+      val r = recall(AnnIndex.topK(spark, dir, Prefix(nQueries), k = k, nProbe = nProbe))
       println(f"[recall] path=indexed nProbe=$nProbe%-3d recall@$k=$r%.3f")
     }
     Seq((2, 2 * k), (4, 2 * k), (8, 2 * k), (8, 4 * k)).foreach { case (nProbe, rerank) =>
-      val r = recall(AnnIndex.topKSq(spark, dir, nQueries, k = k,
-        nProbe = nProbe, rerank = rerank))
+      val r = recall(AnnIndex.topK(spark, dir, Prefix(nQueries), Sq8(rerank), k = k,
+        nProbe = nProbe))
       println(f"[recall] path=indexed_sq nProbe=$nProbe%-3d rerank=$rerank%-3d recall@$k=$r%.3f")
     }
     // ---- PQ legs (round 19): 4 bits/dim is far lossier than SQ8, so
@@ -107,8 +109,8 @@ object AnnRecallProbe {
     Seq((2, 2 * k), (2, 4 * k), (4, 2 * k), (4, 4 * k),
         (8, 2 * k), (8, 4 * k), (8, 8 * k), (8, 16 * k))
       .foreach { case (nProbe, rerank) =>
-        val r = recall(AnnIndex.topKIdxPq(spark, dir, nQueries, k = k,
-          nProbe = nProbe, rerank = rerank))
+        val r = recall(AnnIndex.topK(spark, dir, Prefix(nQueries), Pq(rerank), k = k,
+          nProbe = nProbe))
         println(f"[recall] path=idx_pq nProbe=$nProbe%-3d rerank=$rerank%-4d recall@$k=$r%.3f")
       }
     // the STORED learned-codebook index (the ensureBuilt learnedPq
@@ -119,8 +121,8 @@ object AnnRecallProbe {
     AnnIndex.ensureBuilt(spark, dir, tag = ltag, learnedPq = true)
     Seq((2, 2 * k), (4, 2 * k), (8, 2 * k), (8, 4 * k))
       .foreach { case (nProbe, rerank) =>
-        val r = recall(AnnIndex.topKIdxPq(spark, dir, nQueries, k = k,
-          nProbe = nProbe, rerank = rerank, tag = ltag))
+        val r = recall(AnnIndex.topK(spark, dir, Prefix(nQueries), Pq(rerank), k = k,
+          nProbe = nProbe, tag = ltag))
         println(f"[recall] path=idx_pq_learned nProbe=$nProbe%-3d rerank=$rerank%-4d recall@$k=$r%.3f")
       }
     // IVF × residual-PQ (round 20): residual codes at idx_pq-matched
@@ -141,15 +143,15 @@ object AnnRecallProbe {
           k = k, nProbe = nProbe, rerank = rerank, codebookIn = Some(learnedRcb)))
         println(f"[recall] path=ivf_rpq_learned nProbe=$nProbe%-3d rerank=$rerank%-4d recall@$k=$r%.3f")
       }
-    AnnIndex.ensureBuilt2(spark, dir)
+    AnnIndex.ensureBuilt(spark, dir, layout = TwoLevel)
     Seq((2, 4), (4, 8), (8, 16)).foreach { case (nc, nf) =>
-      val r = recall(AnnIndex.topK2(spark, dir, nQueries, k = k,
-        nProbeCoarse = nc, nProbeFine = nf))
+      val r = recall(AnnIndex.topK(spark, dir, Prefix(nQueries), k = k,
+        nProbe = nc, nProbeFine = nf, layout = TwoLevel))
       println(f"[recall] path=ivf2 nProbeCoarse=$nc%-3d nProbeFine=$nf%-3d recall@$k=$r%.3f")
     }
     Seq((2, 4), (4, 8), (8, 16)).foreach { case (nc, nf) =>
-      val r = recall(AnnIndex.topK2Sq(spark, dir, nQueries, k = k,
-        nProbeCoarse = nc, nProbeFine = nf, rerank = 2 * k))
+      val r = recall(AnnIndex.topK(spark, dir, Prefix(nQueries), Sq8(2 * k), k = k,
+        nProbe = nc, nProbeFine = nf, layout = TwoLevel))
       println(f"[recall] path=ivf2_sq nProbeCoarse=$nc%-3d nProbeFine=$nf%-3d rerank=${2 * k}%-3d recall@$k=$r%.3f")
     }
     // gen-2 PQ: the billion-vector tier's sub-byte read path — the
@@ -157,18 +159,18 @@ object AnnRecallProbe {
     // be measured, not assumed
     Seq((2, 4, 2 * k), (4, 8, 2 * k), (8, 16, 2 * k), (8, 16, 4 * k))
       .foreach { case (nc, nf, rr) =>
-        val r = recall(AnnIndex.topK2Pq(spark, dir, nQueries, k = k,
-          nProbeCoarse = nc, nProbeFine = nf, rerank = rr))
+        val r = recall(AnnIndex.topK(spark, dir, Prefix(nQueries), Pq(rr), k = k,
+          nProbe = nc, nProbeFine = nf, layout = TwoLevel))
         println(f"[recall] path=ivf2_pq nProbeCoarse=$nc%-3d nProbeFine=$nf%-3d rerank=$rr%-3d recall@$k=$r%.3f")
       }
     // the billion-vector tier's first recall dial, now measured: a
     // gen-2 generation built with the learned codebook, probed at the
     // same dials as ivf2_pq
-    AnnIndex.ensureBuilt2(spark, dir, tag = ltag, learnedPq = true)
+    AnnIndex.ensureBuilt(spark, dir, tag = ltag, learnedPq = true, layout = TwoLevel)
     Seq((2, 4, 2 * k), (4, 8, 2 * k), (8, 16, 2 * k), (8, 16, 4 * k))
       .foreach { case (nc, nf, rr) =>
-        val r = recall(AnnIndex.topK2Pq(spark, dir, nQueries, k = k,
-          nProbeCoarse = nc, nProbeFine = nf, rerank = rr, tag = ltag))
+        val r = recall(AnnIndex.topK(spark, dir, Prefix(nQueries), Pq(rr), k = k,
+          nProbe = nc, nProbeFine = nf, tag = ltag, layout = TwoLevel))
         println(f"[recall] path=ivf2_pq_learned nProbeCoarse=$nc%-3d nProbeFine=$nf%-3d rerank=$rr%-3d recall@$k=$r%.3f")
       }
 
@@ -189,22 +191,23 @@ object AnnRecallProbe {
       }.sum / bruteSurv.size
     }
     (Seq(1, 2, 4, 8, 16) :+ kCells).distinct.foreach { nProbe =>
-      val r = recallSurv(AnnIndex.topK(spark, dir, nQueries, k = k,
+      val r = recallSurv(AnnIndex.topK(spark, dir, Prefix(nQueries), k = k,
         nProbe = nProbe, tag = delTag))
       println(f"[recall] path=indexed_deleted nProbe=$nProbe%-3d recall@$k=$r%.3f" +
         (if (nProbe == kCells) " (full width — must be 1.000)" else ""))
     }
-    // ...and the same leg on the two-level generation: removeBatch2's
+    // ...and the same leg on the two-level generation: removeBatch's
     // coarse-pruned anti-join measured against the identical
     // survivors' ground truth; full width (every coarse cell, fine
     // probe wider than any cell's fine count) must again be exact
-    AnnIndex.ensureBuilt2(spark, dir, tag = delTag)
-    AnnIndex.removeBatch2(spark, dir,
-      emb.select(col("vec_id")).filter(col("vec_id") % 10 === 7), tag = delTag)
-    val kc2 = AnnIndex.storedCoarseQuantizer(spark, dir, tag = delTag).length
+    AnnIndex.ensureBuilt(spark, dir, tag = delTag, layout = TwoLevel)
+    AnnIndex.removeBatch(spark, dir,
+      emb.select(col("vec_id")).filter(col("vec_id") % 10 === 7), tag = delTag,
+      layout = TwoLevel)
+    val kc2 = AnnIndex.storedQuantizer(spark, dir, tag = delTag, layout = TwoLevel).length
     (Seq((2, 4), (4, 8), (8, 16)) :+ ((kc2, 1000000))).foreach { case (nc, nf) =>
-      val r = recallSurv(AnnIndex.topK2(spark, dir, nQueries, k = k,
-        nProbeCoarse = nc, nProbeFine = nf, tag = delTag))
+      val r = recallSurv(AnnIndex.topK(spark, dir, Prefix(nQueries), k = k,
+        nProbe = nc, nProbeFine = nf, tag = delTag, layout = TwoLevel))
       println(f"[recall] path=ivf2_deleted nProbeCoarse=$nc%-3d nProbeFine=$nf%-7d recall@$k=$r%.3f" +
         (if (nc == kc2) " (full width — must be 1.000)" else ""))
     }

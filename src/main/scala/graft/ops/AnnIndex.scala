@@ -11,18 +11,35 @@ import graft.tables.{Bucketed, Fixtures}
   * [[Similarity.topKIvfKmeans]] recomputes the corpus→cell assignment
   * inside every query; that is fine for a one-shot batch job but wrong
   * for a serving system answering many top-k queries against the same
-  * corpus. Here the assignment (`vec_id, v, nrm, cell, codes`) is
-  * written once via [[Bucketed.writeBucketed]] bucketed on `cell`, and
-  * each probe issues a literal `cell IN (...)` filter, so the scan
-  * reads ONLY the buckets holding the probed cells
-  * (`SelectedBucketsCount` in the plan — machine-checked by
+  * corpus. Here the assignment (`vec_id, v, nrm, <cell keys>, codes,
+  * pqcodes`) is written once via [[Bucketed.writeBucketed]] bucketed on
+  * the layout's cell key, and each probe issues a literal `IN (...)`
+  * filter on it, so the scan reads ONLY the buckets holding the probed
+  * cells (`SelectedBucketsCount` in the plan — machine-checked by
   * `AnnIndexSpec`). The `codes` column is the row's SQ8 quantization
-  * (~1 bit-packed byte/dim), giving the index BOTH scale dimensions:
-  * cell pruning bounds WHICH rows a probe touches, and [[topKSq]]'s
-  * code-only candidate scan bounds the BYTES each touched row costs.
-  * At 100 TB with thousands of cells and nProbe≪cells, a query touches
-  * nProbe/cells of the corpus bytes — at ~1/8 the bytes per row when
-  * probing through the codes.
+  * (~1 bit-packed byte/dim) and `pqcodes` its nibble-packed PQ code
+  * (m/2 bytes), giving the index BOTH scale dimensions: cell pruning
+  * bounds WHICH rows a probe touches, and a code-only candidate scan
+  * bounds the BYTES each touched row costs.
+  *
+  * The index is built from three independent parts, each written once:
+  *
+  *  - a [[Layout]] — [[Flat]] (one ⌈√n⌉-cell quantizer) or
+  *    [[TwoLevel]] (an n^¼ coarse quantizer over a per-coarse-cell fine
+  *    relation, the billion-vector tier). The layout owns the table
+  *    names ([[Tables]]), the routing keys (`cell` vs `ccell`/`fcell`)
+  *    and the tombstone table;
+  *  - a [[Codec]] — [[Exact]], [[Sq8]] or [[Pq]]: how the candidate
+  *    pass scores rows before the exact rerank
+  *    ([[Similarity.Scoring]] owns the query-side terms and the
+  *    approximate expression);
+  *  - a query shape ([[Queries]]) — an id [[Prefix]] or explicit
+  *    [[Ids]].
+  *
+  * Build ([[ensureBuilt]]), append, remove, retire, ledger replay,
+  * advice, requantize and [[topK]] are each written once over the
+  * layout; every probe ends in [[Similarity.rankTopK]], the one
+  * candidate → rerank → rank-k tail the inline compositions share.
   *
   * Two sizing decisions are corpus-tracked, not constants — the same
   * fixed-k / off-data-centroid anti-patterns the scale tiers caught on
@@ -44,27 +61,22 @@ import graft.tables.{Bucketed, Fixtures}
   * k centroids on executors, never collected — only the DISTINCT
   * probed cell ids (≤ queries · nProbe ints) come back to the driver,
   * because only a driver-side literal cell list lets the scan prune
-  * buckets at plan time. At a batch-serving load (10⁵ queries ×
-  * √(10⁹) cells × d dims) the scoring is the expensive half of a probe
-  * and it stays distributed; the literal stays O(queries · nProbe)
-  * regardless of corpus size. The quantizer itself (k·d doubles) is
-  * collected once per probe — the same bounded contract as
-  * [[Similarity.kmeansCentroids]] — and rides the plan as one
-  * referenced constant ([[graft.functions.NearestCellF64]]'s
-  * JIT-safety argument).
+  * buckets at plan time. The quantizer itself (k·d doubles) is a
+  * session-cached artifact and rides the plan as one referenced
+  * constant ([[graft.functions.NearestCellF64]]'s JIT-safety argument).
   *
   * DELETE / RETIRE ([[removeBatch]]): a curation pipeline's whole
   * output is retired documents, so the serving index must drop
   * vectors WITHOUT the full rebuild. Deletions are TOMBSTONES — a
-  * (vec_id, cell) table stored beside the index, bucketed on `cell`
-  * with the assignment's bucket count so a probe's tombstone scan
-  * prunes to the probed cells exactly like the index scan. Probes
-  * anti-join the (pruned, bounded) tombstone set; [[requantize]]
-  * compacts tombstoned rows away and resets the table; and
-  * [[requantizeAdvice]] gains a dead-fraction trigger so tombstones
-  * never accumulate past a bounded share of the index. Removing an id
-  * never rewrites an index bucket — the write-once layout and every
-  * probe's bucket pruning survive deletion untouched.
+  * (vec_id, cell key) table stored beside the index, bucketed like the
+  * assignment so a probe's tombstone scan prunes to the probed cells
+  * exactly like the index scan. Probes anti-join the (pruned, bounded)
+  * tombstone set; [[requantize]] compacts tombstoned rows away and
+  * resets the table; and [[requantizeAdvice]] gains a dead-fraction
+  * trigger so tombstones never accumulate past a bounded share of the
+  * index. Removing an id never rewrites an index bucket — the
+  * write-once layout and every probe's bucket pruning survive deletion
+  * untouched.
   */
 /** [[AnnIndex.requantizeAdvice]]'s measurement: corpus size, cell
   * count, hottest-cell and mean occupancy, tombstone count, and the
@@ -79,58 +91,6 @@ object AnnIndex {
 
   val Dim = 64
 
-  /** Corpus-tracked IVF cell count: the smallest k with k² ≥ n
-    * (⌈√n⌉), found by integer-exact search so the DuckDB oracle can
-    * run the same loop with no floating sqrt whose rounding could
-    * diverge between engines. Capped at 65535 (n > ~4.3B vectors);
-    * past the cap the standard two-level quantizer applies (see
-    * [[Similarity.sampledCentroids]]). */
-  def annCellsFor(n: Long): Int =
-    (1 until 65536).find(x => x.toLong * x >= n).getOrElse(65535)
-
-  /** One index table per (source directory, tag): sf0.01 and sf0.1
-    * runs in the same warehouse must never read each other's index,
-    * and a tagged generation (e.g. the registry's deletion entry)
-    * must never mutate the shared untagged one. */
-  def tableFor(dir: String, tag: String = ""): String =
-    "ann_cells_" + graft.evm.EvmDerive.md5hex(dir + "#" + tag).take(8)
-
-  /** The quantizer stored BESIDE the assignment table: (cell,
-    * centroid) — k rows. The quantizer is part of the index, not a
-    * derivable property of the corpus: a probe must score against the
-    * exact centroids that assigned the cells, and re-deriving them
-    * from the LIVE corpus silently decoheres the moment the corpus
-    * grows past the build (count → different k → different sample →
-    * probes scan the wrong buckets with no error). Storing k rows also
-    * removes two full-corpus jobs (count + md5-ranked sample) from
-    * every serving query — the write-once/probe-many claim made real. */
-  def quantizerTableFor(dir: String, tag: String = ""): String =
-    tableFor(dir, tag) + "_q"
-
-  /** The SQ8 scalar-quantization parameters stored BESIDE the
-    * quantizer: (dim, mn, mx) — d rows. Like the centroids, the params
-    * are part of the index, not a derivable property of the corpus:
-    * every stored code was produced with exactly these (mn, mx), and a
-    * probe's approximate dot must decode against the SAME affine terms
-    * or candidate ranking silently decoheres as the corpus grows past
-    * the build (the quantizer-drift argument, applied to the code
-    * book). Storing d rows also removes the posexplode min/max corpus
-    * job from every serving query. */
-  def sqTableFor(dir: String, tag: String = ""): String =
-    tableFor(dir, tag) + "_sq"
-
-  /** The tombstone table stored BESIDE the index: (vec_id, cell) —
-    * one row per retired vector, bucketed on `cell` with the
-    * assignment's bucket count so a probe's tombstone scan prunes to
-    * the probed cells (the anti-join's build side is bounded by the
-    * probed cells' dead rows, never the full tombstone set). Part of
-    * the index's existence set: a crash that loses it triggers
-    * [[ensureBuilt]]'s source-rebuild sweep, and delete producers
-    * replay from their ledger — the same source-of-truth recovery
-    * contract appends follow. */
-  def tombstoneTableFor(dir: String, tag: String = ""): String =
-    tableFor(dir, tag) + "_ts"
-
   /** PQ layout constants — part of the stored index's identity like
     * [[Dim]]: every `pqcodes` row was produced with exactly this
     * subspace split against the stored codebook, so the reader's
@@ -138,155 +98,288 @@ object AnnIndex {
   val PqM = 8
   val PqKsub = 16
 
-  /** The PQ codebook stored BESIDE the quantizer: (i, centroid) —
-    * ksub FULL-dim rows (subspace j's centroid i = row i's j-th
-    * slice). Same coherence rule as the SQ params: every stored
-    * `pqcodes` row was assigned against exactly these rows, appends
-    * encode with them, [[requantize]] refreshes them with the
-    * generation. */
-  def pqTableFor(dir: String, tag: String = ""): String =
-    tableFor(dir, tag) + "_pq"
+  /** Corpus-tracked IVF cell count: the smallest k with k² ≥ n
+    * (⌈√n⌉), found by integer-exact search so the DuckDB oracle can
+    * run the same loop with no floating sqrt whose rounding could
+    * diverge between engines. Capped at 65535 (n > ~4.3B vectors);
+    * past the cap the two-level layout applies (see
+    * [[Similarity.sampledCentroids]]). */
+  def annCellsFor(n: Long): Int =
+    (1 until 65536).find(x => x.toLong * x >= n).getOrElse(65535)
 
-  // NOTE: the tombstone table must stay LAST — healTombstoneSwap's
-  // delete-crash detection keys on tables.last
-  private def allTables(dir: String, tag: String): Seq[String] =
-    Seq(tableFor(dir, tag), quantizerTableFor(dir, tag),
-      sqTableFor(dir, tag), pqTableFor(dir, tag), tombstoneTableFor(dir, tag))
+  /** The tables of one index generation, by role.
+    *
+    *  - `assign`: the cell assignment plus codes, bucketed on the
+    *    layout's cell key — the only corpus-sized table.
+    *  - `quantizer`: (cell key, centroid), the centroids that assigned
+    *    the cells. The quantizer is part of the index, not a derivable
+    *    property of the corpus: re-deriving it from the LIVE corpus
+    *    silently decoheres the moment the corpus grows past the build
+    *    (count → different k → different sample → probes scan the
+    *    wrong buckets with no error).
+    *  - `fine`: the two-level layout's (ccell, fcell, fv, f2) fine
+    *    quantizer — data, never a literal (≈ Σ⌈√occ⌉ rows).
+    *  - `sq`: the SQ8 (dim, mn, mx) params every stored code was
+    *    produced with; a probe decodes against the SAME affine terms.
+    *  - `pq`: the PQ codebook (i, centroid) — ksub FULL-dim rows,
+    *    subspace j's centroid i = row i's j-th slice.
+    *  - `tombstones`: (vec_id, cell key), one row per retired vector,
+    *    bucketed like the assignment. The only generation table a
+    *    delete rewrites — see [[healTombstoneSwap]].
+    *
+    * Each artifact is written with the generation, appends encode with
+    * it, and [[requantize]] refreshes it with the generation. */
+  final case class Tables(assign: String, quantizer: String, fine: Option[String],
+                          sq: String, pq: String, tombstones: String) {
+    /** The replayable delete ledger ([[retireBatch]]) — beside the
+      * generation, never part of it: a rebuild keeps its history. */
+    def ledger: String = assign + "_ledger"
+    /** Assignment first: the rename swap moves it aside first and
+      * promotes it last (see [[requantize]]). */
+    def all: Seq[String] = Seq(assign, quantizer) ++ fine ++ Seq(sq, pq, tombstones)
+    def suffixed(s: String): Tables =
+      Tables(assign + s, quantizer + s, fine.map(_ + s), sq + s, pq + s, tombstones + s)
+  }
 
-  /** Build the cell-assignment table + its quantizer + an EMPTY
-    * tombstone table if this session/warehouse does not have them yet;
-    * returns the assignment table name. Idempotent — the "write once"
-    * of write-once-probe-many.
+  /** How the index routes a vector to its bucket and a query to its
+    * candidates. `cell` is the bucket key (and the quantizer's key
+    * column); `keys` are the columns a candidate joins its probes on. */
+  sealed abstract class Layout(prefix: String, quantizerSuffix: String,
+                               fineSuffix: Option[String], val cell: String,
+                               val keys: Seq[String]) {
+    /** One index per (source directory, tag): sf0.01 and sf0.1 runs in
+      * the same warehouse must never read each other's index, and a
+      * tagged generation (e.g. the registry's deletion entries) must
+      * never mutate the shared untagged one. */
+    def tables(dir: String, tag: String = ""): Tables = {
+      val t = prefix + graft.evm.EvmDerive.md5hex(dir + "#" + tag).take(8)
+      Tables(t, t + quantizerSuffix, fineSuffix.map(t + _), t + "_sq", t + "_pq", t + "_ts")
+    }
+    /** The cell count a corpus of n vectors should have — the knee
+      * [[requantizeAdvice]] measures against. */
+    private[AnnIndex] def cellsFor(n: Long): Int
+    /** Fit a fresh generation's assignment below its quantizer: the
+      * `(vec_id, v, nrm, keys…)` rows and, when the layout has one, the
+      * fine relation to store beside them. */
+    private[AnnIndex] def fit(prep: DataFrame, n: Long,
+                              quantizer: Array[Array[Double]]): (DataFrame, Option[DataFrame])
+    /** Assign an appended batch against a stored generation's
+      * quantizer (and fine relation) — coherent with the build by
+      * construction. */
+    private[AnnIndex] def assign(spark: SparkSession, tb: Tables, prep: DataFrame,
+                                 quantizer: Array[Array[Double]]): DataFrame
+    /** Route probed cells to candidate keys: the `(cell, q_id, …)`
+      * frame, restricted by the probed-cell literal filter. */
+    private[AnnIndex] def route(spark: SparkSession, tb: Tables, probes: DataFrame,
+                                inCells: org.apache.spark.sql.Column, nProbeFine: Int): DataFrame
+  }
+
+  /** One ⌈√n⌉-cell quantizer: the right answer while k centroids fit a
+    * driver collect and a plan literal. */
+  case object Flat extends Layout("ann_cells_", "_q", None, "cell", Seq("cell")) {
+    private[AnnIndex] def cellsFor(n: Long) = annCellsFor(n)
+    private[AnnIndex] def fit(prep: DataFrame, n: Long, quantizer: Array[Array[Double]]) =
+      (Similarity.assignCells(prep, quantizer), None)
+    private[AnnIndex] def assign(spark: SparkSession, tb: Tables, prep: DataFrame,
+                                 quantizer: Array[Array[Double]]) =
+      Similarity.assignCells(prep, quantizer)
+    private[AnnIndex] def route(spark: SparkSession, tb: Tables, probes: DataFrame,
+                                inCells: org.apache.spark.sql.Column, nProbeFine: Int) = probes
+  }
+
+  /** The billion-vector tier, for corpora past the flat knee (k ~ 10⁶
+    * at a billion vectors): ONLY the ~n^¼ coarse quantizer is ever
+    * collected (178 rows at 10⁹), the fine quantizer stays a TABLE
+    * probed by coarse-cell literals, and the assignment is bucketed on
+    * the coarse cell — nothing k-sized touches the driver or the plan
+    * at any corpus size ([[Similarity.topKIvf2]] is the inline twin). */
+  case object TwoLevel extends Layout("ann2_", "_qc", Some("_qf"), "ccell", Seq("ccell", "fcell")) {
+    private[AnnIndex] def cellsFor(n: Long) = annCellsFor(annCellsFor(n))
+    private[AnnIndex] def fit(prep: DataFrame, n: Long, quantizer: Array[Array[Double]]) = {
+      val (fine, asg) = Similarity.ivf2Levels(prep, n, quantizer)
+      (asg, Some(fine))
+    }
+    // an append scores against the STORED fine relation with the
+    // build's map-side min_by argmin
+    private[AnnIndex] def assign(spark: SparkSession, tb: Tables, prep: DataFrame,
+                                 quantizer: Array[Array[Double]]) =
+      Similarity.assignFine(
+        Similarity.assignCells(prep, quantizer).withColumnRenamed("cell", "ccell"),
+        broadcast(spark.table(tb.fine.get)))
+    private[AnnIndex] def route(spark: SparkSession, tb: Tables, probes: DataFrame,
+                                inCells: org.apache.spark.sql.Column, nProbeFine: Int) =
+      Similarity.fineProbes(probes, spark.table(tb.fine.get).filter(inCells), nProbeFine)
+  }
+
+  /** Which queries a probe serves. */
+  sealed trait Queries
+  /** The fixture entries' shape: every corpus vector with vec_id < maxQueryId. */
+  final case class Prefix(maxQueryId: Long) extends Queries
+  /** The call a real serving caller makes: an explicit id set (a
+    * `vec_id` column), applied as a broadcast semi-join of the corpus
+    * scan so the probe stays in-plan; ids not in the corpus probe
+    * nothing. */
+  final case class Ids(ids: DataFrame) extends Queries
+
+  /** How a stored probe scores candidates. */
+  sealed trait Codec
+  /** Exact cosine over the probed cells' full vectors. */
+  case object Exact extends Codec
+  /** Rank by the decomposed SQ8 approximate cosine over the `codes`
+    * column (~1 byte/dim), keep `rerank` per query, re-score exactly. */
+  final case class Sq8(rerank: Int) extends Codec
+  /** Rank by the native packed-ADC fold over the `pqcodes` column (a
+    * PHYSICAL 4 bits/dim) against per-query tables built from the
+    * STORED codebook, keep `rerank` per query, re-score exactly. */
+  final case class Pq(rerank: Int) extends Codec
+
+  /** Build the index generation if this session/warehouse does not
+    * have it yet; returns the assignment table name. Idempotent — the
+    * "write once" of write-once-probe-many.
     *
     * `learnedPq` selects the PQ codebook the generation stores:
     * `false` (default) = the md5-sampled rows (deterministic,
     * single-statement-SQL-expressible — the registry's oracle-checked
     * shape); `true` = [[Similarity.learnedPqCodebook]]'s per-subspace
-    * Lloyd fit (SCALING.md's first recall dial, +0.05-0.08 recall at
-    * identical serving cost). Serving needs ZERO changes either way:
-    * every stored-probe path reads the STORED codebook, so the flag
-    * only matters at build/requantize time — a probe against an index
-    * built with either book is coherent by construction. */
+    * Lloyd fit (SCALING.md's first recall dial). Serving needs ZERO
+    * changes either way: every stored probe reads the STORED codebook. */
   def ensureBuilt(spark: SparkSession, dir: String, tag: String = "",
-                  learnedPq: Boolean = false): String = synchronized {
-    val t = tableFor(dir, tag)
-    healTombstoneSwap(spark, allTables(dir, tag))
-    if (allTables(dir, tag).exists(!spark.catalog.tableExists(_))) {
+                  learnedPq: Boolean = false, layout: Layout = Flat): String = synchronized {
+    val tb = layout.tables(dir, tag)
+    healTombstoneSwap(spark, tb)
+    if (tb.all.exists(!spark.catalog.tableExists(_))) {
       // an orphaned location from a previous JVM is stale, not
       // reusable: the in-memory catalog lost its bucketing metadata,
-      // so clear and rebuild deterministically — the quantizer,
-      // SQ-param, and tombstone locations too (saveAsTable dies on a
-      // leftover directory the in-memory catalog no longer knows
-      // about), and any stage/old generation a crashed [[requantize]]
-      // or [[removeBatch]] left behind (recovery contract: a crash
-      // mid-swap rebuilds from the source corpus; appended batches and
-      // deletions re-enter through their producer's ledger, the same
-      // source-of-truth rule ChainStore's replay makes)
-      allTables(dir, tag).flatMap(x => Seq(x, x + "__stage", x + "__old"))
+      // so clear and rebuild deterministically — every artifact
+      // location too (saveAsTable dies on a leftover directory the
+      // in-memory catalog no longer knows about), and any stage/old
+      // generation a crashed swap left behind (recovery contract: a
+      // crash mid-swap rebuilds from the source corpus; appended
+      // batches and deletions re-enter through their producer's ledger,
+      // the same source-of-truth rule ChainStore's replay makes)
+      tb.all.flatMap(x => Seq(x, x + "__stage", x + "__old"))
         .foreach(Bucketed.resetTable(spark, _))
       // a rebuild writes a NEW generation under the same names — any
       // artifacts cached from a previous incarnation are stale
-      invalidateArtifacts(spark, allTables(dir, tag))
+      invalidateArtifacts(spark, tb.all)
       val emb = Fixtures.embeddings(spark, dir)
-      val prep = Similarity.prepared(emb)
-      val k = annCellsFor(emb.count())
-      // ONE md5-ranked sample serves both stored artifacts: the
-      // quantizer is its k-prefix and the default PQ codebook its
-      // ksub-prefix. The ranking is a deterministic total order
-      // (h, vec_id), so the prefixes are bit-identical to two
-      // independent sampledCentroids calls at one corpus scan's cost.
-      val sample = Similarity.sampledCentroids(prep, math.max(k, PqKsub))
-      val cs = sample.take(k)
-      // SQ8 codes are the index's physical read path for approximate
-      // scoring — quantized ONCE here at write time (the probe side
-      // only ever scans the bit-packed code column, ~1 byte/dim,
-      // instead of the 8-byte doubles of `v`)
-      val (mns, mxs) = Similarity.sqParamsOf(prep, Dim)
-      // the PQ codebook joins the layout: pqcodes (nibble-packed
-      // binary, a PHYSICAL 4 bits/dim — the sub-byte candidate
-      // metric) beside the SQ8 codes, both
-      // quantized ONCE at write time against artifacts stored with
-      // the generation; the learned-Lloyd book is the opt-in quality
-      // dial (see the method scaladoc)
-      val pqCb =
-        if (learnedPq) Similarity.learnedPqCodebookOf(prep, PqM, PqKsub, Dim)
-        else sample.take(PqKsub)
-      val assigned = Similarity.assignCells(prep, cs)
-        .select(col("vec_id"), col("v"), col("nrm"), col("cell"),
-          Similarity.sqCodesCol(col("v"), mns, mxs).as("codes"),
-          graft.functions.VectorExprs.nibblePack(
-            Similarity.pqCodesCol(col("v"), pqCb, PqM)).as("pqcodes"))
-      Bucketed.writeBucketed(assigned, t, "cell", nBuckets = k)
-      import spark.implicits._
-      // single-partition writes for the tiny artifact tables (k / d /
-      // ksub rows): a local Seq.toDF otherwise fans out to
-      // default-parallelism tasks — 32 commit-protocol files of ~2 rows
-      // each per table per rebuild, measured ~0.3-0.4 s apiece in the
-      // r21 event logs (guide §6: sensible output file sizing)
-      cs.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("cell", "centroid").repartition(1)
-        .write.mode("overwrite").saveAsTable(quantizerTableFor(dir, tag))
-      mns.indices.map(i => (i, mns(i), mxs(i)))
-        .toDF("dim", "mn", "mx").repartition(1)
-        .write.mode("overwrite").saveAsTable(sqTableFor(dir, tag))
-      pqCb.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("i", "centroid").repartition(1)
-        .write.mode("overwrite").saveAsTable(pqTableFor(dir, tag))
-      // the EMPTY tombstone table writes with ONE bucket: bucket
-      // pruning only matters once tombstones exist, and removeBatch
-      // rewrites with the quantizer's bucket count then — a k-bucket
-      // empty write costs k file-creation tasks per build/requantize
-      // for zero benefit (measured ~1 s of topk_requant's r16
-      // recording before this)
-      writeTombstones(spark, emptyTombstones(spark),
-        tombstoneTableFor(dir, tag), 1)
-      // seed the fresh generation's artifacts (see [[seedArtifact]]):
-      // the first probes after a build skip their collect jobs
-      seedArtifact(spark, quantizerTableFor(dir, tag), cs)
-      seedArtifact(spark, sqTableFor(dir, tag), (mns, mxs))
-      seedArtifact(spark, pqTableFor(dir, tag), pqCb)
+      seedArtifacts(spark, tb,
+        writeGeneration(spark, layout, tb, Similarity.prepared(emb), emb.count(), learnedPq))
     }
-    t
+    tb.assign
+  }
+
+  /** Driver-side artifacts of one generation, returned by the writer so
+    * the cache can be seeded once the generation's names are FINAL. */
+  private final case class Artifacts(quantizer: Array[Array[Double]],
+                                     sq: (Array[Double], Array[Double]),
+                                     pq: Array[Array[Double]])
+
+  /** Write one full generation into the named tables — the build
+    * (straight into the live names) and [[requantize]] (into the
+    * `__stage` names). Every artifact is fitted ONCE over `prep` and
+    * every row's codes are quantized ONCE here, at write time. */
+  private def writeGeneration(spark: SparkSession, layout: Layout, tb: Tables,
+                              prep: DataFrame, n: Long, learnedPq: Boolean): Artifacts = {
+    val k = layout.cellsFor(n)
+    // ONE md5-ranked sample serves both sampled artifacts: the
+    // quantizer is its k-prefix and the default PQ codebook its
+    // ksub-prefix. The ranking is a deterministic total order
+    // (h, vec_id), so the prefixes are bit-identical to two
+    // independent sampledCentroids calls at one corpus scan's cost.
+    val sample = Similarity.sampledCentroids(prep, math.max(k, PqKsub))
+    val quantizer = sample.take(k)
+    val (asg, fine) = layout.fit(prep, n, quantizer)
+    val (mns, mxs) = Similarity.sqParamsOf(prep, Dim)
+    val pqCb =
+      if (learnedPq) Similarity.learnedPqCodebookOf(prep, PqM, PqKsub, Dim)
+      else sample.take(PqKsub)
+    Bucketed.writeBucketed(encoded(asg, layout, mns, mxs, pqCb),
+      tb.assign, layout.cell, nBuckets = k)
+    import spark.implicits._
+    // single-partition writes for the tiny driver-local artifacts (k /
+    // d / ksub rows): a local Seq.toDF otherwise fans out to
+    // default-parallelism tasks — 32 commit-protocol files of ~2 rows
+    // each per table per rebuild, measured ~0.3-0.4 s apiece in the
+    // r21 event logs (guide §6: sensible output file sizing). The fine
+    // quantizer stays a distributed write: it is a computed frame.
+    def save(df: DataFrame, table: String): Unit =
+      df.repartition(1).write.mode("overwrite").saveAsTable(table)
+    save(quantizer.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+      .toDF(layout.cell, "centroid"), tb.quantizer)
+    fine.foreach(_.write.mode("overwrite").saveAsTable(tb.fine.get))
+    save(mns.indices.map(i => (i, mns(i), mxs(i))).toDF("dim", "mn", "mx"), tb.sq)
+    save(pqCb.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+      .toDF("i", "centroid"), tb.pq)
+    // the generation starts with NO tombstones, written with ONE
+    // bucket: bucket pruning only matters once tombstones exist, and
+    // removeBatch rewrites with the quantizer's bucket count then — a
+    // k-bucket empty write costs k file-creation tasks per
+    // build/requantize for zero benefit (measured ~1 s of
+    // topk_requant's r16 recording before this)
+    writeTombstones(spark.range(0).select(col("id").as("vec_id"), lit(0).as(layout.cell)),
+      tb.tombstones, 1, layout.cell)
+    Artifacts(quantizer, (mns, mxs), pqCb)
+  }
+
+  /** An assignment frame projected to the stored row: routing keys plus
+    * the SQ8 `codes` and the nibble-packed `pqcodes` (a PHYSICAL 4
+    * bits/dim), both encoded against the generation's artifacts. */
+  private def encoded(asg: DataFrame, layout: Layout, mns: Array[Double],
+                      mxs: Array[Double], pqCb: Array[Array[Double]]): DataFrame =
+    asg.select((Seq("vec_id", "v", "nrm") ++ layout.keys).map(col) ++ Seq(
+      Similarity.sqCodesCol(col("v"), mns, mxs).as("codes"),
+      graft.functions.VectorExprs.nibblePack(
+        Similarity.pqCodesCol(col("v"), pqCb, PqM)).as("pqcodes")): _*)
+
+  private def writeTombstones(ts: DataFrame, table: String, nBuckets: Int,
+                              cell: String): Unit =
+    ts.select(col("vec_id").cast("long"), col(cell).cast("int"))
+      .write.mode("overwrite").format("parquet")
+      .bucketBy(nBuckets, cell).sortBy(cell)
+      .saveAsTable(table)
+
+  /** Commit staged tables: every `x__stage` is fully written, so rename
+    * each live table aside IN ORDER, promote the stages in REVERSE
+    * order, and drop the aside copies. Each rename is one atomic
+    * catalog+dir move; with the assignment first in `names` it is
+    * renamed aside first and promoted last, so every crash point inside
+    * the window leaves it ABSENT — [[ensureBuilt]]'s rebuild trigger,
+    * never a mixed-generation state. */
+  private def swap(spark: SparkSession, names: Seq[String]): Unit = {
+    names.foreach(x => Bucketed.resetTable(spark, x + "__old"))
+    names.foreach(x => spark.sql(s"ALTER TABLE $x RENAME TO ${x}__old"))
+    names.reverse.foreach(x => spark.sql(s"ALTER TABLE ${x}__stage RENAME TO $x"))
+    names.foreach(x => Bucketed.resetTable(spark, x + "__old"))
   }
 
   /** Narrow the DELETE-crash blast radius (it used to be a full source
-    * rebuild): [[removeBatch]]'s two-rename window is the ONLY state
-    * that leaves exactly the TOMBSTONE table absent while every other
-    * generation table is live — [[requantize]]/[[requantize2]] rename
-    * the ASSIGNMENT aside first and promote it last, so all of their
-    * crash states have the assignment absent too and fall through to
-    * the full-rebuild sweep as before. Inside removeBatch's window the
-    * staged merged tombstone table is already fully written (the stage
-    * write strictly precedes the first rename), so promoting it
-    * recovers EVERYTHING, in-flight batch included; if only the
-    * renamed-aside live table survives (a state no removeBatch crash
-    * point produces, but cheap to tolerate), restoring it recovers
-    * every previously committed tombstone and loses only the in-flight
-    * batch — which the producer's ledger replays. A routine O(batch)
-    * delete therefore never carries a corpus-rebuild cost. */
-  private def healTombstoneSwap(spark: SparkSession, tables: Seq[String]): Unit = {
-    val tst = tables.last
-    if (!spark.catalog.tableExists(tst) &&
-        tables.init.forall(spark.catalog.tableExists)) {
-      if (spark.catalog.tableExists(tst + "__stage")) {
-        spark.sql(s"ALTER TABLE ${tst}__stage RENAME TO $tst")
-        Bucketed.resetTable(spark, tst + "__old")
-      } else if (spark.catalog.tableExists(tst + "__old")) {
-        spark.sql(s"ALTER TABLE ${tst}__old RENAME TO $tst")
+    * rebuild): [[removeBatch]]'s rename window is the ONLY state that
+    * leaves exactly the TOMBSTONE table absent while every other
+    * generation table is live — [[requantize]] renames the ASSIGNMENT
+    * aside first and promotes it last, so all of its crash states have
+    * the assignment absent too and fall through to the full-rebuild
+    * sweep. Inside removeBatch's window the staged merged tombstone
+    * table is already fully written (the stage write strictly precedes
+    * the first rename), so promoting it recovers EVERYTHING, in-flight
+    * batch included; if only the renamed-aside live table survives (a
+    * state no removeBatch crash point produces, but cheap to tolerate),
+    * restoring it recovers every previously committed tombstone and
+    * loses only the in-flight batch — which the producer's ledger
+    * replays. A routine O(batch) delete never carries a corpus-rebuild
+    * cost. */
+  private def healTombstoneSwap(spark: SparkSession, tb: Tables): Unit = {
+    val ts = tb.tombstones
+    if (!spark.catalog.tableExists(ts) &&
+        tb.all.filterNot(_ == ts).forall(spark.catalog.tableExists)) {
+      if (spark.catalog.tableExists(ts + "__stage")) {
+        spark.sql(s"ALTER TABLE ${ts}__stage RENAME TO $ts")
+        Bucketed.resetTable(spark, ts + "__old")
+      } else if (spark.catalog.tableExists(ts + "__old")) {
+        spark.sql(s"ALTER TABLE ${ts}__old RENAME TO $ts")
       }
     }
   }
-
-  private def emptyTombstones(spark: SparkSession, cellCol: String = "cell"): DataFrame =
-    spark.range(0).select(col("id").as("vec_id"), lit(0).as(cellCol))
-
-  private def writeTombstones(spark: SparkSession, ts: DataFrame,
-                              table: String, nBuckets: Int,
-                              cellCol: String = "cell"): Unit =
-    ts.select(col("vec_id").cast("long"), col(cellCol).cast("int"))
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(nBuckets, cellCol).sortBy(cellCol)
-      .saveAsTable(table)
 
   // ---- session-scoped stored-artifact cache --------------------------
   //
@@ -304,11 +397,11 @@ object AnnIndex {
   // via newSession() SHARE the ExternalCatalog, so a generation swap in
   // one session makes every sibling session's cached artifacts stale
   // too: the generation-swap paths ([[ensureBuilt]]'s rebuild branch,
-  // [[requantize]]/[[requantize2]]) therefore invalidate by TABLE NAME
-  // across ALL sessions. (Sessions keyed separately at all because two
-  // *contexts* in one JVM — the test suites — may hold same-named
-  // tables with different contents.) Entries of stopped sessions are
-  // swept on any miss (same rule as [[SharedCaches]]).
+  // [[requantize]]) therefore invalidate by TABLE NAME across ALL
+  // sessions. (Sessions keyed separately at all because two *contexts*
+  // in one JVM — the test suites — may hold same-named tables with
+  // different contents.) Entries of stopped sessions are swept on any
+  // miss (same rule as [[SharedCaches]]).
   private val artifactCache =
     scala.collection.mutable.Map.empty[(SparkSession, String), AnyRef]
 
@@ -348,76 +441,76 @@ object AnnIndex {
       artifactCache.filterInPlace { case ((_, t), _) => !stale.contains(t) }
     }
 
-  /** Seed the writer's cache entry with the artifact it JUST wrote —
-    * valid precisely because the stored table's contents are these
-    * values (doubles round-trip parquet exactly; the load's
-    * orderBy(cell/dim/i) returns the write's array order), so the
-    * first post-write probe skips its collect job. Only ever called
-    * after the generation's writes committed. */
-  private def seedArtifact(spark: SparkSession, table: String, v: AnyRef): Unit =
+  /** Seed the writer's cache entries with the artifacts it JUST wrote —
+    * valid precisely because the stored tables' contents are these
+    * values (doubles round-trip parquet exactly; the load's orderBy
+    * returns the write's array order), so the first post-write probes
+    * skip their collect jobs. Only ever called after the generation's
+    * writes committed under their final names. */
+  private def seedArtifacts(spark: SparkSession, tb: Tables, a: Artifacts): Unit =
     artifactCache.synchronized {
-      artifactCache.put((spark, table), v): Unit
+      Seq(tb.quantizer -> a.quantizer, tb.sq -> a.sq, tb.pq -> a.pq)
+        .foreach { case (t, v) => artifactCache.put((spark, t), v) }
     }
 
-  /** The stored quantizer read back as the centroid matrix (k·dim —
-    * bounded, same contract as the build-time collect). Session-cached:
-    * one collect per generation, not per probe. */
-  def storedQuantizer(spark: SparkSession, dir: String, tag: String = ""): Array[Array[Double]] =
-    cachedArtifact(spark, quantizerTableFor(dir, tag)) {
-      spark.table(quantizerTableFor(dir, tag))
-        .select(col("cell"), col("centroid")).orderBy(col("cell")).collect()
+  private def storedMatrix(spark: SparkSession, table: String,
+                           key: String): Array[Array[Double]] =
+    cachedArtifact(spark, table) {
+      spark.table(table).select(col(key), col("centroid")).orderBy(col(key)).collect()
         .map(_.getSeq[Double](1).toArray)
     }
+
+  /** The stored quantizer read back as the centroid matrix — k·dim on
+    * the flat layout, the ~n^¼·dim coarse matrix on the two-level one
+    * (the ONLY quantizer collect that layout ever performs). Bounded,
+    * and session-cached: one collect per generation, not per probe. */
+  def storedQuantizer(spark: SparkSession, dir: String, tag: String = "",
+                      layout: Layout = Flat): Array[Array[Double]] =
+    storedMatrix(spark, layout.tables(dir, tag).quantizer, layout.cell)
 
   /** The stored SQ8 params read back as the (mns, mxs) pair (2·d
     * doubles — bounded, same contract as the quantizer collect). */
-  def storedSqParams(spark: SparkSession, dir: String, tag: String = ""): (Array[Double], Array[Double]) =
-    readSqParams(spark, sqTableFor(dir, tag))
-
-  /** [[storedSqParams]] for the two-level generation. */
-  def storedSqParams2(spark: SparkSession, dir: String, tag: String = ""): (Array[Double], Array[Double]) =
-    readSqParams(spark, sq2TableFor(dir, tag))
-
-  /** The stored PQ codebook read back as ksub full-dim rows
-    * ([[PqKsub]]·[[Dim]] doubles — bounded, same contract as the
-    * quantizer collect). Session-cached per generation. */
-  def storedPqCodebook(spark: SparkSession, dir: String, tag: String = ""): Array[Array[Double]] =
-    cachedArtifact(spark, pqTableFor(dir, tag)) {
-      spark.table(pqTableFor(dir, tag))
-        .select(col("i"), col("centroid")).orderBy(col("i")).collect()
-        .map(_.getSeq[Double](1).toArray)
-    }
-
-  private def readSqParams(spark: SparkSession,
-                           table: String): (Array[Double], Array[Double]) =
+  def storedSqParams(spark: SparkSession, dir: String, tag: String = "",
+                     layout: Layout = Flat): (Array[Double], Array[Double]) = {
+    val table = layout.tables(dir, tag).sq
     cachedArtifact(spark, table) {
       val rows = spark.table(table)
         .select(col("dim"), col("mn"), col("mx")).orderBy(col("dim")).collect()
       (rows.map(_.getDouble(1)), rows.map(_.getDouble(2)))
     }
+  }
+
+  /** The stored PQ codebook read back as ksub full-dim rows
+    * ([[PqKsub]]·[[Dim]] doubles — bounded, session-cached). */
+  def storedPqCodebook(spark: SparkSession, dir: String, tag: String = "",
+                       layout: Layout = Flat): Array[Array[Double]] =
+    storedMatrix(spark, layout.tables(dir, tag).pq, "i")
 
   /** MAINTENANCE half of write-once/probe-many: append a fresh vector
     * batch to the existing index WITHOUT a rebuild. The batch is
-    * assigned against the STORED quantizer — the exact centroids every
-    * existing row was assigned with, so probe coherence is preserved
-    * by construction — and appended into the bucketed table with the
-    * build's bucket count (= quantizer rows, the build invariant), so
-    * bucket pruning keeps working: each append adds one file per
-    * touched bucket and a probe still reads only its cells' files.
-    * Cost is O(batch): one batch-sized assignment + write, no corpus
-    * scan. Caller contract: `fresh` carries embeddings-schema rows
-    * with vec_ids not already in the index (the ingest layer's
+    * assigned against the STORED quantizer(s) — the exact centroids
+    * every existing row was assigned with, so probe coherence is
+    * preserved by construction — encoded with the STORED SQ params and
+    * PQ codebook, and appended into the bucketed table with the build's
+    * bucket count (= quantizer rows, the build invariant), so bucket
+    * pruning keeps working: each append adds one file per touched
+    * bucket and a probe still reads only its cells' files. Cost is
+    * O(batch): one batch-sized assignment + write, no corpus scan.
+    * Caller contract: `fresh` carries embeddings-schema rows with
+    * vec_ids not already in the index (the ingest layer's
     * idempotent-insert anti-join is the place to enforce that, as in
     * [[graft.ingest.Ingest]]). A TOMBSTONED vec_id stays retired: the
     * probe-side anti-join filters it until [[requantize]] compacts —
     * re-adding a retired id is an explicit un-retire the delete
     * producer must issue by clearing its ledger entry first.
     *
-    * Appends intentionally do NOT touch the quantizer: cell sizing
-    * (⌈√n⌉) and centroid placement decay as the corpus grows, which is
-    * a QUALITY decay (hotter cells → bigger probe reads), never a
-    * correctness one. [[requantizeAdvice]] is the trigger for when to
-    * pay the full rebuild; [[requantize]] executes it.
+    * Appends intentionally do NOT touch the artifacts: cell sizing,
+    * centroid placement and code ranges decay as the corpus grows,
+    * which is a QUALITY decay (hotter cells → bigger probe reads; a
+    * batch value outside the stored range clamps to 0/255 and the exact
+    * rerank still scores it full-precision), never a correctness one.
+    * [[requantizeAdvice]] is the trigger for when to pay the full
+    * rebuild; [[requantize]] executes it.
     *
     * Synchronized on the mutator lock (O(batch) work, so holding it is
     * cheap): an append racing [[requantize]] would otherwise land in
@@ -426,27 +519,16 @@ object AnnIndex {
     * every append either fully inside the rebuilt corpus or fully
     * after it. */
   def appendBatch(spark: SparkSession, dir: String, fresh: DataFrame,
-                  tag: String = ""): Unit = synchronized {
-    val t = ensureBuilt(spark, dir, tag)
-    val cs = storedQuantizer(spark, dir, tag)
-    // codes are encoded with the STORED params — the exact affine
-    // terms every existing code row used, the same coherence rule as
-    // the centroids (drifted mins/maxs are a quality decay cleared by
-    // [[requantize]], never a correctness one: a batch value outside
-    // the stored range clamps to 0/255 and the exact rerank still
-    // scores it full-precision)
-    val (mns, mxs) = storedSqParams(spark, dir, tag)
-    // PQ codes follow the same stored-artifact rule: assigned against
-    // the build's codebook, never a re-sample
-    val pqCb = storedPqCodebook(spark, dir, tag)
-    val assigned = Similarity.assignCells(Similarity.prepared(fresh), cs)
-      .select(col("vec_id"), col("v"), col("nrm"), col("cell"),
-        Similarity.sqCodesCol(col("v"), mns, mxs).as("codes"),
-        graft.functions.VectorExprs.nibblePack(
-            Similarity.pqCodesCol(col("v"), pqCb, PqM)).as("pqcodes"))
-    assigned.write.mode("append").format("parquet")
-      .bucketBy(cs.length, "cell").sortBy("cell")
-      .saveAsTable(t)
+                  tag: String = "", layout: Layout = Flat): Unit = synchronized {
+    val tb = layout.tables(dir, tag)
+    ensureBuilt(spark, dir, tag, layout = layout)
+    val q = storedQuantizer(spark, dir, tag, layout)
+    val (mns, mxs) = storedSqParams(spark, dir, tag, layout)
+    val pqCb = storedPqCodebook(spark, dir, tag, layout)
+    encoded(layout.assign(spark, tb, Similarity.prepared(fresh), q), layout, mns, mxs, pqCb)
+      .write.mode("append").format("parquet")
+      .bucketBy(q.length, layout.cell).sortBy(layout.cell)
+      .saveAsTable(tb.assign)
   }
 
   /** RETIRE half of the lifecycle: tombstone a batch of vec_ids —
@@ -455,15 +537,11 @@ object AnnIndex {
     * the index, so the tombstone table carries the probe's pruning
     * key), merged with the existing tombstone set (distinct — a
     * re-delete is idempotent, which also makes the registry's
-    * deletion entry re-runnable), and committed under the same
-    * stage→rename-aside→promote protocol as [[requantize]]: the live
-    * tombstone table is renamed aside and the staged one promoted, so
-    * every crash point inside the window leaves the table ABSENT —
-    * a state [[ensureBuilt]] detects and heals CHEAPLY via
-    * [[healTombstoneSwap]] (the staged merged table is complete before
-    * the first rename, so promoting it recovers everything including
-    * the in-flight batch; a routine delete never carries the full
-    * source-rebuild cost, which remains the fallback only when no
+    * deletion entries re-runnable), and committed under the
+    * stage→rename-aside→promote protocol ([[swap]]): every crash point
+    * inside the window leaves the tombstone table ABSENT — a state
+    * [[ensureBuilt]] detects and heals CHEAPLY via [[healTombstoneSwap]]
+    * (the full source rebuild remains the fallback only when no
     * tombstone generation survives — then the delete producer replays
     * its ledger, [[replayDeleteLedger]]). Ids not present in the index
     * resolve to no cell and are dropped — retiring an unknown id is a
@@ -474,9 +552,10 @@ object AnnIndex {
     * cell-pruned anti-join); [[requantizeAdvice]]'s dead-fraction
     * trigger bounds how long that debt can accumulate. */
   def removeBatch(spark: SparkSession, dir: String, ids: DataFrame,
-                  tag: String = ""): Unit = synchronized {
-    val t = ensureBuilt(spark, dir, tag)
-    val ts = tombstoneTableFor(dir, tag)
+                  tag: String = "", layout: Layout = Flat): Unit = synchronized {
+    val tb = layout.tables(dir, tag)
+    ensureBuilt(spark, dir, tag, layout = layout)
+    val ts = tb.tombstones
     // idempotent fast path, CHEAP side first: a batch already fully
     // tombstoned (the at-least-once delete producer's replay, or a
     // re-run registry entry) must not pay the table swap — and
@@ -488,7 +567,7 @@ object AnnIndex {
     // only at requantize, which resets the tombstones with them).
     val freshIds = ids.select(col("vec_id"))
       .join(spark.table(ts).select(col("vec_id")), Seq("vec_id"), "left_anti")
-    val resolved = spark.table(t).select(col("vec_id"), col("cell"))
+    val resolved = spark.table(tb.assign).select(col("vec_id"), col(layout.cell))
       .join(freshIds, Seq("vec_id"), "left_semi")
     // ONE driver probe decides both no-op cases (guide §5 — the r20
     // verdict's two-probe shape paid an extra round-trip per retire):
@@ -498,30 +577,19 @@ object AnnIndex {
     // cheap-side-only cost; ids not present in the index resolve to no
     // cell — retiring an unknown id stays a no-op, never a table swap
     if (!resolved.isEmpty) {
-      val k = storedQuantizer(spark, dir, tag).length
-      val merged = spark.table(ts).select(col("vec_id"), col("cell"))
+      val k = storedQuantizer(spark, dir, tag, layout).length
+      val merged = spark.table(ts).select(col("vec_id"), col(layout.cell))
         .unionByName(resolved).distinct()
-      val tsStage = ts + "__stage"
-      val tsOld = ts + "__old"
-      Seq(tsStage, tsOld).foreach(Bucketed.resetTable(spark, _))
-      writeTombstones(spark, merged, tsStage, k)
-      spark.sql(s"ALTER TABLE $ts RENAME TO $tsOld")
-      spark.sql(s"ALTER TABLE $tsStage RENAME TO $ts")
-      Bucketed.resetTable(spark, tsOld)
+      Bucketed.resetTable(spark, ts + "__stage")
+      writeTombstones(merged, ts + "__stage", k, layout.cell)
+      swap(spark, Seq(ts))
     }
   }
 
-  /** The replayable delete LEDGER stored beside the index — the
-    * source-of-truth feed [[removeBatch]]'s crash contract names
-    * ("delete producers replay their ledgers"): one row per retired
-    * vec_id, append-only, written BEFORE the tombstone commit so a
-    * crash anywhere after the ledger append loses nothing. */
-  def deleteLedgerTableFor(dir: String, tag: String = ""): String =
-    tableFor(dir, tag) + "_ledger"
-
   /** The CURATION → INDEX seam, closed: persist a curation output's
-    * retired ids to the ledger (the commit point), then tombstone the
-    * batch. This is the producer the scaladocs promised — a near-dup
+    * retired ids to the delete LEDGER ([[Tables.ledger]] — one row per
+    * retired vec_id, append-only), then tombstone the batch. This is
+    * the producer the removeBatch crash contract names — a near-dup
     * pass's losers, [[graft.ops.Dedup.applyNearDedup]]'s drops, or a
     * streaming matcher's hit feed flow through here and the serving
     * index stays coherent with the curated corpus.
@@ -547,28 +615,9 @@ object AnnIndex {
     * ledger one id set and tombstone another: what was durably
     * recorded is precisely what retires, structurally. */
   def retireBatch(spark: SparkSession, dir: String, ids: DataFrame,
-                  tag: String = ""): Unit = synchronized {
-    ensureBuilt(spark, dir, tag)
-    retireVia(spark, deleteLedgerTableFor(dir, tag), ids,
-      removeBatch(spark, dir, _, tag))
-  }
-
-  /** [[retireBatch]] for the two-level generation — same ledger-first
-    * contract, one level down. */
-  def retireBatch2(spark: SparkSession, dir: String, ids: DataFrame,
-                   tag: String = ""): Unit = synchronized {
-    ensureBuilt2(spark, dir, tag)
-    retireVia(spark, deleteLedger2TableFor(dir, tag), ids,
-      removeBatch2(spark, dir, _, tag))
-  }
-
-  /** Gen-2 ledger table — [[deleteLedgerTableFor]] beside the
-    * two-level index. */
-  def deleteLedger2TableFor(dir: String, tag: String = ""): String =
-    table2For(dir, tag) + "_ledger"
-
-  private def retireVia(spark: SparkSession, ledger: String, ids: DataFrame,
-                        remove: DataFrame => Unit): Unit = {
+                  tag: String = "", layout: Layout = Flat): Unit = synchronized {
+    ensureBuilt(spark, dir, tag, layout = layout)
+    val ledger = layout.tables(dir, tag).ledger
     val mig = ledger + "__mig"
     val lold = ledger + "__old"
     // heal a half-done migration swap FIRST (the two-rename window
@@ -635,8 +684,8 @@ object AnnIndex {
     // evaluation of the caller's plan is the parquet on disk, so the
     // ledger and the tombstones cannot diverge even for a
     // nondeterministic producer
-    remove(spark.table(ledger).filter(col("batch") === nextBatch)
-      .select(col("vec_id")))
+    removeBatch(spark, dir, spark.table(ledger).filter(col("batch") === nextBatch)
+      .select(col("vec_id")), tag, layout)
   }
 
   /** Recovery half of [[retireBatch]]: replay the FULL ledger into the
@@ -644,44 +693,24 @@ object AnnIndex {
     * idempotent; a fully-applied ledger takes the emptiness fast
     * path) — the producer's answer to every crash the removeBatch
     * scaladoc enumerates, including the tombstone-table rebuild. */
-  def replayDeleteLedger(spark: SparkSession, dir: String, tag: String = ""): Unit = {
-    val ledger = deleteLedgerTableFor(dir, tag)
+  def replayDeleteLedger(spark: SparkSession, dir: String, tag: String = "",
+                         layout: Layout = Flat): Unit = {
+    val ledger = layout.tables(dir, tag).ledger
     if (spark.catalog.tableExists(ledger))
-      removeBatch(spark, dir, spark.table(ledger), tag)
-  }
-
-  /** [[replayDeleteLedger]] for the two-level generation. */
-  def replayDeleteLedger2(spark: SparkSession, dir: String, tag: String = ""): Unit = {
-    val ledger = deleteLedger2TableFor(dir, tag)
-    if (spark.catalog.tableExists(ledger))
-      removeBatch2(spark, dir, spark.table(ledger), tag)
-  }
-
-  /** The probe-side tombstone filter: anti-join the index rows against
-    * the tombstone rows OF THE PROBED CELLS ONLY — the tombstone scan
-    * bucket-prunes on the same literal cell list as the index scan, so
-    * the anti-join's build side is the probed cells' dead rows (a
-    * bounded fraction of a bounded read), never the full tombstone
-    * set. Broadcast is therefore safe at any corpus size: the
-    * dead-fraction advice keeps per-cell tombstones a bounded share of
-    * per-cell occupancy, which the probe already reads in full. */
-  private def dropTombstoned(spark: SparkSession, dir: String, tag: String,
-                             index: DataFrame,
-                             cellLits: Seq[Integer]): DataFrame = {
-    val ts = spark.table(tombstoneTableFor(dir, tag))
-      .filter(col("cell").isin(cellLits: _*)).select(col("vec_id"))
-    index.join(broadcast(ts), Seq("vec_id"), "left_anti")
+      removeBatch(spark, dir, spark.table(ledger), tag, layout)
   }
 
   /** When to pay the re-quantize ([[requantize]]): advice, not
     * automation — the rebuild is a corpus-wide job the operator
-    * schedules.
+    * schedules. Measured at the layout's BUCKET level (the flat cell,
+    * or the coarse cell — fine cells re-size per coarse cell at
+    * rebuild, so they carry no independent trigger).
     *
     * Trigger (a) — KNEE: the corpus has outgrown the cell count.
     * ⌈√n⌉ sizing balances probe reads (n/k) against probe-cell
-    * selection (k); once annCellsFor(n) > 2·k the corpus is ≥ ~4× the
-    * build size and every probe reads ≥ ~2× the bytes an optimally
-    * sized index would.
+    * selection (k); once the layout's cell count for n exceeds 2·k the
+    * corpus is ≥ ~4× the build size and every probe reads ≥ ~2× the
+    * bytes an optimally sized index would.
     * Trigger (b) — SKEW: the hottest cell holds > `skewBound`× the
     * mean occupancy. Sampled centroids keep cells balanced for the
     * corpus they were sampled FROM (SCALING.md's occ_max
@@ -696,69 +725,72 @@ object AnnIndex {
     * never return; compaction reclaims them. */
   def requantizeAdvice(spark: SparkSession, dir: String,
                        skewBound: Long = 8L, deadBound: Long = 5L,
-                       tag: String = ""): RequantizeAdvice = {
-    val t = ensureBuilt(spark, dir, tag)
-    val k = storedQuantizer(spark, dir, tag).length
+                       tag: String = "", layout: Layout = Flat): RequantizeAdvice = {
+    val tb = layout.tables(dir, tag)
+    ensureBuilt(spark, dir, tag, layout = layout)
+    val k = storedQuantizer(spark, dir, tag, layout).length
     // one driver action for all three measurements: the occupancy agg
     // and the tombstone count cross-join into a single 1-row collect
     // (guide §5 — the former two-action shape paid an extra round-trip
     // per advice call)
-    val occ = spark.table(t).groupBy(col("cell")).agg(count(lit(1)).as("n"))
+    val occ = spark.table(tb.assign).groupBy(col(layout.cell)).agg(count(lit(1)).as("n"))
       .agg(sum(col("n")).as("total"), max(col("n")).as("occMax"))
-      .crossJoin(spark.table(tombstoneTableFor(dir, tag))
-        .agg(count(lit(1)).as("nts")))
+      .crossJoin(spark.table(tb.tombstones).agg(count(lit(1)).as("nts")))
       .collect()(0)
-    val n = occ.getAs[Long]("total")
-    val occMax = occ.getAs[Long]("occMax")
+    advice(layout, occ.getAs[Long]("total"), k, occ.getAs[Long]("occMax"),
+      occ.getAs[Long]("nts"), skewBound, deadBound)
+  }
+
+  private def advice(layout: Layout, n: Long, k: Int, occMax: Long, tombstoned: Long,
+                     skewBound: Long, deadBound: Long): RequantizeAdvice = {
     val occMean = math.max(1L, n / k)
-    val tombstoned = occ.getAs[Long]("nts")
     RequantizeAdvice(n, k, occMax, occMean,
-      knee = annCellsFor(n) > 2 * k,
+      knee = layout.cellsFor(n) > 2 * k,
       skewed = occMax > skewBound * occMean,
       tombstoned = tombstoned,
       dead = tombstoned * deadBound >= math.max(1L, n))
   }
 
-  /** Execute the rebuild [[requantizeAdvice]] recommends: re-fit the
-    * quantizer over the CURRENT corpus (build rows ∪ every appended
+  /** Execute the rebuild [[requantizeAdvice]] recommends: re-fit every
+    * artifact over the CURRENT corpus (build rows ∪ every appended
     * batch, MINUS the tombstoned rows — compaction happens here, and
     * the tombstone table resets to empty in the same commit), reassign
-    * everything, and swap the new generation in.
+    * and re-encode everything, and swap the new generation in.
     *
-    * Sizing and sampling are exactly [[ensureBuilt]]'s — k =
-    * [[annCellsFor]](n) over the surviving n, centroids =
-    * [[Similarity.sampledCentroids]] over the surviving corpus — so a
-    * probe after the rebuild is bit-identical to an inline IVF
-    * pipeline built fresh from the surviving corpus (`AnnIndexSpec`'s
-    * requantize-cycle test pins exactly this, and the
-    * `topk_requant` registry entry hash-checks the rebuilt index
-    * against the oracle's inline IVF SQL): the index stays a pure
-    * physical optimization across its whole build → append → remove →
-    * advice → requantize lifecycle.
+    * Sizing and sampling are exactly [[ensureBuilt]]'s over the
+    * surviving corpus, so a probe after the rebuild is bit-identical to
+    * an inline pipeline built fresh from it (`AnnIndexSpec`'s
+    * requantize-cycle tests pin exactly this, and the `topk_requant`
+    * registry entry hash-checks the rebuilt index against the oracle's
+    * inline IVF SQL): the index stays a pure physical optimization
+    * across its whole build → append → remove → advice → requantize
+    * lifecycle. `learnedPq` re-fits the Lloyd book over the SURVIVING
+    * corpus (the build flag, carried through the rebuild so a learned
+    * index stays learned).
     *
     * Commit protocol = temp-write-then-swap at table granularity (the
     * [[graft.ingest.ChainStore]] `swapBucket` pattern): the new
     * generation is fully written BESIDE the live tables (readers keep
     * serving the old index during the corpus-wide reassignment — no
     * downtime window the length of a rebuild), then swapped in via
-    * catalog renames. Rename ORDER is load-bearing: the live
+    * catalog renames ([[swap]]). Rename ORDER is load-bearing: the live
     * assignment table is renamed aside FIRST and the staged one
     * promoted LAST, so every crash point inside the window leaves the
     * assignment table ABSENT — which is exactly the state
     * [[ensureBuilt]]'s orphan sweep detects and heals (rebuild from
     * the source corpus; append/delete producers replay from their
-    * ledger — documented there). Promoting the assignment table before
-    * the quantizer swap would open a silent-wrong-buckets window (both
-    * tables present but from different generations, so no sweep
-    * triggers and probes scan wrong cells with no error); this
-    * ordering makes that state unreachable. Mutators ([[appendBatch]],
-    * [[removeBatch]], this method) serialize on this object's lock,
-    * the same single-maintainer contract as the store's write lock —
-    * an append can therefore never land in the old generation mid-swap
-    * and be dropped with it. Probes call [[ensureBuilt]] (same lock),
-    * so an in-JVM probe issued during the swap blocks until commit; a
-    * probe that planned BEFORE the swap can still see a mixed view —
-    * run requantize in the maintenance window, like any index rebuild.
+    * ledger). Promoting the assignment before the quantizer swap would
+    * open a silent-wrong-buckets window (both tables present but from
+    * different generations, so no sweep triggers and probes scan wrong
+    * cells with no error); this ordering makes that state unreachable.
+    * Mutators ([[appendBatch]], [[removeBatch]], this method) serialize
+    * on this object's lock, the same single-maintainer contract as the
+    * store's write lock — an append can therefore never land in the
+    * old generation mid-swap and be dropped with it. Probes call
+    * [[ensureBuilt]] (same lock), so an in-JVM probe issued during the
+    * swap blocks until commit; a probe that planned BEFORE the swap can
+    * still see a mixed view — run requantize in the maintenance window,
+    * like any index rebuild.
     *
     * Clears the KNEE trigger by construction, the DEAD trigger always
     * (compaction), and the SKEW trigger whenever skew came from
@@ -771,18 +803,16 @@ object AnnIndex {
     * (or legitimately persisting) triggers. */
   def requantize(spark: SparkSession, dir: String,
                  skewBound: Long = 8L, tag: String = "",
-                 learnedPq: Boolean = false): RequantizeAdvice = synchronized {
-    val t = ensureBuilt(spark, dir, tag)
-    val qt = quantizerTableFor(dir, tag)
-    val sqt = sqTableFor(dir, tag)
-    val pqt = pqTableFor(dir, tag)
-    val tst = tombstoneTableFor(dir, tag)
+                 learnedPq: Boolean = false,
+                 layout: Layout = Flat): RequantizeAdvice = synchronized {
+    val tb = layout.tables(dir, tag)
+    ensureBuilt(spark, dir, tag, layout = layout)
     // compaction: tombstoned rows leave the corpus here — the rebuild
     // is the one corpus-wide job of the lifecycle, so the anti-join
     // rides it for free (vec_id-keyed, never wider than the reassign
     // scan that follows)
-    val live = spark.table(t).select(col("vec_id"), col("v"), col("nrm"))
-      .join(spark.table(tst).select(col("vec_id")), Seq("vec_id"), "left_anti")
+    val live = spark.table(tb.assign).select(col("vec_id"), col("v"), col("nrm"))
+      .join(spark.table(tb.tombstones).select(col("vec_id")), Seq("vec_id"), "left_anti")
     // live count WITHOUT evaluating the anti-join: every tombstone row
     // was resolved from the live assignment at removeBatch time and
     // vec_id is unique in the index (appendBatch's fresh-ids contract;
@@ -790,863 +820,95 @@ object AnnIndex {
     // |live| = |t| − |ts| exactly — two column-free count-star scans
     // folded into ONE driver action replace the join-shaped count job
     // (guide §5; AnnIndexSpec pins the identity across the lifecycle)
-    val cnt = spark.table(t).agg(count(lit(1)).as("nt"))
-      .crossJoin(spark.table(tst).agg(count(lit(1)).as("nts"))).head()
+    val cnt = spark.table(tb.assign).agg(count(lit(1)).as("nt"))
+      .crossJoin(spark.table(tb.tombstones).agg(count(lit(1)).as("nts"))).head()
     val n = cnt.getLong(0) - cnt.getLong(1)
-    require(n > 0, s"cannot requantize an empty index ($t)")
-    val k = annCellsFor(n)
-    // one ranked sample for quantizer + default PQ codebook — the
-    // build's prefix argument (see ensureBuilt), applied to the rebuild
-    val sample = Similarity.sampledCentroids(live, math.max(k, PqKsub))
-    val cs = sample.take(k)
-    // SQ params refresh with the quantizer: drifted mins/maxs are the
-    // same decay class as drifted centroids (appended values outside
-    // the stored range clamp, widening the range restores code
-    // resolution), and the rebuild re-encodes every row so the whole
-    // generation shares one code book
-    val (mns, mxs) = Similarity.sqParamsOf(live, Dim)
-    // the PQ codebook refreshes with the generation (the same decay
-    // class as the centroids/SQ params) and every row re-encodes —
-    // one code book per generation; learnedPq re-fits the Lloyd book
-    // over the SURVIVING corpus (the build flag, carried through the
-    // rebuild so a learned index stays learned)
-    val pqCb =
-      if (learnedPq) Similarity.learnedPqCodebookOf(live, PqM, PqKsub, Dim)
-      else sample.take(PqKsub)
-    // stage the new generation beside the live one
-    val stages = allTables(dir, tag).map(_ + "__stage")
-    val Seq(tStage, qtStage, sqtStage, pqtStage, tstStage) = stages
-    stages.foreach(Bucketed.resetTable(spark, _))
-    Bucketed.writeBucketed(
-      Similarity.assignCells(live, cs)
-        .select(col("vec_id"), col("v"), col("nrm"), col("cell"),
-          Similarity.sqCodesCol(col("v"), mns, mxs).as("codes"),
-          graft.functions.VectorExprs.nibblePack(
-            Similarity.pqCodesCol(col("v"), pqCb, PqM)).as("pqcodes")),
-      tStage, "cell", nBuckets = k)
-    import spark.implicits._
-    // single-partition artifact writes — [[ensureBuilt]]'s rationale:
-    // 3 × 32 two-row commit-protocol files per rebuild → 3 × 1
-    cs.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cell", "centroid").repartition(1)
-      .write.mode("overwrite").saveAsTable(qtStage)
-    mns.indices.map(i => (i, mns(i), mxs(i)))
-      .toDF("dim", "mn", "mx").repartition(1)
-      .write.mode("overwrite").saveAsTable(sqtStage)
-    pqCb.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("i", "centroid").repartition(1)
-      .write.mode("overwrite").saveAsTable(pqtStage)
-    // the new generation starts with NO tombstones: compaction just
-    // removed every retired row physically
-    writeTombstones(spark, emptyTombstones(spark), tstStage, 1)
-    // commit: rename the live generation aside, promote the stage —
-    // each rename is one atomic catalog+dir move, and the ASSIGNMENT
-    // table is renamed aside FIRST and promoted LAST so any crash
-    // inside the window leaves it absent (ensureBuilt's rebuild
-    // trigger), never a mixed new-assignment/old-quantizer(-params)
-    // combination (see scaladoc)
-    val olds = allTables(dir, tag).map(_ + "__old")
-    olds.foreach(Bucketed.resetTable(spark, _))
-    spark.sql(s"ALTER TABLE $t RENAME TO ${t}__old")
-    spark.sql(s"ALTER TABLE $qt RENAME TO ${qt}__old")
-    spark.sql(s"ALTER TABLE $sqt RENAME TO ${sqt}__old")
-    spark.sql(s"ALTER TABLE $pqt RENAME TO ${pqt}__old")
-    spark.sql(s"ALTER TABLE $tst RENAME TO ${tst}__old")
-    spark.sql(s"ALTER TABLE $tstStage RENAME TO $tst")
-    spark.sql(s"ALTER TABLE $pqtStage RENAME TO $pqt")
-    spark.sql(s"ALTER TABLE $sqtStage RENAME TO $sqt")
-    spark.sql(s"ALTER TABLE $qtStage RENAME TO $qt")
-    spark.sql(s"ALTER TABLE $tStage RENAME TO $t")
-    olds.foreach(Bucketed.resetTable(spark, _))
+    require(n > 0, s"cannot requantize an empty index (${tb.assign})")
+    val stage = tb.suffixed("__stage")
+    stage.all.foreach(Bucketed.resetTable(spark, _))
+    val written = writeGeneration(spark, layout, stage, live, n, learnedPq)
+    swap(spark, tb.all)
     // the generation swapped: cached artifacts describe the OLD one —
     // invalidate every session's, then SEED the writer's with the
-    // values just written (bit-identical to a re-collect: doubles
-    // round-trip parquet exactly and the stored order is the array
-    // order), so the post-swap probes pay zero artifact collects
-    invalidateArtifacts(spark, allTables(dir, tag))
-    seedArtifact(spark, qt, cs)
-    seedArtifact(spark, sqt, (mns, mxs))
-    seedArtifact(spark, pqt, pqCb)
+    // values just written, so the post-swap probes pay zero artifact
+    // collects
+    invalidateArtifacts(spark, tb.all)
+    seedArtifacts(spark, tb, written)
     // post-rebuild advice from facts the rebuild just established — n
     // and k are the written generation's own parameters and the fresh
     // tombstone table is empty by construction, so only the occupancy
     // max needs a job (ONE map-side-combined groupBy over the new
-    // table, replacing requantizeAdvice's quantizer collect + occ agg
-    // + tombstone count round-trips; field-for-field the same values)
-    val occMax = spark.table(t).groupBy(col("cell")).agg(count(lit(1)).as("n"))
+    // table; field-for-field requantizeAdvice's values)
+    val occMax = spark.table(tb.assign).groupBy(col(layout.cell)).agg(count(lit(1)).as("n"))
       .agg(max(col("n")).as("m")).head().getLong(0)
-    val occMean = math.max(1L, n / k)
-    RequantizeAdvice(n, k, occMax, occMean,
-      knee = annCellsFor(n) > 2 * k,
-      skewed = occMax > skewBound * occMean,
-      tombstoned = 0L,
-      dead = false)
+    advice(layout, n, written.quantizer.length, occMax, 0L, skewBound, deadBound = 5L)
   }
 
-  /** Top-k probe over the persisted index: probe cells selected
-    * in-plan against the STORED quantizer (k rows — no corpus-wide job
-    * at serving time), scan only those buckets (literal IN filter →
-    * bucket pruning), drop tombstoned rows, rank by exact cosine. */
-  def topK(spark: SparkSession, dir: String, maxQueryId: Long,
-           k: Int = 5, nProbe: Int = 2, tag: String = ""): DataFrame = {
-    val t = ensureBuilt(spark, dir, tag)
-    val (probesDf, cells) = probeFrame(spark, dir, maxQueryId, nProbe, tag = tag)
-    val cellLits = cells.map(Int.box).toSeq
-    val index = dropTombstoned(spark, dir, tag,
-      spark.table(t).filter(col("cell").isin(cellLits: _*)), cellLits)
-    Similarity.probeIndex(index, probesDf, k)
-  }
-
-  /** The probe computation shared by [[topK]], [[topKSq]], and (at the
-    * coarse level) [[topK2]]: each query's `nProbe` nearest cells
-    * against the STORED quantizer, as a (cell, q_id, qv, qn) frame
-    * plus the distinct cell-id literal list that buys bucket pruning.
+  /** Top-k probe over the persisted index — every stored (layout ×
+    * codec × query shape) combination:
     *
-    * Scoring runs IN-PLAN — [[Similarity.probeQueries]]'s codegen'd
-    * scored-array slice over the query-side scan, the same expression
-    * the inline pipelines use, so the two paths cannot drift — and the
-    * only driver materialization is the DISTINCT probed cell list
-    * (≤ queries · nProbe ints, needed as a plan-time literal for
-    * bucket pruning). Query vectors are never collected: at a
-    * batch-serving load the queries × cells × dim scoring is the
-    * expensive half of a probe, and it stays on executors.
-    * [[Similarity.probeQueries]]'s (s, cell)-ascending struct sort is
-    * the same (score, cell) first-min tie-break as assignCells and the
-    * DuckDB oracle's ROW_NUMBER, so the registry entries stay
-    * hash-differential. */
-  private def probeFrame(spark: SparkSession, dir: String, maxQueryId: Long,
-                         nProbe: Int,
-                         quantizer: Option[Array[Array[Double]]] = None,
-                         tag: String = ""): (DataFrame, Array[Int]) =
-    probeFrameFor(spark, dir, _.filter(col("vec_id") < maxQueryId),
-      nProbe, quantizer, tag)
-
-  /** [[probeFrame]] over an arbitrary query selection — the fixture
-    * entries' id-prefix filter is just one instance; [[topKIds]]
-    * passes a semi-join against a caller-supplied id frame. */
-  private def probeFrameFor(spark: SparkSession, dir: String,
-                            select: DataFrame => DataFrame, nProbe: Int,
-                            quantizer: Option[Array[Array[Double]]] = None,
-                            tag: String = ""): (DataFrame, Array[Int]) = {
+    *  1. probe cells selected IN-PLAN against the STORED quantizer
+    *     ([[Similarity.probeQueries]] — the same codegen'd arg-top-n the
+    *     inline pipelines use, so the two paths cannot drift; its
+    *     (s, cell)-ascending order is the same first-min tie-break as
+    *     assignCells and the DuckDB oracle's ROW_NUMBER). The only
+    *     driver materialization is the DISTINCT probed cell list, the
+    *     plan-time literal that buys bucket pruning;
+    *  2. the layout routes those cells to candidate keys (the
+    *     two-level layout ranks the probed coarse cells' fine centroids
+    *     together per query, keeping `nProbeFine` — a width only that
+    *     layout has);
+    *  3. the assignment scan reads ONLY the probed buckets and
+    *     anti-joins the tombstones OF THE PROBED CELLS ONLY (the
+    *     tombstone scan prunes on the same literal, so the broadcast
+    *     build side is the probed cells' dead rows — bounded by the
+    *     dead-fraction advice — never the full tombstone set);
+    *  4. [[Similarity.rankTopK]] ranks: exact cosine, or the codec's
+    *     approximate score over its code column (parquet column
+    *     pruning — the candidate scan never reads `v`) with an exact
+    *     rerank of the `rerank` survivors, still inside the probed
+    *     buckets.
+    *
+    * Every quantization artifact is READ, never derived: a probe costs
+    * zero corpus-wide jobs. Results are identical to the inline twin
+    * ([[Similarity.topKIvfKmeans]], [[Similarity.topKIvfSq]],
+    * [[Similarity.topKIvfPq]], [[Similarity.topKIvf2]]) over the same
+    * corpus by construction — `AnnIndexSpec` pins it and the `topk_*`
+    * registry entries hash-check it against the oracle SQL. */
+  def topK(spark: SparkSession, dir: String, queries: Queries, codec: Codec = Exact,
+           k: Int = 5, nProbe: Int = 2, nProbeFine: Int = 3, tag: String = "",
+           layout: Layout = Flat): DataFrame = {
+    val tb = layout.tables(dir, tag)
+    ensureBuilt(spark, dir, tag, layout = layout)
     val prep = Similarity.prepared(Fixtures.embeddings(spark, dir))
-    val cs: Array[Array[Double]] = quantizer.getOrElse(storedQuantizer(spark, dir, tag))
-    val probes = Similarity.probeQueries(select(prep), cs, nProbe)
+    val selected = queries match {
+      case Prefix(maxQueryId) => prep.filter(col("vec_id") < maxQueryId)
+      case Ids(ids) =>
+        prep.join(broadcast(ids.select(col("vec_id"))), Seq("vec_id"), "left_semi")
+    }
+    val probes = Similarity.probeQueries(selected,
+      storedQuantizer(spark, dir, tag, layout), nProbe)
     val cells = probes.select(col("cell")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    (probes, cells)
-  }
-
-  /** [[topK]] for an EXPLICIT query-id set — the call a real serving
-    * caller makes (query ids are rarely an id prefix): the query side
-    * is a broadcast semi-join of the corpus scan against `queryIds`,
-    * so the probe stays in-plan and bucket-pruned exactly like the
-    * prefix form. `queryIds` needs a `vec_id` column; ids not in the
-    * corpus probe nothing. */
-  def topKIds(spark: SparkSession, dir: String, queryIds: DataFrame,
-              k: Int = 5, nProbe: Int = 2, tag: String = ""): DataFrame = {
-    val t = ensureBuilt(spark, dir, tag)
-    val (probesDf, cells) = probeFrameFor(spark, dir,
-      _.join(broadcast(queryIds.select(col("vec_id"))), Seq("vec_id"), "left_semi"),
-      nProbe, tag = tag)
-    val cellLits = cells.map(Int.box).toSeq
-    val index = dropTombstoned(spark, dir, tag,
-      spark.table(t).filter(col("cell").isin(cellLits: _*)), cellLits)
-    Similarity.probeIndex(index, probesDf, k)
-  }
-
-  /** IVF × SQ8 probe over the persisted index — the stored form of
-    * [[Similarity.topKIvfSq]] and the index's production read path:
-    * the candidate pass scans ONLY the probed cells' buckets
-    * (bucket-pruned literal IN filter) and ONLY the code column
-    * (parquet column pruning: ~1 bit-packed byte/dim instead of the
-    * 8-byte doubles of `v`), ranks by the decomposed approximate
-    * cosine, and the exact rerank joins the `rerank` survivors per
-    * query back to full vectors — still inside the probed buckets, so
-    * both scans prune. All quantization artifacts (centroids, SQ
-    * params, codes) are READ, not derived: a probe costs zero
-    * corpus-wide jobs, the write-once/probe-many claim extended to the
-    * byte-bounded read path.
-    *
-    * Identical results to the inline [[Similarity.topKIvfSq]] over the
-    * same corpus by construction (same stored-vs-derived coherence
-    * argument as [[topK]] vs the inline IVF) — `AnnIndexSpec` pins it,
-    * and the `topk_indexed_sq` registry entry hash-checks the whole
-    * stored stack against the inline oracle SQL. */
-  // ---- the persisted TWO-LEVEL index (billion-vector tier) ---------
-
-  /** One two-level index per source directory, beside (not replacing)
-    * the flat index: the flat layout is the right answer while
-    * k = ⌈√n⌉ centroids fit a driver collect and a plan literal; this
-    * one is for the tier past that knee (k ~ 10⁶ at a billion
-    * vectors), where ONLY the ~n^¼ coarse quantizer is ever collected
-    * (178 rows at 10⁹) and the fine quantizer stays a TABLE probed by
-    * coarse-cell literals — nothing k-sized touches the driver or the
-    * plan at any corpus size. */
-  def table2For(dir: String, tag: String = ""): String =
-    "ann2_" + graft.evm.EvmDerive.md5hex(dir + "#" + tag).take(8)
-  def coarseQuantizerTableFor(dir: String, tag: String = ""): String =
-    table2For(dir, tag) + "_qc"
-  def fineQuantizerTableFor(dir: String, tag: String = ""): String =
-    table2For(dir, tag) + "_qf"
-
-  /** Generation-2 tombstones: (vec_id, ccell), bucketed on the COARSE
-    * cell — the same probe-time pruning key and recovery contract as
-    * the flat index's [[tombstoneTableFor]]. */
-  def tombstone2TableFor(dir: String, tag: String = ""): String =
-    table2For(dir, tag) + "_ts"
-
-  /** Generation-2 SQ8 params: (dim, mn, mx) beside the two-level
-    * index — [[sqTableFor]]'s contract one level down. The two-level
-    * tier IS the billion-vector tier, the one whose probes must be
-    * byte-frugal: without codes every probed fine cell pays 8
-    * bytes/dim of full-precision vectors where the flat tier pays ~1.
-    * Same stored-params coherence rule: every code row was produced
-    * with exactly these (mn, mx), appends encode with them, and
-    * [[requantize2]] refreshes them with the generation. */
-  def sq2TableFor(dir: String, tag: String = ""): String =
-    table2For(dir, tag) + "_sq"
-
-  /** Generation-2 PQ codebook: [[pqTableFor]]'s contract one level
-    * down — the billion-vector tier is exactly where 4-bit codes
-    * matter most (a probed fine cell at ~0.5 byte/dim instead of
-    * SQ8's ~1 or the vectors' 8). Every `pqcodes` row in the gen-2
-    * assignment was assigned against these rows; appends encode with
-    * them; [[requantize2]] refreshes them with the generation. */
-  def pq2TableFor(dir: String, tag: String = ""): String =
-    table2For(dir, tag) + "_pq"
-
-  // NOTE: tombstones LAST here too — healTombstoneSwap keys on .last
-  private def allTables2(dir: String, tag: String): Seq[String] =
-    Seq(table2For(dir, tag), coarseQuantizerTableFor(dir, tag),
-      fineQuantizerTableFor(dir, tag), sq2TableFor(dir, tag),
-      pq2TableFor(dir, tag), tombstone2TableFor(dir, tag))
-
-  /** Build the two-level index if absent: assignment
-    * (vec_id, ccell, v, nrm, fcell) bucketed on the COARSE cell (kc
-    * buckets — the probe's pruning key), the n^¼-row coarse quantizer,
-    * and the (ccell, fcell, fv, f2) fine-quantizer relation stored as
-    * a table (≈ Σ⌈√occ⌉ rows — data, never a literal). Same
-    * write-once idempotence and orphan-sweep recovery contract as
-    * [[ensureBuilt]]. */
-  def ensureBuilt2(spark: SparkSession, dir: String, tag: String = "",
-                   learnedPq: Boolean = false): String = synchronized {
-    val t = table2For(dir, tag)
-    healTombstoneSwap(spark, allTables2(dir, tag))
-    if (allTables2(dir, tag).exists(!spark.catalog.tableExists(_))) {
-      allTables2(dir, tag).flatMap(x => Seq(x, x + "__stage", x + "__old"))
-        .foreach(Bucketed.resetTable(spark, _))
-      invalidateArtifacts(spark, allTables2(dir, tag))
-      val emb = Fixtures.embeddings(spark, dir)
-      val prep = Similarity.prepared(emb)
-      val (coarse, sqp, pqCb) = writeGeneration2(spark, prep, emb.count(), t,
-        coarseQuantizerTableFor(dir, tag), fineQuantizerTableFor(dir, tag),
-        sq2TableFor(dir, tag), pq2TableFor(dir, tag),
-        tombstone2TableFor(dir, tag), learnedPq)
-      // seed the fresh generation's artifacts ([[seedArtifact]]): the
-      // first gen-2 probes after a build skip their collect jobs
-      seedArtifact(spark, coarseQuantizerTableFor(dir, tag), coarse)
-      seedArtifact(spark, sq2TableFor(dir, tag), sqp)
-      seedArtifact(spark, pq2TableFor(dir, tag), pqCb)
+      .collect().map(_.getInt(0)).sorted.map(Int.box).toSeq
+    val scoring = codec match {
+      case Exact => None
+      case Sq8(rerank) =>
+        val (mns, mxs) = storedSqParams(spark, dir, tag, layout)
+        Some(Similarity.sq8Scoring(mns, mxs, rerank))
+      case Pq(rerank) =>
+        val cb = storedPqCodebook(spark, dir, tag, layout)
+        // the stored codebook must carry exactly PqKsub rows — the ADC
+        // fold's gather stride; a truncated/mismatched artifact would
+        // read out of bounds silently
+        require(cb.length == PqKsub,
+          s"stored PQ codebook has ${cb.length} rows, need exactly $PqKsub")
+        Some(Similarity.pqScoring(cb, PqM, rerank, packed = true))
     }
-    t
-  }
-
-  /** Stage one full two-level generation into the named tables —
-    * shared by the build (straight into the live names) and
-    * [[requantize2]] (into the `__stage` names). The assignment rows
-    * carry SQ8 `codes` quantized ONCE here at write time with the
-    * generation's own params — the byte-bounded read path
-    * [[ensureBuilt]] gave the flat tier, now on the tier that needs it
-    * most (a billion-vector probe's fine cells at ~1 byte/dim instead
-    * of 8). */
-  private def writeGeneration2(spark: SparkSession, prep: DataFrame, n: Long,
-                               t: String, qc: String, qf: String,
-                               sqt: String, pqt: String, tst: String,
-                               learnedPq: Boolean = false)
-      : (Array[Array[Double]], (Array[Double], Array[Double]), Array[Array[Double]]) = {
-    val (coarse, fine, asg) = Similarity.ivf2StructureOf(prep, n)
-    val (mns, mxs) = Similarity.sqParamsOf(prep, Dim)
-    // the PQ codebook joins the gen-2 layout exactly as it joined the
-    // flat one: pqcodes quantized ONCE at write time against rows
-    // stored with the generation; learnedPq = the Lloyd-fit book
-    // ([[ensureBuilt]]'s flag, one level down — the billion-vector
-    // tier's first recall dial)
-    val pqCb =
-      if (learnedPq) Similarity.learnedPqCodebookOf(prep, PqM, PqKsub, Dim)
-      else Similarity.sampledCentroids(prep, PqKsub)
-    Bucketed.writeBucketed(
-      asg.select(col("vec_id"), col("v"), col("nrm"), col("ccell"), col("fcell"),
-        Similarity.sqCodesCol(col("v"), mns, mxs).as("codes"),
-        graft.functions.VectorExprs.nibblePack(
-            Similarity.pqCodesCol(col("v"), pqCb, PqM)).as("pqcodes")),
-      t, "ccell", nBuckets = coarse.length)
-    import spark.implicits._
-    // single-partition writes for the driver-local artifact seqs —
-    // [[ensureBuilt]]'s rationale (the FINE quantizer stays a
-    // distributed write: it is a computed frame, ~Σ⌈√occ⌉ rows)
-    coarse.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("ccell", "centroid").repartition(1)
-      .write.mode("overwrite").saveAsTable(qc)
-    fine.write.mode("overwrite").saveAsTable(qf)
-    mns.indices.map(i => (i, mns(i), mxs(i)))
-      .toDF("dim", "mn", "mx").repartition(1)
-      .write.mode("overwrite").saveAsTable(sqt)
-    pqCb.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("i", "centroid").repartition(1)
-      .write.mode("overwrite").saveAsTable(pqt)
-    writeTombstones(spark, emptyTombstones(spark, "ccell"), tst, 1, "ccell")
-    // the bounded driver-side artifacts, returned so the caller can
-    // seed the cache once the generation's names are FINAL (the build
-    // writes live names directly; requantize2 commits a rename first)
-    (coarse, (mns, mxs), pqCb)
-  }
-
-  /** The stored gen-2 PQ codebook — [[storedPqCodebook]] one level
-    * down (ksub·dim doubles, bounded collect). */
-  def storedPqCodebook2(spark: SparkSession, dir: String, tag: String = ""): Array[Array[Double]] =
-    cachedArtifact(spark, pq2TableFor(dir, tag)) {
-      spark.table(pq2TableFor(dir, tag))
-        .select(col("i"), col("centroid")).orderBy(col("i")).collect()
-        .map(_.getSeq[Double](1).toArray)
-    }
-
-  /** The stored coarse quantizer (~n^¼ · dim doubles — the ONLY
-    * quantizer collect this index ever performs). Session-cached per
-    * generation. */
-  def storedCoarseQuantizer(spark: SparkSession, dir: String,
-                            tag: String = ""): Array[Array[Double]] =
-    cachedArtifact(spark, coarseQuantizerTableFor(dir, tag)) {
-      spark.table(coarseQuantizerTableFor(dir, tag))
-        .select(col("ccell"), col("centroid")).orderBy(col("ccell")).collect()
-        .map(_.getSeq[Double](1).toArray)
-    }
-
-  /** Append a fresh batch against BOTH stored quantizers — coarse
-    * assignment from the collected n^¼ matrix, fine assignment via a
-    * broadcast join against the stored fine relation with the same
-    * map-side `min_by` argmin the build uses. O(batch); probe
-    * coherence by construction, exactly [[appendBatch]]'s contract one
-    * level down. */
-  def appendBatch2(spark: SparkSession, dir: String, fresh: DataFrame,
-                   tag: String = ""): Unit = synchronized {
-    val t = ensureBuilt2(spark, dir, tag)
-    val coarse = storedCoarseQuantizer(spark, dir, tag)
-    val fine = spark.table(fineQuantizerTableFor(dir, tag))
-    // codes encode with the STORED gen-2 params — [[appendBatch]]'s
-    // coherence rule one level down (out-of-range batch values clamp;
-    // the exact rerank still scores them full-precision)
-    val (mns, mxs) = storedSqParams2(spark, dir, tag)
-    // PQ codes encode with the STORED gen-2 codebook — the same
-    // artifact-coherence rule as the SQ params
-    val pqCb = storedPqCodebook2(spark, dir, tag)
-    val casg = Similarity.assignCells(Similarity.prepared(fresh), coarse)
-      .withColumnRenamed("cell", "ccell")
-    val assigned = casg.join(broadcast(fine), Seq("ccell"))
-      .withColumn("s",
-        lit(-2.0) * Similarity.dot(col("v"), col("fv")) + col("f2"))
-      .groupBy(col("vec_id")).agg(
-        first(col("ccell")).as("ccell"),
-        first(col("v")).as("v"), first(col("nrm")).as("nrm"),
-        min_by(col("fcell"), struct(col("s"), col("fcell"))).as("fcell"))
-    assigned.select(col("vec_id"), col("v"), col("nrm"), col("ccell"), col("fcell"),
-        Similarity.sqCodesCol(col("v"), mns, mxs).as("codes"),
-        graft.functions.VectorExprs.nibblePack(
-            Similarity.pqCodesCol(col("v"), pqCb, PqM)).as("pqcodes"))
-      .write.mode("append").format("parquet")
-      .bucketBy(coarse.length, "ccell").sortBy("ccell")
-      .saveAsTable(t)
-  }
-
-  /** [[requantizeAdvice]]'s two-level counterpart, measured at the
-    * COARSE level — the level whose occupancy a probe's bucket reads
-    * and whose count must track n^¼ (fine cells re-size per coarse
-    * cell automatically at rebuild, so they carry no independent
-    * trigger). KNEE: annCellsFor(annCellsFor(n)) > 2·kc — the corpus
-    * has outgrown the coarse count the way the flat index outgrows
-    * ⌈√n⌉. SKEW: the hottest coarse cell holds > skewBound× the mean —
-    * a drifted append distribution concentrates coarse reads exactly
-    * like the flat case. DEAD: the flat index's tombstone-fraction
-    * trigger, over [[removeBatch2]]'s set. */
-  def requantizeAdvice2(spark: SparkSession, dir: String,
-                        skewBound: Long = 8L, deadBound: Long = 5L,
-                        tag: String = ""): RequantizeAdvice = {
-    val t = ensureBuilt2(spark, dir, tag)
-    val kc = storedCoarseQuantizer(spark, dir, tag).length
-    // one driver action for all three measurements — [[requantizeAdvice]]'s
-    // cross-join fold, one level down
-    val occ = spark.table(t).groupBy(col("ccell")).agg(count(lit(1)).as("n"))
-      .agg(sum(col("n")).as("total"), max(col("n")).as("occMax"))
-      .crossJoin(spark.table(tombstone2TableFor(dir, tag))
-        .agg(count(lit(1)).as("nts")))
-      .collect()(0)
-    val n = occ.getAs[Long]("total")
-    val occMax = occ.getAs[Long]("occMax")
-    val occMean = math.max(1L, n / kc)
-    val tombstoned = occ.getAs[Long]("nts")
-    RequantizeAdvice(n, kc, occMax, occMean,
-      knee = annCellsFor(annCellsFor(n)) > 2 * kc,
-      skewed = occMax > skewBound * occMean,
-      tombstoned = tombstoned,
-      dead = tombstoned * deadBound >= math.max(1L, n))
-  }
-
-  /** RETIRE on the two-level index — [[removeBatch]]'s contract one
-    * level down: ids resolve to their stored COARSE cells (the probe's
-    * pruning key), merge distinct with the existing set, and commit
-    * under the same stage→rename-aside→promote protocol (a crash
-    * leaves the tombstone table absent → [[ensureBuilt2]]'s sweep
-    * heals; delete producers replay their ledger). */
-  def removeBatch2(spark: SparkSession, dir: String, ids: DataFrame,
-                   tag: String = ""): Unit = synchronized {
-    val t = ensureBuilt2(spark, dir, tag)
-    val ts = tombstone2TableFor(dir, tag)
-    // same single-probe decision as [[removeBatch]]: the fully-
-    // tombstoned re-run still decides on ids ∖ tombstones alone (AQE
-    // empty-relation propagation collapses the semi-join before the
-    // index scan), and the two former probes fold into one round-trip
-    val freshIds = ids.select(col("vec_id"))
-      .join(spark.table(ts).select(col("vec_id")), Seq("vec_id"), "left_anti")
-    val resolved = spark.table(t).select(col("vec_id"), col("ccell"))
-      .join(freshIds, Seq("vec_id"), "left_semi")
-    if (!resolved.isEmpty) {
-      val kc = storedCoarseQuantizer(spark, dir, tag).length
-      val merged = spark.table(ts).select(col("vec_id"), col("ccell"))
-        .unionByName(resolved).distinct()
-      val tsStage = ts + "__stage"
-      val tsOld = ts + "__old"
-      Seq(tsStage, tsOld).foreach(Bucketed.resetTable(spark, _))
-      writeTombstones(spark, merged, tsStage, kc, "ccell")
-      spark.sql(s"ALTER TABLE $ts RENAME TO $tsOld")
-      spark.sql(s"ALTER TABLE $tsStage RENAME TO $ts")
-      Bucketed.resetTable(spark, tsOld)
-    }
-  }
-
-  /** Re-fit BOTH quantizer levels over the live corpus and swap the
-    * generation in — [[requantize]]'s commit protocol verbatim (stage
-    * beside live, assignment renamed aside FIRST and promoted LAST so
-    * every crash point leaves it absent for [[ensureBuilt2]]'s sweep).
-    * [[requantizeAdvice2]] is the trigger. */
-  def requantize2(spark: SparkSession, dir: String, tag: String = "",
-                  learnedPq: Boolean = false): Unit = synchronized {
-    val t = ensureBuilt2(spark, dir, tag)
-    val qc = coarseQuantizerTableFor(dir, tag)
-    val qf = fineQuantizerTableFor(dir, tag)
-    val sqt = sq2TableFor(dir, tag)
-    val pqt = pq2TableFor(dir, tag)
-    val tst = tombstone2TableFor(dir, tag)
-    // compaction: tombstoned rows leave here, exactly [[requantize]]
-    val live = spark.table(t).select(col("vec_id"), col("v"), col("nrm"))
-      .join(spark.table(tst).select(col("vec_id")), Seq("vec_id"), "left_anti")
-    // |live| = |t| − |ts| without evaluating the anti-join —
-    // [[requantize]]'s count fold, one level down (same ts ⊆ t /
-    // unique-vec_id invariants)
-    val cnt = spark.table(t).agg(count(lit(1)).as("nt"))
-      .crossJoin(spark.table(tst).agg(count(lit(1)).as("nts"))).head()
-    val n = cnt.getLong(0) - cnt.getLong(1)
-    require(n > 0, s"cannot requantize an empty index ($t)")
-    val all = Seq(t, qc, qf, sqt, pqt, tst)
-    all.foreach(x => Bucketed.resetTable(spark, x + "__stage"))
-    val (coarse, sqp, pqCb) = writeGeneration2(spark, live, n, t + "__stage",
-      qc + "__stage", qf + "__stage", sqt + "__stage", pqt + "__stage",
-      tst + "__stage", learnedPq)
-    all.foreach(x => Bucketed.resetTable(spark, x + "__old"))
-    // assignment aside FIRST, promoted LAST — the crash-window
-    // invariant [[requantize]] documents; the SQ params swap with the
-    // generation (every code row re-encoded against the refreshed
-    // (mn, mx), one code book per generation)
-    all.foreach(x => spark.sql(s"ALTER TABLE $x RENAME TO ${x}__old"))
-    all.reverse.foreach(x => spark.sql(s"ALTER TABLE ${x}__stage RENAME TO $x"))
-    all.foreach(x => Bucketed.resetTable(spark, x + "__old"))
-    // the generation swapped: cached artifacts describe the OLD one —
-    // invalidate every session's, then seed the writer's with the
-    // just-written values ([[requantize]]'s rule, one level down)
-    invalidateArtifacts(spark, allTables2(dir, tag))
-    seedArtifact(spark, qc, coarse)
-    seedArtifact(spark, sqt, sqp)
-    seedArtifact(spark, pqt, pqCb)
-  }
-
-  /** Top-k probe over the persisted two-level index: coarse probe
-    * cells selected in-plan against the STORED n^¼ quantizer (only the
-    * distinct cell ids reach the driver, as the literal list that
-    * bucket-prunes the ccell-bucketed assignment AND the
-    * fine-quantizer scan), then the shared [[Similarity.probeIvf2From]]
-    * rank+join half — identical results to the inline
-    * [[Similarity.topKIvf2]] by construction, and zero corpus-wide
-    * jobs at serving time. */
-  def topK2(spark: SparkSession, dir: String, maxQueryId: Long,
-            k: Int = 5, nProbeCoarse: Int = 2, nProbeFine: Int = 3,
-            tag: String = ""): DataFrame = {
-    val t = ensureBuilt2(spark, dir, tag)
-    val coarse = storedCoarseQuantizer(spark, dir, tag)
-    val (qcFrame, cells) =
-      probeFrame(spark, dir, maxQueryId, nProbeCoarse, quantizer = Some(coarse))
-    val cellLits = cells.map(Int.box).toSeq
-    val fine = spark.table(fineQuantizerTableFor(dir, tag))
-      .filter(col("ccell").isin(cellLits: _*))
-    // tombstones anti-joined COARSE-pruned, the flat probe's rule
-    val ts = spark.table(tombstone2TableFor(dir, tag))
-      .filter(col("ccell").isin(cellLits: _*)).select(col("vec_id"))
-    val asg = spark.table(t).filter(col("ccell").isin(cellLits: _*))
+    val inCells = col(layout.cell).isin(cells: _*)
+    val ts = spark.table(tb.tombstones).filter(inCells).select(col("vec_id"))
+    val index = spark.table(tb.assign).filter(inCells)
       .join(broadcast(ts), Seq("vec_id"), "left_anti")
-    Similarity.probeIvf2From(qcFrame.withColumnRenamed("cell", "ccell"),
-      fine, asg, k, nProbeFine)
-  }
-
-  /** IVF² × SQ8 probe over the persisted two-level index — the
-    * billion-vector serving read path with the byte bound it was
-    * missing: coarse probe cells selected in-plan against the stored
-    * n^¼ quantizer (only the distinct cell-id literals reach the
-    * driver), fine cells ranked per query across the probed coarse
-    * cells (the [[Similarity.probeIvf2From]] ranking, verbatim), and
-    * the CANDIDATE pass scans only the probed fine cells' CODE rows —
-    * bucket-pruned on ccell AND column-pruned to ~1 bit-packed
-    * byte/dim (the plan's ReadSchema excludes `v`; `AnnIndexSpec`
-    * pins it). The exact rerank re-reads full vectors for
-    * queries×rerank rows only, still inside the probed buckets.
-    * Tombstones anti-join coarse-pruned, [[topK2]]'s rule. All
-    * quantization artifacts (both centroid levels, SQ params, codes)
-    * are READ, never derived — zero corpus-wide jobs at serving time,
-    * [[topKSq]]'s contract one level down. */
-  def topK2Sq(spark: SparkSession, dir: String, maxQueryId: Long,
-              k: Int = 5, nProbeCoarse: Int = 2, nProbeFine: Int = 3,
-              rerank: Int = 10, tag: String = ""): DataFrame = {
-    val t = ensureBuilt2(spark, dir, tag)
-    val coarse = storedCoarseQuantizer(spark, dir, tag)
-    topK2SqFrom(spark, dir, tag, t,
-      probeFrame(spark, dir, maxQueryId, nProbeCoarse, quantizer = Some(coarse)),
-      k, nProbeFine, rerank)
-  }
-
-  /** [[topKIdsSq]] one level down — the composed billion-vector
-    * serving call: explicit query ids ([[topK2Ids]]'s broadcast
-    * semi-join side) over the gen-2 SQ8 codes scan ([[topK2Sq]]'s byte
-    * bound) with the coarse-pruned tombstone anti-join. Shares
-    * [[topK2SqFrom]] with the prefix form, so the two cannot drift. */
-  def topK2IdsSq(spark: SparkSession, dir: String, queryIds: DataFrame,
-                 k: Int = 5, nProbeCoarse: Int = 2, nProbeFine: Int = 3,
-                 rerank: Int = 10, tag: String = ""): DataFrame = {
-    val t = ensureBuilt2(spark, dir, tag)
-    val coarse = storedCoarseQuantizer(spark, dir, tag)
-    topK2SqFrom(spark, dir, tag, t,
-      probeFrameFor(spark, dir,
-        _.join(broadcast(queryIds.select(col("vec_id"))), Seq("vec_id"), "left_semi"),
-        nProbeCoarse, quantizer = Some(coarse), tag = tag),
-      k, nProbeFine, rerank)
-  }
-
-  /** The coarse-probe → fine-probe → codes-scan → rerank half shared
-    * by [[topK2Sq]] and [[topK2IdsSq]]. */
-  private def topK2SqFrom(spark: SparkSession, dir: String, tag: String,
-                          t: String, pf: (DataFrame, Array[Int]),
-                          k: Int, nProbeFine: Int, rerank: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val (qcFrame, cells) = pf
-    val cellLits = cells.map(Int.box).toSeq
-    val (mns, mxs) = storedSqParams2(spark, dir, tag)
-    val (steps, basis) = Similarity.sqTerms(mns, mxs)
-    val stepL = array(steps.map(lit): _*)
-    val basisL = array(basis.map(lit): _*)
-    // per-query SQ terms ride the tiny broadcast side, as in [[topKSq]]
-    val qc = qcFrame.withColumnRenamed("cell", "ccell")
-      .withColumn("qbasis", Similarity.dot(col("qv"), basisL))
-      .withColumn("t", zip_with(col("qv"), stepL, (a, b) => a * b))
-    val fine = spark.table(fineQuantizerTableFor(dir, tag))
-      .filter(col("ccell").isin(cellLits: _*))
-    // fine probe: nProbeFine best (s, ccell, fcell) across the probed
-    // coarse cells — the exact probeIvf2From ranking, qbasis/t carried
-    val wQ = Window.partitionBy(col("q_id"))
-      .orderBy(col("s"), col("ccell"), col("fcell"))
-    val probes = qc.join(broadcast(fine), Seq("ccell"))
-      .withColumn("s",
-        lit(-2.0) * Similarity.dot(col("qv"), col("fv")) + col("f2"))
-      .withColumn("prn", row_number().over(wQ))
-      .filter(col("prn") <= nProbeFine)
-      .select(col("ccell"), col("fcell"), col("q_id"), col("qv"), col("qn"),
-        col("qbasis"), col("t"))
-    val ts = spark.table(tombstone2TableFor(dir, tag))
-      .filter(col("ccell").isin(cellLits: _*)).select(col("vec_id"))
-    val idx = spark.table(t).filter(col("ccell").isin(cellLits: _*))
-      .join(broadcast(ts), Seq("vec_id"), "left_anti")
-    val wA = Window.partitionBy(col("q_id"))
-      .orderBy(col("approx").desc, col("vec_id").asc)
-    val cands = idx.select(col("vec_id"), col("nrm"), col("ccell"),
-        col("fcell"), col("codes"))
-      .join(broadcast(probes), Seq("ccell", "fcell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("approx",
-        (col("qbasis") + Similarity.dot(col("t"), col("codes").cast("array<double>"))) /
-          (col("nrm") * col("qn")))
-      .withColumn("crn", row_number().over(wA))
-      .filter(col("crn") <= rerank)
-      .select(col("q_id"), col("vec_id"), col("qv"), col("qn"))
-    val wF = Window.partitionBy(col("q_id"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-    idx.select(col("vec_id"), col("v"), col("nrm"))
-      .join(broadcast(cands), Seq("vec_id"))
-      .withColumn("score",
-        round(Similarity.cosine(col("v"), col("nrm"), col("qv"), col("qn")), 4))
-      .withColumn("rn", row_number().over(wF))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("rn"), col("vec_id"), col("score"))
-  }
-
-  /** IVF² × PQ probe over the persisted two-level index — the
-    * sub-byte billion-vector read path ([[topKIdxPq]]'s contract one
-    * level down, on the tier where 4-bit codes matter most): coarse
-    * probe cells selected in-plan against the stored n^¼ quantizer,
-    * fine cells ranked per query across the probed coarse cells (the
-    * [[Similarity.probeIvf2From]] ranking, qtbl carried), and the
-    * CANDIDATE pass scans only the probed fine cells' `pqcodes` rows —
-    * bucket-pruned on ccell AND column-pruned to m/2 nibble-packed
-    * bytes (a PHYSICAL 4 bits/dim — 16× below the SQ8 row, 128× below
-    * the vectors) — ranked by the
-    * native ADC fold against per-query tables built from the STORED
-    * gen-2 codebook. Exact rerank re-reads full vectors for
-    * queries×rerank rows only; tombstones anti-join coarse-pruned. */
-  def topK2Pq(spark: SparkSession, dir: String, maxQueryId: Long,
-              k: Int = 5, nProbeCoarse: Int = 2, nProbeFine: Int = 3,
-              rerank: Int = 24, tag: String = ""): DataFrame = {
-    val t = ensureBuilt2(spark, dir, tag)
-    val coarse = storedCoarseQuantizer(spark, dir, tag)
-    topK2PqFrom(spark, dir, tag, t,
-      probeFrame(spark, dir, maxQueryId, nProbeCoarse, quantizer = Some(coarse)),
-      k, nProbeFine, rerank)
-  }
-
-  /** [[topKIdsPq]] one level down — explicit query ids over the gen-2
-    * packed `pqcodes` scan with the coarse-pruned tombstone anti-join:
-    * the composed sub-byte billion-vector serving call. Shares
-    * [[topK2PqFrom]] with the prefix form, so the two cannot drift. */
-  def topK2IdsPq(spark: SparkSession, dir: String, queryIds: DataFrame,
-                 k: Int = 5, nProbeCoarse: Int = 2, nProbeFine: Int = 3,
-                 rerank: Int = 24, tag: String = ""): DataFrame = {
-    val t = ensureBuilt2(spark, dir, tag)
-    val coarse = storedCoarseQuantizer(spark, dir, tag)
-    topK2PqFrom(spark, dir, tag, t,
-      probeFrameFor(spark, dir,
-        _.join(broadcast(queryIds.select(col("vec_id"))), Seq("vec_id"), "left_semi"),
-        nProbeCoarse, quantizer = Some(coarse), tag = tag),
-      k, nProbeFine, rerank)
-  }
-
-  /** The coarse-probe → fine-probe → packed-ADC-scan → rerank half
-    * shared by [[topK2Pq]] and [[topK2IdsPq]]. */
-  private def topK2PqFrom(spark: SparkSession, dir: String, tag: String,
-                          t: String, pf: (DataFrame, Array[Int]),
-                          k: Int, nProbeFine: Int, rerank: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val (qcFrame, cells) = pf
-    val cellLits = cells.map(Int.box).toSeq
-    val cb = storedPqCodebook2(spark, dir, tag)
-    require(cb.length == PqKsub,
-      s"stored gen-2 PQ codebook has ${cb.length} rows, need exactly $PqKsub")
-    // per-query ADC tables ride the tiny broadcast side, as in
-    // [[topK2SqFrom]]'s qbasis/t terms
-    val qc = Similarity.pqQueryTbl(
-      qcFrame.withColumnRenamed("cell", "ccell"), cb, PqM)
-    val fine = spark.table(fineQuantizerTableFor(dir, tag))
-      .filter(col("ccell").isin(cellLits: _*))
-    val wQ = Window.partitionBy(col("q_id"))
-      .orderBy(col("s"), col("ccell"), col("fcell"))
-    val probes = qc.join(broadcast(fine), Seq("ccell"))
-      .withColumn("s",
-        lit(-2.0) * Similarity.dot(col("qv"), col("fv")) + col("f2"))
-      .withColumn("prn", row_number().over(wQ))
-      .filter(col("prn") <= nProbeFine)
-      .select(col("ccell"), col("fcell"), col("q_id"), col("qv"), col("qn"),
-        col("qtbl"))
-    val ts = spark.table(tombstone2TableFor(dir, tag))
-      .filter(col("ccell").isin(cellLits: _*)).select(col("vec_id"))
-    val idx = spark.table(t).filter(col("ccell").isin(cellLits: _*))
-      .join(broadcast(ts), Seq("vec_id"), "left_anti")
-    val wA = Window.partitionBy(col("q_id"))
-      .orderBy(col("approx").desc, col("vec_id").asc)
-    val cands = idx.select(col("vec_id"), col("nrm"), col("ccell"),
-        col("fcell"), col("pqcodes"))
-      .join(broadcast(probes), Seq("ccell", "fcell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("approx",
-        graft.functions.VectorExprs.pqAdcPacked(col("pqcodes"), col("qtbl"), PqKsub) /
-          (col("nrm") * col("qn")))
-      .withColumn("crn", row_number().over(wA))
-      .filter(col("crn") <= rerank)
-      .select(col("q_id"), col("vec_id"), col("qv"), col("qn"))
-    val wF = Window.partitionBy(col("q_id"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-    idx.select(col("vec_id"), col("v"), col("nrm"))
-      .join(broadcast(cands), Seq("vec_id"))
-      .withColumn("score",
-        round(Similarity.cosine(col("v"), col("nrm"), col("qv"), col("qn")), 4))
-      .withColumn("rn", row_number().over(wF))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("rn"), col("vec_id"), col("score"))
-  }
-
-  /** [[topKIds]] for the two-level index — the explicit-query-id
-    * serving call one level down: same broadcast semi-join query side,
-    * same coarse-pruned scans and tombstone anti-join as [[topK2]]. */
-  def topK2Ids(spark: SparkSession, dir: String, queryIds: DataFrame,
-               k: Int = 5, nProbeCoarse: Int = 2, nProbeFine: Int = 3,
-               tag: String = ""): DataFrame = {
-    val t = ensureBuilt2(spark, dir, tag)
-    val coarse = storedCoarseQuantizer(spark, dir, tag)
-    val (qcFrame, cells) = probeFrameFor(spark, dir,
-      _.join(broadcast(queryIds.select(col("vec_id"))), Seq("vec_id"), "left_semi"),
-      nProbeCoarse, quantizer = Some(coarse), tag = tag)
-    val cellLits = cells.map(Int.box).toSeq
-    val fine = spark.table(fineQuantizerTableFor(dir, tag))
-      .filter(col("ccell").isin(cellLits: _*))
-    val ts = spark.table(tombstone2TableFor(dir, tag))
-      .filter(col("ccell").isin(cellLits: _*)).select(col("vec_id"))
-    val asg = spark.table(t).filter(col("ccell").isin(cellLits: _*))
-      .join(broadcast(ts), Seq("vec_id"), "left_anti")
-    Similarity.probeIvf2From(qcFrame.withColumnRenamed("cell", "ccell"),
-      fine, asg, k, nProbeFine)
-  }
-
-  def topKSq(spark: SparkSession, dir: String, maxQueryId: Long,
-             k: Int = 5, nProbe: Int = 2, rerank: Int = 15,
-             tag: String = ""): DataFrame = {
-    val t = ensureBuilt(spark, dir, tag)
-    topKSqFrom(spark, dir, tag, t,
-      probeFrame(spark, dir, maxQueryId, nProbe, tag = tag), k, rerank)
-  }
-
-  /** The COMPOSED production serving call on the flat tier: explicit
-    * query ids ([[topKIds]]'s broadcast semi-join query side) over the
-    * SQ8 codes-only candidate scan ([[topKSq]]'s byte bound) with the
-    * tombstone anti-join — the three serving optimizations a real
-    * retrieval service wants at once. Identical plan shape to
-    * [[topKSq]] past the probe frame (the shared [[topKSqFrom]] half),
-    * so the explicit-id path cannot drift from the hash-checked
-    * prefix path. */
-  def topKIdsSq(spark: SparkSession, dir: String, queryIds: DataFrame,
-                k: Int = 5, nProbe: Int = 2, rerank: Int = 15,
-                tag: String = ""): DataFrame = {
-    val t = ensureBuilt(spark, dir, tag)
-    topKSqFrom(spark, dir, tag, t,
-      probeFrameFor(spark, dir,
-        _.join(broadcast(queryIds.select(col("vec_id"))), Seq("vec_id"), "left_semi"),
-        nProbe, tag = tag), k, rerank)
-  }
-
-  /** IVF × PQ probe over the persisted index — the stored form of
-    * [[Similarity.topKIvfPq]] and the sub-byte serving read path: the
-    * candidate pass scans ONLY the probed cells' buckets (bucket-pruned
-    * literal IN filter) and ONLY the `pqcodes` column (m/2
-    * nibble-packed bytes — a PHYSICAL 4 bits/dim, 16× below the SQ8
-    * row and 128× below the vectors), ranks by the native m-lookup
-    * ADC fold (nibbles decoded by shift/mask inside the gather loop)
-    * ([[graft.functions.PqAdcF64]]) against per-query tables built from
-    * the STORED codebook, and the exact rerank re-reads full vectors
-    * for queries×rerank rows only — still inside the probed buckets.
-    * Tombstones anti-join cell-pruned, [[topK]]'s rule. Every
-    * quantization artifact (centroids, codebook, codes) is READ, never
-    * derived: zero corpus-wide jobs at serving time, [[topKSq]]'s
-    * contract at the next compression tier. */
-  def topKIdxPq(spark: SparkSession, dir: String, maxQueryId: Long,
-                k: Int = 5, nProbe: Int = 2, rerank: Int = 30,
-                tag: String = ""): DataFrame = {
-    val t = ensureBuilt(spark, dir, tag)
-    topKPqFrom(spark, dir, tag, t,
-      probeFrame(spark, dir, maxQueryId, nProbe, tag = tag), k, rerank)
-  }
-
-  /** [[topKIdsPq]] — the explicit-query-id serving call over the
-    * stored PQ codes: [[topKIds]]' broadcast semi-join query side
-    * composed with [[topKIdxPq]]'s pqcodes-only ADC candidate scan and
-    * the tombstone anti-join — the sub-byte tier of the composed
-    * production serving call ([[topKIdsSq]]'s contract at 4 bits/dim).
-    * Shares [[topKPqFrom]] with the prefix form, so the explicit-id
-    * path cannot drift from the hash-checked one. */
-  def topKIdsPq(spark: SparkSession, dir: String, queryIds: DataFrame,
-                k: Int = 5, nProbe: Int = 2, rerank: Int = 30,
-                tag: String = ""): DataFrame = {
-    val t = ensureBuilt(spark, dir, tag)
-    topKPqFrom(spark, dir, tag, t,
-      probeFrameFor(spark, dir,
-        _.join(broadcast(queryIds.select(col("vec_id"))), Seq("vec_id"), "left_semi"),
-        nProbe, tag = tag), k, rerank)
-  }
-
-  /** The codebook-read → ADC-scan → rerank half shared by [[topKIdxPq]]
-    * (prefix queries) and [[topKIdsPq]] (explicit ids). */
-  private def topKPqFrom(spark: SparkSession, dir: String, tag: String,
-                         t: String, pf: (DataFrame, Array[Int]),
-                         k: Int, rerank: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val (probesDf, cells) = pf
-    val cellLits = cells.map(Int.box).toSeq
-    val cb = storedPqCodebook(spark, dir, tag)
-    // the stored codebook must carry exactly PqKsub rows — the ADC
-    // fold's gather stride; a truncated/mismatched artifact would read
-    // out of bounds silently (same guard as Similarity.pqPieces)
-    require(cb.length == PqKsub,
-      s"stored PQ codebook has ${cb.length} rows, need exactly $PqKsub")
-    val probes = Similarity.pqQueryTbl(probesDf, cb, PqM)
-    val idx = dropTombstoned(spark, dir, tag,
-      spark.table(t).filter(col("cell").isin(cellLits: _*)), cellLits)
-    val wA = Window.partitionBy(col("q_id")).orderBy(col("approx").desc, col("vec_id").asc)
-    val cands = idx.select(col("vec_id"), col("nrm"), col("cell"), col("pqcodes"))
-      .join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("approx",
-        graft.functions.VectorExprs.pqAdcPacked(col("pqcodes"), col("qtbl"), PqKsub) /
-          (col("nrm") * col("qn")))
-      .withColumn("crn", row_number().over(wA))
-      .filter(col("crn") <= rerank)
-      .select(col("q_id"), col("vec_id"), col("qv"), col("qn"))
-    val wF = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("vec_id").asc)
-    idx.select(col("vec_id"), col("v"), col("nrm"))
-      .join(broadcast(cands), Seq("vec_id"))
-      .withColumn("score",
-        round(Similarity.cosine(col("v"), col("nrm"), col("qv"), col("qn")), 4))
-      .withColumn("rn", row_number().over(wF))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("rn"), col("vec_id"), col("score"))
-  }
-
-  /** The quantize→scan→rerank half shared by [[topKSq]] (prefix
-    * queries) and [[topKIdsSq]] (explicit ids): per-query SQ terms ride
-    * the broadcast side, candidates rank by the decomposed approximate
-    * cosine over the bucket-pruned CODE scan, exact rerank re-reads
-    * full vectors for queries×rerank rows only. */
-  private def topKSqFrom(spark: SparkSession, dir: String, tag: String,
-                         t: String, pf: (DataFrame, Array[Int]),
-                         k: Int, rerank: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val (probesDf, cells) = pf
-    val cellLits = cells.map(Int.box).toSeq
-    val (mns, mxs) = storedSqParams(spark, dir, tag)
-    val (steps, basis) = Similarity.sqTerms(mns, mxs)
-    val stepL = array(steps.map(lit): _*)
-    val basisL = array(basis.map(lit): _*)
-    val probes = probesDf
-      .withColumn("qbasis", Similarity.dot(col("qv"), basisL))
-      .withColumn("t", zip_with(col("qv"), stepL, (a, b) => a * b))
-    val idx = dropTombstoned(spark, dir, tag,
-      spark.table(t).filter(col("cell").isin(cellLits: _*)), cellLits)
-    val wA = Window.partitionBy(col("q_id"))
-      .orderBy(col("approx").desc, col("vec_id").asc)
-    val cands = idx.select(col("vec_id"), col("nrm"), col("cell"), col("codes"))
-      .join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("approx",
-        (col("qbasis") + Similarity.dot(col("t"), col("codes").cast("array<double>"))) /
-          (col("nrm") * col("qn")))
-      .withColumn("crn", row_number().over(wA))
-      .filter(col("crn") <= rerank)
-      .select(col("q_id"), col("vec_id"), col("qv"), col("qn"))
-    val wF = Window.partitionBy(col("q_id"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-    idx.select(col("vec_id"), col("v"), col("nrm"))
-      .join(broadcast(cands), Seq("vec_id"))
-      .withColumn("score",
-        round(Similarity.cosine(col("v"), col("nrm"), col("qv"), col("qn")), 4))
-      .withColumn("rn", row_number().over(wF))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("rn"), col("vec_id"), col("score"))
+    Similarity.rankTopK(index, layout.route(spark, tb, probes, inCells, nProbeFine),
+      layout.keys, k, scoring)
   }
 }

@@ -7,10 +7,10 @@ import org.apache.spark.sql.functions._
 /** Hybrid keyword × semantic retrieval — the fusion shape an LLM-data
   * curation or RAG user reaches for first once both a BM25 ref
   * ([[TextRefs.searchBm25Stored]]) and a persisted ANN index
-  * ([[AnnIndex.topKIds]]) exist: each leg returns its own top-N, and
-  * reciprocal-rank fusion (Cormack/Clarke/Buettcher's RRF) merges them
-  * on rank alone, so the two legs' incomparable score scales never
-  * touch.
+  * ([[AnnIndex.topK]] over [[AnnIndex.Ids]]) exist: each leg returns
+  * its own top-N, and reciprocal-rank fusion (Cormack/Clarke/
+  * Buettcher's RRF) merges them on rank alone, so the two legs'
+  * incomparable score scales never touch.
   *
   * Integer-exact by construction: fused score =
   * Σ_legs 1000000 div (60 + rank) — the standard RRF k = 60 constant,
@@ -43,7 +43,7 @@ object Hybrid {
       .select(col("doc_id"), col("krank"))
     // semantic leg: the composed explicit-id probe over the persisted
     // index; its rn IS the rank
-    val sem = AnnIndex.topKIds(spark, dir, Seq(queryVecId).toDF("vec_id"),
+    val sem = AnnIndex.topK(spark, dir, AnnIndex.Ids(Seq(queryVecId).toDF("vec_id")),
         k = topN, nProbe = 2)
       .select(col("vec_id").as("doc_id"), col("rn").cast("long").as("srank"))
     kw.join(sem, Seq("doc_id"), "full_outer")

@@ -46,18 +46,14 @@ object Similarity {
     * not corpus members), so the query side must come from the full
     * table. Self-matches are excluded by id, as in [[topK]]. */
   def topKOver(corpus: DataFrame, queries: DataFrame,
-               maxQueryId: Long, k: Int = 10): DataFrame = {
-    val e = prepared(corpus)
-    val q = prepared(queries).filter(col("vec_id") < maxQueryId)
+               maxQueryId: Long, k: Int = 10): DataFrame =
+    rankTopK(prepared(corpus), queryRows(prepared(queries), maxQueryId), Nil, k)
+
+  /** The query side of an all-pairs top-k: every vector with
+    * vec_id < maxQueryId as a `(q_id, qv, qn)` row. */
+  private def queryRows(e: DataFrame, maxQueryId: Long): DataFrame =
+    e.filter(col("vec_id") < maxQueryId)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val scored = e.join(broadcast(q), col("vec_id") =!= col("q_id"))
-      .withColumn("score", round(cosine(col("v"), col("nrm"), col("qv"), col("qn")), 4))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("score").desc, col("vec_id").asc)
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("rn"), col("vec_id"), col("score"))
-  }
 
   /** IVF-style top-k: candidates restricted to the query's coarse
     * cell (`label` = centroid-cell id, standing in for a k-means
@@ -164,17 +160,52 @@ object Similarity {
         col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
 
   /** Probe + rank over a cell assignment (`vec_id, v, nrm, cell` —
-    * built inline by [[topKIvfKmeans]] or read back from the persisted
-    * table of [[AnnIndex]]): equality join on the probed cell, exact
-    * cosine, per-query top-k. */
-  def probeIndex(index: DataFrame, probes: DataFrame, k: Int): DataFrame = {
-    val scored = index.join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("score", round(cosine(col("v"), col("nrm"), col("qv"), col("qn")), 4))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("score").desc, col("vec_id").asc)
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+    * built inline by [[topKIvfKmeans]]; the flat [[AnnIndex.topK]]
+    * runs the same [[rankTopK]] over its persisted table): equality
+    * join on the probed cell, exact cosine, per-query top-k. */
+  def probeIndex(index: DataFrame, probes: DataFrame, k: Int): DataFrame =
+    rankTopK(index, probes, Seq("cell"), k)
+
+  /** A candidate codec: the query-side terms it adds to the probe frame
+    * (`qbasis`/`t` for SQ8, `qtbl` for PQ, plus `qctr` for residual
+    * PQ), the approximate score it ranks candidates by over its code
+    * column, and how many candidates per query survive to the exact
+    * rerank. */
+  private[ops] final case class Scoring(terms: DataFrame => DataFrame, approx: Column,
+                                        codes: String, rerank: Int)
+
+  /** THE candidate → rerank → rank-k tail every top-k path shares —
+    * brute force, the inline IVF/SQ/PQ/residual-PQ compositions, and
+    * every stored [[AnnIndex.topK]] probe. `index` rows (vec_id, v,
+    * nrm, the `on` keys and the scoring's code column) pair with the
+    * broadcast `probes` (q_id, qv, qn, the `on` keys) on `on` — all
+    * pairs when empty — self-matches excluded by id. Exact: rank every
+    * pair by cosine. With a [[Scoring]]: the candidate pass reads ONLY
+    * (vec_id, nrm, keys, codes) — parquet column pruning keeps `v` out
+    * of it — ranks by the approximate score, and only the `rerank`
+    * survivors per query re-read full vectors for the exact cosine.
+    * Both rankings break ties by vec_id, and scores are rounded to 4
+    * decimals before the final ranking so ordering is reproducible
+    * across engines. */
+  private[ops] def rankTopK(index: DataFrame, probes: DataFrame, on: Seq[String], k: Int,
+                            scoring: Option[Scoring] = None): DataFrame = {
+    def pairs(side: DataFrame, q: DataFrame): DataFrame =
+      if (on.isEmpty) side.join(broadcast(q), col("vec_id") =!= col("q_id"))
+      else side.join(broadcast(q), on).filter(col("vec_id") =!= col("q_id"))
+    def best(df: DataFrame, by: String, n: Int): DataFrame =
+      df.withColumn("rn", row_number().over(org.apache.spark.sql.expressions.Window
+          .partitionBy(col("q_id")).orderBy(col(by).desc, col("vec_id").asc)))
+        .filter(col("rn") <= n)
+    val exact = scoring match {
+      case None => pairs(index, probes)
+      case Some(s) =>
+        val cands = best(pairs(index.select((Seq("vec_id", "nrm") ++ on :+ s.codes).map(col): _*),
+            s.terms(probes)).withColumn("approx", s.approx), "approx", s.rerank)
+          .select(col("q_id"), col("vec_id"), col("qv"), col("qn"))
+        index.select(col("vec_id"), col("v"), col("nrm")).join(broadcast(cands), Seq("vec_id"))
+    }
+    best(exact.withColumn("score", round(cosine(col("v"), col("nrm"), col("qv"), col("qn")), 4)),
+        "score", k)
       .select(col("q_id"), col("rn"), col("vec_id"), col("score"))
   }
 
@@ -331,9 +362,18 @@ object Similarity {
   val Ivf2FineBroadcastKneeN: Long = 4L * 1000L * 1000L * 1000L
 
   def ivf2StructureOf(e: DataFrame, n: Long): (Array[Array[Double]], DataFrame, DataFrame) = {
+    val coarse = sampledCentroids(e, AnnIndex.annCellsFor(AnnIndex.annCellsFor(n)))
+    val (fine, asg) = ivf2Levels(e, n, coarse)
+    (coarse, fine, asg)
+  }
+
+  /** The two-level structure below a given coarse matrix: the fine
+    * quantizer relation and the full assignment — [[ivf2StructureOf]]'s
+    * body, and the two-level [[AnnIndex.Layout]]'s build (which samples
+    * the coarse matrix together with its PQ codebook). */
+  private[ops] def ivf2Levels(e: DataFrame, n: Long,
+                              coarse: Array[Array[Double]]): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
-    val kc = AnnIndex.annCellsFor(AnnIndex.annCellsFor(n))
-    val coarse = sampledCentroids(e, kc)
     val casg = assignCells(e, coarse).withColumnRenamed("cell", "ccell")
     // fine quantizer relation: per coarse cell, its ⌈√occ⌉ first
     // members in md5-rank order; |fctr|² precomputed once here rather
@@ -347,11 +387,6 @@ object Similarity {
       .filter(col("rnk") <= intSqrtCeil(col("cnt")))
       .select(col("ccell"), (col("rnk") - 1).cast("int").as("fcell"),
         col("v").as("fv"), dot(col("v"), col("v")).as("f2"))
-    // fine assignment: score only against the vector's own coarse
-    // cell's fine centroids (broadcast), argmin with the same
-    // (score, cell) first-min tie-break as assignCells — min_by over a
-    // struct key combines map-side, so the build never shuffles more
-    // than n rows.
     // KNEE: the fine relation is ~Σ⌈√occ⌉ ≈ n^(5/8) rows at ~550 B/row
     // (d=64 doubles + keys) — ~230 MB at n = 10⁹, a sane build-time
     // broadcast; past ~4×10⁹ it outgrows the practical broadcast
@@ -359,16 +394,22 @@ object Similarity {
     // is left to Catalyst/AQE above it (this is the BUILD-side join
     // only — probe-side fine scans are coarse-cell-filtered and far
     // below the knee at any n). Measured capacity table: SCALING.md.
-    val asg = casg.join(
-        if (n <= Ivf2FineBroadcastKneeN) broadcast(fine) else fine,
-        Seq("ccell"))
+    (fine, assignFine(casg, if (n <= Ivf2FineBroadcastKneeN) broadcast(fine) else fine))
+  }
+
+  /** Fine assignment of coarse-assigned rows (`vec_id, ccell, v, nrm`):
+    * score each row only against its own coarse cell's fine centroids,
+    * argmin with the same (score, cell) first-min tie-break as
+    * assignCells — min_by over a struct key combines map-side, so the
+    * assignment never shuffles more than n rows. Shared by the build
+    * and the stored index's append (against the stored relation). */
+  private[ops] def assignFine(casg: DataFrame, fine: DataFrame): DataFrame =
+    casg.join(fine, Seq("ccell"))
       .withColumn("s", lit(-2.0) * dot(col("v"), col("fv")) + col("f2"))
       .groupBy(col("vec_id")).agg(
         first(col("ccell")).as("ccell"),
         first(col("v")).as("v"), first(col("nrm")).as("nrm"),
         min_by(col("fcell"), struct(col("s"), col("fcell"))).as("fcell"))
-    (coarse, fine, asg)
-  }
 
   def topKIvf2(embeddings: DataFrame, maxQueryId: Long, k: Int = 5,
                nProbeCoarse: Int = 2, nProbeFine: Int = 3): DataFrame = {
@@ -379,9 +420,9 @@ object Similarity {
   }
 
   /** The two-level probe+rank over an (coarse, fine, asg) structure —
-    * shared verbatim by the inline [[topKIvf2]] and the persisted
-    * [[AnnIndex.topK2]] (which reads the structure back from its
-    * stored tables), so the two paths cannot drift: nProbeCoarse
+    * the inline [[topKIvf2]]'s, built from the same [[fineProbes]] and
+    * [[rankTopK]] the persisted two-level [[AnnIndex.topK]] runs over
+    * its stored tables, so the two paths cannot drift: nProbeCoarse
     * nearest coarse cells (literal matrix — small by construction),
     * then the probed cells' fine centroids ranked TOGETHER per query,
     * top nProbeFine overall, equality-join candidates, exact cosine,
@@ -389,33 +430,22 @@ object Similarity {
   def probeIvf2(coarse: Array[Array[Double]], fine: DataFrame, asg: DataFrame,
                 queries: DataFrame, k: Int,
                 nProbeCoarse: Int, nProbeFine: Int): DataFrame =
-    probeIvf2From(
-      probeQueries(queries, coarse, nProbeCoarse).withColumnRenamed("cell", "ccell"),
-      fine, asg, k, nProbeFine)
+    rankTopK(asg, fineProbes(probeQueries(queries, coarse, nProbeCoarse), fine, nProbeFine),
+      Seq("ccell", "fcell"), k)
 
-  /** [[probeIvf2]] from an already-coarse-probed query frame
-    * (`ccell, q_id, qv, qn`) — the entry point the persisted index
-    * uses: its coarse probe runs in-plan via [[probeQueries]] against
-    * the STORED coarse quantizer, with only the distinct probed cell
-    * ids collected as the LITERALS that bucket-prune the stored
-    * fine/assignment scans before this shared rank+join half runs. */
-  def probeIvf2From(qc: DataFrame, fine: DataFrame, asg: DataFrame,
-                    k: Int, nProbeFine: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val wQ = Window.partitionBy(col("q_id"))
+  /** The fine probe: each coarse-probed query row (`cell, q_id, qv,
+    * qn`, plus any codec terms; the cell becomes `ccell`) joined with
+    * its coarse cell's fine centroids, and the nProbeFine best
+    * (s, ccell, fcell) kept per query across ALL its probed coarse
+    * cells. */
+  private[ops] def fineProbes(qc: DataFrame, fine: DataFrame, nProbeFine: Int): DataFrame = {
+    val wQ = org.apache.spark.sql.expressions.Window.partitionBy(col("q_id"))
       .orderBy(col("s"), col("ccell"), col("fcell"))
-    val probes = qc.join(broadcast(fine), Seq("ccell"))
+    qc.withColumnRenamed("cell", "ccell").join(broadcast(fine), Seq("ccell"))
       .withColumn("s", lit(-2.0) * dot(col("qv"), col("fv")) + col("f2"))
       .withColumn("prn", row_number().over(wQ))
       .filter(col("prn") <= nProbeFine)
-      .select(col("ccell"), col("fcell"), col("q_id"), col("qv"), col("qn"))
-    val cand = asg.join(broadcast(probes), Seq("ccell", "fcell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("score", round(cosine(col("v"), col("nrm"), col("qv"), col("qn")), 4))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-    cand.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select(col("q_id"), col("rn"), col("vec_id"), col("score"))
+      .drop("fv", "f2", "s", "prn")
   }
 
   /** Per-dimension affine scalar-quantization (SQ8) parameters over
@@ -478,14 +508,23 @@ object Similarity {
     })
   }
 
-  /** SQ8 derived terms: steps_d = (mx−mn)/255, basis_d = mn + 0.5·step
-    * — the IEEE sequences every SQ consumer (inline and stored) states
+  /** The SQ8 [[Scoring]]: per-query `qbasis`/`t` terms and the
+    * decomposed approximate cosine over the `codes` column (see
+    * [[topKSq]] for the algebra). steps_d = (mx−mn)/255 and
+    * basis_d = mn + 0.5·step are driver-computed ONCE from the params —
+    * the IEEE sequences every SQ consumer (inline and stored) states
     * identically with the oracles. */
-  private[ops] def sqTerms(mns: Array[Double],
-                           mxs: Array[Double]): (Array[Double], Array[Double]) = {
+  private[ops] def sq8Scoring(mns: Array[Double], mxs: Array[Double], rerank: Int): Scoring = {
     val steps = mns.indices.map(i => (mxs(i) - mns(i)) / 255.0).toArray
     val basis = mns.indices.map(i => mns(i) + 0.5 * steps(i)).toArray
-    (steps, basis)
+    val stepL = array(steps.map(lit): _*)
+    val basisL = array(basis.map(lit): _*)
+    Scoring(
+      _.withColumn("qbasis", dot(col("qv"), basisL))
+        .withColumn("t", zip_with(col("qv"), stepL, (a, b) => a * b)),
+      (col("qbasis") + dot(col("t"), col("codes").cast("array<double>"))) /
+        (col("nrm") * col("qn")),
+      "codes", rerank)
   }
 
   /** SQ8 top-k with exact rerank: rank the full corpus by APPROXIMATE
@@ -515,33 +554,12 @@ object Similarity {
     * candidates' buckets. */
   def topKSq(embeddings: DataFrame, maxQueryId: Long, k: Int = 10,
              rerank: Int = 20, dim: Int = 64): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // steps/basis are driver-computed ONCE from the collected params;
-    // the oracle states the identical arithmetic inline. ONE prepared
-    // projection feeds params, codes, queries and the rerank scan.
+    // ONE prepared projection feeds params, codes, queries and the
+    // rerank scan; the candidate pass reads only the code column
     val e = prepared(embeddings)
-    val (codes, stepL, basisL) = sqScoring(e, dim)
-    val q = e.filter(col("vec_id") < maxQueryId).select(
-      col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"),
-      dot(col("v"), basisL).as("qbasis"),
-      zip_with(col("v"), stepL, (a, b) => a * b).as("t"))
-    // candidate pass: one native dot over the code bytes per (row,
-    // query) — no full-precision vector is read here
-    val wA = Window.partitionBy(col("q_id")).orderBy(col("approx").desc, col("vec_id").asc)
-    val cands = codes.join(broadcast(q), col("vec_id") =!= col("q_id"))
-      .withColumn("approx",
-        (col("qbasis") + dot(col("t"), col("codes").cast("array<double>"))) /
-          (col("nrm") * col("qn")))
-      .withColumn("crn", row_number().over(wA))
-      .filter(col("crn") <= rerank)
-      .select(col("q_id"), col("vec_id"), col("qv"), col("qn"))
-    // exact rerank: only queries×rerank rows re-read full vectors
-    val wF = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("vec_id").asc)
-    e.select(col("vec_id"), col("v"), col("nrm")).join(broadcast(cands), Seq("vec_id"))
-      .withColumn("score", round(cosine(col("v"), col("nrm"), col("qv"), col("qn")), 4))
-      .withColumn("rn", row_number().over(wF))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("rn"), col("vec_id"), col("score"))
+    val (mns, mxs) = sqParamsOf(e, dim)
+    rankTopK(e.withColumn("codes", sqCodesCol(col("v"), mns, mxs)), queryRows(e, maxQueryId),
+      Nil, k, Some(sq8Scoring(mns, mxs, rerank)))
   }
 
   /** Product quantization (PQ) with asymmetric distance scoring — the
@@ -579,20 +597,10 @@ object Similarity {
              m: Int = 8, ksub: Int = 16, rerank: Int = 30,
              dim: Int = 64,
              codebookIn: Option[Array[Array[Double]]] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = prepared(embeddings)
-    val (codes, qtblOf) = pqPieces(e, m, ksub, dim, codebookIn)
-    val q = qtblOf(e.filter(col("vec_id") < maxQueryId)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn")))
-    val wA = Window.partitionBy(col("q_id")).orderBy(col("approx").desc, col("vec_id").asc)
-    val cands = codes.join(broadcast(q), col("vec_id") =!= col("q_id"))
-      .withColumn("approx",
-        graft.functions.VectorExprs.pqAdc(col("codes"), col("qtbl"), ksub) /
-          (col("nrm") * col("qn")))
-      .withColumn("crn", row_number().over(wA))
-      .filter(col("crn") <= rerank)
-      .select(col("q_id"), col("vec_id"), col("qv"), col("qn"))
-    pqExactRerank(e, cands, k)
+    val cb = pqCodebook(e, ksub, codebookIn)
+    rankTopK(e.withColumn("codes", pqCodesCol(col("v"), cb, m)), queryRows(e, maxQueryId),
+      Nil, k, Some(pqScoring(cb, m, rerank)))
   }
 
   /** The full faiss IVF-PQ serving shape: the √n sampled cell
@@ -604,25 +612,13 @@ object Similarity {
   def topKIvfPq(embeddings: DataFrame, maxQueryId: Long, k: Int = 5,
                 nProbe: Int = 2, m: Int = 8, ksub: Int = 16,
                 rerank: Int = 30, dim: Int = 64): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = prepared(embeddings)
     val cs = sampledCentroids(e, AnnIndex.annCellsFor(e.count()))
-    val (codes, qtblOf) = pqPieces(e, m, ksub, dim)
+    val cb = pqCodebook(e, ksub)
     // the inline form of a stored (cell, codes) bucket row
-    val codeIdx = assignCells(e, cs).select(col("vec_id"), col("cell"))
-      .join(codes, Seq("vec_id"))
-    val probes = qtblOf(probeQueries(
-      e.filter(col("vec_id") < maxQueryId), cs, nProbe))
-    val wA = Window.partitionBy(col("q_id")).orderBy(col("approx").desc, col("vec_id").asc)
-    val cands = codeIdx.join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("approx",
-        graft.functions.VectorExprs.pqAdc(col("codes"), col("qtbl"), ksub) /
-          (col("nrm") * col("qn")))
-      .withColumn("crn", row_number().over(wA))
-      .filter(col("crn") <= rerank)
-      .select(col("q_id"), col("vec_id"), col("qv"), col("qn"))
-    pqExactRerank(e, cands, k)
+    rankTopK(assignCells(e, cs).withColumn("codes", pqCodesCol(col("v"), cb, m)),
+      probeQueries(e.filter(col("vec_id") < maxQueryId), cs, nProbe),
+      Seq("cell"), k, Some(pqScoring(cb, m, rerank)))
   }
 
   /** IVF × RESIDUAL-PQ — the standard faiss IVF-PQ encoding
@@ -657,7 +653,6 @@ object Similarity {
                  nProbe: Int = 2, m: Int = 8, ksub: Int = 16,
                  rerank: Int = 30, dim: Int = 64,
                  codebookIn: Option[Array[Array[Double]]] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = prepared(embeddings)
     val cs = sampledCentroids(e, AnnIndex.annCellsFor(e.count()))
     // residual codebook: ksub INDEPENDENTLY-sampled rows ("rseed:" —
@@ -679,25 +674,16 @@ object Similarity {
     }
     require(rcb.length == ksub,
       s"residual codebook has ${rcb.length} rows, need exactly ksub=$ksub")
-    val codes = assignCells(e, cs).select(col("vec_id"), col("nrm"), col("cell"),
-      pqCodesCol(
-        graft.functions.VectorExprs.vecMinusCell(col("v"), col("cell"), cs),
-        rcb, m).as("codes"))
-    val q = pqQueryTbl(
-      probeQueries(e.filter(col("vec_id") < maxQueryId), cs, nProbe)
-        .withColumn("qctr",
-          graft.functions.VectorExprs.dotCell(col("qv"), col("cell"), cs)),
-      rcb, m)
-    val wA = Window.partitionBy(col("q_id")).orderBy(col("approx").desc, col("vec_id").asc)
-    val cands = codes.join(broadcast(q), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("approx",
-        (col("qctr") + graft.functions.VectorExprs.pqAdc(col("codes"), col("qtbl"), ksub)) /
-          (col("nrm") * col("qn")))
-      .withColumn("crn", row_number().over(wA))
-      .filter(col("crn") <= rerank)
-      .select(col("q_id"), col("vec_id"), col("qv"), col("qn"))
-    pqExactRerank(e, cands, k)
+    val codes = assignCells(e, cs).withColumn("codes", pqCodesCol(
+      graft.functions.VectorExprs.vecMinusCell(col("v"), col("cell"), cs), rcb, m))
+    val residual = Scoring(
+      q => pqQueryTbl(q.withColumn("qctr",
+        graft.functions.VectorExprs.dotCell(col("qv"), col("cell"), cs)), rcb, m),
+      (col("qctr") + graft.functions.VectorExprs.pqAdc(col("codes"), col("qtbl"), ksub)) /
+        (col("nrm") * col("qn")),
+      "codes", rerank)
+    rankTopK(codes, probeQueries(e.filter(col("vec_id") < maxQueryId), cs, nProbe),
+      Seq("cell"), k, Some(residual))
   }
 
   /** Driver-side twin of [[graft.functions.NearestCellF64]]'s argmin —
@@ -749,30 +735,35 @@ object Similarity {
     learnedPqCodebookOf(res, m, ksub, dim, iters, seedTag = "rseed:")
   }
 
-  /** The PQ building blocks shared by [[topKPq]] and [[topKIvfPq]]:
-    * the (vec_id, nrm, codes) corpus frame (per-subspace first-min
-    * assignment against the ksub md5-rank-first codebook rows), and a
-    * function decorating a query frame (with a `qv` column) with its
-    * m×ksub asymmetric inner-product table. All arithmetic emitted as
-    * explicit ascending-order chains — the IEEE sequences the oracle
-    * states textually. */
-  private def pqPieces(e: DataFrame, m: Int, ksub: Int, dim: Int,
-                       codebookIn: Option[Array[Array[Double]]] = None)
-      : (DataFrame, DataFrame => DataFrame) = {
-    val full = codebookIn.getOrElse(sampledCentroids(e, ksub))
+  /** The PQ codebook of the inline forms: the caller's, or the ksub
+    * md5-rank-first corpus rows. */
+  private def pqCodebook(e: DataFrame, ksub: Int,
+                         codebookIn: Option[Array[Array[Double]]] = None): Array[Array[Double]] = {
+    val cb = codebookIn.getOrElse(sampledCentroids(e, ksub))
     // the ADC fold's generated getDouble(j*ksub+code) gather trusts
     // the table stride: a codebook shorter than ksub (corpus < ksub
     // rows, or a mismatched stored artifact) would read out of bounds
     // on UnsafeArrayData — silently wrong scores, not an error
-    require(full.length == ksub,
-      s"PQ codebook has ${full.length} rows, need exactly ksub=$ksub")
-    val codes = e.select(col("vec_id"), col("nrm"),
-      pqCodesCol(col("v"), full, m).as("codes"))
-    (codes, pqQueryTbl(_, full, m))
+    require(cb.length == ksub,
+      s"PQ codebook has ${cb.length} rows, need exactly ksub=$ksub")
+    cb
+  }
+
+  /** The PQ [[Scoring]]: per-query m×ksub inner-product tables
+    * ([[pqQueryTbl]]) and the native ADC fold over the codes — the
+    * inline `codes` array, or (`packed`) the stored index's
+    * nibble-packed `pqcodes` column decoded inside the gather loop. */
+  private[ops] def pqScoring(cb: Array[Array[Double]], m: Int, rerank: Int,
+                             packed: Boolean = false): Scoring = {
+    val adc =
+      if (packed) graft.functions.VectorExprs.pqAdcPacked(col("pqcodes"), col("qtbl"), cb.length)
+      else graft.functions.VectorExprs.pqAdc(col("codes"), col("qtbl"), cb.length)
+    Scoring(pqQueryTbl(_, cb, m), adc / (col("nrm") * col("qn")),
+      if (packed) "pqcodes" else "codes", rerank)
   }
 
   /** LEARNED PQ codebook — faiss-style per-subspace Lloyd behind
-    * [[pqPieces]]' `codebookIn` seam. Subspace j's ksub centroids are
+    * [[topKPq]]'s `codebookIn` seam. Subspace j's ksub centroids are
     * k-means over the corpus's j-th slices, seeded from the SAME
     * md5-rank-first sampled rows the default codebook uses (so a
     * recall comparison isolates the learning, not the seeding), and
@@ -805,7 +796,7 @@ object Similarity {
                                          seedTag: String = "seed:"): Array[Array[Double]] = {
     val dsub = dim / m
     var cb = sampledRowsBy(e, ksub, seedTag)
-    // same guard as pqPieces: the ADC gather trusts the ksub stride,
+    // same guard as pqCodebook: the ADC gather trusts the ksub stride,
     // and a corpus with fewer than ksub rows would otherwise surface
     // as an opaque ArrayIndexOutOfBounds inside Array.tabulate below
     require(cb.length == ksub,
@@ -872,30 +863,6 @@ object Similarity {
       .drop("cmat")
   }
 
-  /** Exact-cosine rerank of a (q_id, vec_id, qv, qn) candidate frame —
-    * the shared final stage of both PQ forms. */
-  private[ops] def pqExactRerank(e: DataFrame, cands: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val wF = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("vec_id").asc)
-    e.select(col("vec_id"), col("v"), col("nrm")).join(broadcast(cands), Seq("vec_id"))
-      .withColumn("score", round(cosine(col("v"), col("nrm"), col("qv"), col("qn")), 4))
-      .withColumn("rn", row_number().over(wF))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("rn"), col("vec_id"), col("score"))
-  }
-
-  /** SQ scoring terms shared by [[topKSq]] and [[topKIvfSq]]: the
-    * driver-computed step/basis literals and the code table. The IEEE
-    * sequences here are the operator DEFINITION the oracles mirror —
-    * steps_d = (mx−mn)/255, basis_d = mn + 0.5·step. */
-  private def sqScoring(prep: DataFrame,
-                        dim: Int): (DataFrame, Column, Column) = {
-    val (mns, mxs) = sqParamsOf(prep, dim)
-    val (steps, basis) = sqTerms(mns, mxs)
-    (prep.select(col("vec_id"), col("nrm"), sqCodesCol(col("v"), mns, mxs).as("codes")),
-      array(steps.map(lit): _*), array(basis.map(lit): _*))
-  }
-
   /** IVF × SQ8 — the composed serving shape (faiss's IVF-SQ): cell
     * pruning bounds WHICH rows a probe touches, the 8-bit codes bound
     * the BYTES each touched row costs, and the exact rerank keeps
@@ -903,45 +870,27 @@ object Similarity {
     * probed cells' code rows (cell equality join, one native dot over
     * the code array per candidate); full vectors are read only by the
     * queries×rerank rerank join. The STORED form of this shape is
-    * [[AnnIndex.topKSq]]: the codes live inside the cell buckets
-    * (written once beside the assignment, the index's physical layout)
-    * so a probe reads nProbe/k of the corpus at ~1 byte/dim instead
-    * of 4 — this inline form is its oracle-shaped twin and the
-    * one-shot-batch path.
+    * [[AnnIndex.topK]] with [[AnnIndex.Sq8]]: the codes live inside
+    * the cell buckets (written once beside the assignment, the index's
+    * physical layout) so a probe reads nProbe/k of the corpus at ~1
+    * byte/dim instead of 4 — this inline form is its oracle-shaped
+    * twin and the one-shot-batch path.
     *
     * Same quantizer recipe as the persisted index ([[AnnIndex]]:
     * `annCellsFor(n)` md5-sampled centroids) and the same SQ terms as
     * [[topKSq]], so every stage stays oracle-expressible. */
   def topKIvfSq(embeddings: DataFrame, maxQueryId: Long, k: Int = 5,
                 nProbe: Int = 2, rerank: Int = 15, dim: Int = 64): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // one prepared projection and one count job for the whole setup
     // (quantizer sizing, centroid sample, SQ params, codes, queries,
     // rerank) — the per-invocation duplicate corpus passes are gone
     val e = prepared(embeddings)
     val cs = sampledCentroids(e, AnnIndex.annCellsFor(e.count()))
-    val (codes, stepL, basisL) = sqScoring(e, dim)
+    val (mns, mxs) = sqParamsOf(e, dim)
     // the inline form of the stored index's (cell, codes) bucket rows
-    val codeIdx = assignCells(e, cs).select(col("vec_id"), col("cell"))
-      .join(codes, Seq("vec_id"))
-    val probes = probeQueries(e.filter(col("vec_id") < maxQueryId), cs, nProbe)
-      .withColumn("qbasis", dot(col("qv"), basisL))
-      .withColumn("t", zip_with(col("qv"), stepL, (a, b) => a * b))
-    val wA = Window.partitionBy(col("q_id")).orderBy(col("approx").desc, col("vec_id").asc)
-    val cands = codeIdx.join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("approx",
-        (col("qbasis") + dot(col("t"), col("codes").cast("array<double>"))) /
-          (col("nrm") * col("qn")))
-      .withColumn("crn", row_number().over(wA))
-      .filter(col("crn") <= rerank)
-      .select(col("q_id"), col("vec_id"), col("qv"), col("qn"))
-    val wF = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("vec_id").asc)
-    e.select(col("vec_id"), col("v"), col("nrm")).join(broadcast(cands), Seq("vec_id"))
-      .withColumn("score", round(cosine(col("v"), col("nrm"), col("qv"), col("qn")), 4))
-      .withColumn("rn", row_number().over(wF))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("rn"), col("vec_id"), col("score"))
+    rankTopK(assignCells(e, cs).withColumn("codes", sqCodesCol(col("v"), mns, mxs)),
+      probeQueries(e.filter(col("vec_id") < maxQueryId), cs, nProbe),
+      Seq("cell"), k, Some(sq8Scoring(mns, mxs, rerank)))
   }
 
   /** Corpus-scaled LSH banding parameters: (nPlanes, bitsPerBand).

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
 import graft.ops.{AnnIndex, Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.ops.AnnIndex.{Ids, Pq, Prefix, Sq8, TwoLevel}
 import graft.tables.Fixtures
 
 /** LLM-training-data pipeline operators as driver-verified queries:
@@ -146,15 +147,15 @@ object PipelineQueries {
 
     // the PERSISTED two-level index — the billion-vector serving
     // shape: coarse+fine quantizers and the ccell-bucketed assignment
-    // written once (AnnIndex.ensureBuilt2), a probe collects ONLY the
+    // written once (AnnIndex.ensureBuilt on TwoLevel), a probe collects ONLY the
     // n^¼ coarse matrix and bucket-prunes both stored scans with the
     // probed-cell literals; nothing k-sized ever reaches the driver or
     // the plan. Oracle = the inline two-level statement at this
     // entry's parameters: the stored structure must be a pure physical
     // optimization of it
     "topk_idx2" -> ((s, dir) =>
-      AnnIndex.topK2(s, dir, maxQueryId = 5, k = 4,
-        nProbeCoarse = 2, nProbeFine = 3)
+      AnnIndex.topK(s, dir, Prefix(5), k = 4,
+        nProbe = 2, nProbeFine = 3, layout = TwoLevel)
         .orderBy(col("q_id"), col("rn"))),
 
     // the byte-bounded billion-vector read path: IVF² bucket pruning
@@ -167,8 +168,8 @@ object PipelineQueries {
     // every stored artifact (both quantizer levels, params, codes,
     // all three rankings) must be a pure physical optimization of it
     "topk2_sq" -> ((s, dir) =>
-      AnnIndex.topK2Sq(s, dir, maxQueryId = 7, k = 4,
-        nProbeCoarse = 2, nProbeFine = 3, rerank = 10)
+      AnnIndex.topK(s, dir, Prefix(7), Sq8(rerank = 10), k = 4,
+        nProbe = 2, nProbeFine = 3, layout = TwoLevel)
         .orderBy(col("q_id"), col("rn"))),
 
     // RETIRE on the billion-vector tier: same tagged-generation +
@@ -179,29 +180,29 @@ object PipelineQueries {
     // quantizer levels stay the full-corpus build; deletion never
     // re-fits)
     "topk2_del" -> ((s, dir) => {
-      AnnIndex.removeBatch2(s, dir,
+      AnnIndex.removeBatch(s, dir,
         Fixtures.embeddings(s, dir).select(col("vec_id"))
           .filter(col("vec_id") % 10 === 3),
-        tag = "del")
-      AnnIndex.topK2(s, dir, maxQueryId = 6, k = 4,
-        nProbeCoarse = 2, nProbeFine = 3, tag = "del")
+        tag = "del", layout = TwoLevel)
+      AnnIndex.topK(s, dir, Prefix(6), k = 4,
+        nProbe = 2, nProbeFine = 3, tag = "del", layout = TwoLevel)
         .orderBy(col("q_id"), col("rn"))
     }),
 
     // the SQ8 probe AFTER a real delete, gen-2 (round-17 verdict #2):
     // the codes-only candidate scan composed with the coarse-pruned
     // tombstone anti-join, hash-checked — same tagged generation and
-    // residue-3 set as topk2_del (removeBatch2 is idempotent,
+    // residue-3 set as topk2_del (removeBatch is idempotent,
     // so the shared tombstones converge whichever entry runs first).
     // Oracle = the inline IVF²×SQ statement with the retired ids
     // excluded from the candidate side only
     "topk2_sq_del" -> ((s, dir) => {
-      AnnIndex.removeBatch2(s, dir,
+      AnnIndex.removeBatch(s, dir,
         Fixtures.embeddings(s, dir).select(col("vec_id"))
           .filter(col("vec_id") % 10 === 3),
-        tag = "del")
-      AnnIndex.topK2Sq(s, dir, maxQueryId = 6, k = 4,
-        nProbeCoarse = 2, nProbeFine = 3, rerank = 10, tag = "del")
+        tag = "del", layout = TwoLevel)
+      AnnIndex.topK(s, dir, Prefix(6), Sq8(rerank = 10), k = 4,
+        nProbe = 2, nProbeFine = 3, tag = "del", layout = TwoLevel)
         .orderBy(col("q_id"), col("rn"))
     }),
 
@@ -213,37 +214,37 @@ object PipelineQueries {
     // literal id list
     "topk2_sq_ids" -> ((s, dir) => {
       import s.implicits._
-      AnnIndex.topK2IdsSq(s, dir, Seq(0L, 2L, 5L, 9L).toDF("vec_id"),
-        k = 4, nProbeCoarse = 2, nProbeFine = 3, rerank = 10)
+      AnnIndex.topK(s, dir, Ids(Seq(0L, 2L, 5L, 9L).toDF("vec_id")),
+        Sq8(rerank = 10), k = 4, nProbe = 2, nProbeFine = 3, layout = TwoLevel)
         .orderBy(col("q_id"), col("rn"))
     }),
 
     // IVF² × PQ — the sub-byte billion-vector read path (round-18
     // verdict #3): pqcodes + the gen-2 codebook live INSIDE the
     // two-level index (written at build, encoded with the stored
-    // codebook on append, refreshed by requantize2), the candidate
+    // codebook on append, refreshed by requantize), the candidate
     // pass scans only the probed fine cells' m 4-bit-range codes and
     // ranks by the native ADC fold, exact rerank on top. Oracle = the
     // inline two-level CTEs composed with the PQ codebook/codes/
     // table/ADC CTEs
     "topk2_pq" -> ((s, dir) =>
-      AnnIndex.topK2Pq(s, dir, maxQueryId = 7, k = 4,
-        nProbeCoarse = 2, nProbeFine = 3, rerank = 24)
+      AnnIndex.topK(s, dir, Prefix(7), Pq(rerank = 24), k = 4,
+        nProbe = 2, nProbeFine = 3, layout = TwoLevel)
         .orderBy(col("q_id"), col("rn"))),
 
     // the gen-2 PQ probe AFTER a real delete: the packed-pqcodes scan
     // composed with the coarse-pruned tombstone anti-join — same
     // tagged generation and residue-3 set as topk2_del/topk2_sq_del
-    // (removeBatch2 idempotent, shared tombstones converge). Oracle =
+    // (removeBatch idempotent, shared tombstones converge). Oracle =
     // the inline IVF²×PQ statement with retired ids excluded from the
     // candidate side only
     "topk2_pq_del" -> ((s, dir) => {
-      AnnIndex.removeBatch2(s, dir,
+      AnnIndex.removeBatch(s, dir,
         Fixtures.embeddings(s, dir).select(col("vec_id"))
           .filter(col("vec_id") % 10 === 3),
-        tag = "del")
-      AnnIndex.topK2Pq(s, dir, maxQueryId = 6, k = 4,
-        nProbeCoarse = 2, nProbeFine = 3, rerank = 24, tag = "del")
+        tag = "del", layout = TwoLevel)
+      AnnIndex.topK(s, dir, Prefix(6), Pq(rerank = 24), k = 4,
+        nProbe = 2, nProbeFine = 3, tag = "del", layout = TwoLevel)
         .orderBy(col("q_id"), col("rn"))
     }),
 
@@ -253,8 +254,8 @@ object PipelineQueries {
     // the query CTE filtered to the same literal id list
     "topk2_pq_ids" -> ((s, dir) => {
       import s.implicits._
-      AnnIndex.topK2IdsPq(s, dir, Seq(0L, 2L, 5L, 9L).toDF("vec_id"),
-        k = 4, nProbeCoarse = 2, nProbeFine = 3, rerank = 24)
+      AnnIndex.topK(s, dir, Ids(Seq(0L, 2L, 5L, 9L).toDF("vec_id")),
+        Pq(rerank = 24), k = 4, nProbe = 2, nProbeFine = 3, layout = TwoLevel)
         .orderBy(col("q_id"), col("rn"))
     }),
 
@@ -415,7 +416,7 @@ object PipelineQueries {
     // SelectedBucketsCount < total), unlike the kmeans entry that
     // recomputes the assignment per query
     "topk_indexed" -> ((s, dir) =>
-      AnnIndex.topK(s, dir, maxQueryId = 8, k = 5, nProbe = 2)
+      AnnIndex.topK(s, dir, Prefix(8), k = 5, nProbe = 2)
         .orderBy(col("q_id"), col("rn"))),
 
     // the MAINTENANCE path end to end: a full requantize (stage the
@@ -429,7 +430,7 @@ object PipelineQueries {
     // mismatch, not just a spec failure
     "topk_requant" -> ((s, dir) => {
       AnnIndex.requantize(s, dir)
-      AnnIndex.topK(s, dir, maxQueryId = 6, k = 4, nProbe = 2)
+      AnnIndex.topK(s, dir, Prefix(6), k = 4, nProbe = 2)
         .orderBy(col("q_id"), col("rn"))
     }),
 
@@ -444,7 +445,7 @@ object PipelineQueries {
     // params, codes, both rankings) must be a pure physical
     // optimization of it
     "topk_indexed_sq" -> ((s, dir) =>
-      AnnIndex.topKSq(s, dir, maxQueryId = 7, k = 4, nProbe = 2, rerank = 12)
+      AnnIndex.topK(s, dir, Prefix(7), Sq8(rerank = 12), k = 4, nProbe = 2)
         .orderBy(col("q_id"), col("rn"))),
 
     // the STORED IVF×PQ serving shape (round 18): pqcodes + the PQ
@@ -455,7 +456,7 @@ object PipelineQueries {
     // tier of the write-once/probe-many contract. Oracle = the inline
     // IVF×PQ statement at this entry's parameters
     "topk_idx_pq" -> ((s, dir) =>
-      AnnIndex.topKIdxPq(s, dir, maxQueryId = 7, k = 4, nProbe = 2, rerank = 24)
+      AnnIndex.topK(s, dir, Prefix(7), Pq(rerank = 24), k = 4, nProbe = 2)
         .orderBy(col("q_id"), col("rn"))),
 
     // the RETIRE path end to end: tombstone a deterministic tenth of
@@ -476,7 +477,7 @@ object PipelineQueries {
         Fixtures.embeddings(s, dir).select(col("vec_id"))
           .filter(col("vec_id") % 10 === 7),
         tag = "del")
-      AnnIndex.topK(s, dir, maxQueryId = 6, k = 4, nProbe = 2, tag = "del")
+      AnnIndex.topK(s, dir, Prefix(6), k = 4, nProbe = 2, tag = "del")
         .orderBy(col("q_id"), col("rn"))
     }),
 
@@ -492,8 +493,8 @@ object PipelineQueries {
         Fixtures.embeddings(s, dir).select(col("vec_id"))
           .filter(col("vec_id") % 10 === 7),
         tag = "del")
-      AnnIndex.topKSq(s, dir, maxQueryId = 6, k = 4, nProbe = 2,
-        rerank = 12, tag = "del")
+      AnnIndex.topK(s, dir, Prefix(6), Sq8(rerank = 12), k = 4, nProbe = 2,
+        tag = "del")
         .orderBy(col("q_id"), col("rn"))
     }),
 
@@ -510,32 +511,32 @@ object PipelineQueries {
         Fixtures.embeddings(s, dir).select(col("vec_id"))
           .filter(col("vec_id") % 10 === 7),
         tag = "del")
-      AnnIndex.topKIdxPq(s, dir, maxQueryId = 6, k = 4, nProbe = 2,
-        rerank = 24, tag = "del")
+      AnnIndex.topK(s, dir, Prefix(6), Pq(rerank = 24), k = 4, nProbe = 2,
+        tag = "del")
         .orderBy(col("q_id"), col("rn"))
     }),
 
     // the COMPOSED sub-byte serving call (round-18 verdict #1):
-    // explicit query ids (topKIds' broadcast semi-join side) × stored
-    // pqcodes ADC scan (topKIdxPq's 4-bit byte bound) × tombstone
+    // explicit query ids (the Ids broadcast semi-join side) × stored
+    // pqcodes ADC scan (the Pq codec's 4-bit byte bound) × tombstone
     // anti-join. Oracle = the inline IVF×PQ statement with the query
     // CTE filtered to the same literal id list
     "topk_pq_ids" -> ((s, dir) => {
       import s.implicits._
-      AnnIndex.topKIdsPq(s, dir, Seq(1L, 3L, 6L, 11L).toDF("vec_id"),
-        k = 4, nProbe = 2, rerank = 24)
+      AnnIndex.topK(s, dir, Ids(Seq(1L, 3L, 6L, 11L).toDF("vec_id")),
+        Pq(rerank = 24), k = 4, nProbe = 2)
         .orderBy(col("q_id"), col("rn"))
     }),
 
     // the COMPOSED production serving call (round-17 verdict #1):
-    // explicit query ids (topKIds' broadcast semi-join side) × SQ8
-    // codes-only candidate scan (topKSq's byte bound) × tombstone
+    // explicit query ids (the Ids broadcast semi-join side) × SQ8
+    // codes-only candidate scan (the Sq8 codec's byte bound) × tombstone
     // anti-join. Oracle = the inline IVF×SQ statement with the query
     // CTE filtered to the same literal id list
     "topk_sq_ids" -> ((s, dir) => {
       import s.implicits._
-      AnnIndex.topKIdsSq(s, dir, Seq(1L, 3L, 6L, 11L).toDF("vec_id"),
-        k = 4, nProbe = 2, rerank = 12)
+      AnnIndex.topK(s, dir, Ids(Seq(1L, 3L, 6L, 11L).toDF("vec_id")),
+        Sq8(rerank = 12), k = 4, nProbe = 2)
         .orderBy(col("q_id"), col("rn"))
     }),
 
@@ -562,12 +563,12 @@ object PipelineQueries {
         pairs.select(col("id_b").as("vec_id")).distinct(), tag = "retire")
       val queries = pairs.select(col("id_a").as("vec_id")).distinct()
         .orderBy(col("vec_id")).limit(4)
-      AnnIndex.topKIds(s, dir, queries, k = 4, nProbe = 2, tag = "retire")
+      AnnIndex.topK(s, dir, Ids(queries), k = 4, nProbe = 2, tag = "retire")
         .orderBy(col("q_id"), col("rn"))
     }),
 
     // the same producer loop one generation down (round-17 verdict
-    // #4): LSH losers → retireBatch2's ledger-first retire → explicit
+    // #4): LSH losers → retireBatch's ledger-first retire → explicit
     // survivor-id probe on the TWO-LEVEL index. Same session-shared
     // pair set as curate_retire (the band-join verification runs
     // once per tier for both entries); oracle composes the LSH pair
@@ -578,12 +579,13 @@ object PipelineQueries {
       val (nPlanes, bpb) = Similarity.lshParamsFor(e.count())
       val pairs = Similarity.sharedNearDupPairsLsh(e, threshold = 0.4,
         nPlanes = nPlanes, bitsPerBand = bpb)
-      AnnIndex.retireBatch2(s, dir,
-        pairs.select(col("id_b").as("vec_id")).distinct(), tag = "retire")
+      AnnIndex.retireBatch(s, dir,
+        pairs.select(col("id_b").as("vec_id")).distinct(), tag = "retire",
+        layout = TwoLevel)
       val queries = pairs.select(col("id_a").as("vec_id")).distinct()
         .orderBy(col("vec_id")).limit(4)
-      AnnIndex.topK2Ids(s, dir, queries, k = 4, nProbeCoarse = 2,
-        nProbeFine = 3, tag = "retire")
+      AnnIndex.topK(s, dir, Ids(queries), k = 4, nProbe = 2,
+        nProbeFine = 3, tag = "retire", layout = TwoLevel)
         .orderBy(col("q_id"), col("rn"))
     }),
 
@@ -612,7 +614,7 @@ object PipelineQueries {
         hits.select(col("doc_b").as("vec_id")).distinct(), tag = "sret")
       val queries = hits.select(col("doc_a").as("vec_id")).distinct()
         .orderBy(col("vec_id")).limit(4)
-      AnnIndex.topKIds(s, dir, queries, k = 4, nProbe = 2, tag = "sret")
+      AnnIndex.topK(s, dir, Ids(queries), k = 4, nProbe = 2, tag = "sret")
         .orderBy(col("q_id"), col("rn"))
     }),
 

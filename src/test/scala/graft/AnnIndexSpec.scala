@@ -1,8 +1,11 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{AnnIndex, Similarity}
+import graft.ops.AnnIndex.{Exact, Flat, Ids, Pq, Prefix, Sq8, TwoLevel}
 import graft.tables.{Bucketed, Fixtures}
 
 /** Pins the persisted-ANN-index claims in [[graft.ops.AnnIndex]]:
@@ -30,8 +33,8 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     // also cross-checks AnnIndex's driver-side probe-cell arithmetic
     // against probeQueries' DataFrame formulation — the two must rank
     // (score, cell) identically
-    Bucketed.resetTable(spark, AnnIndex.tableFor(sf))
-    val indexed = AnnIndex.topK(spark, sf, maxQueryId = 8, k = 5, nProbe = 2)
+    Bucketed.resetTable(spark, Flat.tables(sf).assign)
+    val indexed = AnnIndex.topK(spark, sf, Prefix(8), k = 5, nProbe = 2)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     val emb = Fixtures.embeddings(spark, sf)
     val kc = AnnIndex.annCellsFor(emb.count())
@@ -48,7 +51,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     // two queries probe at most 4 of the corpus-scaled cells — pruning
     // must show
     val kc = AnnIndex.annCellsFor(Fixtures.embeddings(spark, sf).count())
-    val plan = AnnIndex.topK(spark, sf, maxQueryId = 2, k = 5, nProbe = 2)
+    val plan = AnnIndex.topK(spark, sf, Prefix(2), k = 5, nProbe = 2)
       .queryExecution.executedPlan.toString
     val m = "SelectedBucketsCount: (\\d+) out of (\\d+)".r.findFirstMatchIn(plan)
     assert(m.isDefined, s"expected a bucket-pruned scan:\n$plan")
@@ -64,7 +67,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     Files.createDirectories(embDir)
     Files.copy(Paths.get(sf, "embeddings.parquet"),
       embDir.resolve("part-00000.parquet"), StandardCopyOption.REPLACE_EXISTING)
-    val before = AnnIndex.topK(spark, dir, maxQueryId = 5, k = 4, nProbe = 2)
+    val before = AnnIndex.topK(spark, dir, Prefix(5), k = 4, nProbe = 2)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     assert(before.nonEmpty)
     // the corpus grows past the next cell knee: a live re-derivation
@@ -85,7 +88,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     assert(AnnIndex.annCellsFor(grown) !=
       AnnIndex.annCellsFor(grown / 2),
       "sanity: the growth actually crosses a cell knee")
-    val after = AnnIndex.topK(spark, dir, maxQueryId = 5, k = 4, nProbe = 2)
+    val after = AnnIndex.topK(spark, dir, Prefix(5), k = 4, nProbe = 2)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     assert(after == before,
       "a grown corpus must not decohere probes from the stored index")
@@ -125,7 +128,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     val q2 = AnnIndex.storedQuantizer(spark, dir, tag = "ac")
     assert(!(q2 eq q1) && q2.length > q1.length,
       s"requantize must invalidate the cached quantizer (${q1.length} -> ${q2.length})")
-    assert(q2.length == spark.table(AnnIndex.quantizerTableFor(dir, "ac")).count(),
+    assert(q2.length == spark.table(Flat.tables(dir, "ac").quantizer).count(),
       "the re-read must match the stored table of the new generation")
   }
 
@@ -151,7 +154,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
       s"requantize in session A must invalidate session B's cached quantizer " +
         s"(${qSib1.length} -> ${qSib2.length})")
     assert(qSib2.length ==
-      sib.table(AnnIndex.quantizerTableFor(dir, "xs")).count(),
+      sib.table(Flat.tables(dir, "xs").quantizer).count(),
       "the sibling's re-read must match the new generation's stored table")
     assert(!(AnnIndex.storedSqParams(sib, dir, tag = "xs") eq sqSib1),
       "the sibling's cached SQ params must be invalidated too")
@@ -168,15 +171,15 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
       emb.select(col("vec_id")).filter(col("vec_id") % 10 === 3), tag = "cf")
     AnnIndex.removeBatch(spark, dir,
       emb.select(col("vec_id")).filter(col("vec_id") % 10 === 3), tag = "cf")
-    val t = spark.table(AnnIndex.tableFor(dir, "cf"))
-    val ts = spark.table(AnnIndex.tombstoneTableFor(dir, "cf"))
+    val t = spark.table(Flat.tables(dir, "cf").assign)
+    val ts = spark.table(Flat.tables(dir, "cf").tombstones)
     val anti = t.join(ts.select(col("vec_id")), Seq("vec_id"), "left_anti").count()
     assert(t.count() - ts.count() == anti,
       "the subtraction identity requantize's count fold relies on must hold mid-lifecycle")
     val adv = AnnIndex.requantize(spark, dir, tag = "cf")
     assert(adv.nVectors == anti,
       s"requantize must size the rebuild from the live count (got ${adv.nVectors}, want $anti)")
-    assert(spark.table(AnnIndex.tableFor(dir, "cf")).count() == anti,
+    assert(spark.table(Flat.tables(dir, "cf").assign).count() == anti,
       "the compacted generation must hold exactly the live rows")
     assert(adv.tombstoned == 0L && !adv.dead,
       "the fresh generation's advice must report zero tombstones")
@@ -186,7 +189,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     val dir = tempCorpus("append")
     AnnIndex.ensureBuilt(spark, dir)
     val cs = AnnIndex.storedQuantizer(spark, dir)
-    val before = spark.table(AnnIndex.tableFor(dir)).count()
+    val before = spark.table(Flat.tables(dir).assign).count()
     // the batch clones existing vectors under fresh ids: each clone
     // lands in ITS original's cell (same vector, same stored quantizer
     // => same assignment), so a query must now find its own clone at
@@ -194,8 +197,8 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     val emb = Fixtures.embeddings(spark, dir)
     AnnIndex.appendBatch(spark, dir,
       emb.withColumn("vec_id", col("vec_id") + 500000L))
-    assert(spark.table(AnnIndex.tableFor(dir)).count() == before * 2)
-    val probed = AnnIndex.topK(spark, dir, maxQueryId = 5, k = 4, nProbe = 2)
+    assert(spark.table(Flat.tables(dir).assign).count() == before * 2)
+    val probed = AnnIndex.topK(spark, dir, Prefix(5), k = 4, nProbe = 2)
     val plan = probed.queryExecution.executedPlan.toString
     assert("SelectedBucketsCount: (\\d+) out of (\\d+)".r.findFirstMatchIn(plan).isDefined,
       s"append must keep the scan bucket-pruned:\n$plan")
@@ -213,7 +216,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
         Similarity.prepared(emb.union(emb.withColumn("vec_id", col("vec_id") + 500000L))), cs)
       .select(col("vec_id"), col("cell"))
       .orderBy(col("vec_id")).collect().toSeq
-    val stored = spark.table(AnnIndex.tableFor(dir))
+    val stored = spark.table(Flat.tables(dir).assign)
       .select(col("vec_id"), col("cell"))
       .orderBy(col("vec_id")).collect().toSeq
     assert(stored == unionAssigned,
@@ -269,7 +272,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     val k = AnnIndex.annCellsFor(combined.count())
     assert(k > k0 && AnnIndex.storedQuantizer(spark, dir).length == k,
       s"quantizer must be re-sized to the grown corpus ($k0 -> $k)")
-    val indexed = AnnIndex.topK(spark, dir, maxQueryId = 8, k = 5, nProbe = 2)
+    val indexed = AnnIndex.topK(spark, dir, Prefix(8), k = 5, nProbe = 2)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     val cs = Similarity.sampledCentroids(Similarity.prepared(combined), k)
     val inline = Similarity.topKIvfKmeans(combined, maxQueryId = 8, k = 5,
@@ -279,17 +282,17 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
       "the requantized index must stay a pure physical optimization")
     // the commit left no stage/old generation behind
     Seq("__stage", "__old").foreach { sfx =>
-      assert(!spark.catalog.tableExists(AnnIndex.tableFor(dir) + sfx) &&
-        !spark.catalog.tableExists(AnnIndex.quantizerTableFor(dir) + sfx) &&
-        !spark.catalog.tableExists(AnnIndex.sqTableFor(dir) + sfx),
+      assert(!spark.catalog.tableExists(Flat.tables(dir).assign + sfx) &&
+        !spark.catalog.tableExists(Flat.tables(dir).quantizer + sfx) &&
+        !spark.catalog.tableExists(Flat.tables(dir).sq + sfx),
         s"generation leftovers ($sfx) must be dropped at commit")
     }
   }
 
   test("stored IVF×SQ probe == inline topKIvfSq (codes + params read back, never re-derived)") {
-    Seq(AnnIndex.tableFor(sf), AnnIndex.quantizerTableFor(sf), AnnIndex.sqTableFor(sf))
+    Seq(Flat.tables(sf).assign, Flat.tables(sf).quantizer, Flat.tables(sf).sq)
       .foreach(graft.tables.Bucketed.resetTable(spark, _))
-    val stored = AnnIndex.topKSq(spark, sf, maxQueryId = 7, k = 4, nProbe = 2, rerank = 12)
+    val stored = AnnIndex.topK(spark, sf, Prefix(7), Sq8(12), k = 4, nProbe = 2)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     val inline = Similarity.topKIvfSq(Fixtures.embeddings(spark, sf),
         maxQueryId = 7, k = 4, nProbe = 2, rerank = 12)
@@ -300,7 +303,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
 
   test("the SQ candidate scan is bucket-pruned and reads codes, not full vectors") {
     AnnIndex.ensureBuilt(spark, sf)
-    val plan = AnnIndex.topKSq(spark, sf, maxQueryId = 2, k = 4, nProbe = 2, rerank = 12)
+    val plan = AnnIndex.topK(spark, sf, Prefix(2), Sq8(12), k = 4, nProbe = 2)
       .queryExecution.executedPlan.toString
     val prunes = "SelectedBucketsCount: (\\d+) out of (\\d+)".r
       .findAllMatchIn(plan).toSeq
@@ -328,9 +331,9 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     //-book regression (bad params, clamped codes, decode drift) pushes
     // a true neighbor below the cut and breaks equality here.
     AnnIndex.ensureBuilt(spark, sf)
-    val full = AnnIndex.topK(spark, sf, maxQueryId = 8, k = 5, nProbe = 4)
+    val full = AnnIndex.topK(spark, sf, Prefix(8), k = 5, nProbe = 4)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
-    val sq = AnnIndex.topKSq(spark, sf, maxQueryId = 8, k = 5, nProbe = 4, rerank = 10)
+    val sq = AnnIndex.topK(spark, sf, Prefix(8), Sq8(10), k = 5, nProbe = 4)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     assert(full.nonEmpty && sq == full,
       "SQ8 + exact rerank must reproduce the full-precision probe exactly")
@@ -364,7 +367,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
       "the widened range must actually move the stored params")
     // and the stored probe equals the inline IVF×SQ over the combined
     // corpus — quantizer, params, and codes all from the new generation
-    val stored = AnnIndex.topKSq(spark, dir, maxQueryId = 6, k = 4, nProbe = 2, rerank = 12)
+    val stored = AnnIndex.topK(spark, dir, Prefix(6), Sq8(12), k = 4, nProbe = 2)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     val inline = Similarity.topKIvfSq(combined, maxQueryId = 6, k = 4,
         nProbe = 2, rerank = 12)
@@ -375,8 +378,8 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
 
   test("stored IVF×PQ probe == inline topKIvfPq; candidate scan reads pqcodes only, bucket-pruned") {
     AnnIndex.ensureBuilt(spark, sf)
-    val stored = AnnIndex.topKIdxPq(spark, sf, maxQueryId = 6, k = 5,
-        nProbe = 2, rerank = 30)
+    val stored = AnnIndex.topK(spark, sf, Prefix(6), Pq(30), k = 5,
+        nProbe = 2)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     val inline = Similarity.topKIvfPq(Fixtures.embeddings(spark, sf),
         maxQueryId = 6, k = 5, nProbe = 2, rerank = 30)
@@ -385,8 +388,8 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
       "persisting pqcodes + the codebook must be a pure physical optimization")
     // the sub-byte bound: the candidate scan reads pqcodes — not the
     // vectors, not even the SQ8 codes — and both scans bucket-prune
-    val plan = AnnIndex.topKIdxPq(spark, sf, maxQueryId = 2, k = 4,
-        nProbe = 2, rerank = 24)
+    val plan = AnnIndex.topK(spark, sf, Prefix(2), Pq(24), k = 4,
+        nProbe = 2)
       .queryExecution.executedPlan.toString
     val prunes = "SelectedBucketsCount: (\\d+) out of (\\d+)".r
       .findAllMatchIn(plan).toSeq
@@ -403,7 +406,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
   test("pqcodes is PHYSICALLY 4 bits/dim: binary column at exactly m/2 bytes per row, " +
       "nibble decode round-trips the inline assignment bit for bit") {
     AnnIndex.ensureBuilt(spark, sf)
-    val t = AnnIndex.tableFor(sf)
+    val t = Flat.tables(sf).assign
     assert(spark.table(t).schema("pqcodes").dataType ==
       org.apache.spark.sql.types.BinaryType,
       "the stored codes column must be binary, not array<int>")
@@ -438,8 +441,8 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     val clone = emb.filter(col("vec_id") === 0)
       .withColumn("vec_id", lit(424242L))
     AnnIndex.appendBatch(spark, dir, clone)
-    val hits = AnnIndex.topKIdxPq(spark, dir, maxQueryId = 1, k = 3,
-        nProbe = 2, rerank = 10)
+    val hits = AnnIndex.topK(spark, dir, Prefix(1), Pq(10), k = 3,
+        nProbe = 2)
       .collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Double]("score")))
     assert(hits.contains((424242L, 1.0)),
       s"an appended clone must be served by the stored PQ probe: ${hits.toSeq}")
@@ -447,8 +450,8 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     // stored probe equals the inline IVF×PQ over the combined corpus
     AnnIndex.requantize(spark, dir)
     val combined = emb.union(clone)
-    val stored = AnnIndex.topKIdxPq(spark, dir, maxQueryId = 6, k = 4,
-        nProbe = 2, rerank = 24)
+    val stored = AnnIndex.topK(spark, dir, Prefix(6), Pq(24), k = 4,
+        nProbe = 2)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     val inline = Similarity.topKIvfPq(combined, maxQueryId = 6, k = 4,
         nProbe = 2, rerank = 24)
@@ -458,44 +461,47 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("a crash inside the rename window is healed: t is absent at every crash point, ensureBuilt sweeps and rebuilds") {
-    val dir = tempCorpus("crash")
-    val t = AnnIndex.ensureBuilt(spark, dir)
-    val qt = AnnIndex.quantizerTableFor(dir)
-    val before = AnnIndex.topK(spark, dir, maxQueryId = 5, k = 4, nProbe = 2)
-      .orderBy(col("q_id"), col("rn")).collect().toSeq
-    assert(before.nonEmpty)
-    // Simulate the DEEPEST mid-window crash the reordered commit can
-    // produce: live pair renamed aside AND the new quantizer already
-    // promoted, but the assignment promotion (the LAST rename) never
-    // ran — t absent, qt present, stage + old leftovers on disk. Under
-    // the pre-fix order (assignment promoted first) this state was
-    // instead both-tables-present-but-mismatched, which no sweep could
-    // detect; the reorder makes "t absent" the invariant of EVERY
-    // crash point, so one detection rule heals them all.
-    spark.sql(s"ALTER TABLE $t RENAME TO ${t}__old")
-    spark.sql(s"ALTER TABLE $qt RENAME TO ${qt}__old")
-    import spark.implicits._
-    Seq((0, Seq(0.0))).toDF("cell", "centroid")
-      .write.mode("overwrite").saveAsTable(qt) // the promoted new-gen quantizer
-    spark.range(3).toDF("junk").write.mode("overwrite").saveAsTable(t + "__stage")
-    assert(!spark.catalog.tableExists(t) && spark.catalog.tableExists(qt))
-    // first probe after the crash: ensureBuilt detects the missing
-    // assignment table, sweeps every generation, rebuilds from the
-    // source corpus — and the probes come back identical
-    val healed = AnnIndex.topK(spark, dir, maxQueryId = 5, k = 4, nProbe = 2)
-      .orderBy(col("q_id"), col("rn")).collect().toSeq
-    assert(healed == before,
-      "the healed index must serve identical probes (deterministic rebuild)")
-    Seq(t + "__stage", t + "__old", qt + "__old").foreach(n =>
-      assert(!spark.catalog.tableExists(n), s"orphan $n must be swept"))
+    // the swap protocol is shared, so every layout's window must heal
+    Seq(Flat, TwoLevel).foreach { layout =>
+      val dir = tempCorpus(s"crash-$layout")
+      val t = AnnIndex.ensureBuilt(spark, dir, layout = layout)
+      val qt = layout.tables(dir).quantizer
+      val before = AnnIndex.topK(spark, dir, Prefix(5), k = 4, nProbe = 2, layout = layout)
+        .orderBy(col("q_id"), col("rn")).collect().toSeq
+      assert(before.nonEmpty)
+      // Simulate the DEEPEST mid-window crash the reordered commit can
+      // produce: live pair renamed aside AND the new quantizer already
+      // promoted, but the assignment promotion (the LAST rename) never
+      // ran — t absent, qt present, stage + old leftovers on disk. Under
+      // the pre-fix order (assignment promoted first) this state was
+      // instead both-tables-present-but-mismatched, which no sweep could
+      // detect; the reorder makes "t absent" the invariant of EVERY
+      // crash point, so one detection rule heals them all.
+      spark.sql(s"ALTER TABLE $t RENAME TO ${t}__old")
+      spark.sql(s"ALTER TABLE $qt RENAME TO ${qt}__old")
+      import spark.implicits._
+      Seq((0, Seq(0.0))).toDF(layout.cell, "centroid")
+        .write.mode("overwrite").saveAsTable(qt) // the promoted new-gen quantizer
+      spark.range(3).toDF("junk").write.mode("overwrite").saveAsTable(t + "__stage")
+      assert(!spark.catalog.tableExists(t) && spark.catalog.tableExists(qt))
+      // first probe after the crash: ensureBuilt detects the missing
+      // assignment table, sweeps every generation, rebuilds from the
+      // source corpus — and the probes come back identical
+      val healed = AnnIndex.topK(spark, dir, Prefix(5), k = 4, nProbe = 2, layout = layout)
+        .orderBy(col("q_id"), col("rn")).collect().toSeq
+      assert(healed == before,
+        s"the healed $layout index must serve identical probes (deterministic rebuild)")
+      Seq(t + "__stage", t + "__old", qt + "__old").foreach(n =>
+        assert(!spark.catalog.tableExists(n), s"orphan $n must be swept"))
+    }
   }
 
   test("persisted two-level index: stored probe == inline topKIvf2, both stored scans bucket-pruned") {
-    Seq(AnnIndex.table2For(sf), AnnIndex.coarseQuantizerTableFor(sf),
-      AnnIndex.fineQuantizerTableFor(sf))
+    Seq(TwoLevel.tables(sf).assign, TwoLevel.tables(sf).quantizer,
+      TwoLevel.tables(sf).fine.get)
       .foreach(graft.tables.Bucketed.resetTable(spark, _))
-    val probed = AnnIndex.topK2(spark, sf, maxQueryId = 5, k = 4,
-      nProbeCoarse = 2, nProbeFine = 3)
+    val probed = AnnIndex.topK(spark, sf, Prefix(5), k = 4,
+      nProbe = 2, nProbeFine = 3, layout = TwoLevel)
     val stored = probed.orderBy(col("q_id"), col("rn")).collect().toSeq
     val inline = Similarity.topKIvf2(Fixtures.embeddings(spark, sf),
         maxQueryId = 5, k = 4, nProbeCoarse = 2, nProbeFine = 3)
@@ -513,14 +519,14 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
 
   test("two-level append -> requantize cycle: stored probe tracks the inline pipeline on the combined corpus") {
     val dir = tempCorpus("ivf2-cycle")
-    AnnIndex.ensureBuilt2(spark, dir)
+    AnnIndex.ensureBuilt(spark, dir, layout = TwoLevel)
     val emb = Fixtures.embeddings(spark, dir)
     // appended clones must be FOUND (cosine 1.0 at rank 1): both
     // stored quantizers assigned them exactly like their originals
-    AnnIndex.appendBatch2(spark, dir,
-      emb.withColumn("vec_id", col("vec_id") + 500000L))
-    val rows = AnnIndex.topK2(spark, dir, maxQueryId = 4, k = 3,
-        nProbeCoarse = 2, nProbeFine = 3)
+    AnnIndex.appendBatch(spark, dir,
+      emb.withColumn("vec_id", col("vec_id") + 500000L), layout = TwoLevel)
+    val rows = AnnIndex.topK(spark, dir, Prefix(4), k = 3,
+        nProbe = 2, nProbeFine = 3, layout = TwoLevel)
       .orderBy(col("q_id"), col("rn")).collect()
     (0L until 4L).foreach { q =>
       val top = rows.filter(_.getAs[Long]("q_id") == q).minBy(_.getAs[Int]("rn"))
@@ -530,10 +536,10 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     }
     // requantize re-fits both levels over the combined corpus — the
     // stored probe must equal the inline pipeline built fresh from it
-    AnnIndex.requantize2(spark, dir)
+    AnnIndex.requantize(spark, dir, layout = TwoLevel)
     val combined = emb.union(emb.withColumn("vec_id", col("vec_id") + 500000L))
-    val stored = AnnIndex.topK2(spark, dir, maxQueryId = 5, k = 4,
-        nProbeCoarse = 2, nProbeFine = 3)
+    val stored = AnnIndex.topK(spark, dir, Prefix(5), k = 4,
+        nProbe = 2, nProbeFine = 3, layout = TwoLevel)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     val inline = Similarity.topKIvf2(combined, maxQueryId = 5, k = 4,
         nProbeCoarse = 2, nProbeFine = 3)
@@ -541,24 +547,24 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     assert(stored.nonEmpty && stored == inline,
       "the requantized two-level index must stay a pure physical optimization")
     Seq("__stage", "__old").foreach { sfx =>
-      Seq(AnnIndex.table2For(dir), AnnIndex.coarseQuantizerTableFor(dir),
-        AnnIndex.fineQuantizerTableFor(dir)).foreach(n =>
+      Seq(TwoLevel.tables(dir).assign, TwoLevel.tables(dir).quantizer,
+        TwoLevel.tables(dir).fine.get).foreach(n =>
         assert(!spark.catalog.tableExists(n + sfx),
           s"generation leftovers ($n$sfx) must be dropped at commit"))
     }
   }
 
   test("two-level SQ probe: zero loss at rerank = 2k; candidate scan reads codes, not full vectors") {
-    AnnIndex.ensureBuilt2(spark, sf)
+    AnnIndex.ensureBuilt(spark, sf, layout = TwoLevel)
     // the flat tier's quantize-then-rerank contract, one level down:
     // with rerank = 2k the SQ approximation only reorders candidates
     // below the cut, so the result ROWS must equal the full-precision
     // two-level probe — a gen-2 code-book regression breaks equality
-    val full = AnnIndex.topK2(spark, sf, maxQueryId = 6, k = 4,
-        nProbeCoarse = 2, nProbeFine = 3)
+    val full = AnnIndex.topK(spark, sf, Prefix(6), k = 4,
+        nProbe = 2, nProbeFine = 3, layout = TwoLevel)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
-    val sq = AnnIndex.topK2Sq(spark, sf, maxQueryId = 6, k = 4,
-        nProbeCoarse = 2, nProbeFine = 3, rerank = 8)
+    val sq = AnnIndex.topK(spark, sf, Prefix(6), Sq8(8), k = 4,
+        nProbe = 2, nProbeFine = 3, layout = TwoLevel)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     assert(full.nonEmpty && sq == full,
       "gen-2 SQ8 + exact rerank must reproduce the full-precision two-level probe")
@@ -567,8 +573,8 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     // this is the entire reason gen-2 codes exist (the billion-vector
     // tier's probes are the byte-frugal ones); the rerank scan alone
     // reads v, and both scans bucket-prune on the probed coarse cells
-    val plan = AnnIndex.topK2Sq(spark, sf, maxQueryId = 2, k = 4,
-        nProbeCoarse = 2, nProbeFine = 3, rerank = 8)
+    val plan = AnnIndex.topK(spark, sf, Prefix(2), Sq8(8), k = 4,
+        nProbe = 2, nProbeFine = 3, layout = TwoLevel)
       .queryExecution.executedPlan.toString
     val prunes = "SelectedBucketsCount: (\\d+) out of (\\d+)".r
       .findAllMatchIn(plan).toSeq
@@ -586,7 +592,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
 
   test("gen-2 SQ params refresh across the append -> requantize2 cycle") {
     val dir = tempCorpus("ivf2-sq-cycle")
-    AnnIndex.ensureBuilt2(spark, dir)
+    AnnIndex.ensureBuilt(spark, dir, layout = TwoLevel)
     val emb = Fixtures.embeddings(spark, dir)
     // the appended replica is scaled 1.5×, widening every dimension's
     // range: its codes clamp under the STORED params until requantize2
@@ -596,10 +602,10 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     val widened = emb.withColumn("vec_id", col("vec_id") + 500000L)
       .withColumn("embedding",
         transform(col("embedding"), x => (x * lit(1.5)).cast("float")))
-    AnnIndex.appendBatch2(spark, dir, widened)
-    val (_, mxs0) = AnnIndex.storedSqParams2(spark, dir)
-    AnnIndex.requantize2(spark, dir)
-    val (mns1, mxs1) = AnnIndex.storedSqParams2(spark, dir)
+    AnnIndex.appendBatch(spark, dir, widened, layout = TwoLevel)
+    val (_, mxs0) = AnnIndex.storedSqParams(spark, dir, layout = TwoLevel)
+    AnnIndex.requantize(spark, dir, layout = TwoLevel)
+    val (mns1, mxs1) = AnnIndex.storedSqParams(spark, dir, layout = TwoLevel)
     val combined = emb.union(widened)
     val (mnsI, mxsI) = Similarity.sqParamsOf(Similarity.prepared(combined))
     assert(mns1.toSeq == mnsI.toSeq && mxs1.toSeq == mxsI.toSeq,
@@ -608,11 +614,11 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
       "the widened range must actually move the stored gen-2 params")
     // and the SQ probe over the rebuilt generation is still zero-loss
     // against the full-precision probe of the same generation
-    val full = AnnIndex.topK2(spark, dir, maxQueryId = 5, k = 4,
-        nProbeCoarse = 2, nProbeFine = 3)
+    val full = AnnIndex.topK(spark, dir, Prefix(5), k = 4,
+        nProbe = 2, nProbeFine = 3, layout = TwoLevel)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
-    val sq = AnnIndex.topK2Sq(spark, dir, maxQueryId = 5, k = 4,
-        nProbeCoarse = 2, nProbeFine = 3, rerank = 8)
+    val sq = AnnIndex.topK(spark, dir, Prefix(5), Sq8(8), k = 4,
+        nProbe = 2, nProbeFine = 3, layout = TwoLevel)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     assert(full.nonEmpty && sq == full,
       "the requantized gen-2 code book must keep the rerank contract")
@@ -627,11 +633,11 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     // literal). The same holds for the SQ and two-level probes, which
     // share probeFrame.
     Seq(
-      AnnIndex.topK(spark, sf, maxQueryId = 4, k = 3, nProbe = 2),
-      AnnIndex.topKSq(spark, sf, maxQueryId = 4, k = 3, nProbe = 2, rerank = 8),
-      { AnnIndex.ensureBuilt2(spark, sf)
-        AnnIndex.topK2(spark, sf, maxQueryId = 4, k = 3) },
-      AnnIndex.topK2Sq(spark, sf, maxQueryId = 4, k = 3)
+      AnnIndex.topK(spark, sf, Prefix(4), k = 3, nProbe = 2),
+      AnnIndex.topK(spark, sf, Prefix(4), Sq8(8), k = 3, nProbe = 2),
+      { AnnIndex.ensureBuilt(spark, sf, layout = TwoLevel)
+        AnnIndex.topK(spark, sf, Prefix(4), k = 3, layout = TwoLevel) },
+      AnnIndex.topK(spark, sf, Prefix(4), Sq8(10), k = 3, layout = TwoLevel)
     ).foreach { probed =>
       val plan = probed.queryExecution.executedPlan.toString
       assert(!plan.contains("LocalTableScan"),
@@ -645,7 +651,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
   test("removeBatch: tombstoned vectors are never returned; results genuinely change; unknown ids are no-ops") {
     val dir = tempCorpus("delete")
     AnnIndex.ensureBuilt(spark, dir)
-    val before = AnnIndex.topK(spark, dir, maxQueryId = 6, k = 4, nProbe = 2)
+    val before = AnnIndex.topK(spark, dir, Prefix(6), k = 4, nProbe = 2)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     assert(before.nonEmpty)
     // retire exactly the ids the registry entry retires — the set must
@@ -656,14 +662,14 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     val emb = Fixtures.embeddings(spark, dir)
     AnnIndex.removeBatch(spark, dir,
       emb.select(col("vec_id")).filter(col("vec_id") % 10 === 7))
-    val after = AnnIndex.topK(spark, dir, maxQueryId = 6, k = 4, nProbe = 2)
+    val after = AnnIndex.topK(spark, dir, Prefix(6), k = 4, nProbe = 2)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     assert(after.forall(_.getAs[Long]("vec_id") % 10 != 7),
       s"a tombstoned vector leaked back into the probe: $after")
     assert(after != before, "deletion must visibly change the results")
     // the SQ read path filters the same tombstones
-    val afterSq = AnnIndex.topKSq(spark, dir, maxQueryId = 6, k = 4,
-        nProbe = 2, rerank = 12)
+    val afterSq = AnnIndex.topK(spark, dir, Prefix(6), Sq8(12), k = 4,
+        nProbe = 2)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     assert(afterSq.nonEmpty && afterSq.forall(_.getAs[Long]("vec_id") % 10 != 7))
     // deletion == the inline probe over the SURVIVING corpus with the
@@ -680,14 +686,14 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     assert(after == inline,
       "tombstone filtering must equal the surviving-corpus inline probe")
     // re-deleting is idempotent; deleting an unknown id is a no-op
-    val tsCount = spark.table(AnnIndex.tombstoneTableFor(dir)).count()
+    val tsCount = spark.table(Flat.tables(dir).tombstones).count()
     AnnIndex.removeBatch(spark, dir,
       emb.select(col("vec_id")).filter(col("vec_id") % 10 === 7))
     import spark.implicits._
     AnnIndex.removeBatch(spark, dir, Seq(987654321L).toDF("vec_id"))
-    assert(spark.table(AnnIndex.tombstoneTableFor(dir)).count() == tsCount,
+    assert(spark.table(Flat.tables(dir).tombstones).count() == tsCount,
       "re-deletes and unknown ids must not grow the tombstone set")
-    assert(AnnIndex.topK(spark, dir, maxQueryId = 6, k = 4, nProbe = 2)
+    assert(AnnIndex.topK(spark, dir, Prefix(6), k = 4, nProbe = 2)
       .orderBy(col("q_id"), col("rn")).collect().toSeq == after)
   }
 
@@ -701,7 +707,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     // cosine 1.0 (served), while the tombstoned tenth stays invisible
     AnnIndex.appendBatch(spark, dir,
       emb.withColumn("vec_id", col("vec_id") + 500000L))
-    val rows = AnnIndex.topK(spark, dir, maxQueryId = 5, k = 4, nProbe = 2)
+    val rows = AnnIndex.topK(spark, dir, Prefix(5), k = 4, nProbe = 2)
       .orderBy(col("q_id"), col("rn")).collect()
     (0L until 5L).foreach { q =>
       val top = rows.filter(_.getAs[Long]("q_id") == q).minBy(_.getAs[Int]("rn"))
@@ -732,11 +738,11 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     // with the FULL query set: probes are external callers, so deleted
     // ids still query even though they can no longer be returned
     val surviving = emb.filter(col("vec_id") % 10 >= 3)
-    assert(spark.table(AnnIndex.tableFor(dir)).count() == surviving.count(),
+    assert(spark.table(Flat.tables(dir).assign).count() == surviving.count(),
       "compaction must drop exactly the tombstoned rows")
     val k = AnnIndex.annCellsFor(surviving.count())
     val cs = Similarity.sampledCentroids(Similarity.prepared(surviving), k)
-    val indexed = AnnIndex.topK(spark, dir, maxQueryId = 8, k = 5, nProbe = 2)
+    val indexed = AnnIndex.topK(spark, dir, Prefix(8), k = 5, nProbe = 2)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     val inline = Similarity.probeIndex(
         Similarity.assignCells(Similarity.prepared(surviving), cs),
@@ -754,9 +760,9 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     val emb = Fixtures.embeddings(spark, dir)
     AnnIndex.removeBatch(spark, dir,
       emb.select(col("vec_id")).filter(col("vec_id") % 10 === 7))
-    val afterDelete = AnnIndex.topK(spark, dir, maxQueryId = 5, k = 4, nProbe = 2)
+    val afterDelete = AnnIndex.topK(spark, dir, Prefix(5), k = 4, nProbe = 2)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
-    val ts = AnnIndex.tombstoneTableFor(dir)
+    val ts = Flat.tables(dir).tombstones
     import spark.implicits._
     // THE crash window removeBatch can actually produce: live table
     // renamed aside, staged merged table (committed ∪ in-flight batch)
@@ -764,7 +770,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     // stage — recovering EVERYTHING, in-flight batch included — at
     // O(rename), never the old full-source-rebuild blast radius.
     val k = AnnIndex.storedQuantizer(spark, dir).length
-    val inFlight = spark.table(AnnIndex.tableFor(dir))
+    val inFlight = spark.table(Flat.tables(dir).assign)
       .select(col("vec_id"), col("cell"))
       .filter(col("vec_id") % 10 === 8)
       .unionByName(spark.table(ts).select(col("vec_id"), col("cell")))
@@ -773,9 +779,9 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
       .bucketBy(k, "cell").sortBy("cell").saveAsTable(ts + "__stage")
     spark.sql(s"ALTER TABLE $ts RENAME TO ${ts}__old")
     assert(!spark.catalog.tableExists(ts))
-    val assignmentFiles = spark.table(AnnIndex.tableFor(dir))
+    val assignmentFiles = spark.table(Flat.tables(dir).assign)
       .inputFiles.toSet
-    val healed = AnnIndex.topK(spark, dir, maxQueryId = 5, k = 4, nProbe = 2)
+    val healed = AnnIndex.topK(spark, dir, Prefix(5), k = 4, nProbe = 2)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     assert(healed.forall { r =>
       val id = r.getAs[Long]("vec_id"); id % 10 != 7 && id % 10 != 8 },
@@ -783,7 +789,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     assert(spark.table(ts).count() ==
       emb.filter(col("vec_id") % 10 === 7 || col("vec_id") % 10 === 8).count(),
       "the healed tombstone set is exactly committed ∪ in-flight")
-    assert(spark.table(AnnIndex.tableFor(dir)).inputFiles.toSet == assignmentFiles,
+    assert(spark.table(Flat.tables(dir).assign).inputFiles.toSet == assignmentFiles,
       "the heal must be a rename, never an index rebuild")
     assert(!spark.catalog.tableExists(ts + "__old"), "orphan must be swept")
     // the degenerate only-__old state (no removeBatch crash point
@@ -792,10 +798,10 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     // is lost, and the ledger replays it
     spark.sql(s"DROP TABLE $ts") // lose the healed generation entirely
     AnnIndex.removeBatch(spark, dir, Seq(1L).toDF("vec_id")) // rebuild + re-delete id 1
-    val committed = AnnIndex.topK(spark, dir, maxQueryId = 5, k = 4, nProbe = 2)
+    val committed = AnnIndex.topK(spark, dir, Prefix(5), k = 4, nProbe = 2)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     spark.sql(s"ALTER TABLE $ts RENAME TO ${ts}__old")
-    val restored = AnnIndex.topK(spark, dir, maxQueryId = 5, k = 4, nProbe = 2)
+    val restored = AnnIndex.topK(spark, dir, Prefix(5), k = 4, nProbe = 2)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     assert(restored == committed,
       "__old restore must preserve the committed tombstones")
@@ -804,59 +810,59 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
 
   test("requantizeAdvice2: fresh two-level build clean; coarse knee fires on 30x growth") {
     val dir = tempCorpus("advice2")
-    AnnIndex.ensureBuilt2(spark, dir)
-    val fresh0 = AnnIndex.requantizeAdvice2(spark, dir)
+    AnnIndex.ensureBuilt(spark, dir, layout = TwoLevel)
+    val fresh0 = AnnIndex.requantizeAdvice(spark, dir, layout = TwoLevel)
     assert(!fresh0.needed, s"a just-built two-level index must not advise: $fresh0")
     // n0=500 → kc = annCellsFor(annCellsFor(500)) = annCellsFor(23) = 5;
     // 29 appended replicas → n=15000 → annCellsFor(annCellsFor(15000))
     // = annCellsFor(123) = 12 > 2·5 — the coarse knee
     val emb = Fixtures.embeddings(spark, dir)
-    (1 to 29).foreach(r => AnnIndex.appendBatch2(spark, dir,
-      emb.withColumn("vec_id", col("vec_id") + lit(r * 100000L))))
-    val grown = AnnIndex.requantizeAdvice2(spark, dir)
+    (1 to 29).foreach(r => AnnIndex.appendBatch(spark, dir,
+      emb.withColumn("vec_id", col("vec_id") + lit(r * 100000L)), layout = TwoLevel))
+    val grown = AnnIndex.requantizeAdvice(spark, dir, layout = TwoLevel)
     assert(grown.knee && grown.needed,
       s"a corpus past the coarse knee must advise requantize2: $grown")
-    AnnIndex.requantize2(spark, dir)
-    val cleared = AnnIndex.requantizeAdvice2(spark, dir)
+    AnnIndex.requantize(spark, dir, layout = TwoLevel)
+    val cleared = AnnIndex.requantizeAdvice(spark, dir, layout = TwoLevel)
     assert(!cleared.knee,
       s"requantize2 must resize the coarse level and clear the knee: $cleared")
   }
 
   test("two-level delete lifecycle: tombstoned never returned, dead trigger, requantize2 compacts, crash heals") {
     val dir = tempCorpus("del2")
-    AnnIndex.ensureBuilt2(spark, dir)
+    AnnIndex.ensureBuilt(spark, dir, layout = TwoLevel)
     val emb = Fixtures.embeddings(spark, dir)
-    val before = AnnIndex.topK2(spark, dir, maxQueryId = 6, k = 4)
+    val before = AnnIndex.topK(spark, dir, Prefix(6), k = 4, layout = TwoLevel)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     assert(before.exists(_.getAs[Long]("vec_id") % 10 == 3),
       "sanity: the deletion set must intersect the pre-delete results")
-    AnnIndex.removeBatch2(spark, dir,
-      emb.select(col("vec_id")).filter(col("vec_id") % 10 === 3))
-    val after = AnnIndex.topK2(spark, dir, maxQueryId = 6, k = 4)
+    AnnIndex.removeBatch(spark, dir,
+      emb.select(col("vec_id")).filter(col("vec_id") % 10 === 3), layout = TwoLevel)
+    val after = AnnIndex.topK(spark, dir, Prefix(6), k = 4, layout = TwoLevel)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     assert(after.forall(_.getAs[Long]("vec_id") % 10 != 3) && after != before,
       s"gen-2 tombstones must filter and visibly change results")
     // idempotent re-delete
-    val tsCount = spark.table(AnnIndex.tombstone2TableFor(dir)).count()
-    AnnIndex.removeBatch2(spark, dir,
-      emb.select(col("vec_id")).filter(col("vec_id") % 10 === 3))
-    assert(spark.table(AnnIndex.tombstone2TableFor(dir)).count() == tsCount)
+    val tsCount = spark.table(TwoLevel.tables(dir).tombstones).count()
+    AnnIndex.removeBatch(spark, dir,
+      emb.select(col("vec_id")).filter(col("vec_id") % 10 === 3), layout = TwoLevel)
+    assert(spark.table(TwoLevel.tables(dir).tombstones).count() == tsCount)
     // 10% dead — below the 20% trigger; delete two more residues to trip it
-    AnnIndex.removeBatch2(spark, dir,
+    AnnIndex.removeBatch(spark, dir,
       emb.select(col("vec_id")).filter(col("vec_id") % 10 === 4 ||
-        col("vec_id") % 10 === 5))
-    val advice = AnnIndex.requantizeAdvice2(spark, dir)
+        col("vec_id") % 10 === 5), layout = TwoLevel)
+    val advice = AnnIndex.requantizeAdvice(spark, dir, layout = TwoLevel)
     assert(advice.tombstoned > 0 && advice.dead,
       s"a 30% dead fraction must advise compaction: $advice")
-    AnnIndex.requantize2(spark, dir)
-    val cleared = AnnIndex.requantizeAdvice2(spark, dir)
+    AnnIndex.requantize(spark, dir, layout = TwoLevel)
+    val cleared = AnnIndex.requantizeAdvice(spark, dir, layout = TwoLevel)
     assert(cleared.tombstoned == 0 && !cleared.dead, s"compaction must clear: $cleared")
     val surviving = emb.filter(col("vec_id") % 10 < 3 || col("vec_id") % 10 > 5)
-    assert(spark.table(AnnIndex.table2For(dir)).count() == surviving.count(),
+    assert(spark.table(TwoLevel.tables(dir).assign).count() == surviving.count(),
       "requantize2 must physically drop exactly the tombstoned rows")
     // the compacted index == the inline two-level pipeline over the
     // surviving corpus, probed with the FULL query set
-    val indexed = AnnIndex.topK2(spark, dir, maxQueryId = 5, k = 4)
+    val indexed = AnnIndex.topK(spark, dir, Prefix(5), k = 4, layout = TwoLevel)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     val prepS = Similarity.prepared(surviving)
     val (coarse, fine, asg) = Similarity.ivf2StructureOf(prepS, surviving.count())
@@ -870,9 +876,9 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     // set renamed aside → the sweep RESTORES it (healTombstoneSwap's
     // cheap path, one level up from the flat case) — the compacted
     // generation keeps serving, no rebuild, no lost tombstones
-    val ts = AnnIndex.tombstone2TableFor(dir)
+    val ts = TwoLevel.tables(dir).tombstones
     spark.sql(s"ALTER TABLE $ts RENAME TO ${ts}__old")
-    val healed = AnnIndex.topK2(spark, dir, maxQueryId = 5, k = 4)
+    val healed = AnnIndex.topK(spark, dir, Prefix(5), k = 4, layout = TwoLevel)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     assert(healed == indexed,
       "the restored gen-2 tombstone table must keep the compacted generation serving")
@@ -880,7 +886,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     // back to the full source rebuild (the delete producer's ledger
     // replays) — the pre-17 blast radius, now the last resort
     spark.sql(s"DROP TABLE $ts")
-    val rebuilt = AnnIndex.topK2(spark, dir, maxQueryId = 5, k = 4)
+    val rebuilt = AnnIndex.topK(spark, dir, Prefix(5), k = 4, layout = TwoLevel)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     val freshInline = Similarity.topKIvf2(emb, maxQueryId = 5, k = 4)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
@@ -893,7 +899,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     val dir = tempCorpus("ledger")
     AnnIndex.ensureBuilt(spark, dir, tag = "led")
-    def probe() = AnnIndex.topK(spark, dir, maxQueryId = 6, k = 4, nProbe = 2, tag = "led")
+    def probe() = AnnIndex.topK(spark, dir, Prefix(6), k = 4, nProbe = 2, tag = "led")
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     val before = probe()
     assert(before.nonEmpty)
@@ -906,7 +912,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
       !victims.contains(r.getAs[Long]("vec_id"))),
       "retired ids must leave the serving results")
     // the ledger durably recorded exactly the batch
-    val ledger = AnnIndex.deleteLedgerTableFor(dir, "led")
+    val ledger = Flat.tables(dir, "led").ledger
     assert(spark.table(ledger).collect().map(_.getLong(0)).sorted.toSeq
       == victims.sorted.toSeq)
     // replay TWICE: at-least-once delivery converges (the idempotent
@@ -963,9 +969,9 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     val flip = udf(() => scala.util.Random.nextBoolean()).asNondeterministic()
     AnnIndex.retireBatch(spark, dir, emb.select(col("vec_id")).where(flip()),
       tag = "nd")
-    val ledgered = spark.table(AnnIndex.deleteLedgerTableFor(dir, "nd"))
+    val ledgered = spark.table(Flat.tables(dir, "nd").ledger)
       .select(col("vec_id")).collect().map(_.getLong(0)).toSet
-    val tombstoned = spark.table(AnnIndex.tombstoneTableFor(dir, "nd"))
+    val tombstoned = spark.table(Flat.tables(dir, "nd").tombstones)
       .select(col("vec_id")).collect().map(_.getLong(0)).toSet
     // every ledgered id is a corpus member, so resolution drops none:
     // the tombstone set must be EXACTLY the durably recorded batch —
@@ -976,7 +982,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
         s"the producer plan was evaluated more than once")
     // and replay converges as before
     AnnIndex.replayDeleteLedger(spark, dir, "nd")
-    assert(spark.table(AnnIndex.tombstoneTableFor(dir, "nd"))
+    assert(spark.table(Flat.tables(dir, "nd").tombstones)
       .select(col("vec_id")).collect().map(_.getLong(0)).toSet == ledgered)
   }
 
@@ -992,7 +998,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     // survivors, rows and scores included (queries include retired id
     // 7 — external callers still probe) — a tombstone that clips a
     // live neighbor or leaks a dead one breaks row equality here
-    val probed = AnnIndex.topK(spark, dir, maxQueryId = 8, k = 5,
+    val probed = AnnIndex.topK(spark, dir, Prefix(8), k = 5,
         nProbe = kc, tag = "rd")
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     val brute = Similarity.topKOver(
@@ -1003,12 +1009,12 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     // the same guarantee one level down: every coarse cell probed and
     // the fine probe wider than any cell's fine count scans the whole
     // gen-2 index minus its tombstones
-    AnnIndex.ensureBuilt2(spark, dir, tag = "rd")
-    AnnIndex.removeBatch2(spark, dir,
-      emb.select(col("vec_id")).filter(col("vec_id") % 10 === 7), tag = "rd")
-    val kc2 = AnnIndex.storedCoarseQuantizer(spark, dir, tag = "rd").length
-    val probed2 = AnnIndex.topK2(spark, dir, maxQueryId = 8, k = 5,
-        nProbeCoarse = kc2, nProbeFine = 1000000, tag = "rd")
+    AnnIndex.ensureBuilt(spark, dir, tag = "rd", layout = TwoLevel)
+    AnnIndex.removeBatch(spark, dir,
+      emb.select(col("vec_id")).filter(col("vec_id") % 10 === 7), tag = "rd", layout = TwoLevel)
+    val kc2 = AnnIndex.storedQuantizer(spark, dir, tag = "rd", layout = TwoLevel).length
+    val probed2 = AnnIndex.topK(spark, dir, Prefix(8), k = 5,
+        nProbe = kc2, nProbeFine = 1000000, tag = "rd", layout = TwoLevel)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     assert(probed2.nonEmpty && probed2 == brute,
       "gen-2 full-width probe after delete must equal brute force over survivors")
@@ -1017,23 +1023,23 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
   test("explicit-id probes == prefix probes on the same ids, both generations") {
     import spark.implicits._
     AnnIndex.ensureBuilt(spark, sf)
-    AnnIndex.ensureBuilt2(spark, sf)
+    AnnIndex.ensureBuilt(spark, sf, layout = TwoLevel)
     val ids = (0L until 5L).toDF("vec_id")
-    val flatPrefix = AnnIndex.topK(spark, sf, maxQueryId = 5, k = 4, nProbe = 2)
+    val flatPrefix = AnnIndex.topK(spark, sf, Prefix(5), k = 4, nProbe = 2)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
-    val flatIds = AnnIndex.topKIds(spark, sf, ids, k = 4, nProbe = 2)
+    val flatIds = AnnIndex.topK(spark, sf, Ids(ids), k = 4, nProbe = 2)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     assert(flatIds.nonEmpty && flatIds == flatPrefix,
       "topKIds over the prefix ids must equal the prefix probe")
-    val g2Prefix = AnnIndex.topK2(spark, sf, maxQueryId = 5, k = 4)
+    val g2Prefix = AnnIndex.topK(spark, sf, Prefix(5), k = 4, layout = TwoLevel)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
-    val g2Ids = AnnIndex.topK2Ids(spark, sf, ids, k = 4)
+    val g2Ids = AnnIndex.topK(spark, sf, Ids(ids), k = 4, layout = TwoLevel)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     assert(g2Ids.nonEmpty && g2Ids == g2Prefix,
       "topK2Ids over the prefix ids must equal the prefix probe")
     // unknown ids probe nothing, known subset probes exactly itself
-    assert(AnnIndex.topKIds(spark, sf, Seq(987654321L).toDF("vec_id"), k = 4).isEmpty)
-    val sub = AnnIndex.topK2Ids(spark, sf, Seq(3L).toDF("vec_id"), k = 4)
+    assert(AnnIndex.topK(spark, sf, Ids(Seq(987654321L).toDF("vec_id")), k = 4).isEmpty)
+    val sub = AnnIndex.topK(spark, sf, Ids(Seq(3L).toDF("vec_id")), k = 4, layout = TwoLevel)
       .orderBy(col("rn")).collect().toSeq
     assert(sub == g2Prefix.filter(_.getAs[Long]("q_id") == 3L))
   }
@@ -1042,82 +1048,82 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
       "prefix-coherent, zero loss at rerank = 2k, candidate scan reads codes not vectors") {
     import spark.implicits._
     AnnIndex.ensureBuilt(spark, sf)
-    AnnIndex.ensureBuilt2(spark, sf)
+    AnnIndex.ensureBuilt(spark, sf, layout = TwoLevel)
     val ids = (0L until 5L).toDF("vec_id")
     // the id path must be the prefix path's exact result on the same set
-    val flatPrefix = AnnIndex.topKSq(spark, sf, maxQueryId = 5, k = 4,
-        nProbe = 2, rerank = 12)
+    val flatPrefix = AnnIndex.topK(spark, sf, Prefix(5), Sq8(12), k = 4,
+        nProbe = 2)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
-    val flatIds = AnnIndex.topKIdsSq(spark, sf, ids, k = 4,
-        nProbe = 2, rerank = 12)
+    val flatIds = AnnIndex.topK(spark, sf, Ids(ids), Sq8(12), k = 4,
+        nProbe = 2)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     assert(flatIds.nonEmpty && flatIds == flatPrefix,
       "topKIdsSq over the prefix ids must equal the prefix SQ probe")
-    val g2Prefix = AnnIndex.topK2Sq(spark, sf, maxQueryId = 5, k = 4)
+    val g2Prefix = AnnIndex.topK(spark, sf, Prefix(5), Sq8(10), k = 4, layout = TwoLevel)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
-    val g2Ids = AnnIndex.topK2IdsSq(spark, sf, ids, k = 4)
+    val g2Ids = AnnIndex.topK(spark, sf, Ids(ids), Sq8(10), k = 4, layout = TwoLevel)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     assert(g2Ids.nonEmpty && g2Ids == g2Prefix,
       "topK2IdsSq over the prefix ids must equal the prefix SQ probe")
     // rerank = 2k buys back full-precision results on the explicit-id
     // path too (the round-17 verdict's acceptance bar)
-    val exact = AnnIndex.topKIds(spark, sf, ids, k = 4, nProbe = 2)
+    val exact = AnnIndex.topK(spark, sf, Ids(ids), k = 4, nProbe = 2)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
-    val sq2k = AnnIndex.topKIdsSq(spark, sf, ids, k = 4, nProbe = 2, rerank = 8)
+    val sq2k = AnnIndex.topK(spark, sf, Ids(ids), Sq8(8), k = 4, nProbe = 2)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     assert(sq2k == exact,
       "explicit-id SQ probe at rerank = 2k must equal the full-precision explicit-id probe")
     // the byte bound survives the composition: the candidate scan's
     // ReadSchema excludes `v` on both generations
-    val p1 = AnnIndex.topKIdsSq(spark, sf, ids, k = 4, nProbe = 2, rerank = 12)
+    val p1 = AnnIndex.topK(spark, sf, Ids(ids), Sq8(12), k = 4, nProbe = 2)
       .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
     assert(p1.contains("ReadSchema: struct<vec_id:bigint,nrm:double,cell:int,codes:array<int>>"),
       "flat explicit-id candidate scan must read codes, not vectors")
-    val p2 = AnnIndex.topK2IdsSq(spark, sf, ids, k = 4)
+    val p2 = AnnIndex.topK(spark, sf, Ids(ids), Sq8(10), k = 4, layout = TwoLevel)
       .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
     assert(p2.contains("ReadSchema: struct<vec_id:bigint,nrm:double,ccell:int,fcell:int,codes:array<int>>"),
       "gen-2 explicit-id candidate scan must read codes, not vectors")
     // unknown ids probe nothing
-    assert(AnnIndex.topKIdsSq(spark, sf, Seq(987654321L).toDF("vec_id"), k = 4).isEmpty)
+    assert(AnnIndex.topK(spark, sf, Ids(Seq(987654321L).toDF("vec_id")), Sq8(15), k = 4).isEmpty)
   }
 
   test("SQ probes after a real delete: tombstones filtered on the codes path, " +
       "deletion set intersects the pre-delete SQ top-k (non-vacuous entries)") {
     val dir = tempCorpus("sqdel")
     AnnIndex.ensureBuilt(spark, dir)
-    AnnIndex.ensureBuilt2(spark, dir)
+    AnnIndex.ensureBuilt(spark, dir, layout = TwoLevel)
     val emb = Fixtures.embeddings(spark, dir)
     // flat: residue 7 (the registry's set) must intersect the
     // pre-delete SQ top-k, or topk_sq_del would be vacuous
-    val beforeFlat = AnnIndex.topKSq(spark, dir, maxQueryId = 6, k = 4,
-        nProbe = 2, rerank = 12)
+    val beforeFlat = AnnIndex.topK(spark, dir, Prefix(6), Sq8(12), k = 4,
+        nProbe = 2)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     assert(beforeFlat.exists(_.getAs[Long]("vec_id") % 10 == 7),
       "sanity: residue 7 must appear in the pre-delete SQ top-4")
     AnnIndex.removeBatch(spark, dir,
       emb.select(col("vec_id")).filter(col("vec_id") % 10 === 7))
-    val afterFlat = AnnIndex.topKSq(spark, dir, maxQueryId = 6, k = 4,
-        nProbe = 2, rerank = 12)
+    val afterFlat = AnnIndex.topK(spark, dir, Prefix(6), Sq8(12), k = 4,
+        nProbe = 2)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     assert(afterFlat.nonEmpty && afterFlat.forall(_.getAs[Long]("vec_id") % 10 != 7),
       "a tombstoned vector leaked into the SQ codes path")
     assert(afterFlat != beforeFlat, "deletion must visibly change the SQ results")
     // gen-2: residue 3 (the registry's set), same contract
-    val before2 = AnnIndex.topK2Sq(spark, dir, maxQueryId = 6, k = 4)
+    val before2 = AnnIndex.topK(spark, dir, Prefix(6), Sq8(10), k = 4, layout = TwoLevel)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     assert(before2.exists(_.getAs[Long]("vec_id") % 10 == 3),
       "sanity: residue 3 must appear in the pre-delete gen-2 SQ top-4")
-    AnnIndex.removeBatch2(spark, dir,
-      emb.select(col("vec_id")).filter(col("vec_id") % 10 === 3))
-    val after2 = AnnIndex.topK2Sq(spark, dir, maxQueryId = 6, k = 4)
+    AnnIndex.removeBatch(spark, dir,
+      emb.select(col("vec_id")).filter(col("vec_id") % 10 === 3), layout = TwoLevel)
+    val after2 = AnnIndex.topK(spark, dir, Prefix(6), Sq8(10), k = 4, layout = TwoLevel)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     assert(after2.nonEmpty && after2.forall(_.getAs[Long]("vec_id") % 10 != 3),
       "a tombstoned vector leaked into the gen-2 SQ codes path")
     assert(after2 != before2, "deletion must visibly change the gen-2 SQ results")
     // the explicit-id composition sees the same tombstones
     import spark.implicits._
-    val idsAfter = AnnIndex.topKIdsSq(spark, dir,
-        (0L until 6L).toDF("vec_id"), k = 4, nProbe = 2, rerank = 12)
+    val idsAfter = AnnIndex.topK(spark, dir,
+        Ids((0L until 6L).toDF("vec_id")), Sq8(12), k = 4, nProbe = 2)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     assert(idsAfter == afterFlat,
       "explicit-id SQ probe must see the same tombstones as the prefix probe")
@@ -1125,69 +1131,70 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
 
   test("gen-2 PQ: pqcodes-only coarse-pruned candidate scan, full-rerank == exact probe, " +
       "appended clone served, codebook refreshes with requantize2") {
-    AnnIndex.ensureBuilt2(spark, sf)
+    AnnIndex.ensureBuilt(spark, sf, layout = TwoLevel)
     // exact rerank over ALL candidates in the probed cells must equal
     // the full-precision probe at the same dials — the PQ stage can
     // then only reorder below a cut that admits everything
-    val exact = AnnIndex.topK2(spark, sf, maxQueryId = 6, k = 4,
-        nProbeCoarse = 2, nProbeFine = 3)
+    val exact = AnnIndex.topK(spark, sf, Prefix(6), k = 4,
+        nProbe = 2, nProbeFine = 3, layout = TwoLevel)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
-    val pqWide = AnnIndex.topK2Pq(spark, sf, maxQueryId = 6, k = 4,
-        nProbeCoarse = 2, nProbeFine = 3, rerank = 1000000)
+    val pqWide = AnnIndex.topK(spark, sf, Prefix(6), Pq(1000000), k = 4,
+        nProbe = 2, nProbeFine = 3, layout = TwoLevel)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     assert(pqWide.nonEmpty && pqWide == exact,
       "at full rerank the gen-2 PQ probe must equal the exact gen-2 probe")
     // the sub-byte bound: candidate scan reads pqcodes — not vectors,
     // not the SQ8 codes — and stays coarse-bucket-pruned
-    val p = AnnIndex.topK2Pq(spark, sf, maxQueryId = 2, k = 4, rerank = 24)
+    val p = AnnIndex.topK(spark, sf, Prefix(2), Pq(24), k = 4, layout = TwoLevel)
       .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
     assert(p.contains("ReadSchema: struct<vec_id:bigint,nrm:double,ccell:int,fcell:int,pqcodes:"),
       s"gen-2 PQ candidate scan must read pqcodes, not vectors:\n$p")
     // append → probe → requantize2 cycle on a private corpus: codes
     // encode with the STORED codebook, the rebuild refreshes it
     val dir = tempCorpus("pq2-cycle")
-    AnnIndex.ensureBuilt2(spark, dir)
+    AnnIndex.ensureBuilt(spark, dir, layout = TwoLevel)
     val emb = Fixtures.embeddings(spark, dir)
-    val cb0 = AnnIndex.storedPqCodebook2(spark, dir)
+    val cb0 = AnnIndex.storedPqCodebook(spark, dir, layout = TwoLevel)
     assert(cb0.length == AnnIndex.PqKsub && cb0.head.length == AnnIndex.Dim)
     val clone = emb.filter(col("vec_id") === 0)
       .withColumn("vec_id", lit(424242L))
-    AnnIndex.appendBatch2(spark, dir, clone)
+    AnnIndex.appendBatch(spark, dir, clone, layout = TwoLevel)
     def cloneHit(): Boolean =
-      AnnIndex.topK2Pq(spark, dir, maxQueryId = 1, k = 3, rerank = 10)
+      AnnIndex.topK(spark, dir, Prefix(1), Pq(10), k = 3, layout = TwoLevel)
         .collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Double]("score")))
         .contains((424242L, 1.0))
     assert(cloneHit(), "an appended clone must be served by the gen-2 PQ probe")
-    AnnIndex.requantize2(spark, dir)
-    assert(AnnIndex.storedPqCodebook2(spark, dir).length == AnnIndex.PqKsub)
+    AnnIndex.requantize(spark, dir, layout = TwoLevel)
+    assert(AnnIndex.storedPqCodebook(spark, dir, layout = TwoLevel).length == AnnIndex.PqKsub)
     assert(cloneHit(), "the clone must survive the generation swap re-encode")
   }
 
   test("gen-2 PQ compositions: explicit ids == prefix on the same set, " +
       "tombstones filtered on the packed-codes path, residue-3 non-vacuous") {
     import spark.implicits._
-    AnnIndex.ensureBuilt2(spark, sf)
-    val prefix = AnnIndex.topK2Pq(spark, sf, maxQueryId = 5, k = 4, rerank = 24)
+    AnnIndex.ensureBuilt(spark, sf, layout = TwoLevel)
+    val prefix = AnnIndex.topK(spark, sf, Prefix(5), Pq(24), k = 4, layout = TwoLevel)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
-    val byIds = AnnIndex.topK2IdsPq(spark, sf, (0L until 5L).toDF("vec_id"),
-        k = 4, rerank = 24)
+    val byIds = AnnIndex.topK(spark, sf, Ids((0L until 5L).toDF("vec_id")), Pq(24),
+        k = 4, layout = TwoLevel)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     assert(byIds.nonEmpty && byIds == prefix,
       "topK2IdsPq over the prefix ids must equal the prefix gen-2 PQ probe")
-    assert(AnnIndex.topK2IdsPq(spark, sf, Seq(987654321L).toDF("vec_id"), k = 4).isEmpty)
+    assert(AnnIndex.topK(spark, sf, Ids(Seq(987654321L).toDF("vec_id")), Pq(24), k = 4,
+      layout = TwoLevel).isEmpty)
     // delete leg on a private corpus: residue 3 must intersect the
     // pre-delete top-k (the registry entry is non-vacuous) and never
     // leak back through the packed-codes path
     val dir = tempCorpus("pq2del")
-    AnnIndex.ensureBuilt2(spark, dir)
-    val before = AnnIndex.topK2Pq(spark, dir, maxQueryId = 6, k = 4, rerank = 24)
+    AnnIndex.ensureBuilt(spark, dir, layout = TwoLevel)
+    val before = AnnIndex.topK(spark, dir, Prefix(6), Pq(24), k = 4, layout = TwoLevel)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     assert(before.exists(_.getAs[Long]("vec_id") % 10 == 3),
       "sanity: residue 3 must appear in the pre-delete gen-2 PQ top-4")
-    AnnIndex.removeBatch2(spark, dir,
+    AnnIndex.removeBatch(spark, dir,
       Fixtures.embeddings(spark, dir).select(col("vec_id"))
-        .filter(col("vec_id") % 10 === 3))
-    val after = AnnIndex.topK2Pq(spark, dir, maxQueryId = 6, k = 4, rerank = 24)
+        .filter(col("vec_id") % 10 === 3), layout = TwoLevel)
+    val after = AnnIndex.topK(spark, dir, Prefix(6), Pq(24), k = 4, layout = TwoLevel)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     assert(after.nonEmpty && after.forall(_.getAs[Long]("vec_id") % 10 != 3),
       "a tombstoned vector leaked into the gen-2 packed-codes path")
@@ -1199,21 +1206,21 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     AnnIndex.ensureBuilt(spark, sf)
     val ids = (0L until 5L).toDF("vec_id")
-    val prefix = AnnIndex.topKIdxPq(spark, sf, maxQueryId = 5, k = 4,
-        nProbe = 2, rerank = 24)
+    val prefix = AnnIndex.topK(spark, sf, Prefix(5), Pq(24), k = 4,
+        nProbe = 2)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
-    val byIds = AnnIndex.topKIdsPq(spark, sf, ids, k = 4,
-        nProbe = 2, rerank = 24)
+    val byIds = AnnIndex.topK(spark, sf, Ids(ids), Pq(24), k = 4,
+        nProbe = 2)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     assert(byIds.nonEmpty && byIds == prefix,
       "topKIdsPq over the prefix ids must equal the prefix PQ probe")
     // the sub-byte bound survives the composition: the candidate scan
     // reads pqcodes — not the vectors, not the SQ8 codes
-    val p = AnnIndex.topKIdsPq(spark, sf, ids, k = 4, nProbe = 2, rerank = 24)
+    val p = AnnIndex.topK(spark, sf, Ids(ids), Pq(24), k = 4, nProbe = 2)
       .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
     assert(p.contains("ReadSchema: struct<vec_id:bigint,nrm:double,cell:int,pqcodes:"),
       "explicit-id PQ candidate scan must read pqcodes, not vectors")
-    assert(AnnIndex.topKIdsPq(spark, sf, Seq(987654321L).toDF("vec_id"), k = 4).isEmpty)
+    assert(AnnIndex.topK(spark, sf, Ids(Seq(987654321L).toDF("vec_id")), Pq(30), k = 4).isEmpty)
   }
 
   test("PQ probe after a real delete: tombstones filtered on the pqcodes path, " +
@@ -1221,23 +1228,23 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     val dir = tempCorpus("pqdel")
     AnnIndex.ensureBuilt(spark, dir)
     val emb = Fixtures.embeddings(spark, dir)
-    val before = AnnIndex.topKIdxPq(spark, dir, maxQueryId = 6, k = 4,
-        nProbe = 2, rerank = 24)
+    val before = AnnIndex.topK(spark, dir, Prefix(6), Pq(24), k = 4,
+        nProbe = 2)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     assert(before.exists(_.getAs[Long]("vec_id") % 10 == 7),
       "sanity: residue 7 must appear in the pre-delete PQ top-4")
     AnnIndex.removeBatch(spark, dir,
       emb.select(col("vec_id")).filter(col("vec_id") % 10 === 7))
-    val after = AnnIndex.topKIdxPq(spark, dir, maxQueryId = 6, k = 4,
-        nProbe = 2, rerank = 24)
+    val after = AnnIndex.topK(spark, dir, Prefix(6), Pq(24), k = 4,
+        nProbe = 2)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     assert(after.nonEmpty && after.forall(_.getAs[Long]("vec_id") % 10 != 7),
       "a tombstoned vector leaked into the pqcodes path")
     assert(after != before, "deletion must visibly change the PQ results")
     // the explicit-id composition sees the same tombstones
     import spark.implicits._
-    val idsAfter = AnnIndex.topKIdsPq(spark, dir,
-        (0L until 6L).toDF("vec_id"), k = 4, nProbe = 2, rerank = 24)
+    val idsAfter = AnnIndex.topK(spark, dir,
+        Ids((0L until 6L).toDF("vec_id")), Pq(24), k = 4, nProbe = 2)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     assert(idsAfter == after,
       "explicit-id PQ probe must see the same tombstones as the prefix probe")
@@ -1248,9 +1255,9 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     val dir = tempCorpus("ledmig")
     AnnIndex.ensureBuilt(spark, dir, tag = "mig")
-    val ledger = AnnIndex.deleteLedgerTableFor(dir, "mig")
+    val ledger = Flat.tables(dir, "mig").ledger
     // plant an OLD-shape ledger (the pre-read-back schema: vec_id only)
-    val before = AnnIndex.topK(spark, dir, maxQueryId = 6, k = 4, tag = "mig")
+    val before = AnnIndex.topK(spark, dir, Prefix(6), k = 4, tag = "mig")
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     val oldVictims = before.map(_.getAs[Long]("vec_id")).distinct.take(2)
     oldVictims.toDF("vec_id")
@@ -1266,12 +1273,12 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
       s"migrated rows must carry batch 0: $led")
     assert(freshVictims.forall(v => led.contains((v, 1L))),
       s"the fresh batch must be read back as batch 1: $led")
-    val after = AnnIndex.topK(spark, dir, maxQueryId = 6, k = 4, tag = "mig")
+    val after = AnnIndex.topK(spark, dir, Prefix(6), k = 4, tag = "mig")
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     assert(after.forall(r => !freshVictims.contains(r.getAs[Long]("vec_id"))))
     // replay applies the migrated batch-0 rows too and converges
     AnnIndex.replayDeleteLedger(spark, dir, "mig")
-    val replayed = AnnIndex.topK(spark, dir, maxQueryId = 6, k = 4, tag = "mig")
+    val replayed = AnnIndex.topK(spark, dir, Prefix(6), k = 4, tag = "mig")
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     assert(replayed.forall(r =>
       !(oldVictims ++ freshVictims).contains(r.getAs[Long]("vec_id"))))
@@ -1280,24 +1287,24 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
   test("gen-2 ledger: retireBatch2 records then retires, replay idempotent, stranded batch applied") {
     import spark.implicits._
     val dir = tempCorpus("ledger2")
-    AnnIndex.ensureBuilt2(spark, dir, tag = "led2")
-    def probe() = AnnIndex.topK2(spark, dir, maxQueryId = 6, k = 4, tag = "led2")
+    AnnIndex.ensureBuilt(spark, dir, tag = "led2", layout = TwoLevel)
+    def probe() = AnnIndex.topK(spark, dir, Prefix(6), k = 4, tag = "led2", layout = TwoLevel)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     val before = probe()
     val victims = before.map(_.getAs[Long]("vec_id")).distinct.take(3)
-    AnnIndex.retireBatch2(spark, dir, victims.toDF("vec_id"), tag = "led2")
+    AnnIndex.retireBatch(spark, dir, victims.toDF("vec_id"), tag = "led2", layout = TwoLevel)
     val after1 = probe()
     assert(after1 != before && after1.forall(r =>
       !victims.contains(r.getAs[Long]("vec_id"))))
-    AnnIndex.replayDeleteLedger2(spark, dir, "led2")
+    AnnIndex.replayDeleteLedger(spark, dir, "led2", layout = TwoLevel)
     assert(probe() == after1, "gen-2 ledger replay must be idempotent")
     // stranded second batch (crash before removeBatch2) applied on replay
-    val ledger = AnnIndex.deleteLedger2TableFor(dir, "led2")
+    val ledger = TwoLevel.tables(dir, "led2").ledger
     val victims2 = after1.map(_.getAs[Long]("vec_id")).distinct.take(2)
     victims2.map((_, 99L)).toDF("vec_id", "batch")
       .write.mode("append").format("parquet").saveAsTable(ledger)
     assert(probe() == after1)
-    AnnIndex.replayDeleteLedger2(spark, dir, "led2")
+    AnnIndex.replayDeleteLedger(spark, dir, "led2", layout = TwoLevel)
     assert(probe().forall(r =>
       !(victims ++ victims2).contains(r.getAs[Long]("vec_id"))))
   }
@@ -1308,7 +1315,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     val emb = Fixtures.embeddings(spark, dir)
     AnnIndex.removeBatch(spark, dir,
       emb.select(col("vec_id")).filter(col("vec_id") % 10 === 7))
-    val ts = AnnIndex.tombstoneTableFor(dir)
+    val ts = Flat.tables(dir).tombstones
     val loc = new java.io.File(
       new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath, ts)
     val before = loc.listFiles().map(f => f.getName -> f.lastModified()).toMap
@@ -1352,8 +1359,8 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     def hits(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("vec_id"))).toSet
     val brute = hits(Similarity.topK(emb, maxQueryId = 3, k = 5))
-    val full = hits(AnnIndex.topKIdxPq(spark, dir, maxQueryId = 3, k = 5,
-      nProbe = kc, rerank = n, tag = "cb-learned"))
+    val full = hits(AnnIndex.topK(spark, dir, Prefix(3), Pq(n), k = 5,
+      nProbe = kc, tag = "cb-learned"))
     assert(full == brute,
       "learned-book full probe + full rerank must equal brute force")
     // the flag carries through the rebuild: a learned generation
@@ -1367,9 +1374,9 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
   test("gen-2 learnedPq build flag: the stored gen-2 codebook == the inline Lloyd fit") {
     val dir = tempCorpus("learned2")
     val emb = Fixtures.embeddings(spark, dir)
-    AnnIndex.ensureBuilt2(spark, dir, tag = "cb2", learnedPq = true)
+    AnnIndex.ensureBuilt(spark, dir, tag = "cb2", learnedPq = true, layout = TwoLevel)
     val learned = Similarity.learnedPqCodebook(emb)
-    val stored = AnnIndex.storedPqCodebook2(spark, dir, tag = "cb2")
+    val stored = AnnIndex.storedPqCodebook(spark, dir, tag = "cb2", layout = TwoLevel)
     assert(stored.map(_.toSeq).toSeq == learned.map(_.toSeq).toSeq,
       "gen-2 learnedPq build must store exactly the inline Lloyd fit")
   }
@@ -1379,8 +1386,8 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     val dir = tempCorpus("ledheal")
     AnnIndex.ensureBuilt(spark, dir, tag = "heal")
-    val ledger = AnnIndex.deleteLedgerTableFor(dir, "heal")
-    val before = AnnIndex.topK(spark, dir, maxQueryId = 6, k = 4, tag = "heal")
+    val ledger = Flat.tables(dir, "heal").ledger
+    val before = AnnIndex.topK(spark, dir, Prefix(6), k = 4, tag = "heal")
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     val oldVictims = before.map(_.getAs[Long]("vec_id")).distinct.take(2)
     // simulate the EXACT mid-swap crash state the old DROP-then-RENAME
@@ -1406,7 +1413,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
       "the heal must clear both swap-protocol side tables")
     // replay applies the healed batch-0 rows
     AnnIndex.replayDeleteLedger(spark, dir, "heal")
-    val after = AnnIndex.topK(spark, dir, maxQueryId = 6, k = 4, tag = "heal")
+    val after = AnnIndex.topK(spark, dir, Prefix(6), k = 4, tag = "heal")
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     assert(after.forall(r =>
       !(oldVictims ++ freshVictims).contains(r.getAs[Long]("vec_id"))))
@@ -1448,5 +1455,60 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     assert(AnnIndex.ensureBuilt(spark, sf) == t)
     val after = loc.listFiles().map(f => f.getName -> f.lastModified()).toMap
     assert(after == before, "second ensureBuilt must not rewrite the table")
+  }
+
+  private val Marker = "ann-probe-jobs-marker"
+
+  private final class JobCounter extends SparkListener {
+    val jobs = new AtomicInteger()
+    val markers = new AtomicInteger()
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == Marker))
+        markers.incrementAndGet()
+      else jobs.incrementAndGet()
+  }
+
+  /** Run a marker job and wait until the listener has seen it. The bus
+    * delivers events in order, so every job submitted before the marker
+    * has been counted by then. Returns the count so far. */
+  private def settle(c: JobCounter): Int = {
+    val want = c.markers.get() + 1
+    val sc = spark.sparkContext
+    sc.setJobGroup(Marker, "flush the listener bus")
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (c.markers.get() < want) {
+      assert(System.nanoTime() < deadline, "the listener never saw the marker job")
+      Thread.sleep(10)
+    }
+    c.jobs.get()
+  }
+
+  /** Pins the driver round-trips of a warm stored probe. For each
+    * (layout, codec) pair, the Spark jobs one probe runs — building the
+    * frame (the distinct probed-cell collect) plus collecting its
+    * result — must stay at or below the counts the per-variant probes
+    * ran before they were folded into [[AnnIndex.topK]]. A probe that
+    * starts re-reading a cached artifact, or gains a collect or catalog
+    * job, fails here. */
+  test("a warm stored probe runs no more Spark jobs than the per-variant probes did") {
+    // measured on a 4-core local[4] session with the same probe
+    // parameters, one warm-up probe first
+    val ceilings = Seq(
+      (Flat, Exact, 7), (Flat, Sq8(12), 9), (Flat, Pq(24), 9),
+      (TwoLevel, Exact, 9), (TwoLevel, Sq8(10), 11), (TwoLevel, Pq(24), 11))
+    val c = new JobCounter
+    spark.sparkContext.addSparkListener(c)
+    try ceilings.foreach { case (layout, codec, ceiling) =>
+      AnnIndex.ensureBuilt(spark, sf, tag = "jobs", layout = layout)
+      def probe() = AnnIndex.topK(spark, sf, Prefix(5), codec, k = 4, nProbe = 2,
+        nProbeFine = 3, tag = "jobs", layout = layout).collect()
+      probe() // warm: artifact cache and relation listings
+      val before = settle(c)
+      assert(probe().nonEmpty)
+      val jobs = settle(c) - before
+      info(s"$layout × $codec: $jobs jobs (ceiling $ceiling)")
+      assert(jobs <= ceiling, s"$layout × $codec: a warm probe ran $jobs jobs, ceiling $ceiling")
+    } finally spark.sparkContext.removeSparkListener(c)
   }
 }

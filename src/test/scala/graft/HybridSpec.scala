@@ -29,7 +29,7 @@ class HybridSpec extends AnyFunSuite with SparkSpec {
       .orderBy(col("score_x1000").desc, col("doc_id")).collect()
       .map(_.getAs[Long]("doc_id")).zipWithIndex
       .map { case (d, i) => d -> (i + 1L) }.toMap
-    val sem = AnnIndex.topKIds(spark, sf, Seq(2L).toDF("vec_id"), k = topN, nProbe = 2)
+    val sem = AnnIndex.topK(spark, sf, AnnIndex.Ids(Seq(2L).toDF("vec_id")), k = topN, nProbe = 2)
       .orderBy(col("rn")).collect()
       .map(r => r.getAs[Long]("vec_id") -> r.getAs[Int]("rn").toLong).toMap
     val expected = (kw.keySet ++ sem.keySet).toSeq

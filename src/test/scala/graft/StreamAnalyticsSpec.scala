@@ -208,20 +208,20 @@ class StreamAnalyticsSpec extends AnyFunSuite with SparkSpec {
       // below is non-vacuous by construction
       val allIds = graft.tables.Fixtures.embeddings(spark, sfDir).select(col("vec_id"))
       val servers = graft.ops.AnnIndex
-        .topKIds(spark, sfDir, allIds, k = 12, nProbe = 6, tag = "feed")
+        .topK(spark, sfDir, graft.ops.AnnIndex.Ids(allIds), k = 12, nProbe = 6, tag = "feed")
         .filter(col("vec_id") === 2L).select(col("q_id").as("vec_id"))
         .limit(4).collect().map(_.getLong(0)).toSeq
       assert(servers.nonEmpty,
         "fixture sanity: some query must serve the loser BEFORE the retire")
       val queryIds = servers.toDF("vec_id")
       def probe() = graft.ops.AnnIndex
-        .topKIds(spark, sfDir, queryIds, k = 12, nProbe = 6, tag = "feed")
+        .topK(spark, sfDir, graft.ops.AnnIndex.Ids(queryIds), k = 12, nProbe = 6, tag = "feed")
         .collect().map(_.getAs[Long]("vec_id")).toSet
       assert(probe().contains(2L))
       graft.ops.AnnIndex.retireBatch(spark, sfDir, losers, tag = "feed")
       assert(!probe().contains(2L),
         "the stream's loser must be absent from the post-retire probe")
-      assert(spark.table(graft.ops.AnnIndex.deleteLedgerTableFor(sfDir, "feed"))
+      assert(spark.table(graft.ops.AnnIndex.Flat.tables(sfDir, "feed").ledger)
         .select(col("vec_id")).collect().map(_.getLong(0)).toSeq == Seq(2L),
         "the loser must be durably ledgered exactly once")
     } finally { qRaw.stop(); qDeduped.stop() }
