@@ -151,15 +151,19 @@ object EvmApi {
       l <- store.read("logs")
     } yield new EvmApi(b, t, l, Some(cache))
 
-  /** The live-serving provider for [[RestServer]]: a FRESH facade per
-    * request (fresh parquet listing, so appends and rollback rewrites
-    * are visible — a fixed DataFrame freezes its file index at
-    * construction) sharing ONE version-aware lookup memo across
-    * requests. Without the shared memo, per-request facades would
-    * each allocate a cold cache and the repeat-lookup win would
-    * never materialize. Throws if the store has no tables yet —
-    * serve after the first committed batch, like the reference's API
-    * server over an initialized schema. */
+  /** The live-serving provider for [[RestServer]]: a facade per
+    * request over the store's current frames, sharing ONE
+    * version-aware lookup memo across requests. A resolved frame
+    * freezes its file index, so the frames come from
+    * [[graft.ingest.ChainStore.read]]: in the writer process it hands
+    * back the frames it already resolved until any append, rollback or
+    * compaction changes the files, and a reader-only process re-lists
+    * on every request. Either way appends and rollback rewrites are
+    * visible on the next request. Without the shared memo,
+    * per-request facades would each allocate a cold cache and the
+    * repeat-lookup win would never materialize. Throws if the store
+    * has no tables yet — serve after the first committed batch, like
+    * the reference's API server over an initialized schema. */
   def providerOnStore(store: graft.ingest.ChainStore,
                       cache: LookupCache): () => EvmApi =
     () => onStoreWith(store, cache).getOrElse(

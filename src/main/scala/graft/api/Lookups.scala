@@ -7,9 +7,12 @@ import org.apache.spark.sql.functions._
   * (`GET /block/{id}` `src/api.rs:284-303`, `GET /transaction/{hash}`
   * `src/api.rs:338-357`, `GET /stats` `src/api.rs:242-267`).
   *
-  * All lookups are `filter(key === v)` on a pruned scan — the filter
-  * is pushed to parquet (row-group min/max on block_number; dictionary
-  * / bloom on hashes), never a collect-then-search.
+  * All lookups are `filter(key === v)` on a scan, never a
+  * collect-then-search. A height filter is pushed to parquet and
+  * prunes bucket directories and row groups (min/max on
+  * block_number). A hash lookup compares `lower(hash)`, which Spark
+  * does not push to parquet, so it reads every row group of the table
+  * and the key's bloom filter is not consulted.
   */
 object Lookups {
 

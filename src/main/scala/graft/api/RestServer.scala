@@ -48,12 +48,15 @@ import org.apache.spark.sql.Row
   * The facade is a provider, re-invoked per request: the reference
   * queries Postgres per request and so always sees the latest ingested
   * rows, while a fixed DataFrame freezes its parquet file listing at
-  * construction. A provider that re-reads (use
+  * construction. A provider over the store (use
   * [[EvmApi.providerOnStore]], which shares ONE lookup memo across
   * the per-request facades) serves live data while a
   * [[graft.ingest.StreamingIngester]] appends — the reference's
-  * API-server + indexer-loop composition (`src/main.rs:83-90`). For a
-  * static source, pass the fixed-facade constructor.
+  * API-server + indexer-loop composition (`src/main.rs:83-90`). In the
+  * writer process the store reuses its resolved frames until an
+  * append, rollback or compaction changes the files; a reader-only
+  * process re-lists the store on every request. For a static source,
+  * pass the fixed-facade constructor.
   */
 final class RestServer(apiProvider: () => EvmApi, port: Int, nThreads: Int) {
 

@@ -1,5 +1,6 @@
 package graft.ingest
 
+import java.util.concurrent.atomic.AtomicLong
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -262,6 +263,22 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
 
   def exists(table: String): Boolean = fs.exists(new Path(tablePath(table)))
 
+  /** Resolved frames per table, each stamped with the [[fileSet]]
+    * version read before it was resolved. */
+  private val frames = new java.util.concurrent.ConcurrentHashMap[String, (Long, DataFrame)]()
+  private val fileSet = ChainStore.fileSetFor(rootKey)
+
+  /** Bump the root's file-set version on entry and on exit of `f`, the
+    * same pattern as [[mutationCount]]: a frame resolved before or
+    * during `f` carries a stamp older than the settled version. This
+    * store's own frames are dropped at once rather than held until the
+    * next read replaces them. */
+  private def changingFiles[T](f: => T): T = {
+    fileSet.incrementAndGet(): Unit
+    frames.clear()
+    try f finally fileSet.incrementAndGet(): Unit
+  }
+
   /** Read a table. The physical `bucket` partition column stays in the
     * frame, stamped with [[graft.plans.BucketPruneRule]] metadata
     * recording the layout invariant (`bucket = block_number div
@@ -269,13 +286,28 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
     * the partition-directory level, not just row-group min/max — a
     * point lookup over a 100 TB chain touches one bucket directory
     * instead of listing them all. Consumers that project it away lose
-    * nothing (the column prunes out of the scan). */
+    * nothing (the column prunes out of the scan).
+    *
+    * Re-read contract: resolving a frame lists the bucket directories
+    * (a Spark job past 32 of them) and reads a parquet footer for the
+    * schema (another job), and its file index stays frozen after that.
+    * While this store holds the writer lock, every change to the
+    * root's files in this JVM ([[append]], [[rollback]], compaction,
+    * by any store object over the root) bumps one shared version, so
+    * the resolved frame is returned until that version moves. A store
+    * without the lock has no signal from a foreign writer and
+    * resolves afresh on every call. */
   def read(table: String): Option[DataFrame] =
     if (exists(table)) {
       ensureRecovered(table)
-      val meta = graft.plans.BucketPruneRule.bucketMetadata("block_number", bucketSize)
-      Some(spark.read.parquet(tablePath(table))
-        .withColumn("bucket", col("bucket").as("bucket", meta)))
+      val v = fileSet.get()
+      Option(frames.get(table)).filter(f => lockHeld && f._1 == v).map(_._2).orElse {
+        val meta = graft.plans.BucketPruneRule.bucketMetadata("block_number", bucketSize)
+        val df = spark.read.parquet(tablePath(table))
+          .withColumn("bucket", col("bucket").as("bucket", meta))
+        if (lockHeld) frames.put(table, (v, df))
+        Some(df)
+      }
     } else None
 
   private def withBucket(df: DataFrame): DataFrame =
@@ -313,12 +345,12 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
     * readers see no signal (the counter is this JVM's) and must serve
     * uncached. */
   def mutationCount: Long = mutations.get()
-  private val mutations = new java.util.concurrent.atomic.AtomicLong()
+  private val mutations = new AtomicLong()
 
   def append(blocks: DataFrame, transactions: DataFrame, logs: DataFrame): Unit = {
     ensureWriteLock()
     mutations.incrementAndGet(): Unit
-    try appendImpl(blocks, transactions, logs)
+    try changingFiles(appendImpl(blocks, transactions, logs))
     finally mutations.incrementAndGet(): Unit
   }
 
@@ -349,8 +381,9 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
       withBucket(fresh)
         .sortWithinPartitions(col("block_number"), col(key))
         .write.mode(SaveMode.Append)
-        // bloom filter on the idempotency/lookup key: the anti-join and
-        // point lookups (Q-13/Q-14) skip row groups without the key
+        // bloom filter on the idempotency/lookup key, for readers that
+        // push an equality on the raw key; the anti-join and the
+        // `lower(hash)` point lookups (Q-13/Q-14) never consult it
         .option(s"parquet.bloom.filter.enabled#$key", "true")
         .partitionBy("bucket").parquet(tablePath(t))
     }
@@ -361,7 +394,7 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
   def rollback(forkHeight: Long): Unit = {
     ensureWriteLock()
     mutations.incrementAndGet(): Unit
-    try rollbackImpl(forkHeight)
+    try changingFiles(rollbackImpl(forkHeight))
     finally mutations.incrementAndGet(): Unit
   }
 
@@ -418,7 +451,8 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
 
   private def compactBuckets(table: String, only: Option[Set[Long]]): Unit = {
     ensureWriteLock()
-    if (exists(table) && !only.exists(_.isEmpty)) {
+    // a frame resolved before the swap lists files the swap deletes
+    if (exists(table) && !only.exists(_.isEmpty)) changingFiles {
       val key = keyOf(table)
       ensureRecovered(table)
       val dir = new Path(tablePath(table))
@@ -516,6 +550,14 @@ object ChainStore {
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private[ingest] def monitorFor(rootKey: String): Object =
     rootMonitors.computeIfAbsent(rootKey, _ => new Object)
+
+  /** Process-wide per-root file-set version, keyed like [[monitorFor]]:
+    * a mutation through any store object over the root invalidates the
+    * frames every sibling object has resolved. */
+  private val fileSets =
+    new java.util.concurrent.ConcurrentHashMap[String, AtomicLong]()
+  private[ingest] def fileSetFor(rootKey: String): AtomicLong =
+    fileSets.computeIfAbsent(rootKey, _ => new AtomicLong())
 
   /** One lock-release hook per root per JVM, via Hadoop's shutdown
     * manager at a priority ABOVE the FileSystem cache close (plain

@@ -1,7 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{AnnIndex, Similarity}
@@ -1457,33 +1455,6 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     assert(after == before, "second ensureBuilt must not rewrite the table")
   }
 
-  private val Marker = "ann-probe-jobs-marker"
-
-  private final class JobCounter extends SparkListener {
-    val jobs = new AtomicInteger()
-    val markers = new AtomicInteger()
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == Marker))
-        markers.incrementAndGet()
-      else jobs.incrementAndGet()
-  }
-
-  /** Run a marker job and wait until the listener has seen it. The bus
-    * delivers events in order, so every job submitted before the marker
-    * has been counted by then. Returns the count so far. */
-  private def settle(c: JobCounter): Int = {
-    val want = c.markers.get() + 1
-    val sc = spark.sparkContext
-    sc.setJobGroup(Marker, "flush the listener bus")
-    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-    val deadline = System.nanoTime() + 30L * 1000000000L
-    while (c.markers.get() < want) {
-      assert(System.nanoTime() < deadline, "the listener never saw the marker job")
-      Thread.sleep(10)
-    }
-    c.jobs.get()
-  }
-
   /** Pins the driver round-trips of a warm stored probe. For each
     * (layout, codec) pair, the Spark jobs one probe runs — building the
     * frame (the distinct probed-cell collect) plus collecting its
@@ -1497,16 +1468,16 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     val ceilings = Seq(
       (Flat, Exact, 7), (Flat, Sq8(12), 9), (Flat, Pq(24), 9),
       (TwoLevel, Exact, 9), (TwoLevel, Sq8(10), 11), (TwoLevel, Pq(24), 11))
-    val c = new JobCounter
+    val c = new JobCounter(spark)
     spark.sparkContext.addSparkListener(c)
     try ceilings.foreach { case (layout, codec, ceiling) =>
       AnnIndex.ensureBuilt(spark, sf, tag = "jobs", layout = layout)
       def probe() = AnnIndex.topK(spark, sf, Prefix(5), codec, k = 4, nProbe = 2,
         nProbeFine = 3, tag = "jobs", layout = layout).collect()
       probe() // warm: artifact cache and relation listings
-      val before = settle(c)
+      val before = c.settle()
       assert(probe().nonEmpty)
-      val jobs = settle(c) - before
+      val jobs = c.settle() - before
       info(s"$layout × $codec: $jobs jobs (ceiling $ceiling)")
       assert(jobs <= ceiling, s"$layout × $codec: a warm probe ran $jobs jobs, ceiling $ceiling")
     } finally spark.sparkContext.removeSparkListener(c)

@@ -2,7 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ingest.{ChainStore, SimChain, StreamingIngester}
+import org.apache.spark.sql.functions.col
+import graft.ingest.{ChainStore, Ingest, SimChain, StreamingIngester}
 
 /** Pins the single-writer contract of [[graft.ingest.ChainStore]]:
   * bucket swaps and recovery sweeps are crash-safe for one writer
@@ -78,5 +79,36 @@ class ChainStoreLockSpec extends AnyFunSuite with SparkSpec {
     val restarted = new ChainStore(spark, root, 10)
     StreamingIngester.processBatch(restarted, SimChain.canonical(8).toDF())
     assert(restarted.read("blocks").get.count() == 8)
+  }
+
+  test("sibling stores over one root: a read sees the other object's append") {
+    val root = newRoot()
+    val a = new ChainStore(spark, root, 2)
+    StreamingIngester.processBatch(a, SimChain.canonical(5).toDF())
+    assert(a.read("blocks").get.count() == 5) // a holds the lock: this frame is reused
+    val b = new ChainStore(spark, root, 2) // adopts the process lock
+    StreamingIngester.processBatch(b, SimChain.canonical(8).toDF())
+    assert(a.read("blocks").get.count() == 8, "a must not reuse a frame from before b's append")
+  }
+
+  test("a reader-only store sees a foreign writer's new file on its very next read") {
+    val root = newRoot()
+    val writer = new ChainStore(spark, root, 2)
+    StreamingIngester.processBatch(writer, SimChain.canonical(5).toDF())
+    writer.close()
+    Files.write(Paths.get(root, "_writer.lock"), "pid1@other:feed".getBytes("UTF-8"))
+
+    val reader = new ChainStore(spark, root, 2)
+    assert(reader.read("blocks").get.count() == 5)
+    // the foreign writer drops block 5 as a new file into bucket=2,
+    // which already holds block 4
+    val (blocks, _, _) = Ingest.flatten(SimChain.canonical(6).toDF())
+    val staged = Files.createTempDirectory("foreign-file")
+    blocks.filter(col("block_number") === 5).coalesce(1)
+      .write.mode("overwrite").parquet(staged.toString)
+    val part = Files.list(staged).filter(_.toString.endsWith(".parquet")).findFirst().get()
+    Files.move(part, Paths.get(root, "blocks", "bucket=2", "part-foreign.parquet"))
+    val heights = reader.read("blocks").get.select("block_number").collect().map(_.getLong(0))
+    assert(heights.sorted.toSeq == (0L to 5L), "the reader must re-list, not reuse a frame")
   }
 }

@@ -192,4 +192,24 @@ class EvmApiSpec extends AnyFunSuite with SparkSpec {
     assert(page.logs.map(_.getAs[Long]("id")).toSeq ==
       page.logs.map(_.getAs[Long]("id")).toSeq.sorted)
   }
+
+  test("a warm provider call over an unchanged store runs zero Spark jobs; an append is seen next call") {
+    import spark.implicits._
+    val store = new ChainStore(spark, Files.createTempDirectory("apiwarm").toString, 10)
+    StreamingIngester.processBatch(store, SimChain.canonical(12).toDF())
+    val p = EvmApi.providerOnStore(store)
+    assert(p().stats().blocksCount == 12) // resolves the three frames
+    val c = new JobCounter(spark)
+    spark.sparkContext.addSparkListener(c)
+    try {
+      val before = c.settle()
+      p()
+      val jobs = c.settle() - before
+      assert(jobs == 0, s"a warm provider call ran $jobs Spark jobs (listing or schema reads)")
+    } finally spark.sparkContext.removeSparkListener(c)
+    StreamingIngester.processBatch(store, SimChain.canonical(15).toDF())
+    val api = p()
+    assert(api.stats().blocksCount == 15, "the next call must see the appended rows")
+    assert(api.block("14").map(_.blockHash).contains(SimChain.blockOn(14, None).block_hash))
+  }
 }

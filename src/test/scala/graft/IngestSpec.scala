@@ -138,6 +138,29 @@ class IngestSpec extends AnyFunSuite with SparkSpec {
     assert(store.hashAt(13).contains(chain(13).block_hash))
   }
 
+  test("compaction and rollback invalidate the frames a writer's read reuses") {
+    val (store, _) = freshStore(bucketSize = 10)
+    val chain = SimChain.canonical(20)
+    // three appends: buckets 0 and 1 each hold two files
+    Seq(chain.take(5), chain.slice(5, 15), chain.slice(15, 20))
+      .foreach(b => StreamingIngester.processBatch(store, envelopes(b)))
+    def rows(t: String) = store.read(t).get.drop("bucket").collect().toSeq.sortBy(_.toString)
+    val before = store.Tables.map(t => t -> rows(t)).toMap
+    assert(store.read("blocks").get.count() == 20)
+    // the swaps delete every file the frames above were resolved over
+    store.Tables.foreach(store.compact)
+    store.Tables.foreach { t =>
+      assert(store.read(t).get.count() == before(t).size, s"$t count after compact")
+      assert(rows(t) == before(t), s"$t rows after compact")
+    }
+    store.rollback(13)
+    store.Tables.foreach { t =>
+      val heights = store.read(t).get.select("block_number").collect().map(_.getLong(0))
+      assert(heights.forall(_ < 13), s"$t after rollback(13)")
+      assert(heights.length == before(t).count(_.getAs[Long]("block_number") < 13), s"$t rows kept")
+    }
+  }
+
   test("compact visits only buckets touched since the last compaction (O(touched), not O(chain))") {
     import org.apache.hadoop.fs.Path
     val (store, root) = freshStore(bucketSize = 2)
