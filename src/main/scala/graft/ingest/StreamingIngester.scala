@@ -47,11 +47,15 @@ object StreamingIngester {
   }
 
   private def processCached(store: ChainStore, batch: DataFrame): Unit = {
-    if (!batch.isEmpty) {
-      val incoming = batch
-        .select(col("block_number"), col("block_hash"), col("parent_hash"))
-        .orderBy(col("block_number")).collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+    // the header collect is the batch's first action, so its job runs
+    // the source's partitions; emptiness is read off its result (an
+    // isEmpty job first would fetch the first partition on its own,
+    // one more serial fetch per cycle)
+    val incoming = batch
+      .select(col("block_number"), col("block_hash"), col("parent_hash"))
+      .orderBy(col("block_number")).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+    if (incoming.nonEmpty) {
       val lo = incoming.head._1
       val hi0 = incoming.last._1
       // only heights inside the batch's own range matter for fork

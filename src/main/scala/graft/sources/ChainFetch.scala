@@ -1,6 +1,7 @@
 package graft.sources
 
-import java.util.concurrent.{Callable, Executors, TimeUnit}
+import java.util.concurrent.{Callable, ExecutionException, Executors, ThreadFactory}
+import java.util.concurrent.atomic.AtomicLong
 import graft.ingest.SimChain
 
 /** The chain-fetch seam: the three RPC operations the reference's
@@ -15,10 +16,11 @@ import graft.ingest.SimChain
   * itself holds live resources (HTTP connections, caches) and never
   * crosses the driver/executor boundary.
   *
-  * Implementations must tolerate concurrent [[ChainFetcher.transactionReceipt]]
-  * calls: [[ChainFetch.envelope]] fans receipts out across a bounded
-  * thread pool (the reference's `buffer_unordered(10)`,
-  * `src/main.rs:204-227`).
+  * Implementations must tolerate concurrent calls of every method: a
+  * partition reader shares one fetcher across its [[FetchPool]], which
+  * fetches the partition's blocks, then their receipts, up to
+  * `receiptConcurrency` at a time (the reference's
+  * `buffer_unordered(10)`, `src/main.rs:204-227`).
   */
 trait ChainFetcher extends AutoCloseable {
   /** I-2: highest block the node currently has (`eth_blockNumber`). */
@@ -86,6 +88,47 @@ case class WireRangeLog(blockNumber: Long, blockHash: String, txHash: String,
                         topics: Seq[String], data: String,
                         removed: Boolean = false)
 
+/** The I/O threads of one partition reader: a fixed pool of
+  * `threads` named daemon threads (at least one), so a partition never
+  * has more than `threads` RPC calls in flight however many blocks it
+  * holds — the reference's `buffer_unordered(MAX_RECEIPT_CONCURRENT)`
+  * bound (`src/main.rs:26,204-227`), applied to the whole partition.
+  * The reader's thread submits one flat phase at a time and waits for
+  * it; a pool task never submits to the pool, so no task waits on
+  * another. */
+final class FetchPool(threads: Int) extends AutoCloseable {
+  private val exec = Executors.newFixedThreadPool(math.max(1, threads), FetchPool.daemons)
+
+  /** `f` over `xs` on the pool; results in the order of `xs`. The
+    * first failure — or an interrupt of the waiting thread, which is
+    * how Spark cancels a task — cancels the calls still queued or
+    * running and is rethrown. */
+  def map[A, B](xs: Seq[A])(f: A => B): Seq[B] = {
+    val futures = xs.toVector.map(x => exec.submit(new Callable[B] { def call(): B = f(x) }))
+    try futures.map(fu => try fu.get() catch { case e: ExecutionException => throw e.getCause })
+    catch { case e: Throwable => futures.foreach(_.cancel(true)); throw e }
+  }
+
+  /** Interrupts the calls still running; idle threads exit at once. */
+  override def close(): Unit = exec.shutdownNow(): Unit
+}
+
+object FetchPool {
+  /** The name prefix of every fetch thread. */
+  val ThreadPrefix = "graft-chain-fetch-"
+  private val ids = new AtomicLong()
+  private val daemons: ThreadFactory = r => {
+    val t = new Thread(r, ThreadPrefix + ids.incrementAndGet())
+    t.setDaemon(true)
+    t
+  }
+
+  def using[T](threads: Int)(body: FetchPool => T): T = {
+    val pool = new FetchPool(threads)
+    try body(pool) finally pool.close()
+  }
+}
+
 object ChainFetch {
 
   /** The reference's retry policy (3 attempts, exponential backoff —
@@ -116,47 +159,48 @@ object ChainFetch {
     out.get
   }
 
-  /** Fetch one block's full envelope: block+txs, then receipts fanned
-    * out over at most `receiptConcurrency` threads (the reference's
-    * `MAX_RECEIPT_CONCURRENT = 10` `buffer_unordered`,
-    * `src/main.rs:26,204-227`). A receipt that still fails after all
+  /** One block's envelope: [[envelopes]] for the single height `n`,
+    * over a pool of its own for this call. For callers outside a
+    * partition reader; a reader fetches its whole run through the one
+    * pool it holds. */
+  def envelope(fetcher: ChainFetcher, n: Long, maxRetries: Int,
+               baseBackoffMs: Long, receiptConcurrency: Int): Option[SimChain.SimBlock] =
+    FetchPool.using(receiptConcurrency)(
+      envelopes(_, fetcher, n, n, maxRetries, baseBackoffMs)).headOption
+
+  /** The N+1 path over the heights `[from, toIncl]`: envelopes in
+    * height order, absent heights skipped (I-14). Two flat phases over
+    * `pool`, so the run never has more calls in flight than the pool
+    * has threads: every block (block+txs, with [[retry]]), then every
+    * receipt of those blocks. A receipt that still fails after all
     * retries degrades to None — the reference's `unwrap_or(None)`
     * (`src/main.rs:216-218`) — so one poisoned tx cannot sink its
     * block; an absent receipt lands as status=null with no logs.
     *
-    * This is per-PARTITION work: at scale the cross-block parallelism
-    * is Spark's executor fan-out (one partition per block), and this
-    * pool only bounds the intra-block N+1 receipt burst against the
-    * node, exactly like the reference. */
-  def envelope(fetcher: ChainFetcher, n: Long, maxRetries: Int,
-               baseBackoffMs: Long, receiptConcurrency: Int): Option[SimChain.SimBlock] =
-    retry(maxRetries, baseBackoffMs)(fetcher.blockWithTxs(n)).map { b =>
-      assemble(b, fanOutReceipts(fetcher, b, maxRetries, baseBackoffMs, receiptConcurrency))
-    }
+    * Cross-block parallelism is this pool, not Spark's task slots: a
+    * partition holds a run of up to `receiptConcurrency` heights, so
+    * its blocks wait on the node together instead of one task slot
+    * each. */
+  def envelopes(pool: FetchPool, fetcher: ChainFetcher, from: Long, toIncl: Long,
+                maxRetries: Int, baseBackoffMs: Long): Seq[SimChain.SimBlock] = {
+    val blocks = fetchBlocks(pool, fetcher, from, toIncl, maxRetries, baseBackoffMs)
+    val receipts = fetchReceipts(pool, fetcher, blocks, maxRetries, baseBackoffMs)
+    blocks.map(assemble(_, receipts))
+  }
 
-  /** The bounded per-tx receipt burst shared by both strategies: the
-    * N+1 path takes full receipts (status + logs); the range path
-    * reuses it as the STATUS fallback when the node lacks
-    * `eth_getBlockReceipts`. */
-  private def fanOutReceipts(fetcher: ChainFetcher, b: WireBlock, maxRetries: Int,
-                             baseBackoffMs: Long, receiptConcurrency: Int): Map[String, Option[WireReceipt]] =
-    if (b.txs.isEmpty) Map.empty
-    else if (b.txs.size == 1 || receiptConcurrency <= 1)
-      b.txs.map(t => t.hash -> fetchReceipt(fetcher, t.hash, maxRetries, baseBackoffMs)).toMap
-    else {
-      val pool = Executors.newFixedThreadPool(math.min(receiptConcurrency, b.txs.size))
-      try {
-        b.txs.map { t =>
-          t.hash -> pool.submit(new Callable[Option[WireReceipt]] {
-            override def call(): Option[WireReceipt] =
-              fetchReceipt(fetcher, t.hash, maxRetries, baseBackoffMs)
-          })
-        }.map { case (h, fu) => h -> fu.get() }.toMap
-      } finally {
-        pool.shutdown()
-        pool.awaitTermination(60, TimeUnit.SECONDS): Unit
-      }
-    }
+  private def fetchBlocks(pool: FetchPool, fetcher: ChainFetcher, from: Long, toIncl: Long,
+                          maxRetries: Int, baseBackoffMs: Long): Seq[WireBlock] =
+    pool.map(from to toIncl)(n => retry(maxRetries, baseBackoffMs)(fetcher.blockWithTxs(n))).flatten
+
+  /** The per-tx receipt burst shared by both strategies, one flat
+    * phase over every tx of `blocks`: the N+1 path takes full receipts
+    * (status + logs); the range path reuses it as the STATUS fallback
+    * when the node lacks `eth_getBlockReceipts`. */
+  private def fetchReceipts(pool: FetchPool, fetcher: ChainFetcher, blocks: Seq[WireBlock],
+                            maxRetries: Int, baseBackoffMs: Long): Map[String, Option[WireReceipt]] = {
+    val hashes = blocks.flatMap(_.txs.map(_.hash))
+    hashes.zip(pool.map(hashes)(fetchReceipt(fetcher, _, maxRetries, baseBackoffMs))).toMap
+  }
 
   /** I-3 via the range strategy (`eth_getLogs`): ONE log call for the
     * whole inclusive block range `[from, toIncl]` + one block call and
@@ -212,13 +256,18 @@ object ChainFetch {
     * hole.
     *
     * Returns one envelope per block present on the node; absent
-    * heights skip exactly like the per-block path (I-14). */
-  def rangeEnvelopes(fetcher: ChainFetcher, from: Long, toIncl: Long,
-                     maxRetries: Int, baseBackoffMs: Long,
-                     receiptConcurrency: Int): Seq[SimChain.SimBlock] = {
+    * heights skip exactly like the per-block path (I-14).
+    *
+    * The per-block calls run through `pool` in flat phases, in this
+    * order: every block; the one log call and the head re-fetch (on
+    * the caller's thread); every `eth_getBlockReceipts`; then the
+    * per-tx status fallback for the blocks it did not cover. The
+    * stability checks see the same data as a one-at-a-time fetch: all
+    * blocks before the log call, the log call before the re-fetch. */
+  def rangeEnvelopes(pool: FetchPool, fetcher: ChainFetcher, from: Long, toIncl: Long,
+                     maxRetries: Int, baseBackoffMs: Long): Seq[SimChain.SimBlock] = {
     if (toIncl < from) return Nil
-    val blocks = (from to toIncl).flatMap(n =>
-      retry(maxRetries, baseBackoffMs)(fetcher.blockWithTxs(n)))
+    val blocks = fetchBlocks(pool, fetcher, from, toIncl, maxRetries, baseBackoffMs)
     val live = retry(maxRetries, baseBackoffMs)(fetcher.logsInRange(from, toIncl))
       .filterNot(_.removed)
     val hashesAt: Map[Long, Set[String]] =
@@ -235,8 +284,7 @@ object ChainFetch {
         .exists(_.hash == last.hash)
     }
     if (foreignOnlyEvidence || !parentLinked || !headStable)
-      return (from to toIncl).flatMap(n =>
-        envelope(fetcher, n, maxRetries, baseBackoffMs, receiptConcurrency))
+      return envelopes(pool, fetcher, from, toIncl, maxRetries, baseBackoffMs)
     // keyed by (blockNumber, blockHash, txHash), number included: a
     // lying/buggy node serving the SAME hash at two heights (a hash
     // "collision" cannot happen honestly — the hash identifies the
@@ -253,17 +301,23 @@ object ChainFetch {
           WireLog(i, l.address, l.topics, l.data)
         }
       }
-    blocks.map { b =>
-      // a persistently ERRORING eth_getBlockReceipts (anything but the
-      // clean method-absent None) degrades to the per-tx status
-      // fallback exactly like the absent method — the fallback exists,
-      // so a broken aggregate endpoint must not sink the partition
-      val statuses: Map[String, Option[Long]] =
-        (try fetchBlockStatuses(fetcher, b.number, maxRetries, baseBackoffMs)
-         catch { case _: Exception => None }).getOrElse {
-          fanOutReceipts(fetcher, b, maxRetries, baseBackoffMs, receiptConcurrency)
-            .map { case (h, r) => h -> r.flatMap(_.status) }
-        }
+    // a persistently ERRORING eth_getBlockReceipts (anything but the
+    // clean method-absent None) degrades to the per-tx status fallback
+    // exactly like the absent method — the fallback exists, so a
+    // broken aggregate endpoint must not sink the partition
+    def aggregate(b: WireBlock): Option[Map[String, Option[Long]]] =
+      try fetchBlockStatuses(fetcher, b.number, maxRetries, baseBackoffMs)
+      catch { case _: Exception => None }
+    // the first block asks alone: a node without the method answers
+    // method-not-found once and the fetcher remembers it, so the other
+    // blocks do not each probe
+    val aggregates = blocks.take(1).map(aggregate) ++ pool.map(blocks.drop(1))(aggregate)
+    val uncovered = blocks.zip(aggregates).collect { case (b, None) => b }
+    val perTx: Map[String, Option[Long]] =
+      fetchReceipts(pool, fetcher, uncovered, maxRetries, baseBackoffMs)
+        .map { case (h, r) => h -> r.flatMap(_.status) }
+    blocks.zip(aggregates).map { case (b, agg) =>
+      val statuses = agg.getOrElse(perTx)
       SimChain.SimBlock(b.number, b.hash, b.parentHash, b.timestamp,
         b.txs.sortBy(_.index).map { t =>
           SimChain.SimTx(t.hash, t.index, t.from, t.to, t.value, t.gas,
@@ -276,6 +330,14 @@ object ChainFetch {
         })
     }
   }
+
+  /** [[rangeEnvelopes]] over a pool of its own for this call, for
+    * callers outside a partition reader. */
+  def rangeEnvelopes(fetcher: ChainFetcher, from: Long, toIncl: Long,
+                     maxRetries: Int, baseBackoffMs: Long,
+                     receiptConcurrency: Int): Seq[SimChain.SimBlock] =
+    FetchPool.using(receiptConcurrency)(
+      rangeEnvelopes(_, fetcher, from, toIncl, maxRetries, baseBackoffMs))
 
   /** `eth_getBlockReceipts` with the standard retry; an
     * unsupported-method signal (None) is NOT retried — it is a stable

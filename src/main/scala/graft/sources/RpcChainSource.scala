@@ -17,7 +17,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * `get_block_with_txs`, `:204-227` receipt fan-out):
   *
   *  - `eth_blockNumber`                     → head discovery per trigger
-  *  - `eth_getBlockByNumber(n, full_tx)`    → one call per block partition
+  *  - `eth_getBlockByNumber(n, full_tx)`    → one call per block
   *  - `eth_getTransactionReceipt(tx_hash)`  → N+1 fan-out, bounded
   *    concurrency (MAX_RECEIPT_CONCURRENT analog), each with the
   *    3-attempt exponential-backoff retry; a receipt that exhausts its
@@ -30,10 +30,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * O(log depth) deep-reorg repair, exactly-once append) holds over the
   * real wire unchanged.
   *
-  * Scale shape: one partition per block means a 1000-executor cluster
-  * backfilling history issues 1000 concurrent block fetches, each with
-  * its own bounded receipt burst — tune `blocksPerBatch` (and node-side
-  * rate limits) accordingly; the per-call work is pure I/O + one row of
+  * Scale shape: a partition is a run of up to `receiptConcurrency`
+  * heights, fetched through its own pool of `receiptConcurrency`
+  * threads, so the node sees at most (running tasks ×
+  * `receiptConcurrency`) calls at once: 40 on `local[4]` at the
+  * default 10, 10,000 with 1000 task slots backfilling history —
+  * tune `blocksPerBatch`, `receiptConcurrency` (and node-side rate
+  * limits) accordingly; the per-call work is pure I/O + one row of
   * assembly, so the source is network-bound by design.
   *
   * Options: `rpcUrl` (required), plus the shared dials —
@@ -88,9 +91,10 @@ case class RpcFetcherConf(url: String, connectTimeoutMs: Int = 2000,
 /** Blocking HTTP JSON-RPC 2.0 client over `java.net.HttpURLConnection`
   * — deliberately dependency-free (the classpath rule) and
   * per-call-connection (HttpURLConnection keep-alive pools under the
-  * hood; partition readers are short-lived). Thread-safe: state is one
-  * ObjectMapper (thread-safe after config) and an id counter, so the
-  * receipt fan-out can share one fetcher across its pool.
+  * hood; partition readers are short-lived). Thread-safe: state is the
+  * endpoint URL (parsed once), one ObjectMapper (thread-safe after
+  * config) and an id counter, so a partition's [[FetchPool]] shares
+  * one fetcher.
   *
   * Error contract: non-200 responses, transport failures, and JSON-RPC
   * `error` members all throw `IOException` — the retryable category
@@ -101,6 +105,7 @@ class JsonRpcFetcher(conf: RpcFetcherConf) extends ChainFetcher {
   import ChainFetch.{hexToDec, hexToLong, longToHex}
   private val mapper = new ObjectMapper()
   private val nextId = new java.util.concurrent.atomic.AtomicLong(1)
+  private val endpoint = java.net.URI.create(conf.url).toURL
 
   private def call(method: String, params: String): JsonNode = {
     val body =
@@ -111,7 +116,7 @@ class JsonRpcFetcher(conf: RpcFetcherConf) extends ChainFetcher {
     // tear it down and pay a fresh TCP (+TLS) handshake for every call
     // of the N+1 receipt fan-out. A transport failure mid-call leaves
     // a broken socket the pool discards on its own.
-    val conn = new java.net.URL(conf.url).openConnection()
+    val conn = endpoint.openConnection()
       .asInstanceOf[java.net.HttpURLConnection]
     conn.setRequestMethod("POST")
     conn.setConnectTimeout(conf.connectTimeoutMs)

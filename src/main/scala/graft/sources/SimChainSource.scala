@@ -22,12 +22,14 @@ import graft.ingest.SimChain
   *    reads the "node state" (a head file: `<head> <forkAt|->`)
   *  - I-4 batch bounding       → latestOffset clamps to
   *    `committed + blocksPerBatch` (BLOCKS_PER_BATCH=5 analog)
-  *  - I-3 block+txs fetch      → one [[InputPartition]] per block; the
-  *    partition reader materializes the full nested envelope through
-  *    the [[ChainFetcher]] seam (block+txs, then the receipt fan-out)
-  *  - I-6 parallel fan-out     → partitions execute concurrently; the
-  *    reference's `buffer_unordered(10)` becomes executor parallelism
-  *  - I-5 retry + backoff      → [[ChainFetch.envelope]] retries a
+  *  - I-3 block+txs fetch      → one [[InputPartition]] per run of up to
+  *    `receiptConcurrency` heights; the partition reader materializes
+  *    the full nested envelopes through the [[ChainFetcher]] seam
+  *    (every block+txs of the run, then every receipt)
+  *  - I-6 parallel fan-out     → each reader fetches through a
+  *    [[FetchPool]] of `receiptConcurrency` threads (the reference's
+  *    `buffer_unordered(10)`), and partitions execute concurrently
+  *  - I-5 retry + backoff      → [[ChainFetch.retry]] retries a
   *    (deterministically injected) flaky fetch 3× with exponential
   *    backoff (`src/main.rs:28-29,49,153-155`)
   *
@@ -204,9 +206,11 @@ abstract class ChainMicroBatchStream(options: CaseInsensitiveStringMap)
     BlockOffset(math.max(planned, math.min(head + 1, planned + blocksPerBatch)))
   }
 
-  /** I-3/I-6: one partition per block, fetched concurrently. The
-    * fetcher conf is snapshotted at planning time so every partition of
-    * the batch sees one consistent chain view. */
+  /** I-3/I-6: contiguous runs of heights, fetched concurrently — up to
+    * `receiptConcurrency` heights per partition on the receipt path
+    * (one [[FetchPool]] wave of block calls), `logRangeSize` on the
+    * range path. The fetcher conf is snapshotted at planning time so
+    * every partition of the batch sees one consistent chain view. */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val conf = fetcherConf()
     val s0 = math.max(0L, start.asInstanceOf[BlockOffset].n - reorgLookback)
@@ -215,22 +219,16 @@ abstract class ChainMicroBatchStream(options: CaseInsensitiveStringMap)
     val s = repairFrom().filter(_ < s0).getOrElse(s0)
     val e = end.asInstanceOf[BlockOffset].n
     planned = math.max(planned, e)
-    if (fetchStrategy == "range")
-      (s until e by logRangeSize).map(r0 => ChainRangePartition(r0,
-        math.min(r0 + logRangeSize, e) - 1, conf, maxRetries,
-        baseBackoffMs, receiptConcurrency): InputPartition).toArray
-    else
-      (s until e).map(n => ChainBlockPartition(n, conf, maxRetries,
-        baseBackoffMs, receiptConcurrency): InputPartition).toArray
+    val range = fetchStrategy == "range"
+    val step = if (range) logRangeSize else math.max(1L, receiptConcurrency.toLong)
+    (s until e by step).map(r0 => ChainRunPartition(r0, math.min(r0 + step, e) - 1,
+      range, conf, maxRetries, baseBackoffMs, receiptConcurrency): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new PartitionReaderFactory {
       override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-        partition match {
-          case p: ChainBlockPartition => new ChainEnvelopeReader(p)
-          case p: ChainRangePartition => new ChainRangeReader(p)
-        }
+        new ChainEnvelopeReader(partition.asInstanceOf[ChainRunPartition])
     }
 
   override def commit(end: Offset): Unit = ()
@@ -270,72 +268,48 @@ class SimChainMicroBatchStream(options: CaseInsensitiveStringMap)
   }
 }
 
-case class ChainBlockPartition(blockNumber: Long, conf: FetcherConf,
-                               maxRetries: Int, baseBackoffMs: Long,
-                               receiptConcurrency: Int) extends InputPartition
+/** One partition: the heights `[from, to]` (inclusive), fetched by
+  * the range strategy (one `eth_getLogs` for the run + per-block
+  * status) when `range`, else by the N+1 receipt path. */
+case class ChainRunPartition(from: Long, to: Long, range: Boolean, conf: FetcherConf,
+                             maxRetries: Int, baseBackoffMs: Long,
+                             receiptConcurrency: Int) extends InputPartition
 
-/** One partition per block RANGE (inclusive bounds): the range
-  * strategy's unit of work — one `eth_getLogs` call amortized over
-  * `to - from + 1` blocks. Cross-range parallelism is still Spark's
-  * executor fan-out; within a range, blocks assemble sequentially off
-  * the one shared log response. */
-case class ChainRangePartition(from: Long, to: Long, conf: FetcherConf,
-                               maxRetries: Int, baseBackoffMs: Long,
-                               receiptConcurrency: Int) extends InputPartition
-
-/** Fetches one block envelope through the [[ChainFetcher]] seam with
-  * the reference's retry policy (3 attempts, exponential backoff —
-  * `src/main.rs:126-159`) and per-tx receipt fan-out. */
-class ChainEnvelopeReader(p: ChainBlockPartition)
+/** Fetches a partition's run of envelopes through the [[ChainFetcher]]
+  * seam with the reference's retry policy (3 attempts, exponential
+  * backoff — `src/main.rs:126-159`), over one [[FetchPool]] of
+  * `receiptConcurrency` threads, and serves them one row at a time in
+  * height order; absent heights emit nothing (I-14). `close()` — which
+  * Spark also runs when it kills the task — stops the pool. */
+class ChainEnvelopeReader(p: ChainRunPartition)
     extends PartitionReader[InternalRow] {
   private val serializer = ExpressionEncoder[SimChain.SimBlock]().createSerializer()
   private val fetcher = p.conf.open()
-  private var done = false
-  private var current: InternalRow = _
-
-  override def next(): Boolean =
-    if (done) false
-    else {
-      done = true
-      ChainFetch.envelope(fetcher, p.blockNumber, p.maxRetries,
-        p.baseBackoffMs, p.receiptConcurrency) match {
-        case Some(b) => current = serializer(b).copy(); true
-        case None    => false // I-14: missing block — emit nothing, skip
-      }
-    }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = fetcher.close()
-}
-
-/** Materializes a whole range partition through
-  * [[ChainFetch.rangeEnvelopes]] (one `eth_getLogs` + per-block
-  * status) and serves its blocks one row at a time. */
-class ChainRangeReader(p: ChainRangePartition)
-    extends PartitionReader[InternalRow] {
-  private val serializer = ExpressionEncoder[SimChain.SimBlock]().createSerializer()
-  private val fetcher = p.conf.open()
+  private val pool = new FetchPool(p.receiptConcurrency)
   private var it: Iterator[SimChain.SimBlock] = _
   private var current: InternalRow = _
 
   override def next(): Boolean = {
     if (it == null)
-      it = ChainFetch.rangeEnvelopes(fetcher, p.from, p.to, p.maxRetries,
-        p.baseBackoffMs, p.receiptConcurrency).iterator
+      it = (if (p.range)
+        ChainFetch.rangeEnvelopes(pool, fetcher, p.from, p.to, p.maxRetries, p.baseBackoffMs)
+      else
+        ChainFetch.envelopes(pool, fetcher, p.from, p.to, p.maxRetries, p.baseBackoffMs)).iterator
     if (it.hasNext) { current = serializer(it.next()).copy(); true } else false
   }
 
   override def get(): InternalRow = current
-  override def close(): Unit = fetcher.close()
+  override def close(): Unit = try pool.close() finally fetcher.close()
 }
 
 /** In-process fetcher over the deterministic [[SimChain]].
   *
   * The "RPC failure" is injected deterministically for blocks where
-  * `n % flakyEveryN == 0`: the fetcher's first blockWithTxs attempt
-  * throws, the retry succeeds — exercising the real retry path on
-  * every such block (one fetcher per partition reader, so "first
-  * attempt" is per fetch, like a transient network fault).
+  * `n % flakyEveryN == 0`: the fetcher's first blockWithTxs attempt at
+  * that height throws, the retry succeeds — exercising the real retry
+  * path on every such block. Attempts count per fetcher, and each
+  * partition reader opens its own, so every run of heights sees each
+  * such height fail once, like a transient network fault.
   *
   * Receipts resolve from an index of the blocks this fetcher has
   * served — the stand-in for a real node's tx-hash index. A height in

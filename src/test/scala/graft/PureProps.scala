@@ -146,4 +146,40 @@ object PureProps extends Properties("graft.pure") {
         t.value.nonEmpty && t.value.forall(_.isDigit) &&
         t.gas_used.nonEmpty && t.gas_used.forall(_.isDigit))
     }
+
+  /** A run of heights and the node faults inside it: flaky heights fail
+    * their first block fetch once, missing heights are absent, and
+    * receiptless heights have no receipts. */
+  private val runGen = for {
+    from <- Gen.chooseNum(0L, 40L)
+    len <- Gen.chooseNum(1, 24)
+    heights = from until from + len
+    flakyEveryN <- Gen.oneOf(0L, 2L, 3L, 5L)
+    missing <- Gen.someOf(heights)
+    receiptless <- Gen.someOf(heights)
+    forkAt <- Gen.option(Gen.chooseNum(0L, 64L))
+    range <- Gen.oneOf(false, true)
+    receiptConcurrency <- Gen.chooseNum(1, 12)
+  } yield (graft.sources.ChainRunPartition(from, from + len - 1, range,
+    graft.sources.SimFetcherConf(forkAt, flakyEveryN, missing.toSet, receiptless.toSet),
+    maxRetries = 3, baseBackoffMs = 0L, receiptConcurrency))
+
+  private lazy val decodeEnvelope = org.apache.spark.sql.catalyst.encoders
+    .ExpressionEncoder[graft.ingest.SimChain.SimBlock]().resolveAndBind().createDeserializer()
+
+  property("a run reader's envelopes == per-height ChainFetch.envelope, in height order") =
+    Prop.forAll(runGen) { p =>
+      import graft.sources.{ChainEnvelopeReader, ChainFetch}
+      val want = {
+        val f = p.conf.open()
+        try (p.from to p.to).flatMap(n =>
+          ChainFetch.envelope(f, n, p.maxRetries, p.baseBackoffMs, 1))
+        finally f.close()
+      }
+      val reader = new ChainEnvelopeReader(p)
+      val got =
+        try Iterator.continually(reader.next()).takeWhile(identity).map(_ => decodeEnvelope(reader.get())).toVector
+        finally reader.close()
+      got == want
+    }
 }

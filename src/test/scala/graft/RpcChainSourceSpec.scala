@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ingest.{ChainStore, SimChain, StreamingIngester}
-import graft.sources.{ChainFetch, RpcFetcherConf, SimChainSource}
+import graft.sources.{ChainFetch, FetchPool, RpcFetcherConf, SimChainSource}
 
 /** The SimChainSourceSpec e2e, re-run over the REAL wire: a loopback
   * JSON-RPC stub node ([[StubRpcNode]]) serves the same deterministic
@@ -238,6 +238,88 @@ class RpcChainSourceSpec extends AnyFunSuite with SparkSpec {
         .filter(col("block_number").isin(5L, 9L)).count() == 0)
       assert(txs.filter(!col("block_number").isin(5L, 9L))
         .filter(col("status").isNull).count() == 0)
+    } finally {
+      query.stop()
+      node.close()
+    }
+  }
+
+  /** Name-sorted projection, so tables whose files carry different
+    * column orders compare equal row for row. */
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    val cols = df.columns.sorted.toIndexedSeq.map(col)
+    df.select(cols: _*).orderBy(cols: _*).collect().map(_.toString).toIndexedSeq
+  }
+
+  test("a 40-block batch puts more calls in flight than task slots, at most partitions × receiptConcurrency") {
+    val headFile = Files.createTempFile("rpc-head-conc", ".txt").toString
+    SimChainSource.writeHeadFile(headFile, 39, None)
+    val node = new StubRpcNode(headFile, callDelayMs = 50)
+    val store = new ChainStore(spark,
+      Files.createTempDirectory("rpc-store-conc").toString, bucketSize = 10)
+    val checkpoint = Files.createTempDirectory("rpc-ckpt-conc").toString
+    val receiptConcurrency = 10
+    val envelopes = spark.readStream.format("graft-rpcchain")
+      .option("rpcUrl", node.url)
+      .option("blocksPerBatch", 40)
+      .option("receiptConcurrency", receiptConcurrency)
+      .option("baseBackoffMs", 5)
+      .load()
+    val query = StreamingIngester.start(envelopes, store, checkpoint,
+      trigger = Trigger.ProcessingTime("50 milliseconds"))
+    try query.processAllAvailable() finally {
+      query.stop()
+      node.close()
+    }
+    // heights 0-39 in one batch: 4 partitions of 10 heights
+    val partitions = 40 / receiptConcurrency
+    val slots = spark.sparkContext.defaultParallelism
+    assert(node.peakInFlight("eth_getBlockByNumber") > slots,
+      s"block calls must not be capped at one per task slot ($slots): " +
+        s"peak ${node.peakInFlight("eth_getBlockByNumber")}")
+    assert(node.peakInFlight <= partitions * receiptConcurrency,
+      s"peak ${node.peakInFlight} calls in flight > $partitions partitions × $receiptConcurrency")
+
+    val want = new ChainStore(spark,
+      Files.createTempDirectory("rpc-store-conc-want").toString, bucketSize = 10)
+    import spark.implicits._
+    StreamingIngester.processBatch(want, (0L to 39L).map(SimChain.blockOn(_, None)).toDF())
+    for (table <- Seq("blocks", "transactions", "logs"))
+      assert(sortedRows(store.read(table).get) == sortedRows(want.read(table).get),
+        s"table $table must equal the chain")
+  }
+
+  test("stopping the query mid-fetch leaves no fetch-pool thread alive") {
+    import scala.jdk.CollectionConverters._
+    def fetchThreads: Set[String] = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName.startsWith(FetchPool.ThreadPrefix)).map(_.getName).toSet
+    def await(limitMs: Long)(cond: => Boolean): Boolean = {
+      val deadline = System.currentTimeMillis() + limitMs
+      while (!cond && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      cond
+    }
+    val headFile = Files.createTempFile("rpc-head-stop", ".txt").toString
+    SimChainSource.writeHeadFile(headFile, 39, None)
+    // slow enough that the stop lands while blocks are still in flight
+    val node = new StubRpcNode(headFile, callDelayMs = 400)
+    val store = new ChainStore(spark,
+      Files.createTempDirectory("rpc-store-stop").toString, bucketSize = 10)
+    val checkpoint = Files.createTempDirectory("rpc-ckpt-stop").toString
+    val envelopes = spark.readStream.format("graft-rpcchain")
+      .option("rpcUrl", node.url)
+      .option("blocksPerBatch", 40)
+      .option("baseBackoffMs", 5)
+      .load()
+    val query = StreamingIngester.start(envelopes, store, checkpoint,
+      trigger = Trigger.ProcessingTime("50 milliseconds"))
+    try {
+      assert(await(60000)(node.callsServed("eth_getBlockByNumber") > 0),
+        "the batch never started fetching")
+      assert(fetchThreads.nonEmpty, "sanity: the fetch pools are alive mid-fetch")
+      query.stop()
+      assert(await(10000)(fetchThreads.isEmpty),
+        s"fetch threads still alive after stop: $fetchThreads")
+      assert(store.lastSyncedBlock.isEmpty, "sanity: the stop landed before the batch committed")
     } finally {
       query.stop()
       node.close()

@@ -30,6 +30,11 @@ import graft.sources.{ChainFetch, SimChainSource}
   *    heights in `receiptlessBlocks` answer `result: null` for every
   *    receipt (status=null + no logs downstream).
   *
+  * Load shape: every call sleeps `callDelayMs` before answering (0 =
+  * answer at once), standing in for network and node time, and
+  * [[peakInFlight]] reports the most calls the node was answering at
+  * once — the concurrency a client actually put on the wire.
+  *
   * Receipts resolve through a tx-hash index built as blocks are served
   * (the stand-in for a real node's global tx index); the ingester
   * always fetches a block before its receipts, so the index is
@@ -40,7 +45,8 @@ class StubRpcNode(headFile: String,
                   flakyReceiptBlocks: Set[Long] = Set.empty,
                   missingBlocks: Set[Long] = Set.empty,
                   receiptlessBlocks: Set[Long] = Set.empty,
-                  supportsBlockReceipts: Boolean = true) extends AutoCloseable {
+                  supportsBlockReceipts: Boolean = true,
+                  callDelayMs: Long = 0L) extends AutoCloseable {
 
   private val mapper = new ObjectMapper()
   private val blockAttempts = new ConcurrentHashMap[Long, Integer]()
@@ -51,6 +57,12 @@ class StubRpcNode(headFile: String,
   // executor and volatile read-modify-write loses increments
   private val served = new java.util.concurrent.atomic.AtomicLong()
   private val perMethod = new ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
+  // in-flight and peak in-flight calls, per method and under "*" for all
+  private val inFlight = new ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicInteger]()
+  private val peak = new ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicInteger]()
+  private def gauge(m: ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicInteger],
+                    key: String) =
+    m.computeIfAbsent(key, _ => new java.util.concurrent.atomic.AtomicInteger())
 
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
   server.createContext("/", new HttpHandler {
@@ -62,68 +74,88 @@ class StubRpcNode(headFile: String,
       served.incrementAndGet(): Unit
       perMethod.computeIfAbsent(method,
         _ => new java.util.concurrent.atomic.AtomicLong()).incrementAndGet(): Unit
-      method match {
-        case "eth_blockNumber" =>
-          val (head, _) = SimChainSource.readHeadFile(headFile)
-          respond(ex, result(id, "\"" + ChainFetch.longToHex(head) + "\""))
-        case "eth_getBlockByNumber" =>
-          val n = ChainFetch.hexToLong(params.get(0).asText())
-          if (flakyBlockEveryN > 0 && n % flakyBlockEveryN == 0 &&
-              blockAttempts.merge(n, 1, (a, b) => a + b) == 1)
-            respondCode(ex, 500, """{"error":"injected transport failure"}""")
-          else {
-            val (head, forkAt) = SimChainSource.readHeadFile(headFile)
-            if (n > head || missingBlocks(n)) respond(ex, result(id, "null"))
-            else respond(ex, result(id, blockJson(n, forkAt)))
-          }
-        case "eth_getTransactionReceipt" =>
-          val h = params.get(0).asText()
-          txIndex.get(h) match {
-            case null => respond(ex, result(id, "null"))
-            case (height, _) if flakyReceiptBlocks(height) &&
-                receiptAttempts.merge(h, 1, (a, b) => a + b) == 1 =>
-              respond(ex,
-                s"""{"jsonrpc":"2.0","id":$id,"error":{"code":-32000,"message":"injected receipt failure"}}""")
-            case (height, receipt) =>
-              if (receiptlessBlocks(height)) respond(ex, result(id, "null"))
-              else respond(ex, result(id, receipt))
-          }
-        case "eth_getLogs" =>
-          val filter = params.get(0)
-          val from = ChainFetch.hexToLong(filter.get("fromBlock").asText())
-          val to = ChainFetch.hexToLong(filter.get("toBlock").asText())
-          val (head, forkAt) = SimChainSource.readHeadFile(headFile)
-          val logs = (from to math.min(to, head))
-            .filterNot(n => missingBlocks(n) || receiptlessBlocks(n))
-            .flatMap(n => rangeLogsJson(n, forkAt))
-          respond(ex, result(id, logs.mkString("[", ",", "]")))
-        case "eth_getBlockReceipts" if supportsBlockReceipts =>
-          val n = ChainFetch.hexToLong(params.get(0).asText())
-          val (head, forkAt) = SimChainSource.readHeadFile(headFile)
-          if (n > head || missingBlocks(n) || receiptlessBlocks(n))
-            respond(ex, result(id, "null"))
-          else {
-            val rcs = SimChain.blockOn(n, forkAt).transactions.map { t =>
-              val status = t.status.map(s => q(ChainFetch.longToHex(s))).getOrElse("null")
-              s"""{"transactionHash":${q(t.tx_hash)},"status":$status}"""
-            }
-            respond(ex, result(id, rcs.mkString("[", ",", "]")))
-          }
-        case other =>
-          respond(ex,
-            s"""{"jsonrpc":"2.0","id":$id,"error":{"code":-32601,"message":"unknown method $other"}}""")
+      Seq("*", method).foreach { k =>
+        val now = gauge(inFlight, k).incrementAndGet()
+        gauge(peak, k).accumulateAndGet(now, math.max): Unit
       }
+      try {
+        if (callDelayMs > 0) Thread.sleep(callDelayMs)
+        answer(ex, id, method, params)
+      } finally Seq("*", method).foreach(k => gauge(inFlight, k).decrementAndGet(): Unit)
     }
   })
-  server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(16))
+  // more handler threads than any spec puts calls in flight, so the
+  // peak gauge sees the client's concurrency, not this pool's size
+  private val handlers = java.util.concurrent.Executors.newFixedThreadPool(64)
+  server.setExecutor(handlers)
   server.start()
 
   val url: String = s"http://127.0.0.1:${server.getAddress.getPort}"
   def callsServed: Long = served.get()
   def callsServed(method: String): Long =
     Option(perMethod.get(method)).map(_.get()).getOrElse(0L)
+  /** Most calls (of `method`, or of any method) answered at once. */
+  def peakInFlight: Int = gauge(peak, "*").get()
+  def peakInFlight(method: String): Int = gauge(peak, method).get()
 
-  override def close(): Unit = server.stop(0)
+  override def close(): Unit = {
+    server.stop(0)
+    handlers.shutdownNow(): Unit
+  }
+
+  private def answer(ex: HttpExchange, id: Long, method: String,
+                     params: com.fasterxml.jackson.databind.JsonNode): Unit =
+    method match {
+      case "eth_blockNumber" =>
+        val (head, _) = SimChainSource.readHeadFile(headFile)
+        respond(ex, result(id, "\"" + ChainFetch.longToHex(head) + "\""))
+      case "eth_getBlockByNumber" =>
+        val n = ChainFetch.hexToLong(params.get(0).asText())
+        if (flakyBlockEveryN > 0 && n % flakyBlockEveryN == 0 &&
+            blockAttempts.merge(n, 1, (a, b) => a + b) == 1)
+          respondCode(ex, 500, """{"error":"injected transport failure"}""")
+        else {
+          val (head, forkAt) = SimChainSource.readHeadFile(headFile)
+          if (n > head || missingBlocks(n)) respond(ex, result(id, "null"))
+          else respond(ex, result(id, blockJson(n, forkAt)))
+        }
+      case "eth_getTransactionReceipt" =>
+        val h = params.get(0).asText()
+        txIndex.get(h) match {
+          case null => respond(ex, result(id, "null"))
+          case (height, _) if flakyReceiptBlocks(height) &&
+              receiptAttempts.merge(h, 1, (a, b) => a + b) == 1 =>
+            respond(ex,
+              s"""{"jsonrpc":"2.0","id":$id,"error":{"code":-32000,"message":"injected receipt failure"}}""")
+          case (height, receipt) =>
+            if (receiptlessBlocks(height)) respond(ex, result(id, "null"))
+            else respond(ex, result(id, receipt))
+        }
+      case "eth_getLogs" =>
+        val filter = params.get(0)
+        val from = ChainFetch.hexToLong(filter.get("fromBlock").asText())
+        val to = ChainFetch.hexToLong(filter.get("toBlock").asText())
+        val (head, forkAt) = SimChainSource.readHeadFile(headFile)
+        val logs = (from to math.min(to, head))
+          .filterNot(n => missingBlocks(n) || receiptlessBlocks(n))
+          .flatMap(n => rangeLogsJson(n, forkAt))
+        respond(ex, result(id, logs.mkString("[", ",", "]")))
+      case "eth_getBlockReceipts" if supportsBlockReceipts =>
+        val n = ChainFetch.hexToLong(params.get(0).asText())
+        val (head, forkAt) = SimChainSource.readHeadFile(headFile)
+        if (n > head || missingBlocks(n) || receiptlessBlocks(n))
+          respond(ex, result(id, "null"))
+        else {
+          val rcs = SimChain.blockOn(n, forkAt).transactions.map { t =>
+            val status = t.status.map(s => q(ChainFetch.longToHex(s))).getOrElse("null")
+            s"""{"transactionHash":${q(t.tx_hash)},"status":$status}"""
+          }
+          respond(ex, result(id, rcs.mkString("[", ",", "]")))
+        }
+      case other =>
+        respond(ex,
+          s"""{"jsonrpc":"2.0","id":$id,"error":{"code":-32601,"message":"unknown method $other"}}""")
+    }
 
   private def result(id: Long, res: String): String =
     s"""{"jsonrpc":"2.0","id":$id,"result":$res}"""
