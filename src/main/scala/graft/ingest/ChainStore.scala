@@ -327,10 +327,6 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
         .limit(1).collect().headOption.map(_.getString(0))
     }
 
-  /** Q-20 / I-11: idempotent append of one flattened batch. The
-    * existing-keys anti-join scans only the block range the batch
-    * touches (partition pruning on bucket), so the append cost is
-    * O(batch), not O(store). */
   /** In-process mutation version: bumped by every call that can change
     * a QUERY ANSWER ([[append]], [[rollback]]) — the invalidation
     * signal a co-located serving cache ([[graft.api.LookupCache]])
@@ -347,6 +343,27 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
   def mutationCount: Long = mutations.get()
   private val mutations = new AtomicLong()
 
+  /** Q-20 / I-11: idempotent append of one flattened batch — the
+    * reference's `INSERT ... ON CONFLICT (key) DO NOTHING`. Rows are
+    * de-duplicated on the table's key within the batch, and a key
+    * already stored at a height ≥ the batch's lowest is skipped, so a
+    * replayed batch writes nothing twice.
+    *
+    * The cost is O(batch), never O(store):
+    *  - one Spark job, one task, collects every table's height range;
+    *  - the stored keys to anti-join against are read from an explicit
+    *    file list — the `.parquet` files of the bucket directories at
+    *    or above the batch's lowest bucket, listed on the driver — so
+    *    resolving them runs no listing or footer job;
+    *  - each table's dedup, anti-join, sort and partitioned write run
+    *    in one task of one job, after a small job that broadcasts the
+    *    stored keys (when there are any): a micro-batch is bounded by
+    *    the source's batch size, like the header collect, and each
+    *    append leaves one file per bucket it touches.
+    *
+    * Dirty-bucket markers are written before the data they cover (see
+    * [[dirtyBuckets]]). A table whose incoming frame is empty is not
+    * written. */
   def append(blocks: DataFrame, transactions: DataFrame, logs: DataFrame): Unit = {
     ensureWriteLock()
     mutations.incrementAndGet(): Unit
@@ -356,38 +373,57 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
 
   private def appendImpl(blocks: DataFrame, transactions: DataFrame,
                          logs: DataFrame): Unit = {
-    val dfs = Map("blocks" -> blocks, "transactions" -> transactions, "logs" -> logs)
+    val dfs = Seq("blocks" -> blocks, "transactions" -> transactions, "logs" -> logs)
+    dfs.foreach { case (t, _) => ensureRecovered(t) }
+    // in-batch dedup changes neither bound, so the raw frames serve
+    val ranges: Map[String, (Long, Long)] = dfs
+      .map { case (t, df) => df.select(lit(t).as("t"), col("block_number")) }
+      .reduce(_ unionByName _).coalesce(1)
+      .groupBy("t").agg(min("block_number"), max("block_number")).collect()
+      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     dfs.foreach { case (t, incoming) =>
-      ensureRecovered(t)
-      val key = keyOf(t)
-      val deduped = incoming.dropDuplicates(key)
-      val minB = deduped.agg(min(col("block_number")), max(col("block_number"))).collect().head
-      if (!minB.isNullAt(0)) markDirty(t, minB.getLong(0), minB.getLong(1))
-      val fresh = if (minB.isNullAt(0)) deduped else {
-        if (exists(t)) {
-          // keep the physical `bucket` column in the overlap scan so the
-          // predicate prunes partition *directories*, not just row
-          // groups — at chain length N this reads O(batch) partitions
-          val lo = minB.getLong(0)
-          val overlap = spark.read.parquet(tablePath(t))
-            .filter(col("bucket") >= lo / bucketSize && col("block_number") >= lo)
-            .select(col(key))
-          deduped.join(overlap, Seq(key), "left_anti")
-        } else deduped
+      ranges.get(t).foreach { case (lo, hi) =>
+        markDirty(t, lo, hi)
+        val key = keyOf(t)
+        // one partition: the aggregate needs no exchange, and the small
+        // stored side broadcasts, so the join needs none either
+        val deduped = incoming.coalesce(1).dropDuplicates(key)
+        val fresh = storedFiles(t, lo / bucketSize) match {
+          case Seq() => deduped
+          case files =>
+            val stored = spark.read
+              .schema(incoming.select(col("block_number"), col(key)).schema)
+              .option("basePath", tablePath(t)).parquet(files: _*)
+              .filter(col("block_number") >= lo).select(col(key))
+            deduped.join(stored, Seq(key), "left_anti")
+        }
+        // sort within files by (block_number, key) — the substitute for
+        // the reference's composite B-trees: row-group min/max stats stay
+        // tight, so range + cursor predicates prune inside partitions too.
+        // `bucket` leads because the partitioned writer needs its rows
+        // grouped by it; it is monotone in block_number, so the order
+        // is the same.
+        withBucket(fresh)
+          .sortWithinPartitions(col("bucket"), col("block_number"), col(key))
+          .write.mode(SaveMode.Append)
+          // bloom filter on the idempotency/lookup key, for readers that
+          // push an equality on the raw key; the anti-join and the
+          // `lower(hash)` point lookups (Q-13/Q-14) never consult it
+          .option(s"parquet.bloom.filter.enabled#$key", "true")
+          .partitionBy("bucket").parquet(tablePath(t))
       }
-      // sort within files by (block_number, key) — the substitute for
-      // the reference's composite B-trees: row-group min/max stats stay
-      // tight, so range + cursor predicates prune inside partitions too
-      withBucket(fresh)
-        .sortWithinPartitions(col("block_number"), col(key))
-        .write.mode(SaveMode.Append)
-        // bloom filter on the idempotency/lookup key, for readers that
-        // push an equality on the raw key; the anti-join and the
-        // `lower(hash)` point lookups (Q-13/Q-14) never consult it
-        .option(s"parquet.bloom.filter.enabled#$key", "true")
-        .partitionBy("bucket").parquet(tablePath(t))
     }
   }
+
+  /** The `.parquet` files of a table's bucket directories numbered
+    * `fromBucket` or above, listed on the driver. */
+  private def storedFiles(table: String, fromBucket: Long): Seq[String] =
+    if (!exists(table)) Seq.empty
+    else fs.listStatus(new Path(tablePath(table))).map(_.getPath)
+      .filter(p => p.getName.startsWith("bucket=") &&
+        p.getName.stripPrefix("bucket=").toLong >= fromBucket)
+      .flatMap(fs.listStatus(_).map(_.getPath))
+      .filter(_.getName.endsWith(".parquet")).map(_.toString).toSeq
 
   /** Q-21 / I-10: delete every row with `block_number >= forkHeight`
     * across all tables, children first (`src/db.rs:34-50`). */
@@ -456,24 +492,30 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
       val key = keyOf(table)
       ensureRecovered(table)
       val dir = new Path(tablePath(table))
-      fs.listStatus(dir).map(_.getPath)
-        .filter(_.getName.startsWith("bucket="))
-        .filter(p => only.forall(_.contains(p.getName.stripPrefix("bucket=").toLong)))
-        .foreach { p =>
-          val nFiles = fs.listStatus(p)
-            .count(s => s.getPath.getName.endsWith(".parquet"))
-          if (nFiles > 1) {
-            val rows = spark.read.parquet(p.toString)
-            val tmp = new Path(dir, s".tmp-compact-${p.getName}")
-            rows.coalesce(1)
-              .sortWithinPartitions(col("block_number"), col(key))
-              .write.mode(SaveMode.Overwrite)
-              .option(s"parquet.bloom.filter.enabled#$key", "true")
-              .parquet(tmp.toString)
-            swapBucket(dir, p, tmp)
-          }
-          clearDirty(table, p.getName.stripPrefix("bucket=").toLong)
+      // the dirty set names its buckets: only the full sweep lists the
+      // table (a marker can outlive its bucket, e.g. after a rollback)
+      val buckets: Seq[Long] = only match {
+        case Some(bs) => bs.toSeq.sorted
+        case None => fs.listStatus(dir).map(_.getPath.getName)
+          .filter(_.startsWith("bucket=")).map(_.stripPrefix("bucket=").toLong).toSeq
+      }
+      buckets.foreach { b =>
+        val p = new Path(dir, s"bucket=$b")
+        val nFiles = if (fs.exists(p))
+          fs.listStatus(p).count(s => s.getPath.getName.endsWith(".parquet"))
+        else 0
+        if (nFiles > 1) {
+          val rows = spark.read.parquet(p.toString)
+          val tmp = new Path(dir, s".tmp-compact-${p.getName}")
+          rows.coalesce(1)
+            .sortWithinPartitions(col("block_number"), col(key))
+            .write.mode(SaveMode.Overwrite)
+            .option(s"parquet.bloom.filter.enabled#$key", "true")
+            .parquet(tmp.toString)
+          swapBucket(dir, p, tmp)
         }
+        clearDirty(table, b)
+      }
     }
   }
 

@@ -50,11 +50,11 @@ object StreamingIngester {
     // the header collect is the batch's first action, so its job runs
     // the source's partitions; emptiness is read off its result (an
     // isEmpty job first would fetch the first partition on its own,
-    // one more serial fetch per cycle)
+    // one more serial fetch per cycle). It sorts on the driver: an
+    // orderBy would add a range-partitioner sampling job and a shuffle.
     val incoming = batch
-      .select(col("block_number"), col("block_hash"), col("parent_hash"))
-      .orderBy(col("block_number")).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+      .select(col("block_number"), col("block_hash"), col("parent_hash")).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2))).sortBy(_._1)
     if (incoming.nonEmpty) {
       val lo = incoming.head._1
       val hi0 = incoming.last._1

@@ -178,9 +178,8 @@ object ChainFetch {
     * block; an absent receipt lands as status=null with no logs.
     *
     * Cross-block parallelism is this pool, not Spark's task slots: a
-    * partition holds a run of up to `receiptConcurrency` heights, so
-    * its blocks wait on the node together instead of one task slot
-    * each. */
+    * partition holds one task slot's run of heights, so its blocks
+    * wait on the node together instead of one task slot each. */
   def envelopes(pool: FetchPool, fetcher: ChainFetcher, from: Long, toIncl: Long,
                 maxRetries: Int, baseBackoffMs: Long): Seq[SimChain.SimBlock] = {
     val blocks = fetchBlocks(pool, fetcher, from, toIncl, maxRetries, baseBackoffMs)

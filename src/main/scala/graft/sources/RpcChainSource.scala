@@ -30,7 +30,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * O(log depth) deep-reorg repair, exactly-once append) holds over the
   * real wire unchanged.
   *
-  * Scale shape: a partition is a run of up to `receiptConcurrency`
+  * Scale shape: a partition is one task slot's run of the batch's
   * heights, fetched through its own pool of `receiptConcurrency`
   * threads, so the node sees at most (running tasks ×
   * `receiptConcurrency`) calls at once: 40 on `local[4]` at the

@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 import java.nio.file.{AtomicMoveNotSupportedException, Files, Paths, StandardCopyOption}
 import java.util
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -22,8 +23,8 @@ import graft.ingest.SimChain
   *    reads the "node state" (a head file: `<head> <forkAt|->`)
   *  - I-4 batch bounding       → latestOffset clamps to
   *    `committed + blocksPerBatch` (BLOCKS_PER_BATCH=5 analog)
-  *  - I-3 block+txs fetch      → one [[InputPartition]] per run of up to
-  *    `receiptConcurrency` heights; the partition reader materializes
+  *  - I-3 block+txs fetch      → one [[InputPartition]] per task slot's
+  *    run of heights; the partition reader materializes
   *    the full nested envelopes through the [[ChainFetcher]] seam
   *    (every block+txs of the run, then every receipt)
   *  - I-6 parallel fan-out     → each reader fetches through a
@@ -206,11 +207,13 @@ abstract class ChainMicroBatchStream(options: CaseInsensitiveStringMap)
     BlockOffset(math.max(planned, math.min(head + 1, planned + blocksPerBatch)))
   }
 
-  /** I-3/I-6: contiguous runs of heights, fetched concurrently — up to
-    * `receiptConcurrency` heights per partition on the receipt path
-    * (one [[FetchPool]] wave of block calls), `logRangeSize` on the
-    * range path. The fetcher conf is snapshotted at planning time so
-    * every partition of the batch sees one consistent chain view. */
+  /** I-3/I-6: contiguous runs of heights, fetched concurrently — on
+    * the receipt path one run per task slot (⌈heights ÷
+    * `defaultParallelism`⌉ each), so a batch runs as one wave of tasks
+    * while each run's [[FetchPool]] still bounds its calls in flight;
+    * `logRangeSize` heights per run on the range path. The fetcher conf
+    * is snapshotted at planning time so every partition of the batch
+    * sees one consistent chain view. */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val conf = fetcherConf()
     val s0 = math.max(0L, start.asInstanceOf[BlockOffset].n - reorgLookback)
@@ -220,7 +223,8 @@ abstract class ChainMicroBatchStream(options: CaseInsensitiveStringMap)
     val e = end.asInstanceOf[BlockOffset].n
     planned = math.max(planned, e)
     val range = fetchStrategy == "range"
-    val step = if (range) logRangeSize else math.max(1L, receiptConcurrency.toLong)
+    val slots = SparkSession.active.sparkContext.defaultParallelism
+    val step = if (range) logRangeSize else math.max(1L, (e - s + slots - 1) / slots)
     (s until e by step).map(r0 => ChainRunPartition(r0, math.min(r0 + step, e) - 1,
       range, conf, maxRetries, baseBackoffMs, receiptConcurrency): InputPartition).toArray
   }

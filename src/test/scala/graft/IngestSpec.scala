@@ -391,4 +391,80 @@ class IngestSpec extends AnyFunSuite with SparkSpec {
       if (reader.isAlive) reader.interrupt()
     }
   }
+
+  /** Asserts the store holds `chain` exactly once: every height once
+    * with its hash and parent (so hash-linked when `chain` is), and
+    * exactly the chain's txs and logs at each height. */
+  private def assertStoreIs(store: ChainStore, chain: Seq[SimChain.SimBlock], step: String): Unit = {
+    val blocks = store.read("blocks").get
+      .select(col("block_number"), col("block_hash"), col("parent_hash"))
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq.sorted
+    assert(blocks == chain.map(b => (b.block_number, b.block_hash, b.parent_hash)).sorted,
+      s"$step: blocks")
+    blocks.sliding(2).foreach { case Seq(p, c) => assert(c._3 == p._2, s"$step: link at ${c._1}"); case _ => }
+    def keys(t: String, key: String): Seq[(Long, String)] = store.read(t).toSeq
+      .flatMap(_.select(col("block_number"), col(key).cast("string")).collect()
+        .map(r => (r.getLong(0), r.getString(1)))).sorted
+    assert(keys("transactions", "tx_hash") ==
+      chain.flatMap(b => b.transactions.map(t => (b.block_number, t.tx_hash))).sorted, s"$step: txs")
+    assert(keys("logs", "id") == chain.flatMap(b => b.transactions.flatMap(t => t.logs.map(l =>
+      (b.block_number, (b.block_number * 1000000 + t.tx_index_in_block * 1000 + l.log_index_in_tx).toString))))
+      .sorted, s"$step: logs")
+  }
+
+  test("an append of a 50-block batch into a store past 32 buckets runs at most 7 Spark jobs") {
+    val counter = new JobCounter(spark)
+    @volatile var appendJobs = -1
+    val root = Files.createTempDirectory("chainstore").toString
+    val store = new ChainStore(spark, root, bucketSize = 2) {
+      override def append(blocks: DataFrame, transactions: DataFrame, logs: DataFrame): Unit = {
+        val before = counter.settle()
+        super.append(blocks, transactions, logs)
+        appendJobs = counter.settle() - before
+      }
+    }
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      // 40 buckets per table: resolving a table root would list them
+      // with a Spark job (the discovery threshold is 32 paths)
+      StreamingIngester.processBatch(store, envelopes(SimChain.canonical(80)))
+      // 50 blocks reaching 6 below the tip, as the source's re-served
+      // lookback window does: every table has an overlap to anti-join
+      StreamingIngester.processBatch(store, envelopes(SimChain.blocks(74, 124)))
+    } finally spark.sparkContext.removeSparkListener(counter)
+    assert(appendJobs >= 0, "the append was not counted")
+    assert(appendJobs <= 7, s"store.append ran $appendJobs Spark jobs for one 50-block batch")
+    assertStoreIs(store, SimChain.canonical(124), "after the counted append")
+  }
+
+  test("replays over multi-file buckets, repeated envelopes and tx-less batches stay exactly-once") {
+    import org.apache.hadoop.fs.Path
+    val (store, root) = freshStore(bucketSize = 4)
+    val chain = SimChain.canonical(18)
+    // four appends before any compaction: buckets 0, 1 and 2 of every
+    // table each hold two files
+    Seq(0 -> 3, 3 -> 6, 6 -> 9, 9 -> 12).foreach { case (a, b) =>
+      StreamingIngester.processBatch(store, envelopes(chain.slice(a, b)))
+    }
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    for (t <- store.Tables; b <- Seq(1, 2))
+      assert(fs.listStatus(new Path(s"$root/$t/bucket=$b"))
+        .count(_.getPath.getName.endsWith(".parquet")) > 1, s"$t bucket $b holds one file")
+    assertStoreIs(store, chain.take(12), "four appends")
+    // a replay whose range straddles buckets 1 and 2
+    StreamingIngester.processBatch(store, envelopes(chain.slice(5, 11)))
+    assertStoreIs(store, chain.take(12), "replay of 5..10")
+    // the same envelope twice in one batch, half of it already stored
+    StreamingIngester.processBatch(store, envelopes(chain.slice(10, 13) ++ chain.slice(12, 14)))
+    assertStoreIs(store, chain.take(14), "batch with a repeated envelope")
+    // blocks without txs: the transactions and logs frames are empty
+    val bare = chain.slice(14, 16).map(_.copy(transactions = Seq.empty))
+    StreamingIngester.processBatch(store, envelopes(bare))
+    assertStoreIs(store, chain.take(14) ++ bare, "tx-less batch")
+    StreamingIngester.processBatch(store, envelopes(bare))
+    assertStoreIs(store, chain.take(14) ++ bare, "tx-less batch replayed")
+    StreamingIngester.processBatch(store, envelopes(chain.slice(16, 18)))
+    assertStoreIs(store, chain.take(14) ++ bare ++ chain.slice(16, 18), "append after the tx-less batch")
+    assert(store.lastSyncedBlock.contains(17L))
+  }
 }
