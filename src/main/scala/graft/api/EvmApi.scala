@@ -36,9 +36,11 @@ final case class TransactionInfo(
   * missing rows are `None` (its 400/404, `src/api.rs:65-74,342-346`);
   * only real failures throw (its 500).
   *
-  * Serving caveat (SURVEY §7.4): Spark job-launch latency makes a
-  * COLD lookup ~100 ms regardless of scan pruning — inherent to the
-  * engine choice. Repeats are a different story: the optional
+  * Serving caveat (SURVEY §7.4): a COLD point lookup is one Spark job
+  * that reads only the matching file's rows ([[Lookups]]), but the
+  * driver work around the job costs tens of milliseconds however well
+  * the scan prunes — inherent to the engine choice. Repeats are a
+  * different story: the optional
   * [[LookupCache]] (default-on in both factories) answers a repeated
   * point lookup in-process with zero Spark jobs, invalidating
   * wholesale whenever the backing store's mutation version moves

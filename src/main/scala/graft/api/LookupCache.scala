@@ -4,10 +4,11 @@ package graft.api
   * (`GET /block/{id}`, `GET /transaction/{hash}`).
   *
   * The reference serves these from PostgreSQL B-tree indexes in
-  * sub-millisecond time (`README.md:238`); Spark's job-launch overhead
-  * makes a cold lookup ~100 ms regardless of how well the scan prunes
-  * — inherent to the engine choice (SURVEY §7.4). What a serving
-  * process CAN match is the reference's behavior on the traffic that
+  * sub-millisecond time (`README.md:238`). A cold lookup here is one
+  * pruned Spark job, but the driver work around that job (planning,
+  * codegen, scheduling) costs tens of milliseconds however few bytes
+  * the scan reads — inherent to the engine choice (SURVEY §7.4). What
+  * a serving process CAN match is the reference's behavior on the traffic that
   * actually dominates a block explorer: repeated lookups of the same
   * recent keys. This memo answers a repeat in-process with ZERO Spark
   * jobs (spec-asserted via a job listener), while staying exactly as

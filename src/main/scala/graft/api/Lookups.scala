@@ -10,9 +10,19 @@ import org.apache.spark.sql.functions._
   * All lookups are `filter(key === v)` on a scan, never a
   * collect-then-search. A height filter is pushed to parquet and
   * prunes bucket directories and row groups (min/max on
-  * block_number). A hash lookup compares `lower(hash)`, which Spark
-  * does not push to parquet, so it reads every row group of the table
-  * and the key's bloom filter is not consulted.
+  * block_number). A hash lookup compares the raw stored hash with the
+  * lowercased identifier, so the equality is pushed to parquet too:
+  * each file's bloom filter on the key (written by
+  * [[graft.ingest.ChainStore]]) rules the file out before its rows
+  * are read. That needs lowercase stored hashes, which both sources
+  * write (the derived fixtures' `md5` hex, and
+  * [[graft.sources.JsonRpcFetcher]], which lowercases what the node
+  * sends, as the reference's `format!("{:#x}")` does).
+  *
+  * [[blockByIdentifier]] and [[txByHash]] carry no `limit(1)`: its
+  * incremental take runs a second job whenever the first partition
+  * misses, and the store keeps one row per key (one block per
+  * height), so the plan returns 0 or 1 rows without it.
   */
 object Lookups {
 
@@ -21,15 +31,15 @@ object Lookups {
     * 0-or-1-row plan; `None` if the identifier parses as neither. */
   def blockByIdentifier(blocks: DataFrame, identifier: String): Option[DataFrame] =
     if (identifier.startsWith("0x"))
-      Some(blocks.filter(lower(col("block_hash")) === identifier.toLowerCase).limit(1))
+      Some(blocks.filter(col("block_hash") === identifier.toLowerCase))
     else
-      identifier.toLongOption.map(n => blocks.filter(col("block_number") === n).limit(1))
+      identifier.toLongOption.map(n => blocks.filter(col("block_number") === n))
 
   /** Q-14: tx-hash validation (`0x` + 66 chars, `src/api.rs:342-346`)
     * then point filter. */
   def txByHash(transactions: DataFrame, hash: String): Option[DataFrame] =
     if (hash.startsWith("0x") && hash.length == 66)
-      Some(transactions.filter(lower(col("tx_hash")) === hash.toLowerCase).limit(1))
+      Some(transactions.filter(col("tx_hash") === hash.toLowerCase))
     else None
 
   /** Q-10: hash stored at a height (`src/db.rs:19-30`). The

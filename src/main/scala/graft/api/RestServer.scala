@@ -38,12 +38,12 @@ import org.apache.spark.sql.Row
   * Serving model: a fixed thread pool drives concurrent Spark actions
   * (SparkSession is thread-safe; each request is an independent job —
   * the serve-while-ingest path I-13 exercises exactly this). As with
-  * [[EvmApi]], a COLD lookup pays Spark job-launch latency (~100 ms);
-  * repeats are served by the facade's [[LookupCache]] memo with zero
-  * Spark jobs (measured over this HTTP layer: first `/block/42`
-  * ~400 ms, repeat ~12 ms — HTTP+JSON overhead only), invalidating on
-  * the store's mutation version so a reorg is visible on the next
-  * request.
+  * [[EvmApi]], a COLD point lookup runs one pruned Spark job; repeats
+  * are served by the facade's [[LookupCache]] memo with zero Spark
+  * jobs, invalidating on the store's mutation version so a reorg is
+  * visible on the next request. Responses go out with TCP_NODELAY
+  * (see [[start]]): without it every response, a memo hit included,
+  * waited ~40 ms for the client's delayed ACK.
   *
   * The facade is a provider, re-invoked per request: the reference
   * queries Postgres per request and so always sees the latest ingested
@@ -72,6 +72,12 @@ final class RestServer(apiProvider: () => EvmApi, port: Int, nThreads: Int) {
   /** Starts the server; returns the bound port (ephemeral when
     * constructed with port 0). */
   def start(): Int = {
+    // The JDK server writes a response's headers and body as two TCP
+    // segments with Nagle on, so the body waits for the client's
+    // delayed ACK (40 ms or more on Linux). It reads this property
+    // once per JVM, when the first server is created.
+    if (System.getProperty(RestServer.NoDelay) == null)
+      System.setProperty(RestServer.NoDelay, "true")
     server = HttpServer.create(new InetSocketAddress(port), 0)
     server.createContext("/", Router)
     pool = Executors.newFixedThreadPool(nThreads)
@@ -286,6 +292,8 @@ final class RestServer(apiProvider: () => EvmApi, port: Int, nThreads: Int) {
 }
 
 object RestServer {
+  private val NoDelay = "sun.net.httpserver.nodelay"
+
   /** Serve the derived fixture tables — `runMain graft.api.RestServer
     * [sfDir] [port]`. */
   def main(args: Array[String]): Unit = {

@@ -49,7 +49,7 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
     * round-trips. The in-memory map is a write-through cache loaded
     * lazily from the marker directory; markers are written before the
     * data they cover (a crash between the two leaves a stale marker,
-    * which [[compact]] skips harmlessly via its nFiles>1 check, never
+    * which [[compact]] skips harmlessly via its more-than-one-file check, never
     * a missed one). */
   private val dirtyBuckets =
     scala.collection.mutable.Map.empty[String, scala.collection.mutable.Set[Long]]
@@ -350,7 +350,9 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
     * replayed batch writes nothing twice.
     *
     * The cost is O(batch), never O(store):
-    *  - one Spark job, one task, collects every table's height range;
+    *  - one Spark job, one task, collects every table's height range
+    *    and its largest bucket's row count, which sizes the key bloom
+    *    filters (see [[keyBloom]]);
     *  - the stored keys to anti-join against are read from an explicit
     *    file list — the `.parquet` files of the bucket directories at
     *    or above the batch's lowest bucket, listed on the driver — so
@@ -375,14 +377,19 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
                          logs: DataFrame): Unit = {
     val dfs = Seq("blocks" -> blocks, "transactions" -> transactions, "logs" -> logs)
     dfs.foreach { case (t, _) => ensureRecovered(t) }
-    // in-batch dedup changes neither bound, so the raw frames serve
-    val ranges: Map[String, (Long, Long)] = dfs
+    // per (table, bucket): in-batch dedup moves neither height bound,
+    // and a bucket's incoming rows bound the rows of the file it gets
+    val perBucket = dfs
       .map { case (t, df) => df.select(lit(t).as("t"), col("block_number")) }
       .reduce(_ unionByName _).coalesce(1)
-      .groupBy("t").agg(min("block_number"), max("block_number")).collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+      .groupBy(col("t"), expr(s"block_number div $bucketSize"))
+      .agg(min("block_number"), max("block_number"), count(lit(1))).collect()
+    val ranges: Map[String, (Long, Long, Long)] =
+      perBucket.groupBy(_.getString(0)).map { case (t, rs) =>
+        t -> ((rs.map(_.getLong(2)).min, rs.map(_.getLong(3)).max, rs.map(_.getLong(4)).max))
+      }
     dfs.foreach { case (t, incoming) =>
-      ranges.get(t).foreach { case (lo, hi) =>
+      ranges.get(t).foreach { case (lo, hi, maxRows) =>
         markDirty(t, lo, hi)
         val key = keyOf(t)
         // one partition: the aggregate needs no exchange, and the small
@@ -405,15 +412,36 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
         // is the same.
         withBucket(fresh)
           .sortWithinPartitions(col("bucket"), col("block_number"), col(key))
-          .write.mode(SaveMode.Append)
-          // bloom filter on the idempotency/lookup key, for readers that
-          // push an equality on the raw key; the anti-join and the
-          // `lower(hash)` point lookups (Q-13/Q-14) never consult it
-          .option(s"parquet.bloom.filter.enabled#$key", "true")
+          .write.mode(SaveMode.Append).options(keyBloom(key, maxRows))
           .partitionBy("bucket").parquet(tablePath(t))
       }
     }
   }
+
+  /** Write options for a bloom filter on the table's key, sized for
+    * `maxRows` distinct keys per file. Without a size parquet writes a
+    * 1 MiB filter into every file, ~40× the bytes of the rows a
+    * 100-block bucket holds.
+    * The point lookups ([[graft.api.Lookups]]) push their hash equality
+    * to parquet, which reads this filter to skip a file; the append's
+    * anti-join does not use it. */
+  private def keyBloom(key: String, maxRows: Long): Map[String, String] = Map(
+    s"parquet.bloom.filter.enabled#$key" -> "true",
+    s"parquet.bloom.filter.expected.ndv#$key" -> math.max(1L, maxRows).toString)
+
+  /** Rows in the given parquet files, from their footers alone: read on
+    * the driver, no Spark job. */
+  private def footerRows(files: Seq[Path]): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    files.map { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
+      try r.getRecordCount finally r.close()
+    }.sum
+  }
+
+  private def parquetFiles(dir: Path): Seq[Path] =
+    fs.listStatus(dir).map(_.getPath).filter(_.getName.endsWith(".parquet")).toSeq
 
   /** The `.parquet` files of a table's bucket directories numbered
     * `fromBucket` or above, listed on the driver. */
@@ -422,8 +450,7 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
     else fs.listStatus(new Path(tablePath(table))).map(_.getPath)
       .filter(p => p.getName.startsWith("bucket=") &&
         p.getName.stripPrefix("bucket=").toLong >= fromBucket)
-      .flatMap(fs.listStatus(_).map(_.getPath))
-      .filter(_.getName.endsWith(".parquet")).map(_.toString).toSeq
+      .toSeq.flatMap(parquetFiles).map(_.toString)
 
   /** Q-21 / I-10: delete every row with `block_number >= forkHeight`
     * across all tables, children first (`src/db.rs:34-50`). */
@@ -453,7 +480,9 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
             val tmp = new Path(dir, s".tmp-rollback-bucket-$b")
             if (kept.isEmpty) fs.delete(p, true)
             else {
-              kept.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+              kept.write.mode(SaveMode.Overwrite)
+                .options(keyBloom(keyOf(t), footerRows(parquetFiles(p))))
+                .parquet(tmp.toString)
               swapBucket(dir, p, tmp)
             }
           }
@@ -469,8 +498,10 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
   /** Small-file compaction: every micro-batch append leaves one file
     * per bucket it touched, so a bucket ingested across B cycles holds
     * B small files — the classic streaming-sink problem at scale.
-    * Rewrites multi-file buckets into one sorted, bloom-filtered file
-    * via temp-write-then-swap (crash-safe, see [[swapBucket]]).
+    * Rewrites multi-file buckets into one sorted file via
+    * temp-write-then-swap (crash-safe, see [[swapBucket]]), with a key
+    * bloom filter sized by the row counts in the input files' footers
+    * (no Spark job: compaction keeps every row).
     *
     * Only buckets appended to since their last compaction are visited
     * (the persisted dirty set, which survives process restarts): any
@@ -501,16 +532,13 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
       }
       buckets.foreach { b =>
         val p = new Path(dir, s"bucket=$b")
-        val nFiles = if (fs.exists(p))
-          fs.listStatus(p).count(s => s.getPath.getName.endsWith(".parquet"))
-        else 0
-        if (nFiles > 1) {
+        val files = if (fs.exists(p)) parquetFiles(p) else Seq.empty
+        if (files.size > 1) {
           val rows = spark.read.parquet(p.toString)
           val tmp = new Path(dir, s".tmp-compact-${p.getName}")
           rows.coalesce(1)
             .sortWithinPartitions(col("block_number"), col(key))
-            .write.mode(SaveMode.Overwrite)
-            .option(s"parquet.bloom.filter.enabled#$key", "true")
+            .write.mode(SaveMode.Overwrite).options(keyBloom(key, footerRows(files)))
             .parquet(tmp.toString)
           swapBucket(dir, p, tmp)
         }

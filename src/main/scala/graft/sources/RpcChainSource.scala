@@ -165,6 +165,13 @@ class JsonRpcFetcher(conf: RpcFetcherConf) extends ChainFetcher {
         s"malformed RPC field '$field': ${String.valueOf(n)}")
     else n.asText()
 
+  /** A hash field, lowercased. Nodes send lowercase hex, but the wire
+    * does not require it; the store and its point lookups compare
+    * hashes raw (so the equality reaches each file's bloom filter), and
+    * the reference stores `format!("{:#x}")`, which is lowercase. */
+  private def hash(n: JsonNode, field: String): String =
+    req(n, field).toLowerCase(java.util.Locale.ROOT)
+
   /** An OPTIONAL wire field (nullable on the wire — tx `to`, receipt
     * `status`): absent/null → None, present-but-wrong-type → throw. */
   private def opt(n: JsonNode, field: String): Option[String] =
@@ -178,7 +185,7 @@ class JsonRpcFetcher(conf: RpcFetcherConf) extends ChainFetcher {
     if (isNull(r)) None
     else {
       val txs = iter(r.get("transactions")).map { t =>
-        WireTx(req(t.get("hash"), "tx.hash"),
+        WireTx(hash(t.get("hash"), "tx.hash"),
           hexToLong(req(t.get("transactionIndex"), "tx.transactionIndex")),
           req(t.get("from"), "tx.from"),
           opt(t.get("to"), "tx.to").orNull, // contract creation: to == null
@@ -186,8 +193,8 @@ class JsonRpcFetcher(conf: RpcFetcherConf) extends ChainFetcher {
           hexToDec(req(t.get("gas"), "tx.gas")))
       }
       Some(WireBlock(hexToLong(req(r.get("number"), "block.number")),
-        req(r.get("hash"), "block.hash"),
-        req(r.get("parentHash"), "block.parentHash"),
+        hash(r.get("hash"), "block.hash"),
+        hash(r.get("parentHash"), "block.parentHash"),
         hexToLong(req(r.get("timestamp"), "block.timestamp")), txs))
     }
   }
@@ -217,8 +224,8 @@ class JsonRpcFetcher(conf: RpcFetcherConf) extends ChainFetcher {
       s"""[{"fromBlock":"${longToHex(from)}","toBlock":"${longToHex(to)}"}]""")
     iter(r).map { l =>
       WireRangeLog(hexToLong(req(l.get("blockNumber"), "log.blockNumber")),
-        req(l.get("blockHash"), "log.blockHash"),
-        req(l.get("transactionHash"), "log.transactionHash"),
+        hash(l.get("blockHash"), "log.blockHash"),
+        hash(l.get("transactionHash"), "log.transactionHash"),
         hexToLong(req(l.get("logIndex"), "log.logIndex")),
         req(l.get("address"), "log.address"),
         iter(l.get("topics")).map(tn => req(tn, "log.topic")),
@@ -246,7 +253,7 @@ class JsonRpcFetcher(conf: RpcFetcherConf) extends ChainFetcher {
       }
     if (isNull(r)) Some(Map.empty)
     else Some(iter(r).map { rc =>
-      req(rc.get("transactionHash"), "receipt.transactionHash") ->
+      hash(rc.get("transactionHash"), "receipt.transactionHash") ->
         opt(rc.get("status"), "receipt.status").map(hexToLong)
     }.toMap)
   }

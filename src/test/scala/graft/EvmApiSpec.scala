@@ -193,6 +193,55 @@ class EvmApiSpec extends AnyFunSuite with SparkSpec {
       page.logs.map(_.getAs[Long]("id")).toSeq.sorted)
   }
 
+  test("a cold hash lookup past 32 buckets runs one Spark job and reads under a tenth of its table") {
+    import spark.implicits._
+    // 33 buckets of 400 blocks: each file is large beside the few KB a
+    // lookup reads to rule it out (its footer and key bloom filter)
+    val root = Files.createTempDirectory("apiprune").toString
+    val store = new ChainStore(spark, root, bucketSize = 400)
+    val chain = SimChain.canonical(13200)
+    StreamingIngester.processBatch(store, chain.toDF())
+    val api = EvmApi.onStore(store).get // resolves the frames: listing and footer jobs
+    def tableBytes(t: String): Long =
+      new java.io.File(root, t).listFiles().filter(_.getName.startsWith("bucket="))
+        .flatMap(_.listFiles()).filter(_.getName.endsWith(".parquet")).map(_.length).sum
+    val jobs = new JobCounter(spark)
+    // task bytesRead counts the footer and bloom filter reads but not
+    // parquet's vectored (asynchronous) column chunk reads, so the rows
+    // the scan returns are counted too
+    val bytesRead, rowsRead = new java.util.concurrent.atomic.AtomicLong()
+    val reads = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach { m =>
+          bytesRead.addAndGet(m.inputMetrics.bytesRead)
+          rowsRead.addAndGet(m.inputMetrics.recordsRead)
+        }
+    }
+    /** (answer, Spark jobs, bytes read, rows read) of one call. */
+    def measured[T](lookup: => T): (T, Int, Long, Long) = {
+      val (j0, b0, r0) = (jobs.settle(), bytesRead.get, rowsRead.get)
+      val answer = lookup
+      (answer, jobs.settle() - j0, bytesRead.get - b0, rowsRead.get - r0)
+    }
+    def mixedCase(h: String) = h.take(34) + h.drop(34).toUpperCase
+    val block = chain(6600)
+    val tx = block.transactions.head
+    Seq(jobs, reads).foreach(spark.sparkContext.addSparkListener)
+    val ((t, tJobs, tBytes, tRows), (b, bJobs, bBytes, bRows)) =
+      try (measured(api.transaction(mixedCase(tx.tx_hash))),
+           measured(api.block(mixedCase(block.block_hash))))
+      finally Seq(jobs, reads).foreach(spark.sparkContext.removeSparkListener)
+    assert(t.map(_.txHash).contains(tx.tx_hash) && b.map(_.blockNumber).contains(block.block_number))
+    assert(tJobs == 1 && bJobs == 1, s"tx lookup ran $tJobs Spark jobs, block lookup $bJobs")
+    val txRows = chain.map(_.transactions.size).sum
+    assert(tRows < txRows / 10, s"tx lookup read $tRows of $txRows rows")
+    assert(bRows < chain.size / 10, s"block lookup read $bRows of ${chain.size} rows")
+    assert(tBytes < tableBytes("transactions") / 10,
+      s"tx lookup read $tBytes of ${tableBytes("transactions")} bytes")
+    assert(bBytes < tableBytes("blocks") / 10,
+      s"block lookup read $bBytes of ${tableBytes("blocks")} bytes")
+  }
+
   test("a warm provider call over an unchanged store runs zero Spark jobs; an append is seen next call") {
     import spark.implicits._
     val store = new ChainStore(spark, Files.createTempDirectory("apiwarm").toString, 10)

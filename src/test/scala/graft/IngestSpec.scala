@@ -437,6 +437,43 @@ class IngestSpec extends AnyFunSuite with SparkSpec {
     assertStoreIs(store, SimChain.canonical(124), "after the counted append")
   }
 
+  test("appended and compacted files stay small and keep a bloom filter on their key") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import scala.jdk.CollectionConverters._
+    val (store, root) = freshStore(bucketSize = 20)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val keyOf = Map("blocks" -> "block_hash", "transactions" -> "tx_hash", "logs" -> "id")
+    def files(t: String): Seq[Path] = {
+      val dir = new Path(s"$root/$t")
+      val fs = dir.getFileSystem(conf)
+      fs.listStatus(dir).toSeq.filter(_.getPath.getName.startsWith("bucket="))
+        .flatMap(b => fs.listStatus(b.getPath).toSeq)
+        .filter(_.getPath.getName.endsWith(".parquet")).map(_.getPath)
+    }
+    def assertSmallWithBloom(when: String): Unit =
+      for (t <- store.Tables; f <- files(t)) {
+        val len = f.getFileSystem(conf).getFileStatus(f).getLen
+        assert(len < 64 * 1024, s"$when: $f is $len bytes")
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+        val chunks = try reader.getFooter.getBlocks.asScala.toSeq finally reader.close()
+        assert(chunks.nonEmpty && chunks.forall(_.getColumns.asScala.exists(c =>
+          c.getPath.toDotString == keyOf(t) && c.getBloomFilterOffset >= 0)),
+          s"$when: $f has no bloom filter on ${keyOf(t)}")
+      }
+    val chain = SimChain.canonical(100)
+    // 50 blocks over three buckets, the last one half full
+    StreamingIngester.processBatch(store, envelopes(chain.take(50)))
+    assertSmallWithBloom("after a 50-block append")
+    StreamingIngester.processBatch(store, envelopes(chain.drop(50)))
+    assert(files("blocks").count(_.getParent.getName == "bucket=2") == 2, "bucket 2 holds two files")
+    store.Tables.foreach(store.compact)
+    assert(files("blocks").count(_.getParent.getName == "bucket=2") == 1, "bucket 2 was not compacted")
+    assertSmallWithBloom("after compaction")
+    assertStoreIs(store, chain, "after compaction")
+  }
+
   test("replays over multi-file buckets, repeated envelopes and tx-less batches stay exactly-once") {
     import org.apache.hadoop.fs.Path
     val (store, root) = freshStore(bucketSize = 4)

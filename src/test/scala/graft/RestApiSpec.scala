@@ -315,6 +315,23 @@ class RestApiSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll {
     (0 until 8).foreach(walkOnce)
   }
 
+  test("keep-alive responses go out at once, not after the client's delayed ACK") {
+    // in a child JVM: the JDK reads the server's nodelay property once,
+    // when its first server is created, and other suites create theirs
+    val proc = new ProcessBuilder(s"${System.getProperty("java.home")}/bin/java", "-Xmx128m",
+      "-cp", System.getProperty("java.class.path"), "graft.RestLatencyProbe")
+      .redirectErrorStream(true).start()
+    val out =
+      try {
+        assert(proc.waitFor(60, java.util.concurrent.TimeUnit.SECONDS), "the probe JVM did not exit")
+        new String(proc.getInputStream.readAllBytes(), "UTF-8")
+      } finally proc.destroyForcibly(): Unit
+    val median = "median_ms=([0-9.]+)".r.findFirstMatchIn(out).map(_.group(1).toDouble)
+    assert(median.isDefined, s"no median in the probe's output: $out")
+    // a stalled response waits 40 ms or more
+    assert(median.get < 20.0, s"median GET / over keep-alive took ${median.get} ms")
+  }
+
   test("Json codec round-trips escapes, unicode, nested structures") {
     val v = Map("a" -> List(1L, -2L, 3.5), "s" -> "q\"\\\n\tüñ", "b" -> true,
       "n" -> null)
@@ -328,5 +345,24 @@ class RestApiSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll {
     // StackOverflowError on the handler thread
     intercept[JsonParseException](Json.parse("[" * 100000))
     assert(Json.parse("[" * 50 + "]" * 50) != null) // within the bound
+  }
+}
+
+/** Serves `GET /` from a [[RestServer]] with no Spark session and
+  * prints the median latency of 20 requests over one keep-alive
+  * connection: `runMain graft.RestLatencyProbe` (test classpath). */
+object RestLatencyProbe {
+  def main(args: Array[String]): Unit = {
+    val server = new RestServer(() => throw new IllegalStateException("GET / reads no tables"), 0, 2)
+    val url = java.net.URI.create(s"http://127.0.0.1:${server.start()}/").toURL
+    try {
+      val ms = Seq.fill(20) {
+        val t0 = System.nanoTime()
+        val in = url.openConnection().getInputStream
+        try in.readAllBytes() finally in.close()
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      println(s"median_ms=${(ms(9) + ms(10)) / 2}")
+    } finally server.stop()
   }
 }

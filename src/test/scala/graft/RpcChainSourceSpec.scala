@@ -289,6 +289,44 @@ class RpcChainSourceSpec extends AnyFunSuite with SparkSpec {
         s"table $table must equal the chain")
   }
 
+  test("hashes a node sends in upper case are stored lowercase and found by a mixed-case identifier") {
+    val headFile = Files.createTempFile("rpc-head-case", ".txt").toString
+    SimChainSource.writeHeadFile(headFile, 11, None)
+    val node = new StubRpcNode(headFile, upperCaseHashes = true)
+    val store = new ChainStore(spark,
+      Files.createTempDirectory("rpc-store-case").toString, bucketSize = 4)
+    val checkpoint = Files.createTempDirectory("rpc-ckpt-case").toString
+    val chain = SimChain.canonical(12)
+    try {
+      // the receipt path: block, parent and tx hashes
+      val f = RpcFetcherConf(node.url).open()
+      try chain.foreach(b => assert(ChainFetch.envelope(f, b.block_number, 3, 5, 10).contains(b)))
+      finally f.close()
+      // the range path adds the log and block-receipt hash fields
+      val envelopes = spark.readStream.format("graft-rpcchain")
+        .option("rpcUrl", node.url)
+        .option("fetchStrategy", "range")
+        .option("blocksPerBatch", 6)
+        .option("baseBackoffMs", 5)
+        .load()
+      val query = StreamingIngester.start(envelopes, store, checkpoint,
+        trigger = Trigger.ProcessingTime("50 milliseconds"))
+      try query.processAllAvailable() finally query.stop()
+    } finally node.close()
+    assert(store.lastSyncedBlock.contains(11L))
+    for ((table, cols) <- Seq("blocks" -> Seq("block_hash", "parent_hash"),
+                              "transactions" -> Seq("tx_hash", "block_hash"),
+                              "logs" -> Seq("block_hash", "transaction_hash")); c <- cols) {
+      val hashes = store.read(table).get.select(c).collect().map(_.getString(0))
+      assert(hashes.nonEmpty && hashes.forall(h => h == h.toLowerCase), s"$table.$c holds upper-case hex")
+    }
+    val api = graft.api.EvmApi.onStore(store).get
+    def mixedCase(h: String) = h.take(34) + h.drop(34).toUpperCase
+    val tx = chain.flatMap(_.transactions).last
+    assert(api.block(mixedCase(chain(7).block_hash)).map(_.blockNumber).contains(7L))
+    assert(api.transaction(mixedCase(tx.tx_hash)).map(_.txHash).contains(tx.tx_hash))
+  }
+
   test("stopping the query mid-fetch leaves no fetch-pool thread alive") {
     import scala.jdk.CollectionConverters._
     def fetchThreads: Set[String] = Thread.getAllStackTraces.keySet.asScala

@@ -29,6 +29,10 @@ import graft.sources.{ChainFetch, SimChainSource}
   *  - heights in `missingBlocks` answer `result: null` (skip path);
   *    heights in `receiptlessBlocks` answer `result: null` for every
   *    receipt (status=null + no logs downstream).
+  *  - `upperCaseHashes`: every block, parent, tx and log hash goes out
+  *    as upper-case hex after the `0x` (the wire allows either case),
+  *    and receipt requests match a tx hash in any case, as a node's
+  *    hex parser does.
   *
   * Load shape: every call sleeps `callDelayMs` before answering (0 =
   * answer at once), standing in for network and node time, and
@@ -46,7 +50,8 @@ class StubRpcNode(headFile: String,
                   missingBlocks: Set[Long] = Set.empty,
                   receiptlessBlocks: Set[Long] = Set.empty,
                   supportsBlockReceipts: Boolean = true,
-                  callDelayMs: Long = 0L) extends AutoCloseable {
+                  callDelayMs: Long = 0L,
+                  upperCaseHashes: Boolean = false) extends AutoCloseable {
 
   private val mapper = new ObjectMapper()
   private val blockAttempts = new ConcurrentHashMap[Long, Integer]()
@@ -120,7 +125,7 @@ class StubRpcNode(headFile: String,
           else respond(ex, result(id, blockJson(n, forkAt)))
         }
       case "eth_getTransactionReceipt" =>
-        val h = params.get(0).asText()
+        val h = params.get(0).asText().toLowerCase
         txIndex.get(h) match {
           case null => respond(ex, result(id, "null"))
           case (height, _) if flakyReceiptBlocks(height) &&
@@ -148,7 +153,7 @@ class StubRpcNode(headFile: String,
         else {
           val rcs = SimChain.blockOn(n, forkAt).transactions.map { t =>
             val status = t.status.map(s => q(ChainFetch.longToHex(s))).getOrElse("null")
-            s"""{"transactionHash":${q(t.tx_hash)},"status":$status}"""
+            s"""{"transactionHash":${q(hash(t.tx_hash))},"status":$status}"""
           }
           respond(ex, result(id, rcs.mkString("[", ",", "]")))
         }
@@ -171,6 +176,8 @@ class StubRpcNode(headFile: String,
 
   private def q(s: String) = "\"" + s + "\""
 
+  private def hash(h: String) = if (upperCaseHashes) "0x" + h.drop(2).toUpperCase else h
+
   /** Wire-encode one sim block the way eth_getBlockByNumber(full_tx)
     * does: quantities as 0x-hex (number, timestamp, value, gas,
     * transactionIndex), hashes/addresses as 0x-hex strings. Receipts
@@ -179,12 +186,12 @@ class StubRpcNode(headFile: String,
     val b = SimChain.blockOn(n, forkAt)
     val txs = b.transactions.map { t =>
       txIndex.put(t.tx_hash, (n, receiptJson(t)))
-      s"""{"hash":${q(t.tx_hash)},"transactionIndex":${q(ChainFetch.longToHex(t.tx_index_in_block))},""" +
+      s"""{"hash":${q(hash(t.tx_hash))},"transactionIndex":${q(ChainFetch.longToHex(t.tx_index_in_block))},""" +
         s""""from":${q(t.from_address)},"to":${q(t.to_address)},""" +
         s""""value":${q(ChainFetch.decToHex(t.value))},"gas":${q(ChainFetch.decToHex(t.gas_used))}}"""
     }.mkString("[", ",", "]")
-    s"""{"number":${q(ChainFetch.longToHex(b.block_number))},"hash":${q(b.block_hash)},""" +
-      s""""parentHash":${q(b.parent_hash)},"timestamp":${q(ChainFetch.longToHex(b.timestamp))},""" +
+    s"""{"number":${q(ChainFetch.longToHex(b.block_number))},"hash":${q(hash(b.block_hash))},""" +
+      s""""parentHash":${q(hash(b.parent_hash))},"timestamp":${q(ChainFetch.longToHex(b.timestamp))},""" +
       s""""transactions":$txs}"""
   }
 
@@ -201,8 +208,8 @@ class StubRpcNode(headFile: String,
         blockIdx += 1
         val topics = (Seq(l.topic0) ++ l.topic1 ++ l.topic2 ++ l.topic3)
           .map(q).mkString("[", ",", "]")
-        s"""{"blockNumber":${q(ChainFetch.longToHex(n))},"blockHash":${q(b.block_hash)},""" +
-          s""""transactionHash":${q(t.tx_hash)},"logIndex":${q(ChainFetch.longToHex(blockIdx))},""" +
+        s"""{"blockNumber":${q(ChainFetch.longToHex(n))},"blockHash":${q(hash(b.block_hash))},""" +
+          s""""transactionHash":${q(hash(t.tx_hash))},"logIndex":${q(ChainFetch.longToHex(blockIdx))},""" +
           s""""address":${q(l.contract_address)},"topics":$topics,"data":${q(l.data)},"removed":false}"""
       }
     }
