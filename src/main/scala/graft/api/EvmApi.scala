@@ -39,22 +39,39 @@ final case class TransactionInfo(
   * Serving caveat (SURVEY §7.4): a COLD point lookup is one Spark job
   * that reads only the matching file's rows ([[Lookups]]), but the
   * driver work around the job costs tens of milliseconds however well
-  * the scan prunes — inherent to the engine choice. Repeats are a
-  * different story: the optional
-  * [[LookupCache]] (default-on in both factories) answers a repeated
-  * point lookup in-process with zero Spark jobs, invalidating
-  * wholesale whenever the backing store's mutation version moves
-  * (append or reorg rollback — a rollback can change the answer at an
-  * existing height, so per-key invalidation would be wrong).
+  * the scan prunes — inherent to the engine choice. Two in-process
+  * tiers avoid the job:
+  *  - over a store, the [[HotTail]] holds the rows of the store's two
+  *    newest buckets, so a lookup of a block or tx there (or of a
+  *    height above the tip) runs no Spark job, cold or not;
+  *  - the optional [[LookupCache]] (default-on in every factory)
+  *    answers a repeated point lookup with zero Spark jobs. A lookup it
+  *    misses asks the tail, then the scan, so its hit and miss counts
+  *    do not depend on the tail.
+  *
+  * Both are stamped with the backing store's mutation version and stop
+  * answering when it moves (append or reorg rollback — a rollback can
+  * change the answer at an existing height, so per-key invalidation
+  * would be wrong).
   */
-final class EvmApi(blocks: DataFrame, transactions: DataFrame, logs: DataFrame,
-                   cache: Option[LookupCache] = None) {
+final class EvmApi private[api] (blocks: DataFrame, transactions: DataFrame, logs: DataFrame,
+                                 cache: Option[LookupCache],
+                                 private[graft] val hotTail: Option[HotTail]) {
+
+  /** A facade over fixed frames, with no hot tail. */
+  def this(blocks: DataFrame, transactions: DataFrame, logs: DataFrame,
+           cache: Option[LookupCache] = None) =
+    this(blocks, transactions, logs, cache, None)
 
   private def memo[T](kind: String, key: String)(compute: => T): T =
     cache match {
       case Some(c) => c.getOrCompute(kind, key)(compute)
       case None => compute
     }
+
+  /** The tail's row when it decides the key, else the scan's. */
+  private def rowOf(fromTail: HotTail => Option[Option[Row]], scan: => DataFrame): Option[Row] =
+    hotTail.flatMap(fromTail).getOrElse(scan.collect().headOption)
 
   /** `GET /stats` (`src/api.rs:242-267`). */
   def stats(): IndexerStats = {
@@ -86,18 +103,9 @@ final class EvmApi(blocks: DataFrame, transactions: DataFrame, logs: DataFrame,
   def block(identifier: String): Option[BlockInfo] = {
     val id = if (identifier.startsWith("0x")) identifier.toLowerCase else identifier
     memo("block", id) {
-    Lookups.blockByIdentifier(blocks, id)
-      .flatMap(_.collect().headOption).map { r =>
-        def get[T](name: String): Option[T] =
-          if (!r.schema.fieldNames.contains(name) || r.isNullAt(r.fieldIndex(name))) None
-          else Some(r.getAs[T](name))
-        BlockInfo(
-          r.getAs[Long]("block_number"), r.getAs[String]("block_hash"),
-          r.getAs[String]("parent_hash"), r.getAs[Long]("timestamp"),
-          get[String]("miner"), get[String]("gas_used"),
-          get[String]("gas_limit"), get[String]("base_fee_per_gas"),
-          get[Long]("tx_count"))
-      }
+      Lookups.blockKey(id)
+        .flatMap(k => rowOf(_.block(k), Lookups.blockByKey(blocks, k)))
+        .map(EvmApi.blockInfo)
     }
   }
 
@@ -109,25 +117,40 @@ final class EvmApi(blocks: DataFrame, transactions: DataFrame, logs: DataFrame,
   def transaction(txHash: String): Option[TransactionInfo] = {
     val id = if (txHash.startsWith("0x")) txHash.toLowerCase else txHash
     memo("tx", id) {
-    Lookups.txByHash(transactions, id)
-      .flatMap(_.collect().headOption).map { r =>
-        def get[T](name: String): Option[T] =
-          if (!r.schema.fieldNames.contains(name) || r.isNullAt(r.fieldIndex(name))) None
-          else Some(r.getAs[T](name))
-        TransactionInfo(
-          r.getAs[String]("tx_hash"), r.getAs[Long]("block_number"),
-          r.getAs[String]("block_hash"), get[Long]("tx_index_in_block"),
-          r.getAs[String]("from_address"), get[String]("to_address"),
-          r.getAs[String]("value"), get[String]("gas_used"),
-          get[String]("gas_limit"), get[String]("gas_price"),
-          get[String]("max_fee_per_gas"), get[String]("max_priority_fee_per_gas"),
-          get[String]("input_data"), get[Long]("nonce"), get[Long]("status"))
-      }
+      Lookups.txKey(id)
+        .flatMap(k => rowOf(_.tx(k), Lookups.txByKey(transactions, k)))
+        .map(EvmApi.transactionInfo)
     }
   }
 }
 
 object EvmApi {
+  /** A nullable or absent column as an Option: the sources differ in
+    * the columns they carry. */
+  private def get[T](r: Row, name: String): Option[T] =
+    if (!r.schema.fieldNames.contains(name) || r.isNullAt(r.fieldIndex(name))) None
+    else Some(r.getAs[T](name))
+
+  /** One stored `blocks` row, scanned or from the hot tail. */
+  private def blockInfo(r: Row): BlockInfo =
+    BlockInfo(
+      r.getAs[Long]("block_number"), r.getAs[String]("block_hash"),
+      r.getAs[String]("parent_hash"), r.getAs[Long]("timestamp"),
+      get[String](r, "miner"), get[String](r, "gas_used"),
+      get[String](r, "gas_limit"), get[String](r, "base_fee_per_gas"),
+      get[Long](r, "tx_count"))
+
+  /** One stored `transactions` row, scanned or from the hot tail. */
+  private def transactionInfo(r: Row): TransactionInfo =
+    TransactionInfo(
+      r.getAs[String]("tx_hash"), r.getAs[Long]("block_number"),
+      r.getAs[String]("block_hash"), get[Long](r, "tx_index_in_block"),
+      r.getAs[String]("from_address"), get[String](r, "to_address"),
+      r.getAs[String]("value"), get[String](r, "gas_used"),
+      get[String](r, "gas_limit"), get[String](r, "gas_price"),
+      get[String](r, "max_fee_per_gas"), get[String](r, "max_priority_fee_per_gas"),
+      get[String](r, "input_data"), get[Long](r, "nonce"), get[Long](r, "status"))
+
   /** Facade over the derived fixture tables — immutable source, so the
     * lookup memo never needs invalidating (version constant). */
   def onFixtures(spark: SparkSession, sfDir: String): EvmApi =
@@ -141,17 +164,22 @@ object EvmApi {
     * side of the reference's concurrent ingest+serve design (I-13).
     * The lookup memo invalidates on the store's in-process mutation
     * version, so a reorg rollback is visible on the very next
-    * request. */
+    * request. It builds the store's [[HotTail]] (two Spark jobs). */
   def onStore(store: graft.ingest.ChainStore): Option[EvmApi] =
-    onStoreWith(store, new LookupCache(version = () => store.mutationCount))
+    onStoreWith(store, new LookupCache(version = () => store.mutationCount),
+      new HotTail.Slot(store))
 
-  private def onStoreWith(store: graft.ingest.ChainStore,
-                          cache: LookupCache): Option[EvmApi] =
+  private def onStoreWith(store: graft.ingest.ChainStore, cache: LookupCache,
+                          tails: HotTail.Slot): Option[EvmApi] = {
+    // read before the frames resolve: a tail built from frames that a
+    // mutation has since changed carries the older version
+    val version = store.mutationCount
     for {
       b <- store.read("blocks")
       t <- store.read("transactions")
       l <- store.read("logs")
-    } yield new EvmApi(b, t, l, Some(cache))
+    } yield new EvmApi(b, t, l, Some(cache), tails.at(version, b, t))
+  }
 
   /** The live-serving provider for [[RestServer]]: a facade per
     * request over the store's current frames, sharing ONE
@@ -163,13 +191,18 @@ object EvmApi {
     * on every request. Either way appends and rollback rewrites are
     * visible on the next request. Without the shared memo,
     * per-request facades would each allocate a cold cache and the
-    * repeat-lookup win would never materialize. Throws if the store
-    * has no tables yet — serve after the first committed batch, like
-    * the reference's API server over an initialized schema. */
+    * repeat-lookup win would never materialize. The provider shares
+    * one [[HotTail]] the same way: the first call at each mutation
+    * version builds it (two Spark jobs, single-flight) and later calls
+    * reuse it, so no lookup pays for it. Throws if the store has no
+    * tables yet — serve after the first committed batch, like the
+    * reference's API server over an initialized schema. */
   def providerOnStore(store: graft.ingest.ChainStore,
-                      cache: LookupCache): () => EvmApi =
-    () => onStoreWith(store, cache).getOrElse(
+                      cache: LookupCache): () => EvmApi = {
+    val tails = new HotTail.Slot(store)
+    () => onStoreWith(store, cache, tails).getOrElse(
       throw new IllegalStateException("chain store has no tables yet"))
+  }
 
   def providerOnStore(store: graft.ingest.ChainStore): () => EvmApi =
     providerOnStore(store, new LookupCache(version = () => store.mutationCount))

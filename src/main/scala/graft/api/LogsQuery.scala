@@ -96,10 +96,16 @@ object LogsQuery {
     hashOrRange ++ rest ++ cursor
   }
 
-  /** Build the full page plan (unexecuted). */
+  /** Build the full page plan (unexecuted). The predicates apply to the
+    * source frame before [[projection]]: over a
+    * [[graft.ingest.ChainStore]] frame, [[graft.plans.BucketPruneRule]]
+    * only sees a height bound on a Filter directly above the frame's
+    * marked `bucket` column, which the projection drops. Filtering
+    * first turns the block range into bucket `PartitionFilters`;
+    * projecting first opened every bucket of the table. */
   def plan(logs: DataFrame, f: GetLogsFilter): DataFrame = {
     val pageSize = clampPageSize(f.pageSize.getOrElse(DefaultPageSize))
-    val filtered = predicates(f).foldLeft(projection(logs))(_.filter(_))
+    val filtered = projection(predicates(f).foldLeft(logs)(_.filter(_)))
     // Q-7: stable total order for deterministic pagination
     // (`src/api.rs:174`).
     val sorted = filtered.orderBy(col("block_number").asc, col("id").asc)

@@ -25,11 +25,18 @@ package graft.api
   *    single most-repeated query an explorer serves, and it
   *    invalidates like everything else when the store advances.
   *
+  * Over a store, a miss does not always cost a Spark job: the facade
+  * asks the store's [[HotTail]] (the rows of its two newest buckets,
+  * stamped with the same mutation version) before it scans. The memo
+  * sits in front of the tail and counts a tail answer as a miss, so
+  * [[hits]] and [[misses]] mean the same with or without it.
+  *
   * In-process only, by design: the store's single-writer contract
   * means a co-located serving thread (the I-13 shape) sees every
   * mutation through [[graft.ingest.ChainStore.mutationCount]]; a
   * REMOTE reader process has no mutation signal and must serve
-  * uncached (pass no cache — correctness first).
+  * uncached (pass no cache — correctness first). For the same reason
+  * only a store that holds the writer lock builds a hot tail.
   */
 final class LookupCache(maxEntries: Int = 4096, version: () => Long = () => 0L) {
 

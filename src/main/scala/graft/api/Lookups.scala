@@ -23,24 +23,45 @@ import org.apache.spark.sql.functions._
   * incremental take runs a second job whenever the first partition
   * misses, and the store keeps one row per key (one block per
   * height), so the plan returns 0 or 1 rows without it.
+  *
+  * Over a store, [[EvmApi]] answers a key of the store's two newest
+  * buckets from its in-memory [[HotTail]] instead, with no Spark job.
+  * It parses the identifier with the same [[blockKey]] and [[txKey]],
+  * so both paths agree on which key an identifier names; every other
+  * key takes the scan here.
   */
 object Lookups {
 
-  /** Q-13: polymorphic identifier — `0x`-prefixed means hash (lowercased),
-    * otherwise parsed as a height (`src/api.rs:290-303`). Returns a
+  /** The key a block identifier names: `0x`-prefixed means a hash
+    * (lowercased), otherwise a height (`src/api.rs:290-303`); `None` if
+    * the identifier parses as neither. */
+  def blockKey(identifier: String): Option[Either[String, Long]] =
+    if (identifier.startsWith("0x")) Some(Left(identifier.toLowerCase))
+    else identifier.toLongOption.map(Right(_))
+
+  /** The 0-or-1-row plan for a key from [[blockKey]]. */
+  def blockByKey(blocks: DataFrame, key: Either[String, Long]): DataFrame = key match {
+    case Left(hash) => blocks.filter(col("block_hash") === hash)
+    case Right(n) => blocks.filter(col("block_number") === n)
+  }
+
+  /** Q-13: polymorphic identifier (see [[blockKey]]). Returns a
     * 0-or-1-row plan; `None` if the identifier parses as neither. */
   def blockByIdentifier(blocks: DataFrame, identifier: String): Option[DataFrame] =
-    if (identifier.startsWith("0x"))
-      Some(blocks.filter(col("block_hash") === identifier.toLowerCase))
-    else
-      identifier.toLongOption.map(n => blocks.filter(col("block_number") === n))
+    blockKey(identifier).map(blockByKey(blocks, _))
 
-  /** Q-14: tx-hash validation (`0x` + 66 chars, `src/api.rs:342-346`)
-    * then point filter. */
+  /** Q-14: tx-hash validation (`0x` + 66 chars, `src/api.rs:342-346`);
+    * the lowercased hash, or `None` for an invalid one. */
+  def txKey(hash: String): Option[String] =
+    if (hash.startsWith("0x") && hash.length == 66) Some(hash.toLowerCase) else None
+
+  /** The 0-or-1-row plan for a key from [[txKey]]. */
+  def txByKey(transactions: DataFrame, key: String): DataFrame =
+    transactions.filter(col("tx_hash") === key)
+
+  /** Q-14: validation then point filter. */
   def txByHash(transactions: DataFrame, hash: String): Option[DataFrame] =
-    if (hash.startsWith("0x") && hash.length == 66)
-      Some(transactions.filter(col("tx_hash") === hash.toLowerCase))
-    else None
+    txKey(hash).map(txByKey(transactions, _))
 
   /** Q-10: hash stored at a height (`src/db.rs:19-30`). The
     * reference's `ORDER BY block_number DESC` is vestigial — it orders

@@ -38,10 +38,11 @@ import org.apache.spark.sql.Row
   * Serving model: a fixed thread pool drives concurrent Spark actions
   * (SparkSession is thread-safe; each request is an independent job —
   * the serve-while-ingest path I-13 exercises exactly this). As with
-  * [[EvmApi]], a COLD point lookup runs one pruned Spark job; repeats
-  * are served by the facade's [[LookupCache]] memo with zero Spark
-  * jobs, invalidating on the store's mutation version so a reorg is
-  * visible on the next request. Responses go out with TCP_NODELAY
+  * [[EvmApi]], a COLD point lookup runs one pruned Spark job, unless
+  * its key lies in a store's two newest buckets ([[HotTail]]); repeats
+  * are served by the facade's [[LookupCache]] memo. Both answer with
+  * zero Spark jobs and invalidate on the store's mutation version, so
+  * a reorg is visible on the next request. Responses go out with TCP_NODELAY
   * (see [[start]]): without it every response, a memo hit included,
   * waited ~40 ms for the client's delayed ACK.
   *

@@ -148,6 +148,11 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
 
   private def lockPath = new Path(s"$root/_writer.lock")
   @volatile private var lockHeld = false
+
+  /** Whether this store object writes the root: only then does
+    * [[mutationCount]] move with every change to the store's answers. */
+  private[graft] def holdsWriterLock: Boolean = lockHeld
+
   // normalized key: "/data/store", "/data/store/" and "file:///data/store"
   // resolve to the SAME lock file, so they must share one monitor too
   private val rootKey = fs.makeQualified(new Path(root)).toString
@@ -285,8 +290,12 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
     * bucketSize`): any reader predicate on block_number then prunes at
     * the partition-directory level, not just row-group min/max — a
     * point lookup over a 100 TB chain touches one bucket directory
-    * instead of listing them all. Consumers that project it away lose
-    * nothing (the column prunes out of the scan).
+    * instead of listing them all. The rule fires on a Filter whose
+    * child still carries the marked column, so a consumer must filter
+    * on height before it projects `bucket` away: after such a
+    * projection the filter prunes row groups but opens every bucket
+    * (see [[graft.api.LogsQuery.plan]]). Once filtered, projecting it
+    * away loses nothing (the column prunes out of the scan).
     *
     * Re-read contract: resolving a frame lists the bucket directories
     * (a Spark job past 32 of them) and reads a parquet footer for the
@@ -443,14 +452,23 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
   private def parquetFiles(dir: Path): Seq[Path] =
     fs.listStatus(dir).map(_.getPath).filter(_.getName.endsWith(".parquet")).toSeq
 
+  /** The numbers of a table's `bucket=` directories, ascending, listed
+    * on the driver (no Spark job). The listing holds the root monitor,
+    * so it never catches a [[swapBucket]] between its two renames, when
+    * the live directory is missing. */
+  private[graft] def buckets(table: String): Seq[Long] = rootMonitor.synchronized {
+    if (!exists(table)) Seq.empty
+    else fs.listStatus(new Path(tablePath(table))).map(_.getPath.getName)
+      .filter(_.startsWith("bucket=")).map(_.stripPrefix("bucket=").toLong).toSeq.sorted
+  }
+
+  private def bucketPath(table: String, b: Long) = new Path(tablePath(table), s"bucket=$b")
+
   /** The `.parquet` files of a table's bucket directories numbered
     * `fromBucket` or above, listed on the driver. */
   private def storedFiles(table: String, fromBucket: Long): Seq[String] =
-    if (!exists(table)) Seq.empty
-    else fs.listStatus(new Path(tablePath(table))).map(_.getPath)
-      .filter(p => p.getName.startsWith("bucket=") &&
-        p.getName.stripPrefix("bucket=").toLong >= fromBucket)
-      .toSeq.flatMap(parquetFiles).map(_.toString)
+    buckets(table).filter(_ >= fromBucket)
+      .flatMap(b => parquetFiles(bucketPath(table, b))).map(_.toString)
 
   /** Q-21 / I-10: delete every row with `block_number >= forkHeight`
     * across all tables, children first (`src/db.rs:34-50`). */
@@ -468,10 +486,8 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
       if (exists(t)) {
         ensureRecovered(t)
         val dir = new Path(tablePath(t))
-        val parts = fs.listStatus(dir).map(_.getPath)
-          .filter(_.getName.startsWith("bucket="))
-        parts.foreach { p =>
-          val b = p.getName.stripPrefix("bucket=").toLong
+        buckets(t).foreach { b =>
+          val p = bucketPath(t, b)
           if (b > forkBucket) {
             fs.delete(p, true)
           } else if (b == forkBucket) {
@@ -525,13 +541,8 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
       val dir = new Path(tablePath(table))
       // the dirty set names its buckets: only the full sweep lists the
       // table (a marker can outlive its bucket, e.g. after a rollback)
-      val buckets: Seq[Long] = only match {
-        case Some(bs) => bs.toSeq.sorted
-        case None => fs.listStatus(dir).map(_.getPath.getName)
-          .filter(_.startsWith("bucket=")).map(_.stripPrefix("bucket=").toLong).toSeq
-      }
-      buckets.foreach { b =>
-        val p = new Path(dir, s"bucket=$b")
+      only.map(_.toSeq.sorted).getOrElse(buckets(table)).foreach { b =>
+        val p = bucketPath(table, b)
         val files = if (fs.exists(p)) parquetFiles(p) else Seq.empty
         if (files.size > 1) {
           val rows = spark.read.parquet(p.toString)

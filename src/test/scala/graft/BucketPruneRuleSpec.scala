@@ -121,6 +121,54 @@ class BucketPruneRuleSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("a /logs page over a store past 32 buckets reads only the buckets its range spans") {
+    import spark.implicits._
+    import graft.api.{GetLogsFilter, LogsQuery}
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val root = Files.createTempDirectory("bucketprune-logs").toString
+    val big = new ChainStore(spark, root, bucketSize = 10)
+    StreamingIngester.processBatch(big, SimChain.canonical(350).toDF()) // 35 buckets
+    val raw = spark.read.parquet(s"$root/logs")
+    val rowsRead = new java.util.concurrent.atomic.AtomicLong()
+    val reads = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => rowsRead.addAndGet(m.inputMetrics.recordsRead))
+    }
+    // blocks 123..141 span buckets 12, 13 and 14
+    val filters = Seq(
+      GetLogsFilter(fromBlock = Some(123), toBlock = Some(141), pageSize = Some(100)),
+      GetLogsFilter(fromBlock = Some(123), toBlock = Some(141), topic0 = Some(SimChain.canonical(1)
+        .head.transactions.head.logs.head.topic0), cursorBlock = Some(130), cursorLogId = Some(0),
+        pageSize = Some(10)))
+    val jobs = new JobCounter(spark)
+    spark.sparkContext.addSparkListener(jobs)
+    spark.sparkContext.addSparkListener(reads)
+    try filters.foreach { f =>
+      val page = LogsQuery.plan(big.read("logs").get, f)
+      val scans = page.queryExecution.executedPlan.collectLeaves()
+        .collect { case s: FileSourceScanExec => s }
+      assert(scans.nonEmpty && scans.forall(_.partitionFilters.exists(_.references.exists(_.name == "bucket"))),
+        s"expected bucket PartitionFilters in:\n${page.queryExecution.executedPlan}")
+      val parts = scans.map(_.selectedPartitions.partitionCount).sum
+      assert(parts == 3, s"blocks 123..141 span 3 of 35 buckets; the page opened $parts")
+      jobs.settle()
+      val r0 = rowsRead.get
+      val got = page.collect().map(_.getAs[Long]("id")).toSeq
+      jobs.settle()
+      val read = rowsRead.get - r0
+      val inRange = raw.filter(col("bucket").between(12, 14)).count()
+      assert(read <= inRange, s"the page read $read rows; buckets 12..14 hold $inRange")
+      // same page as the filter over the unmarked read
+      val want = LogsQuery.predicates(f).foldLeft(raw)(_.filter(_))
+        .orderBy(col("block_number"), col("id")).limit(f.pageSize.get)
+        .collect().map(_.getAs[Long]("id")).toSeq
+      assert(got.nonEmpty && got == want)
+    } finally {
+      spark.sparkContext.removeSparkListener(reads)
+      spark.sparkContext.removeSparkListener(jobs)
+    }
+  }
+
   test("the fork-detect batch read (the per-cycle hot path) is pruned") {
     // StreamingIngester's per-batch fork check reads
     // block_number ∈ [lo-1, hi]; at a long chain this must stay
