@@ -183,15 +183,17 @@ object EvmApi {
 
   /** The live-serving provider for [[RestServer]]: a facade per
     * request over the store's current frames, sharing ONE
-    * version-aware lookup memo across requests. A resolved frame
-    * freezes its file index, so the frames come from
-    * [[graft.ingest.ChainStore.read]]: in the writer process it hands
-    * back the frames it already resolved until any append, rollback or
-    * compaction changes the files, and a reader-only process re-lists
-    * on every request. Either way appends and rollback rewrites are
-    * visible on the next request. Without the shared memo,
-    * per-request facades would each allocate a cold cache and the
-    * repeat-lookup win would never materialize. The provider shares
+    * version-aware lookup memo across requests. A frame is its table
+    * at one manifest version, so the frames come from
+    * [[graft.ingest.ChainStore.read]], which hands back the frames it
+    * already resolved until a commit moves the version: in the writer
+    * process any commit through a store object over the root, in a
+    * reader-only process a foreign writer's commit, found by one
+    * listing of the manifest directory per call. Either way appends
+    * and rollbacks are visible on the next request, and a request
+    * that overlaps a commit keeps reading the version it resolved.
+    * Without the shared memo, per-request facades would each allocate
+    * a cold cache and the repeat-lookup win would never materialize. The provider shares
     * one [[HotTail]] the same way: the first call at each mutation
     * version builds it (two Spark jobs, single-flight) and later calls
     * reuse it, so no lookup pays for it. Throws if the store has no

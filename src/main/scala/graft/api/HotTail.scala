@@ -12,9 +12,9 @@ import graft.ingest.ChainStore
   * [[EvmApi.transaction]] ask it first and scan ([[Lookups]]) only
   * when it cannot decide.
   *
-  *  - Size: the rows of the two newest `bucket=` directories of
-  *    `blocks`, at most 2 × bucketSize blocks and their transactions,
-  *    so the store layout sets it.
+  *  - Size: the rows of the two newest buckets of `blocks` (from the
+  *    store's manifest), at most 2 × bucketSize blocks and their
+  *    transactions, so the store layout sets it.
   *  - It holds every stored row at or above its lowest height. A
   *    height there is decided by the tail, a height above the tip
   *    included (a correct miss); a hash is decided when it is one of
@@ -23,10 +23,11 @@ import graft.ingest.ChainStore
   *    version it was built for; an append or rollback sends lookups
   *    back to the scan until the factory rebuilds it. Compaction
   *    rewrites bytes, not answers, and leaves it valid.
-  *  - Like [[LookupCache]], it relies on the in-process version, and a
-  *    reader process sees no version move when another process writes
-  *    the store. So a store object that does not hold the writer lock
-  *    gets no tail, and its lookups scan.
+  *  - Like [[LookupCache]], it relies on the in-process version. A
+  *    store object without the writer lock sees another process's
+  *    commits as new manifest versions on its next `read`, but has no
+  *    `mutationCount` to stamp a tail with, so it gets no tail, and its
+  *    lookups scan.
   */
 private[graft] final class HotTail private (private[api] val version: Long,
                                             now: () => Long,
@@ -79,24 +80,18 @@ private[api] object HotTail {
     }
   }
 
-  /** Two Spark jobs, one collect per table, over the given frames. A
-    * frame resolved while a compaction swapped a bucket aside lacks
-    * that bucket; the rows are checked against the driver's listing,
-    * and a tail missing a listed bucket is not built (the next call
-    * tries again). The tail is an optimisation, so a failed build
-    * leaves the lookups to the scan instead of failing the request. */
+  /** Two Spark jobs, one collect per table, over the given frames.
+    * Each frame reads one manifest version whole, so the rows of every
+    * bucket it holds are there. The tail is an optimisation, so a
+    * failed build leaves the lookups to the scan instead of failing
+    * the request. */
   private def build(store: ChainStore, version: Long,
                     blocks: DataFrame, txs: DataFrame): Option[HotTail] =
     if (!store.holdsWriterLock) None
     else try {
-      val newest = store.buckets("blocks").takeRight(2)
-      newest.headOption.flatMap { from =>
+      store.buckets("blocks").takeRight(2).headOption.map { from =>
         def rowsFrom(df: DataFrame) = df.filter(col("bucket") >= from).collect()
-        def bucketsOf(rows: Array[Row]) = rows.map(_.getAs[Number]("bucket").longValue).toSet
-        val (b, t) = (rowsFrom(blocks), rowsFrom(txs))
-        val complete = bucketsOf(b) == newest.toSet &&
-          bucketsOf(t) == store.buckets("transactions").filter(_ >= from).toSet
-        if (complete) Some(new HotTail(version, () => store.mutationCount, b, t)) else None
+        new HotTail(version, () => store.mutationCount, rowsFrom(blocks), rowsFrom(txs))
       }
     } catch { case NonFatal(_) => None }
 }

@@ -33,10 +33,12 @@ package graft.api
   *
   * In-process only, by design: the store's single-writer contract
   * means a co-located serving thread (the I-13 shape) sees every
-  * mutation through [[graft.ingest.ChainStore.mutationCount]]; a
-  * REMOTE reader process has no mutation signal and must serve
-  * uncached (pass no cache — correctness first). For the same reason
-  * only a store that holds the writer lock builds a hot tail.
+  * mutation through [[graft.ingest.ChainStore.mutationCount]]. A
+  * REMOTE reader process sees the writer's commits as new manifest
+  * versions on its next `read`, but this memo is not keyed on them
+  * yet, so such a process must serve uncached (pass no cache —
+  * correctness first). For the same reason only a store that holds
+  * the writer lock builds a hot tail.
   */
 final class LookupCache(maxEntries: Int = 4096, version: () => Long = () => 0L) {
 

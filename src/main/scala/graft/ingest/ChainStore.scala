@@ -1,9 +1,13 @@
 package graft.ingest
 
 import java.util.concurrent.atomic.AtomicLong
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, Metadata, MetadataBuilder, StructType}
 
 /** Parquet-backed chain store: the reference's PostgreSQL tables
   * (`blocks` / `transactions` / `logs`, `init.sql:13-63`) re-hosted on
@@ -11,22 +15,40 @@ import org.apache.spark.sql.functions._
   *
   * Physical design (the Spark substitute for the reference's 11
   * B-tree indexes, `init.sql:24,44-46,66-74`): each table is
-  * partitioned by `bucket = block_number div bucketSize`, rows within
-  * files arrive in block order, so block-range predicates prune at two
-  * levels (partition dirs, then parquet row-group min/max). At 100 TB
-  * this is the layout that keeps the flagship range+cursor queries
-  * from scanning the chain.
+  * partitioned by `bucket = block_number div bucketSize` into
+  * parquet files under `<root>/<table>/bucket=<n>/`, rows within files arrive in
+  * block order, so block-range predicates prune at two levels (bucket
+  * directories, then parquet row-group min/max). At 100 TB this is the
+  * layout that keeps the flagship range+cursor queries from scanning
+  * the chain.
   *
-  * Reorg retraction (`src/db.rs:34-50`) on immutable files = delete
-  * whole partitions above the fork bucket + rewrite the one straddling
-  * bucket via temp-write-then-swap — O(bucketSize) work per reorg,
-  * independent of chain length.
+  * A versioned manifest (`<root>/_manifest`, see [[ManifestLog]]) is
+  * the only source of truth for which files the store holds: per
+  * table, the live files by bucket with size, rows and height range;
+  * the stored schemas; and the status pair. A file on disk that no
+  * version names is not part of the store. Every mutation writes new
+  * parquet files only and then commits with one atomic rename of a
+  * manifest version (Structured Streaming's write-ahead-then-commit,
+  * SIGMOD 2018):
+  *  - [[append]] is one commit covering all three tables;
+  *  - [[rollback]] is one commit: it drops the buckets above the fork
+  *    and rewrites the files that straddle it, O(bucketSize) work per
+  *    reorg, independent of chain length;
+  *  - each [[compact]] is one commit;
+  *  - [[writeStatus]] is one commit written on the driver alone.
+  * A crash at any step leaves the store at the version before the
+  * commit or the one after it. Nothing is overwritten or renamed in
+  * place, so a frame resolved at one version stays readable while
+  * later commits land: a dropped file is deleted by a later commit
+  * once [[ChainStore.GcGraceMs]] has passed. Files a crashed write
+  * left behind, which no version names, are removed when a writer
+  * opens the root.
   *
   * Storage-schema note: U256 money/gas columns are decimal-string TEXT
   * (the reference's contract, `init.sql:18-20,34-38`). A root written
-  * by a pre-TEXT version of this engine holds int64 parquet for those
-  * columns and must be re-ingested — appending the new schema into an
-  * old table directory would fail at scan time on the mixed types.
+  * before the manifest (table directories, no `_manifest`) fails fast
+  * and must be re-ingested, as must a root from a pre-TEXT version of
+  * this engine.
   */
 class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
   require(bucketSize > 0)
@@ -36,115 +58,19 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
   private val keyOf = Map("blocks" -> "block_hash", "transactions" -> "tx_hash", "logs" -> "id")
 
   private def fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def log = new ManifestLog(fs, new Path(root, "_manifest"))
 
-  /** Buckets appended to since their last compaction, per table —
-    * lets [[compact]] visit O(recently touched) buckets instead of
-    * O(chain length) (a long-lived ingester would otherwise pay one
-    * driver round-trip per historical bucket every maintenance cycle).
-    *
-    * Persisted beside `indexer_status` as one empty marker file per
-    * bucket (`_dirty/<table>/<bucket>`), so a RESTARTED ingester keeps
-    * O(touched) maintenance instead of degrading to the `compactAll`
-    * full sweep — at chain length N that sweep is O(N) driver
-    * round-trips. The in-memory map is a write-through cache loaded
-    * lazily from the marker directory; markers are written before the
-    * data they cover (a crash between the two leaves a stale marker,
-    * which [[compact]] skips harmlessly via its more-than-one-file check, never
-    * a missed one). */
-  private val dirtyBuckets =
-    scala.collection.mutable.Map.empty[String, scala.collection.mutable.Set[Long]]
-
-  private def dirtyDir(table: String) = new Path(s"$root/_dirty/$table")
-
-  private def dirtySet(table: String): scala.collection.mutable.Set[Long] = synchronized {
-    dirtyBuckets.getOrElseUpdate(table, {
-      val d = dirtyDir(table)
-      val loaded =
-        if (fs.exists(d))
-          fs.listStatus(d).flatMap(s => scala.util.Try(s.getPath.getName.toLong).toOption)
-        else Array.empty[Long]
-      scala.collection.mutable.Set(loaded.toSeq: _*)
-    })
-  }
-
-  private def markDirty(table: String, lo: Long, hi: Long): Unit = {
-    val set = dirtySet(table)
-    (lo / bucketSize to hi / bucketSize).foreach { b =>
-      if (set.add(b)) fs.create(new Path(dirtyDir(table), b.toString), true).close()
-    }
-  }
-
-  private def clearDirty(table: String, bucket: Long): Unit =
-    if (dirtySet(table).remove(bucket))
-      fs.delete(new Path(dirtyDir(table), bucket.toString), false)
-
-  /** Swap a freshly-written bucket directory into place. `rename` is
-    * atomic on HDFS/local, so the bucket's data exists in either the
-    * aside copy or the live path at every instant — a crash between the
-    * two renames cannot lose it (the delete-then-rename it replaces
-    * could). A concurrent reader can still transiently miss the bucket
-    * between the renames; [[recoverSwaps]] (run once per table per
-    * process before any append/read/rollback/compact, via
-    * [[ensureRecovered]]) heals any half-finished swap left by a
-    * crash. */
-  private def swapBucket(dir: Path, live: Path, tmp: Path): Unit = rootMonitor.synchronized {
-    val aside = new Path(dir, s".aside-${live.getName}")
-    if (fs.exists(aside)) fs.delete(aside, true)
-    // rename signals failure BOTH ways (false return or exception);
-    // an in-process failure between the two renames must restore the
-    // aside copy HERE — the once-per-process recovery has already run
-    // and will not run again, so leaving the bucket hidden would let
-    // a later append recreate it and the next process's recovery
-    // delete the aside copy as superseded.
-    if (!fs.rename(live, aside))
-      throw new java.io.IOException(s"could not set aside $live")
-    val swapped =
-      try fs.rename(tmp, live)
-      catch { case e: Throwable => restoreAside(aside, live); throw e }
-    if (!swapped) {
-      restoreAside(aside, live)
-      throw new java.io.IOException(s"could not swap $tmp into $live")
-    }
-    fs.delete(aside, true)
-  }
-
-  private def restoreAside(aside: Path, live: Path): Unit =
-    if (!fs.exists(live) && fs.exists(aside)) fs.rename(aside, live)
-
-  /** Crash recovery for [[swapBucket]]: a leftover `.aside-bucket=N`
-    * whose live bucket is missing is renamed back; one whose live
-    * bucket exists was already superseded and is dropped.
-    *
-    * MUST run before the first append/read/rollback/compact of a table
-    * in this process — not just before rollback/compact. Otherwise a
-    * crash mid-swap (live renamed aside, tmp never renamed in)
-    * followed by a normal append would recreate the live bucket with
-    * only the new rows, and the next recovery would see both paths
-    * present, assume the swap completed, and delete the aside copy —
-    * permanently losing the bucket's pre-crash rows (and until then,
-    * reads would silently miss the bucket). [[ensureRecovered]] makes
-    * every entry point run it once per table per process; within a
-    * process [[swapBucket]] is synchronous, so once is enough. */
-  private def recoverSwaps(table: String): Unit =
-    if (exists(table)) {
-      val dir = new Path(tablePath(table))
-      fs.listStatus(dir).map(_.getPath)
-        .filter(_.getName.startsWith(".aside-")).foreach { aside =>
-          val live = new Path(dir, aside.getName.stripPrefix(".aside-"))
-          if (fs.exists(live)) fs.delete(aside, true)
-          else fs.rename(aside, live)
-        }
-    }
+  /** Epoch milliseconds; the garbage collector's clock. */
+  protected def now(): Long = System.currentTimeMillis()
 
   // ---- single-writer guard -------------------------------------------
-  // The swap/recovery protocol above is crash-safe for ONE writer
-  // process; two concurrent writers could interleave set-aside renames
-  // and each other's recovery sweeps (writer B's recoverSwaps seeing
-  // writer A mid-swap would "heal" a swap that is still in flight).
-  // The reference inherits single-writer-per-row from Postgres
-  // transactions; here an exclusive lock file makes the contract
-  // explicit: the first mutating call takes `_writer.lock`, a second
-  // store on the same root fails fast instead of corrupting buckets.
+  // Commits assume ONE writer process: two processes committing the
+  // same version, or one removing the other's in-flight files as
+  // leftovers, would corrupt the store. The reference inherits
+  // single-writer-per-row from Postgres transactions; here an
+  // exclusive lock file makes the contract explicit: the first
+  // mutating call takes `_writer.lock`, a second store on the same
+  // root fails fast instead.
 
   private def lockPath = new Path(s"$root/_writer.lock")
   @volatile private var lockHeld = false
@@ -154,9 +80,9 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
   private[graft] def holdsWriterLock: Boolean = lockHeld
 
   // normalized key: "/data/store", "/data/store/" and "file:///data/store"
-  // resolve to the SAME lock file, so they must share one monitor too
+  // resolve to the SAME lock file, so they must share one state too
   private val rootKey = fs.makeQualified(new Path(root)).toString
-  private val rootMonitor = ChainStore.monitorFor(rootKey)
+  private val shared = ChainStore.sharedFor(rootKey)
 
   /** Acquire the exclusive writer lock (once per store). The lock is
     * PROCESS-scoped: a lock already held by this JVM (e.g. a restarted
@@ -165,14 +91,16 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
     * throws [[ChainStore.ConcurrentWriterException]]. A writer that
     * crashed without [[close]] leaves the file behind — an operator
     * (or orchestrator that knows the process is gone) clears it with
-    * [[ChainStore.forceUnlock]]. */
+    * [[ChainStore.forceUnlock]]. Taking the lock opens the root: the
+    * newest manifest version is loaded and crash leftovers removed. */
   private def ensureWriteLock(): Unit = synchronized {
     if (!lockHeld) {
       // under the root monitor: two stores over the same root racing
       // their FIRST mutation in one JVM must not both pass the exists
       // check and then collide on create — the loser would throw a
       // spurious ConcurrentWriterException against its own process.
-      rootMonitor.synchronized {
+      shared.synchronized {
+        requireManifestRoot()
         if (fs.exists(lockPath)) {
           val holder = ChainStore.lockHolder(fs, lockPath)
           if (!holder.contains(ChainStore.processToken))
@@ -209,6 +137,7 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
                   s"$root writer lock lost the creation race: ${e.getMessage}")
           }
         }
+        open()
       }
       lockHeld = true
       // a routine (non-crash) exit must not strand the lock and force a
@@ -217,6 +146,41 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
       ChainStore.registerLockRelease(rootKey, () => fs, lockPath)
     }
   }
+
+  /** Load the newest version for the writer and remove what crashed
+    * writes left: temp manifests, staging directories and data files
+    * no version names. Runs under the root monitor, which every commit
+    * holds, so no write of this process is in flight. */
+  private def open(): Unit = {
+    val m = currentOnDisk(Manifest.empty)
+    fs.mkdirs(log.dir)
+    log.removeTemps()
+    fs.delete(stagingRoot, true)
+    Tables.map(t => new Path(tablePath(t))).filter(fs.exists).foreach { dir =>
+      fs.listStatus(dir).filter(_.getPath.getName.startsWith("bucket=")).foreach { b =>
+        val n = b.getPath.getName.stripPrefix("bucket=").toLong
+        fs.listStatus(b.getPath).map(_.getPath)
+          .filter(p => p.getName.endsWith(".parquet") &&
+            !m.named(FileRef(dir.getName, n, p.getName)))
+          .foreach(fs.delete(_, false))
+      }
+    }
+    shared.manifest = m
+  }
+
+  /** The newest version on disk, from `prev` on. */
+  private def currentOnDisk(prev: Manifest): Manifest = {
+    val m = log.latest(prev)
+    if (m.version == 0) requireManifestRoot()
+    m
+  }
+
+  /** Fails fast on a root written before the manifest existed. */
+  private def requireManifestRoot(): Unit =
+    if (!fs.exists(log.dir) && Tables.exists(t => fs.exists(new Path(tablePath(t)))))
+      throw new IllegalStateException(
+        s"$root holds chain tables but no _manifest: it was written by an older " +
+          "version of this store; re-ingest it into a new root")
 
   /** Release the writer lock so another process can ingest. Reads need
     * no lock and keep working. The lock is process-scoped, so this
@@ -231,7 +195,7 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
       // re-check: after a sibling store's close() already released the
       // process lock, a NEW process may have acquired it — deleting
       // unconditionally here would strip that live writer's lock.
-      rootMonitor.synchronized {
+      shared.synchronized {
         if (ChainStore.lockHolder(fs, lockPath).contains(ChainStore.processToken))
           fs.delete(lockPath, false): Unit
       }
@@ -239,50 +203,23 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
     }
   }
 
-  private val recoveredTables = scala.collection.mutable.Set.empty[String]
-
-  /** Synchronized: the REST layer's request pool reaches [[read]]
-    * concurrently (one facade resolution per request), and neither a
-    * mutable.Set nor two racing [[recoverSwaps]] rename sweeps are
-    * safe unguarded.
-    *
-    * A process that does NOT hold the writer lock must not recover
-    * while another process's lock is present: a `.aside-` entry then
-    * may be a LIVE writer's swap in flight, and "healing" it would
-    * race the writer's second rename — exactly the interleaving the
-    * lock exists to prevent. With a foreign lock present, the sweep is
-    * skipped (a hidden bucket is the documented transient-read caveat;
-    * crash leftovers heal after the operator clears the dead lock) and
-    * retried on the next entry. */
-  private def ensureRecovered(table: String): Unit = rootMonitor.synchronized {
-    if (!recoveredTables.contains(table)) {
-      if (!lockHeld && fs.exists(lockPath) &&
-          !ChainStore.lockHolder(fs, lockPath).contains(ChainStore.processToken)) {
-        () // foreign writer alive (or dead but not yet force-unlocked)
-      } else {
-        recoverSwaps(table)
-        recoveredTables += table
-      }
+  /** The version this store answers from. The writer's is the one its
+    * process last committed (no other process writes the root); a
+    * store without the lock looks for a newer version on disk, one
+    * listing of `_manifest`, and reuses what it loaded while none is. */
+  @volatile private var readerView = Manifest.empty
+  private def current: Manifest =
+    if (lockHeld) shared.manifest
+    else {
+      val m = currentOnDisk(readerView)
+      readerView = m
+      m
     }
-  }
 
-  def exists(table: String): Boolean = fs.exists(new Path(tablePath(table)))
+  def exists(table: String): Boolean = current.schemas.contains(table)
 
-  /** Resolved frames per table, each stamped with the [[fileSet]]
-    * version read before it was resolved. */
+  /** Resolved frames per table, each stamped with its manifest version. */
   private val frames = new java.util.concurrent.ConcurrentHashMap[String, (Long, DataFrame)]()
-  private val fileSet = ChainStore.fileSetFor(rootKey)
-
-  /** Bump the root's file-set version on entry and on exit of `f`, the
-    * same pattern as [[mutationCount]]: a frame resolved before or
-    * during `f` carries a stamp older than the settled version. This
-    * store's own frames are dropped at once rather than held until the
-    * next read replaces them. */
-  private def changingFiles[T](f: => T): T = {
-    fileSet.incrementAndGet(): Unit
-    frames.clear()
-    try f finally fileSet.incrementAndGet(): Unit
-  }
 
   /** Read a table. The physical `bucket` partition column stays in the
     * frame, stamped with [[graft.plans.BucketPruneRule]] metadata
@@ -297,37 +234,46 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
     * (see [[graft.api.LogsQuery.plan]]). Once filtered, projecting it
     * away loses nothing (the column prunes out of the scan).
     *
-    * Re-read contract: resolving a frame lists the bucket directories
-    * (a Spark job past 32 of them) and reads a parquet footer for the
-    * schema (another job), and its file index stays frozen after that.
-    * While this store holds the writer lock, every change to the
-    * root's files in this JVM ([[append]], [[rollback]], compaction,
-    * by any store object over the root) bumps one shared version, so
-    * the resolved frame is returned until that version moves. A store
-    * without the lock has no signal from a foreign writer and
-    * resolves afresh on every call. */
-  def read(table: String): Option[DataFrame] =
-    if (exists(table)) {
-      ensureRecovered(table)
-      val v = fileSet.get()
-      Option(frames.get(table)).filter(f => lockHeld && f._1 == v).map(_._2).orElse {
+    * Re-read contract: the frame is the table at one manifest version,
+    * resolved from that version's file list and stored schema — no
+    * listing and no Spark job, at any bucket count. It keeps answering
+    * from that version while later commits land, for at least
+    * [[ChainStore.GcGraceMs]] after one drops its files. The store
+    * returns the same frame until the version moves: in the writer
+    * process every commit moves it, through any store object over the
+    * root; a store without the lock sees a foreign writer's commit on
+    * its next call. */
+  def read(table: String): Option[DataFrame] = {
+    val m = current
+    m.schemas.get(table).map { schema =>
+      Option(frames.get(table)).filter(_._1 == m.version).map(_._2).getOrElse {
         val meta = graft.plans.BucketPruneRule.bucketMetadata("block_number", bucketSize)
-        val df = spark.read.parquet(tablePath(table))
+        val df = frameOver(table, schema, m.files(table))
           .withColumn("bucket", col("bucket").as("bucket", meta))
-        if (lockHeld) frames.put(table, (v, df))
-        Some(df)
+        frames.put(table, (m.version, df))
+        df
       }
-    } else None
+    }
+  }
+
+  /** A frame over the given files of a table: data columns in the
+    * stored schema, then the integer `bucket` partition column. */
+  private def frameOver(table: String, schema: StructType, files: Seq[DataFile]): DataFrame = {
+    val statuses = files.map { f =>
+      val p = fs.makeQualified(new Path(s"$root/${f.ref.relative}"))
+      f.bucket -> new FileStatus(f.bytes, false, 1, 0L, 0L, p)
+    }
+    val index = new ManifestFileIndex(spark, fs.makeQualified(new Path(tablePath(table))), statuses)
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema, schema,
+      None, new ParquetFileFormat(), Map.empty)(spark))
+  }
 
   private def withBucket(df: DataFrame): DataFrame =
     df.withColumn("bucket", expr(s"block_number div $bucketSize"))
 
-  /** I-12: checkpoint state — max ingested height (None on empty store). */
-  def lastSyncedBlock: Option[Long] =
-    read("blocks").flatMap { b =>
-      b.agg(max(col("block_number"))).collect().headOption
-        .flatMap(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
-    }
+  /** I-12: checkpoint state — max ingested height (None on empty
+    * store), from the manifest: no Spark job. */
+  def lastSyncedBlock: Option[Long] = current.tip
 
   /** Q-10: stored hash at a height. */
   def hashAt(height: Long): Option[String] =
@@ -341,90 +287,132 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
     * signal a co-located serving cache ([[graft.api.LookupCache]])
     * keys its entries on. Bumped on ENTRY **and** EXIT of each
     * mutator: a concurrent lookup that reads the version mid-mutation
-    * and computes against half-written state would otherwise cache
-    * its (possibly inconsistent) answer under the post-entry version
-    * and serve it stale until the NEXT mutation; the exit bump
-    * guarantees any answer computed before or during a mutation
-    * carries a version older than the settled state's. Compaction
-    * rewrites bytes, not answers, and does not bump. Cross-process
-    * readers see no signal (the counter is this JVM's) and must serve
-    * uncached. */
+    * and computes against a frame resolved before the commit would
+    * otherwise cache its answer under the post-entry version and serve
+    * it stale until the NEXT mutation; the exit bump guarantees any
+    * answer computed before or during a mutation carries a version
+    * older than the settled state's. Compaction rewrites bytes, not
+    * answers, and does not bump. Another process's reader sees no
+    * signal (the counter is this JVM's) and must serve uncached. */
   def mutationCount: Long = mutations.get()
   private val mutations = new AtomicLong()
+
+  private def mutating[T](f: => T): T = {
+    ensureWriteLock()
+    mutations.incrementAndGet(): Unit
+    try shared.synchronized(f) finally mutations.incrementAndGet(): Unit
+  }
 
   /** Q-20 / I-11: idempotent append of one flattened batch — the
     * reference's `INSERT ... ON CONFLICT (key) DO NOTHING`. Rows are
     * de-duplicated on the table's key within the batch, and a key
     * already stored at a height ≥ the batch's lowest is skipped, so a
-    * replayed batch writes nothing twice.
+    * replayed batch writes nothing twice. All three tables land in one
+    * manifest commit: a reader sees the whole batch or none of it.
     *
-    * The cost is O(batch), never O(store):
-    *  - one Spark job, one task, collects every table's height range
-    *    and its largest bucket's row count, which sizes the key bloom
-    *    filters (see [[keyBloom]]);
-    *  - the stored keys to anti-join against are read from an explicit
-    *    file list — the `.parquet` files of the bucket directories at
-    *    or above the batch's lowest bucket, listed on the driver — so
-    *    resolving them runs no listing or footer job;
-    *  - each table's dedup, anti-join, sort and partitioned write run
-    *    in one task of one job, after a small job that broadcasts the
-    *    stored keys (when there are any): a micro-batch is bounded by
-    *    the source's batch size, like the header collect, and each
-    *    append leaves one file per bucket it touches.
-    *
-    * Dirty-bucket markers are written before the data they cover (see
-    * [[dirtyBuckets]]). A table whose incoming frame is empty is not
-    * written. */
-  def append(blocks: DataFrame, transactions: DataFrame, logs: DataFrame): Unit = {
-    ensureWriteLock()
-    mutations.incrementAndGet(): Unit
-    try changingFiles(appendImpl(blocks, transactions, logs))
-    finally mutations.incrementAndGet(): Unit
+    * The cost is O(batch), never O(store), and one Spark job per table
+    * written:
+    *  - each table's height range and the row bound per bucket that
+    *    sizes its key bloom filter (see [[keyBloom]]) come from
+    *    metadata on `block_number` that [[StreamingIngester.processBatch]]
+    *    stamps from its header collect ([[withRowCounts]]); a frame
+    *    without it costs one more single-task job;
+    *  - the stored keys at heights ≥ the batch's lowest are read from
+    *    the manifest's files that reach that height (none when the
+    *    batch starts above the tip), with the stored schema: resolving
+    *    them lists nothing;
+    *  - dedup and anti-join are one aggregate over the incoming rows
+    *    tagged 1 and those stored keys tagged 0, keeping a key whose
+    *    lowest tag is 1 — one task, no exchange (a left-anti join here
+    *    is pushed below the single partition and broadcasts its
+    *    stored side in a job of its own);
+    *  - sort and partitioned write run in the same task, so each
+    *    append leaves one file per bucket it touches. */
+  def append(blocks: DataFrame, transactions: DataFrame, logs: DataFrame): Unit =
+    mutating(appendImpl(Seq("blocks" -> blocks, "transactions" -> transactions, "logs" -> logs)))
+
+  private def appendImpl(dfs: Seq[(String, DataFrame)]): Unit = {
+    val stamped = dfs.map { case (_, df) => ChainStore.batchBounds(df) }
+    val bounds: Map[String, Option[(Long, Long, Long)]] =
+      if (stamped.forall(_.isDefined)) dfs.map(_._1).zip(stamped.map(_.get)).toMap
+      else measuredBounds(dfs)
+    val m = shared.manifest
+    val out = stagingRoot
+    try {
+      val written = dfs.flatMap { case (t, df) =>
+        bounds(t).map { case (lo, _, maxRows) =>
+          val incoming = ChainStore.unstamped(df)
+          val dir = new Path(out, t)
+          writeFresh(m, t, incoming, lo, maxRows, dir)
+          (t, ChainStore.asStored(incoming.schema), dir)
+        }
+      }
+      val adds = written.flatMap { case (t, _, dir) => placeStaged(t, dir, bucket = None) }
+      val schemas = written.collect { case (t, s, _) if !m.schemas.contains(t) => Change.Schema(t, s) }
+      if (adds.nonEmpty) commit(schemas ++ adds.map(Change.Add(_)))
+    } finally fs.delete(out, true)
   }
 
-  private def appendImpl(blocks: DataFrame, transactions: DataFrame,
-                         logs: DataFrame): Unit = {
-    val dfs = Seq("blocks" -> blocks, "transactions" -> transactions, "logs" -> logs)
-    dfs.foreach { case (t, _) => ensureRecovered(t) }
-    // per (table, bucket): in-batch dedup moves neither height bound,
-    // and a bucket's incoming rows bound the rows of the file it gets
+  /** Stamp a batch frame with what [[append]] would otherwise measure
+    * with a Spark job, from the row count of each height it holds: its
+    * lowest and highest height with rows and the largest row count of
+    * a bucket (all 0 when it holds no rows). The bounds ride as
+    * metadata on `block_number`; the append strips them before it
+    * writes. */
+  private[ingest] def withRowCounts(df: DataFrame, rowsAt: Seq[(Long, Long)]): DataFrame = {
+    import ChainStore._
+    val held = rowsAt.filter(_._2 > 0)
+    val b = new MetadataBuilder().withMetadata(df.schema("block_number").metadata)
+    if (held.isEmpty) b.putLong(BatchMaxRows, 0L)
+    else b.putLong(BatchLo, held.map(_._1).min).putLong(BatchHi, held.map(_._1).max)
+      .putLong(BatchMaxRows, held.groupBy(_._1 / bucketSize).values.map(_.map(_._2).sum).max)
+    df.withColumn("block_number", col("block_number").as("block_number", b.build()))
+  }
+
+  /** Each table's height range and largest bucket's row count — one
+    * Spark job, one task — for frames that carry no batch bounds. */
+  private def measuredBounds(dfs: Seq[(String, DataFrame)]): Map[String, Option[(Long, Long, Long)]] = {
     val perBucket = dfs
       .map { case (t, df) => df.select(lit(t).as("t"), col("block_number")) }
       .reduce(_ unionByName _).coalesce(1)
       .groupBy(col("t"), expr(s"block_number div $bucketSize"))
       .agg(min("block_number"), max("block_number"), count(lit(1))).collect()
-    val ranges: Map[String, (Long, Long, Long)] =
-      perBucket.groupBy(_.getString(0)).map { case (t, rs) =>
-        t -> ((rs.map(_.getLong(2)).min, rs.map(_.getLong(3)).max, rs.map(_.getLong(4)).max))
-      }
-    dfs.foreach { case (t, incoming) =>
-      ranges.get(t).foreach { case (lo, hi, maxRows) =>
-        markDirty(t, lo, hi)
-        val key = keyOf(t)
-        // one partition: the aggregate needs no exchange, and the small
-        // stored side broadcasts, so the join needs none either
-        val deduped = incoming.coalesce(1).dropDuplicates(key)
-        val fresh = storedFiles(t, lo / bucketSize) match {
-          case Seq() => deduped
-          case files =>
-            val stored = spark.read
-              .schema(incoming.select(col("block_number"), col(key)).schema)
-              .option("basePath", tablePath(t)).parquet(files: _*)
-              .filter(col("block_number") >= lo).select(col(key))
-            deduped.join(stored, Seq(key), "left_anti")
-        }
-        // sort within files by (block_number, key) — the substitute for
-        // the reference's composite B-trees: row-group min/max stats stay
-        // tight, so range + cursor predicates prune inside partitions too.
-        // `bucket` leads because the partitioned writer needs its rows
-        // grouped by it; it is monotone in block_number, so the order
-        // is the same.
-        withBucket(fresh)
-          .sortWithinPartitions(col("bucket"), col("block_number"), col(key))
-          .write.mode(SaveMode.Append).options(keyBloom(key, maxRows))
-          .partitionBy("bucket").parquet(tablePath(t))
-      }
+    val ranges = perBucket.groupBy(_.getString(0)).map { case (t, rs) =>
+      t -> ((rs.map(_.getLong(2)).min, rs.map(_.getLong(3)).max, rs.map(_.getLong(4)).max))
     }
+    dfs.map { case (t, _) => t -> ranges.get(t) }.toMap
+  }
+
+  /** Write the batch rows of table `t` whose key the store lacks into
+    * `dir`, partitioned by bucket: one Spark job, one task. */
+  private def writeFresh(m: Manifest, t: String, incoming: DataFrame, lo: Long, maxRows: Long,
+                         dir: Path): Unit = {
+    val key = keyOf(t)
+    val tagged = incoming.select(col(key).as("_key"), lit(1).as("_new"),
+      struct(incoming.columns.map(col).toSeq: _*).as("_row"))
+    val storedFiles =
+      if (m.tip.exists(lo <= _)) m.files(t).filter(_.maxBlock >= lo) else Vector.empty
+    val all =
+      if (storedFiles.isEmpty) tagged
+      else tagged.unionByName(
+        frameOver(t, m.schemas(t), storedFiles).filter(col("block_number") >= lo)
+          .select(col(key).as("_key"), lit(0).as("_new"),
+            lit(null).cast(tagged.schema("_row").dataType).as("_row")))
+    // one partition: the aggregate needs no exchange
+    val fresh = all.coalesce(1).groupBy(col("_key"))
+      .agg(min(col("_new")).as("_new"), first(col("_row"), ignoreNulls = true).as("_row"))
+      .filter(col("_new") === 1).select(col("_row.*"))
+    val columns = m.schemas.get(t).map(_.fieldNames.toSeq).getOrElse(incoming.columns.toSeq)
+    // sort within files by (block_number, key) — the substitute for
+    // the reference's composite B-trees: row-group min/max stats stay
+    // tight, so range + cursor predicates prune inside partitions too.
+    // `bucket` leads because the partitioned writer needs its rows
+    // grouped by it; it is monotone in block_number, so the order
+    // is the same.
+    withBucket(fresh.select(columns.map(col): _*))
+      .sortWithinPartitions(col("bucket"), col("block_number"), col(key))
+      .write.options(keyBloom(key, maxRows))
+      .partitionBy("bucket").parquet(dir.toString)
   }
 
   /** Write options for a bloom filter on the table's key, sized for
@@ -438,135 +426,161 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
     s"parquet.bloom.filter.enabled#$key" -> "true",
     s"parquet.bloom.filter.expected.ndv#$key" -> math.max(1L, maxRows).toString)
 
-  /** Rows in the given parquet files, from their footers alone: read on
-    * the driver, no Spark job. */
-  private def footerRows(files: Seq[Path]): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    files.map { f =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
-      try r.getRecordCount finally r.close()
-    }.sum
-  }
+  /** Where a mutation writes its files before placing them; mutations
+    * run one at a time under the root monitor, and each removes it. */
+  private def stagingRoot = new Path(root, "_staging")
 
-  private def parquetFiles(dir: Path): Seq[Path] =
-    fs.listStatus(dir).map(_.getPath).filter(_.getName.endsWith(".parquet")).toSeq
-
-  /** The numbers of a table's `bucket=` directories, ascending, listed
-    * on the driver (no Spark job). The listing holds the root monitor,
-    * so it never catches a [[swapBucket]] between its two renames, when
-    * the live directory is missing. */
-  private[graft] def buckets(table: String): Seq[Long] = rootMonitor.synchronized {
-    if (!exists(table)) Seq.empty
-    else fs.listStatus(new Path(tablePath(table))).map(_.getPath.getName)
-      .filter(_.startsWith("bucket=")).map(_.stripPrefix("bucket=").toLong).toSeq.sorted
-  }
-
-  private def bucketPath(table: String, b: Long) = new Path(tablePath(table), s"bucket=$b")
-
-  /** The `.parquet` files of a table's bucket directories numbered
-    * `fromBucket` or above, listed on the driver. */
-  private def storedFiles(table: String, fromBucket: Long): Seq[String] =
-    buckets(table).filter(_ >= fromBucket)
-      .flatMap(b => parquetFiles(bucketPath(table, b))).map(_.toString)
-
-  /** Q-21 / I-10: delete every row with `block_number >= forkHeight`
-    * across all tables, children first (`src/db.rs:34-50`). */
-  def rollback(forkHeight: Long): Unit = {
-    ensureWriteLock()
-    mutations.incrementAndGet(): Unit
-    try changingFiles(rollbackImpl(forkHeight))
-    finally mutations.incrementAndGet(): Unit
-  }
-
-  private def rollbackImpl(forkHeight: Long): Unit = {
-    val forkBucket = forkHeight / bucketSize
-    // children first: logs, transactions, then blocks
-    Seq("logs", "transactions", "blocks").foreach { t =>
-      if (exists(t)) {
-        ensureRecovered(t)
-        val dir = new Path(tablePath(t))
-        buckets(t).foreach { b =>
-          val p = bucketPath(t, b)
-          if (b > forkBucket) {
-            fs.delete(p, true)
-          } else if (b == forkBucket) {
-            val kept = spark.read.parquet(p.toString)
-              .filter(col("block_number") < forkHeight)
-            val tmp = new Path(dir, s".tmp-rollback-bucket-$b")
-            if (kept.isEmpty) fs.delete(p, true)
-            else {
-              kept.write.mode(SaveMode.Overwrite)
-                .options(keyBloom(keyOf(t), footerRows(parquetFiles(p))))
-                .parquet(tmp.toString)
-              swapBucket(dir, p, tmp)
-            }
-          }
-        }
-        // retracted buckets can't need compaction; the straddling
-        // bucket was just rewritten to one file, so its (possible)
-        // marker is stale-but-harmless either way
-        dirtySet(t).filter(_ > forkBucket).toSeq.foreach(clearDirty(t, _))
+  /** Move the parquet files a write left in `dir` into their bucket
+    * directories and describe them from their footers (rows and height
+    * range; read on the driver, no Spark job). `bucket` names the
+    * bucket of an unpartitioned write; otherwise the files sit in
+    * `bucket=<n>` subdirectories. Empty files are left behind. Until a
+    * manifest version names them, the moved files are not part of the
+    * store. */
+  private def placeStaged(t: String, dir: Path, bucket: Option[Long]): Seq[DataFile] = {
+    val listed = if (fs.exists(dir)) fs.listStatus(dir).toSeq else Seq.empty
+    val staged: Seq[(Long, FileStatus)] = bucket match {
+      case Some(b) => listed.map(b -> _)
+      case None => listed.filter(_.getPath.getName.startsWith("bucket="))
+        .flatMap(d => fs.listStatus(d.getPath).toSeq
+          .map(d.getPath.getName.stripPrefix("bucket=").toLong -> _))
+    }
+    staged.filter(_._2.getPath.getName.endsWith(".parquet")).flatMap { case (b, s) =>
+      val (rows, lo, hi) = footer(s)
+      if (rows == 0) None
+      else {
+        val f = DataFile(t, b, s.getPath.getName, s.getLen, rows, lo, hi)
+        val target = new Path(s"$root/${f.ref.relative}")
+        fs.mkdirs(target.getParent)
+        if (!fs.rename(s.getPath, target)) throw new java.io.IOException(s"could not place $target")
+        Some(f)
       }
     }
+  }
+
+  /** (rows, lowest block_number, highest block_number) of a parquet
+    * file, from its footer. */
+  private def footer(s: FileStatus): (Long, Long, Long) = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(s, spark.sparkContext.hadoopConfiguration))
+    try {
+      val stats = r.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala
+        .find(_.getPath.toDotString == "block_number").map(_.getStatistics))
+        .filter(_.hasNonNullValue)
+      if (stats.isEmpty) (0L, 0L, 0L)
+      else (r.getRecordCount,
+        stats.map(_.genericGetMin.asInstanceOf[java.lang.Long].longValue).min,
+        stats.map(_.genericGetMax.asInstanceOf[java.lang.Long].longValue).max)
+    } finally r.close()
+  }
+
+  /** Commit the next manifest version: `drops` leave the live set,
+    * then `changes` apply, and every dropped file whose grace period
+    * has passed is deleted. The version is renamed into place before
+    * those files are deleted, so a crash in between leaves only unnamed
+    * files, which the next writer to open the root removes. Callers
+    * hold the root monitor. */
+  private def commit(changes: Seq[Change], drops: Seq[DataFile] = Nil): Unit = {
+    val m = shared.manifest
+    val t = now()
+    val expired = m.dropped.filter(_.droppedAt + ChainStore.GcGraceMs <= t).map(_.ref)
+    val all = drops.map(f => Change.Drop(f.ref, t)) ++ changes ++ expired.map(Change.Forget(_))
+    val next = m.applied(m.version + 1, all)
+    log.commit(next, all)
+    shared.manifest = next
+    expired.foreach { r =>
+      fs.delete(new Path(s"$root/${r.relative}"), false)
+      if (!next.named.exists(n => n.table == r.table && n.bucket == r.bucket))
+        fs.delete(new Path(s"${tablePath(r.table)}/bucket=${r.bucket}"), true)
+    }
+    log.prune(next.version)
+  }
+
+  /** The numbers of a table's buckets that hold rows, ascending, from
+    * the manifest (no listing, no Spark job). */
+  private[graft] def buckets(table: String): Seq[Long] = current.buckets(table)
+
+  /** The table's live files, as paths under the root: what a frame
+    * resolved now reads. */
+  private[graft] def liveFiles(table: String): Seq[String] =
+    current.files(table).map(f => s"$root/${f.ref.relative}")
+
+  /** The files commits dropped that wait for garbage collection. */
+  private[graft] def droppedFiles: Seq[String] = current.dropped.map(d => s"$root/${d.ref.relative}")
+
+  /** Q-21 / I-10: delete every row with `block_number >= forkHeight`
+    * across all tables (`src/db.rs:34-50`), in one commit. Files whose
+    * rows all lie at or above the fork are dropped; the files of the
+    * fork's bucket that straddle it are rewritten with the rows below
+    * it, one Spark job per table that has any. */
+  def rollback(forkHeight: Long): Unit = mutating(rollbackImpl(forkHeight))
+
+  private def rollbackImpl(forkHeight: Long): Unit = {
+    val m = shared.manifest
+    val out = stagingRoot
+    try {
+      val (drops, adds) = Seq("logs", "transactions", "blocks").filter(m.schemas.contains).map { t =>
+        val above = m.files(t).filter(_.maxBlock >= forkHeight)
+        // only the fork's bucket can hold a file on both sides of it
+        val straddling = above.filter(_.minBlock < forkHeight)
+        val kept =
+          if (straddling.isEmpty) Nil
+          else {
+            val dir = new Path(out, t)
+            frameOver(t, m.schemas(t), straddling).filter(col("block_number") < forkHeight)
+              .drop("bucket").coalesce(1)
+              .sortWithinPartitions(col("block_number"), col(keyOf(t)))
+              .write.options(keyBloom(keyOf(t), straddling.map(_.rows).sum))
+              .parquet(dir.toString)
+            placeStaged(t, dir, Some(forkHeight / bucketSize))
+          }
+        (above, kept)
+      }.unzip
+      if (drops.flatten.nonEmpty) commit(adds.flatten.map(Change.Add(_)), drops.flatten)
+    } finally fs.delete(out, true)
   }
 
   /** Small-file compaction: every micro-batch append leaves one file
     * per bucket it touched, so a bucket ingested across B cycles holds
     * B small files — the classic streaming-sink problem at scale.
-    * Rewrites multi-file buckets into one sorted file via
-    * temp-write-then-swap (crash-safe, see [[swapBucket]]), with a key
-    * bloom filter sized by the row counts in the input files' footers
-    * (no Spark job: compaction keeps every row).
-    *
-    * Only buckets appended to since their last compaction are visited
-    * (the persisted dirty set, which survives process restarts): any
-    * ingester — long-lived or freshly restarted — pays O(touched)
-    * driver round-trips per maintenance cycle, not O(chain length).
-    * [[compactAll]] remains for offline maintenance of stores written
-    * before the marker directory existed. */
-  def compact(table: String): Unit =
-    compactBuckets(table, Some(dirtySet(table).toSet))
-
-  /** Full-sweep compaction over every bucket (offline maintenance /
-    * fresh process with no dirty history). */
-  def compactAll(table: String): Unit = compactBuckets(table, None)
-
-  private def compactBuckets(table: String, only: Option[Set[Long]]): Unit = {
+    * The buckets whose manifest entry holds more than one file are
+    * rewritten, one sorted file each, in one Spark job for the table
+    * and one commit. The frame is read with the stored schema and the
+    * key bloom filter is sized from the manifest's row counts, so no
+    * other job runs. Finding those buckets reads the manifest alone:
+    * O(buckets) in memory, no listing, at any chain length. The old
+    * files stay readable for frames resolved before the commit until
+    * the grace period has passed. */
+  def compact(table: String): Unit = {
     ensureWriteLock()
-    // a frame resolved before the swap lists files the swap deletes
-    if (exists(table) && !only.exists(_.isEmpty)) changingFiles {
-      val key = keyOf(table)
-      ensureRecovered(table)
-      val dir = new Path(tablePath(table))
-      // the dirty set names its buckets: only the full sweep lists the
-      // table (a marker can outlive its bucket, e.g. after a rollback)
-      only.map(_.toSeq.sorted).getOrElse(buckets(table)).foreach { b =>
-        val p = bucketPath(table, b)
-        val files = if (fs.exists(p)) parquetFiles(p) else Seq.empty
-        if (files.size > 1) {
-          val rows = spark.read.parquet(p.toString)
-          val tmp = new Path(dir, s".tmp-compact-${p.getName}")
-          rows.coalesce(1)
-            .sortWithinPartitions(col("block_number"), col(key))
-            .write.mode(SaveMode.Overwrite).options(keyBloom(key, footerRows(files)))
-            .parquet(tmp.toString)
-          swapBucket(dir, p, tmp)
-        }
-        clearDirty(table, b)
+    shared.synchronized {
+      val m = shared.manifest
+      val multi = m.files(table).groupBy(_.bucket).filter(_._2.size > 1)
+      if (multi.nonEmpty) {
+        val key = keyOf(table)
+        val out = stagingRoot
+        try {
+          frameOver(table, m.schemas(table), multi.values.flatten.toSeq).coalesce(1)
+            .sortWithinPartitions(col("bucket"), col("block_number"), col(key))
+            .write.options(keyBloom(key, multi.values.map(_.map(_.rows).sum).max))
+            .partitionBy("bucket").parquet(out.toString)
+          val adds = placeStaged(table, out, bucket = None)
+          commit(adds.map(Change.Add(_)), multi.values.flatten.toSeq)
+        } finally fs.delete(out, true)
       }
     }
   }
 
+  /** The same as [[compact]]: the manifest names every multi-file
+    * bucket, so a full sweep finds nothing more. */
+  def compactAll(table: String): Unit = compact(table)
+
   /** Q-19: the reference's `indexer_status` single-row upsert
-    * (`ON CONFLICT DO UPDATE`, `src/db.rs:53-77`) — last-writer-wins
-    * overwrite of a one-row table. */
+    * (`ON CONFLICT DO UPDATE`, `src/db.rs:53-77`) — last-writer-wins,
+    * committed as a manifest version written on the driver alone. */
   def writeStatus(lastProcessedBlock: Long, chainHeadAtLastPoll: Long): Unit = {
     ensureWriteLock()
-    import spark.implicits._
-    Seq((lastProcessedBlock, chainHeadAtLastPoll))
-      .toDF("last_processed_block", "chain_head_at_last_poll")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$root/indexer_status")
+    shared.synchronized(commit(Seq(Change.Status(lastProcessedBlock, chainHeadAtLastPoll))))
   }
 
   /** Deep-reorg repair marker: set when a detected fork height falls
@@ -602,12 +616,8 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
   }
 
   /** (last_processed_block, chain_head_at_last_poll), None before
-    * first ingest — `src/db.rs:8-15`. */
-  def readStatus: Option[(Long, Long)] =
-    if (fs.exists(new Path(s"$root/indexer_status")))
-      spark.read.parquet(s"$root/indexer_status").collect().headOption
-        .map(r => (r.getLong(0), r.getLong(1)))
-    else None
+    * first ingest — `src/db.rs:8-15`. From the manifest: no Spark job. */
+  def readStatus: Option[(Long, Long)] = current.status
 
   /** I-9: incoming block's parent must match the stored hash at
     * height-1; absent parent is OK (cold start / gap,
@@ -621,31 +631,57 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
 }
 
 object ChainStore {
-  /** Process-wide per-root monitor: bucket swaps and recovery sweeps
-    * across ALL store objects in this JVM serialize on it. The writer
-    * lock is process-scoped, so two objects over the same root in one
-    * JVM share it legally — without this monitor, object B's first-read
-    * recovery could heal object A's swap mid-flight (rename-aside seen,
-    * rename-in not yet done) exactly as a foreign process could. */
-  private val rootMonitors =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private[ingest] def monitorFor(rootKey: String): Object =
-    rootMonitors.computeIfAbsent(rootKey, _ => new Object)
+  /** How long a file stays on disk after a commit dropped it: a frame
+    * resolved before that commit keeps reading it for at least this
+    * long. Longer than any scan the serving path runs. */
+  val GcGraceMs: Long = 10L * 60L * 1000L
 
-  /** Process-wide per-root file-set version, keyed like [[monitorFor]]:
-    * a mutation through any store object over the root invalidates the
-    * frames every sibling object has resolved. */
-  private val fileSets =
-    new java.util.concurrent.ConcurrentHashMap[String, AtomicLong]()
-  private[ingest] def fileSetFor(rootKey: String): AtomicLong =
-    fileSets.computeIfAbsent(rootKey, _ => new AtomicLong())
+  /** Per-root state shared by every store object over the root in this
+    * JVM. Its monitor serializes commits, lock changes and the
+    * leftover sweep; `manifest` is the version the writer process last
+    * committed, so a commit through one object is what its siblings
+    * read next. */
+  private[ingest] final class Shared {
+    @volatile var manifest: Manifest = Manifest.empty
+  }
+
+  private val roots = new java.util.concurrent.ConcurrentHashMap[String, Shared]()
+  private[ingest] def sharedFor(rootKey: String): Shared =
+    roots.computeIfAbsent(rootKey, _ => new Shared)
+
+  private val BatchLo = "graft.batchLo"
+  private val BatchHi = "graft.batchHi"
+  private val BatchMaxRows = "graft.batchMaxRows"
+
+  /** The bounds [[ChainStore.withRowCounts]] stamped: `None` when
+    * unstamped. */
+  private[ingest] def batchBounds(df: DataFrame): Option[Option[(Long, Long, Long)]] = {
+    val md = df.schema("block_number").metadata
+    if (!md.contains(BatchMaxRows)) None
+    else if (md.getLong(BatchMaxRows) == 0L) Some(None)
+    else Some(Some((md.getLong(BatchLo), md.getLong(BatchHi), md.getLong(BatchMaxRows))))
+  }
+
+  /** The schema a parquet read reports for what a parquet write was
+    * given: every field, element and value nullable. */
+  private[ingest] def asStored(s: StructType): StructType = nullable(s).asInstanceOf[StructType]
+
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
+
+  private[ingest] def unstamped(df: DataFrame): DataFrame =
+    df.withColumn("block_number", col("block_number").as("block_number", Metadata.empty))
 
   /** One lock-release hook per root per JVM, via Hadoop's shutdown
     * manager at a priority ABOVE the FileSystem cache close (plain
     * Runtime hooks run in arbitrary order, so the FS could already be
     * closed and the release would strand the lock silently). The body
-    * takes the root monitor — an in-flight bucket swap finishes before
-    * the lock drops, and the holder re-check under the same monitor as
+    * takes the root monitor — an in-flight commit finishes before the
+    * lock drops, and the holder re-check under the same monitor as
     * [[ChainStore.close]] cannot delete a NEW process's lock. Failures
     * are logged, not swallowed: a stranded lock needs an operator. */
   private val releaseHooks =
@@ -653,7 +689,7 @@ object ChainStore {
   private[ingest] def registerLockRelease(rootKey: String,
       fsf: () => org.apache.hadoop.fs.FileSystem, lock: Path): Unit = {
     releaseHooks.computeIfAbsent(rootKey, _ => {
-      val r: Runnable = () => monitorFor(rootKey).synchronized {
+      val r: Runnable = () => sharedFor(rootKey).synchronized {
         try {
           val fs = fsf()
           if (lockHolder(fs, lock).contains(processToken))

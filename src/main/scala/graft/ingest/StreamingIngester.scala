@@ -52,9 +52,19 @@ object StreamingIngester {
     // isEmpty job first would fetch the first partition on its own,
     // one more serial fetch per cycle). It sorts on the driver: an
     // orderBy would add a range-partitioner sampling job and a shuffle.
-    val incoming = batch
-      .select(col("block_number"), col("block_hash"), col("parent_hash")).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2))).sortBy(_._1)
+    // Each block's tx and log counts ride along: they bound the rows
+    // the append writes per bucket, which it would otherwise measure
+    // with a job of its own.
+    val headers = batch
+      .select(col("block_number"), col("block_hash"), col("parent_hash"),
+        size(col("transactions")),
+        aggregate(col("transactions"), lit(0L), (n, t) => n + greatest(size(t.getField("logs")), lit(0))))
+      .collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2),
+        if (r.isNullAt(3)) 0L else math.max(0L, r.getInt(3).toLong),
+        if (r.isNullAt(4)) 0L else r.getLong(4)))
+      .sortBy(_._1)
+    val incoming = headers.map(h => (h._1, h._2, h._3))
     if (incoming.nonEmpty) {
       val lo = incoming.head._1
       val hi0 = incoming.last._1
@@ -102,7 +112,9 @@ object StreamingIngester {
           // append stays exactly-once.
           val logsWithId = logs.withColumn("id",
             expr("block_number * 1000000 + tx_index_in_block * 1000 + log_index_in_tx"))
-          store.append(blocks, txs, logsWithId)
+          def sized(df: DataFrame, rowsAt: ((Long, String, String, Long, Long)) => Long) =
+            store.withRowCounts(df, headers.map(h => h._1 -> rowsAt(h)))
+          store.append(sized(blocks, _ => 1L), sized(txs, _._4), sized(logsWithId, _._5))
           // The appended batch reaches back to the marked hole: healed.
           store.readRepairFrom.filter(lo <= _._1).foreach(_ => store.clearRepairFrom())
           // Q-19: checkpoint upsert in the same cycle, mirroring the

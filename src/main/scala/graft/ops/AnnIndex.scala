@@ -768,8 +768,7 @@ object AnnIndex {
     * corpus (the build flag, carried through the rebuild so a learned
     * index stays learned).
     *
-    * Commit protocol = temp-write-then-swap at table granularity (the
-    * [[graft.ingest.ChainStore]] `swapBucket` pattern): the new
+    * Commit protocol = temp-write-then-swap at table granularity: the new
     * generation is fully written BESIDE the live tables (readers keep
     * serving the old index during the corpus-wide reassignment — no
     * downtime window the length of a rebuild), then swapped in via

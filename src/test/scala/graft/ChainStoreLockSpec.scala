@@ -2,13 +2,13 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, expr}
 import graft.ingest.{ChainStore, Ingest, SimChain, StreamingIngester}
 
 /** Pins the single-writer contract of [[graft.ingest.ChainStore]]:
-  * bucket swaps and recovery sweeps are crash-safe for one writer
-  * process only, so a second process must fail fast on its first
-  * mutation instead of interleaving. A unit test cannot fork a JVM,
+  * manifest commits and the leftover sweep assume one writer process,
+  * so a second process must fail fast on its first mutation instead of
+  * interleaving. A unit test cannot fork a JVM,
   * but the lock's process identity is just the holder token — writing
   * a foreign token IS another process as far as the protocol is
   * concerned.
@@ -44,33 +44,6 @@ class ChainStoreLockSpec extends AnyFunSuite with SparkSpec {
     assert(second.read("blocks").get.count() == 6)
   }
 
-  test("a reader never heals a foreign writer's in-flight swap; recovery resumes once the lock clears") {
-    val root = newRoot()
-    val writer = new ChainStore(spark, root, 2)
-    StreamingIngester.processBatch(writer, SimChain.canonical(5).toDF())
-    writer.close()
-    val total = new ChainStore(spark, root, 2).read("blocks").get.count()
-    assert(total == 5)
-    // simulate a foreign writer mid-swap: blocks bucket=1 set aside,
-    // replacement not yet renamed in, lock held by that process
-    val dir = Paths.get(root, "blocks")
-    java.nio.file.Files.move(dir.resolve("bucket=1"), dir.resolve(".aside-bucket=1"))
-    Files.write(Paths.get(root, "_writer.lock"), "pid1@other:feed".getBytes("UTF-8"))
-
-    val reader = new ChainStore(spark, root, 2)
-    val visible = reader.read("blocks").get.count()
-    assert(visible < total, "the in-flight bucket is transiently hidden")
-    assert(Files.exists(dir.resolve(".aside-bucket=1")),
-      "the reader must NOT have healed the live swap")
-
-    // the foreign writer died: clear its lock — a fresh store's first
-    // read now recovers the crash leftover
-    ChainStore.forceUnlock(spark, root)
-    val healed = new ChainStore(spark, root, 2).read("blocks").get.count()
-    assert(healed == total)
-    assert(!Files.exists(dir.resolve(".aside-bucket=1")))
-  }
-
   test("same-process restart re-acquires the lock (crash-replay shape)") {
     val root = newRoot()
     val first = new ChainStore(spark, root, 10)
@@ -96,19 +69,28 @@ class ChainStoreLockSpec extends AnyFunSuite with SparkSpec {
     val writer = new ChainStore(spark, root, 2)
     StreamingIngester.processBatch(writer, SimChain.canonical(5).toDF())
     writer.close()
-    Files.write(Paths.get(root, "_writer.lock"), "pid1@other:feed".getBytes("UTF-8"))
+    val foreignLock = Paths.get(root, "_writer.lock")
+    Files.write(foreignLock, "pid1@other:feed".getBytes("UTF-8"))
 
     val reader = new ChainStore(spark, root, 2)
-    assert(reader.read("blocks").get.count() == 5)
+    val first = reader.read("blocks").get
+    assert(first.count() == 5)
+    assert(reader.read("blocks").get eq first, "an unchanged version must reuse the resolved frame")
     // the foreign writer drops block 5 as a new file into bucket=2,
-    // which already holds block 4
-    val (blocks, _, _) = Ingest.flatten(SimChain.canonical(6).toDF())
-    val staged = Files.createTempDirectory("foreign-file")
-    blocks.filter(col("block_number") === 5).coalesce(1)
-      .write.mode("overwrite").parquet(staged.toString)
-    val part = Files.list(staged).filter(_.toString.endsWith(".parquet")).findFirst().get()
-    Files.move(part, Paths.get(root, "blocks", "bucket=2", "part-foreign.parquet"))
+    // which already holds block 4, and commits a manifest version. It
+    // is played by a store in this JVM while the foreign lock is
+    // lifted; the reader shares nothing in memory with it.
+    ChainStore.forceUnlock(spark, root)
+    val foreign = new ChainStore(spark, root, 2)
+    val (blocks, txs, logs) = Ingest.flatten(SimChain.canonical(6).toDF())
+    val logsWithId = logs.withColumn("id",
+      expr("block_number * 1000000 + tx_index_in_block * 1000 + log_index_in_tx"))
+    val Seq(b5, t5, l5) = Seq(blocks, txs, logsWithId).map(_.filter(col("block_number") === 5))
+    foreign.append(b5, t5, l5)
+    foreign.close()
+    Files.write(foreignLock, "pid1@other:feed".getBytes("UTF-8"))
     val heights = reader.read("blocks").get.select("block_number").collect().map(_.getLong(0))
-    assert(heights.sorted.toSeq == (0L to 5L), "the reader must re-list, not reuse a frame")
+    assert(heights.sorted.toSeq == (0L to 5L), "the reader must see the new version, not reuse a frame")
+    assert(reader.lastSyncedBlock.contains(5L))
   }
 }

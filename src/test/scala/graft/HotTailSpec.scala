@@ -69,7 +69,10 @@ class HotTailSpec extends AnyFunSuite with SparkSpec {
     def onChain(n: Long) = SimChain.blockOn(n, forkAt)
     ingest(store, (0L to tip).map(onChain))
 
-    def raw(t: String): DataFrame = spark.read.parquet(s"$root/$t")
+    // Spark's own read of the store's live files: a file a commit
+    // dropped stays on disk for older readers until its grace period
+    def raw(t: String): DataFrame =
+      spark.read.option("basePath", s"$root/$t").parquet(store.liveFiles(t): _*)
     def check(step: String): Unit = {
       val api = p()
       // no cache, no tail, frames listed afresh: the plain scan

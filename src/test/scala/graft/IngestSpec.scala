@@ -116,16 +116,14 @@ class IngestSpec extends AnyFunSuite with SparkSpec {
 
   test("compact merges per-batch small files per bucket without changing data") {
     import org.apache.hadoop.fs.Path
-    val (store, root) = freshStore(bucketSize = 10)
+    val (store, _) = freshStore(bucketSize = 10)
     val chain = SimChain.canonical(20)
     // 10 appends of 2 blocks → buckets 0 and 1 get 5 files each
     chain.grouped(2).foreach(b => StreamingIngester.processBatch(store, envelopes(b.toSeq)))
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // the store's live files: the ones compaction drops stay on disk
+    // for older readers until the grace period has passed
     def filesPerBucket(t: String): Map[String, Int] =
-      fs.listStatus(new Path(s"$root/$t")).map(_.getPath)
-        .filter(_.getName.startsWith("bucket=")).map { p =>
-          p.getName -> fs.listStatus(p).count(_.getPath.getName.endsWith(".parquet"))
-        }.toMap
+      store.liveFiles(t).groupBy(f => new Path(f).getParent.getName).map { case (b, fs) => b -> fs.size }
     assert(filesPerBucket("logs").values.forall(_ > 1))
     val before = store.read("logs").get.orderBy(col("id")).collect().toSeq
     store.Tables.foreach(store.compact)
@@ -166,68 +164,40 @@ class IngestSpec extends AnyFunSuite with SparkSpec {
     val (store, root) = freshStore(bucketSize = 2)
     val chain = SimChain.canonical(104) // 52 buckets of 2 blocks
     chain.grouped(3).foreach(b => StreamingIngester.processBatch(store, envelopes(b.toSeq)))
-    store.Tables.foreach(store.compact) // compacts + clears all dirty state
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def listing(t: String): Map[String, Seq[String]] =
-      fs.listStatus(new Path(s"$root/$t")).map(_.getPath)
-        .filter(_.getName.startsWith("bucket=")).map { p =>
-          p.getName -> fs.listStatus(p).map(_.getPath.getName)
-            .filter(_.endsWith(".parquet")).toSeq.sorted
-        }.toMap
-    // dirty exactly one new bucket (52) with two single-block appends
+    store.Tables.foreach(store.compact) // every bucket down to one file
+    // the store's live files per bucket: a file compaction drops stays
+    // on disk for older readers until the grace period has passed
+    def listing(s: ChainStore, t: String): Map[String, Seq[String]] =
+      s.liveFiles(t).groupBy(f => new Path(f).getParent.getName)
+        .map { case (b, fs) => b -> fs.map(new Path(_).getName).sorted }
+    // touch exactly one new bucket (52) with two single-block appends
     SimChain.blocks(104, 106).foreach(b =>
       StreamingIngester.processBatch(store, envelopes(Seq(b))))
-    assert(listing("blocks")("bucket=52").size == 2)
-    // the dirty set is persisted beside the data (_dirty markers): a
-    // RESTARTED ingester — fresh ChainStore instance, same root —
-    // keeps O(touched) compaction instead of degrading to a no-op
-    // until the next compactAll full sweep
+    assert(listing(store, "blocks")("bucket=52").size == 2)
+    // the manifest names the multi-file bucket: a RESTARTED ingester —
+    // fresh ChainStore instance, same root — compacts it without any
+    // history of its own
     val freshInstance = new ChainStore(spark, root, bucketSize = 2)
-    val before = listing("blocks")
+    val before = listing(freshInstance, "blocks")
     freshInstance.compact("blocks")
-    val after = listing("blocks")
-    assert(after("bucket=52").size == 1, "restart lost the persisted dirty set")
+    val after = listing(freshInstance, "blocks")
+    assert(after("bucket=52").size == 1, "the restarted store did not compact the touched bucket")
     // ...and everything the restarted instance did NOT touch must come
     // through byte-identical (same part files, no rewrite)
     (before - "bucket=52").foreach { case (b, files) =>
       assert(after(b) == files, s"untouched bucket $b was rewritten")
     }
-    // the pre-restart instance's stale in-memory mark for bucket 52 is
-    // harmless: one listing, no rewrite (nFiles is already 1)
+    // the pre-restart instance sees the commit and finds nothing to do
     store.compact("blocks")
-    assert(listing("blocks") == after, "stale dirty mark caused a rewrite")
-    // offline full sweep still available for maintenance
+    assert(listing(store, "blocks") == after, "a compacted bucket was rewritten")
+    // the full sweep remains for maintenance
     SimChain.blocks(106, 108).foreach(b =>
       StreamingIngester.processBatch(store, envelopes(Seq(b))))
     freshInstance.compactAll("blocks")
-    assert(listing("blocks")("bucket=53").size == 1)
+    assert(listing(freshInstance, "blocks")("bucket=53").size == 1)
     // data unharmed end to end
     assert(store.read("blocks").get.count() == 108)
     assert(store.lastSyncedBlock.contains(107L))
-  }
-
-  test("a crashed bucket swap heals before the first append/read, not only before compact") {
-    import org.apache.hadoop.fs.Path
-    val (store, root) = freshStore(bucketSize = 5)
-    SimChain.canonical(20).grouped(10)
-      .foreach(b => StreamingIngester.processBatch(store, envelopes(b.toSeq)))
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // simulate a crash between swapBucket's two renames: the live
-    // bucket was renamed aside, the replacement never arrived
-    val live = new Path(s"$root/blocks/bucket=1")
-    val aside = new Path(s"$root/blocks/.aside-bucket=1")
-    assert(fs.rename(live, aside))
-    // a fresh process's FIRST operation is an ingest batch — without
-    // recovery-before-append this would recreate bucket=1 with only
-    // the new rows and the aside copy would later be deleted as
-    // "superseded", losing heights 5..9 forever
-    val store2 = new ChainStore(spark, root, bucketSize = 5)
-    StreamingIngester.processBatch(store2, envelopes(SimChain.blocks(20, 22)))
-    val heights = store2.read("blocks").get
-      .select("block_number").collect().map(_.getLong(0)).toSet
-    assert(heights == (0L until 22L).toSet,
-      s"pre-crash rows lost: missing ${(0L until 22L).toSet -- heights}")
-    assert(!fs.exists(aside), "healed aside copy must be gone")
   }
 
   test("property: random extend/fork walk — store stays canonical, linked, exactly-once") {
@@ -412,7 +382,7 @@ class IngestSpec extends AnyFunSuite with SparkSpec {
       .sorted, s"$step: logs")
   }
 
-  test("an append of a 50-block batch into a store past 32 buckets runs at most 7 Spark jobs") {
+  test("an append of a 50-block batch into a store past 32 buckets runs at most 3 Spark jobs") {
     val counter = new JobCounter(spark)
     @volatile var appendJobs = -1
     val root = Files.createTempDirectory("chainstore").toString
@@ -433,7 +403,7 @@ class IngestSpec extends AnyFunSuite with SparkSpec {
       StreamingIngester.processBatch(store, envelopes(SimChain.blocks(74, 124)))
     } finally spark.sparkContext.removeSparkListener(counter)
     assert(appendJobs >= 0, "the append was not counted")
-    assert(appendJobs <= 7, s"store.append ran $appendJobs Spark jobs for one 50-block batch")
+    assert(appendJobs <= 3, s"store.append ran $appendJobs Spark jobs for one 50-block batch")
     assertStoreIs(store, SimChain.canonical(124), "after the counted append")
   }
 
@@ -442,16 +412,12 @@ class IngestSpec extends AnyFunSuite with SparkSpec {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import scala.jdk.CollectionConverters._
-    val (store, root) = freshStore(bucketSize = 20)
+    val (store, _) = freshStore(bucketSize = 20)
     val conf = spark.sparkContext.hadoopConfiguration
     val keyOf = Map("blocks" -> "block_hash", "transactions" -> "tx_hash", "logs" -> "id")
-    def files(t: String): Seq[Path] = {
-      val dir = new Path(s"$root/$t")
-      val fs = dir.getFileSystem(conf)
-      fs.listStatus(dir).toSeq.filter(_.getPath.getName.startsWith("bucket="))
-        .flatMap(b => fs.listStatus(b.getPath).toSeq)
-        .filter(_.getPath.getName.endsWith(".parquet")).map(_.getPath)
-    }
+    // the store's live files: the ones compaction drops stay on disk
+    // for older readers until the grace period has passed
+    def files(t: String): Seq[Path] = store.liveFiles(t).map(new Path(_))
     def assertSmallWithBloom(when: String): Unit =
       for (t <- store.Tables; f <- files(t)) {
         val len = f.getFileSystem(conf).getFileStatus(f).getLen
