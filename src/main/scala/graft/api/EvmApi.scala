@@ -49,23 +49,26 @@ final case class TransactionInfo(
   *    misses asks the tail, then the scan, so its hit and miss counts
   *    do not depend on the tail.
   *
-  * Both are stamped with the backing store's mutation version and stop
-  * answering when it moves (append or reorg rollback — a rollback can
-  * change the answer at an existing height, so per-key invalidation
-  * would be wrong).
+  * A facade over a store reads one [[graft.ingest.ChainStore.Snapshot]]:
+  * its three frames and its tail are the tables at one manifest
+  * `version`, and the memo stamps what it computes with that version.
+  * A commit (append, reorg rollback, compaction or status write) moves
+  * the version, so the memo stops answering and the next facade reads
+  * the new one (a rollback can change the answer at an existing
+  * height, so per-key invalidation would be wrong).
   */
 final class EvmApi private[api] (blocks: DataFrame, transactions: DataFrame, logs: DataFrame,
-                                 cache: Option[LookupCache],
+                                 cache: Option[LookupCache], version: Long,
                                  private[graft] val hotTail: Option[HotTail]) {
 
   /** A facade over fixed frames, with no hot tail. */
   def this(blocks: DataFrame, transactions: DataFrame, logs: DataFrame,
            cache: Option[LookupCache] = None) =
-    this(blocks, transactions, logs, cache, None)
+    this(blocks, transactions, logs, cache, 0L, None)
 
   private def memo[T](kind: String, key: String)(compute: => T): T =
     cache match {
-      case Some(c) => c.getOrCompute(kind, key)(compute)
+      case Some(c) => c.getOrCompute(kind, key, version)(compute)
       case None => compute
     }
 
@@ -162,46 +165,43 @@ object EvmApi {
 
   /** Facade over an ingested [[graft.ingest.ChainStore]] — the serving
     * side of the reference's concurrent ingest+serve design (I-13).
-    * The lookup memo invalidates on the store's in-process mutation
-    * version, so a reorg rollback is visible on the very next
-    * request. It builds the store's [[HotTail]] (two Spark jobs). */
+    * The lookup memo invalidates on the store's manifest version, so a
+    * reorg rollback is visible on the very next request. It builds the
+    * store's [[HotTail]] (two Spark jobs). */
   def onStore(store: graft.ingest.ChainStore): Option[EvmApi] =
-    onStoreWith(store, new LookupCache(version = () => store.mutationCount),
-      new HotTail.Slot(store))
+    onStoreWith(store, new LookupCache(version = () => store.mutationCount), new HotTail.Slot)
 
   private def onStoreWith(store: graft.ingest.ChainStore, cache: LookupCache,
                           tails: HotTail.Slot): Option[EvmApi] = {
-    // read before the frames resolve: a tail built from frames that a
-    // mutation has since changed carries the older version
-    val version = store.mutationCount
+    val s = store.snapshot
     for {
-      b <- store.read("blocks")
-      t <- store.read("transactions")
-      l <- store.read("logs")
-    } yield new EvmApi(b, t, l, Some(cache), tails.at(version, b, t))
+      b <- s.table("blocks")
+      t <- s.table("transactions")
+      l <- s.table("logs")
+    } yield new EvmApi(b, t, l, Some(cache), s.version, tails.at(s))
   }
 
   /** The live-serving provider for [[RestServer]]: a facade per
-    * request over the store's current frames, sharing ONE
-    * version-aware lookup memo across requests. A frame is its table
-    * at one manifest version, so the frames come from
-    * [[graft.ingest.ChainStore.read]], which hands back the frames it
-    * already resolved until a commit moves the version: in the writer
-    * process any commit through a store object over the root, in a
-    * reader-only process a foreign writer's commit, found by one
-    * listing of the manifest directory per call. Either way appends
-    * and rollbacks are visible on the next request, and a request
-    * that overlaps a commit keeps reading the version it resolved.
-    * Without the shared memo, per-request facades would each allocate
-    * a cold cache and the repeat-lookup win would never materialize. The provider shares
-    * one [[HotTail]] the same way: the first call at each mutation
-    * version builds it (two Spark jobs, single-flight) and later calls
-    * reuse it, so no lookup pays for it. Throws if the store has no
-    * tables yet — serve after the first committed batch, like the
-    * reference's API server over an initialized schema. */
+    * request over the store's current [[graft.ingest.ChainStore.snapshot]],
+    * sharing ONE version-aware lookup memo across requests. The store
+    * hands back the snapshot it already resolved until a commit moves
+    * the version: in the writer process any commit through a store
+    * object over the root, in a reader-only process a foreign writer's
+    * commit, found by one listing of the manifest directory per call
+    * (and one more per memoized lookup, for the memo's version).
+    * Either way appends and rollbacks are visible on the next request,
+    * and a request that overlaps a commit keeps reading the version it
+    * resolved. Without the shared memo, per-request facades would each
+    * allocate a cold cache and the repeat-lookup win would never
+    * materialize. The provider shares one [[HotTail]] the same way: the
+    * first call at each version builds it (two Spark jobs,
+    * single-flight) and later calls reuse it, so no lookup pays for it.
+    * Throws if the store has no tables yet — serve after the first
+    * committed batch, like the reference's API server over an
+    * initialized schema. */
   def providerOnStore(store: graft.ingest.ChainStore,
                       cache: LookupCache): () => EvmApi = {
-    val tails = new HotTail.Slot(store)
+    val tails = new HotTail.Slot
     () => onStoreWith(store, cache, tails).getOrElse(
       throw new IllegalStateException("chain store has no tables yet"))
   }

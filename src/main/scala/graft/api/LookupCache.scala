@@ -14,11 +14,14 @@ package graft.api
   * jobs (spec-asserted via a job listener), while staying exactly as
   * fresh as the store:
   *
-  *  - entries are stamped with the store's MUTATION VERSION at compute
-  *    time and ignored once the version moves — an appended batch or a
+  *  - an entry is stamped with the version of the facade that
+  *    computed it (the manifest version its frames read) and answers
+  *    only while `version()` still equals it — an appended batch or a
   *    reorg rollback (which can change the answer at an existing
   *    height) invalidates everything at once, the only safe rule when
-  *    a rollback retracts arbitrary suffixes;
+  *    a rollback retracts arbitrary suffixes. An answer computed from
+  *    frames that a commit has since replaced carries the older
+  *    version, so it is never served as the newer one's;
   *  - capacity is a hard LRU bound (access-order), so a hash-scanning
   *    crawler cannot balloon the serving heap;
   *  - negative results cache too: a 404 for an unmined hash is the
@@ -27,18 +30,13 @@ package graft.api
   *
   * Over a store, a miss does not always cost a Spark job: the facade
   * asks the store's [[HotTail]] (the rows of its two newest buckets,
-  * stamped with the same mutation version) before it scans. The memo
-  * sits in front of the tail and counts a tail answer as a miss, so
-  * [[hits]] and [[misses]] mean the same with or without it.
+  * at the facade's version) before it scans. The memo sits in front of
+  * the tail and counts a tail answer as a miss, so [[hits]] and
+  * [[misses]] mean the same with or without it.
   *
-  * In-process only, by design: the store's single-writer contract
-  * means a co-located serving thread (the I-13 shape) sees every
-  * mutation through [[graft.ingest.ChainStore.mutationCount]]. A
-  * REMOTE reader process sees the writer's commits as new manifest
-  * versions on its next `read`, but this memo is not keyed on them
-  * yet, so such a process must serve uncached (pass no cache —
-  * correctness first). For the same reason only a store that holds
-  * the writer lock builds a hot tail.
+  * The store factories pass [[graft.ingest.ChainStore.mutationCount]]
+  * as `version`: the store's manifest version, which moves with every
+  * commit, whether this process wrote it or another did.
   */
 final class LookupCache(maxEntries: Int = 4096, version: () => Long = () => 0L) {
 
@@ -56,14 +54,16 @@ final class LookupCache(maxEntries: Int = 4096, version: () => Long = () => 0L) 
 
   // Per-(kind, key, version) single-flight: a thundering herd on one
   // cold hot key runs ONE Spark compute; the followers block on the
-  // leader's future and share its answer. The version is part of the
-  // in-flight key so a compute raced by a store mutation never serves
-  // a stale answer to callers who arrived after the version moved —
-  // they start their own flight under the new version.
+  // leader's future and share its answer. The facade's version is part
+  // of the in-flight key, so a caller whose frames read a newer
+  // version starts its own flight.
   private val inflight = new java.util.concurrent.ConcurrentHashMap[
     (String, String, Long), java.util.concurrent.CompletableFuture[Any]]()
 
-  def getOrCompute[T](kind: String, key: String)(compute: => T): T = {
+  /** The answer for `(kind, key)`: a cached one while its version is
+    * `version()`, else `compute`, stamped with `at`, the version of the
+    * frames it reads. */
+  def getOrCompute[T](kind: String, key: String, at: Long)(compute: => T): T = {
     val v = version()
     val k = (kind, key)
     val cached = map.synchronized(Option(map.get(k)))
@@ -72,7 +72,7 @@ final class LookupCache(maxEntries: Int = 4096, version: () => Long = () => 0L) 
         hitCount.incrementAndGet()
         value.asInstanceOf[T]
       case _ =>
-        val fk = (kind, key, v)
+        val fk = (kind, key, at)
         val mine = new java.util.concurrent.CompletableFuture[Any]()
         val prior = inflight.putIfAbsent(fk, mine)
         if (prior != null) {
@@ -91,7 +91,7 @@ final class LookupCache(maxEntries: Int = 4096, version: () => Long = () => 0L) 
           missCount.incrementAndGet()
           try {
             val r = compute
-            map.synchronized { map.put(k, (v, r)); () }
+            map.synchronized { map.put(k, (at, r)); () }
             mine.complete(r)
             r
           } catch {

@@ -41,7 +41,7 @@ import org.apache.spark.sql.Row
   * [[EvmApi]], a COLD point lookup runs one pruned Spark job, unless
   * its key lies in a store's two newest buckets ([[HotTail]]); repeats
   * are served by the facade's [[LookupCache]] memo. Both answer with
-  * zero Spark jobs and invalidate on the store's mutation version, so
+  * zero Spark jobs and invalidate on the store's manifest version, so
   * a reorg is visible on the next request. Responses go out with TCP_NODELAY
   * (see [[start]]): without it every response, a memo hit included,
   * waited ~40 ms for the client's delayed ACK.
@@ -53,11 +53,14 @@ import org.apache.spark.sql.Row
   * [[EvmApi.providerOnStore]], which shares ONE lookup memo across
   * the per-request facades) serves live data while a
   * [[graft.ingest.StreamingIngester]] appends — the reference's
-  * API-server + indexer-loop composition (`src/main.rs:83-90`). In the
-  * writer process the store reuses its resolved frames until an
-  * append, rollback or compaction changes the files; a reader-only
-  * process re-lists the store on every request. For a static source,
-  * pass the fixed-facade constructor.
+  * API-server + indexer-loop composition (`src/main.rs:83-90`). Each
+  * facade reads one snapshot of the store's three tables, which the
+  * store reuses until a commit moves its manifest version. In the
+  * writer process that is any commit through a store object over the
+  * root; a reader-only process finds a foreign writer's commit by
+  * listing `_manifest` alone (once per facade, once more per memoized
+  * lookup), and serves with the same memo and tail. For a static
+  * source, pass the fixed-facade constructor.
   */
 final class RestServer(apiProvider: () => EvmApi, port: Int, nThreads: Int) {
 

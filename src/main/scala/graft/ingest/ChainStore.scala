@@ -1,6 +1,5 @@
 package graft.ingest
 
-import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -74,10 +73,6 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
 
   private def lockPath = new Path(s"$root/_writer.lock")
   @volatile private var lockHeld = false
-
-  /** Whether this store object writes the root: only then does
-    * [[mutationCount]] move with every change to the store's answers. */
-  private[graft] def holdsWriterLock: Boolean = lockHeld
 
   // normalized key: "/data/store", "/data/store/" and "file:///data/store"
   // resolve to the SAME lock file, so they must share one state too
@@ -218,8 +213,29 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
 
   def exists(table: String): Boolean = current.schemas.contains(table)
 
-  /** Resolved frames per table, each stamped with its manifest version. */
-  private val frames = new java.util.concurrent.ConcurrentHashMap[String, (Long, DataFrame)]()
+  /** The manifest version this store answers from: [[snapshot]]'s, and
+    * the version a serving cache ([[graft.api.LookupCache]]) stamps its
+    * entries with. Every commit moves it (append, rollback, compaction
+    * and status write alike); a store without the writer lock sees a
+    * foreign writer's commit on its next call. */
+  def mutationCount: Long = current.version
+
+  @volatile private var last = new ChainStore.Snapshot(Manifest.empty, frameAt)
+
+  /** The three tables at the version this store answers from: a reader
+    * of more than one table takes them from one snapshot and never
+    * mixes versions. The store returns the same snapshot, and so the
+    * same frames, until the version moves. */
+  def snapshot: ChainStore.Snapshot = {
+    val m = current
+    val s = last
+    if (s.version == m.version) s
+    else {
+      val next = new ChainStore.Snapshot(m, frameAt)
+      last = next
+      next
+    }
+  }
 
   /** Read a table. The physical `bucket` partition column stays in the
     * frame, stamped with [[graft.plans.BucketPruneRule]] metadata
@@ -242,18 +258,15 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
     * returns the same frame until the version moves: in the writer
     * process every commit moves it, through any store object over the
     * root; a store without the lock sees a foreign writer's commit on
-    * its next call. */
-  def read(table: String): Option[DataFrame] = {
-    val m = current
-    m.schemas.get(table).map { schema =>
-      Option(frames.get(table)).filter(_._1 == m.version).map(_._2).getOrElse {
-        val meta = graft.plans.BucketPruneRule.bucketMetadata("block_number", bucketSize)
-        val df = frameOver(table, schema, m.files(table))
-          .withColumn("bucket", col("bucket").as("bucket", meta))
-        frames.put(table, (m.version, df))
-        df
-      }
-    }
+    * its next call. A reader of several tables takes them from one
+    * [[snapshot]] instead. */
+  def read(table: String): Option[DataFrame] = snapshot.table(table)
+
+  /** The frame of a table at a manifest version. */
+  private def frameAt(table: String, m: Manifest): DataFrame = {
+    val meta = graft.plans.BucketPruneRule.bucketMetadata("block_number", bucketSize)
+    frameOver(table, m.schemas(table), m.files(table))
+      .withColumn("bucket", col("bucket").as("bucket", meta))
   }
 
   /** A frame over the given files of a table: data columns in the
@@ -282,25 +295,10 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
         .limit(1).collect().headOption.map(_.getString(0))
     }
 
-  /** In-process mutation version: bumped by every call that can change
-    * a QUERY ANSWER ([[append]], [[rollback]]) — the invalidation
-    * signal a co-located serving cache ([[graft.api.LookupCache]])
-    * keys its entries on. Bumped on ENTRY **and** EXIT of each
-    * mutator: a concurrent lookup that reads the version mid-mutation
-    * and computes against a frame resolved before the commit would
-    * otherwise cache its answer under the post-entry version and serve
-    * it stale until the NEXT mutation; the exit bump guarantees any
-    * answer computed before or during a mutation carries a version
-    * older than the settled state's. Compaction rewrites bytes, not
-    * answers, and does not bump. Another process's reader sees no
-    * signal (the counter is this JVM's) and must serve uncached. */
-  def mutationCount: Long = mutations.get()
-  private val mutations = new AtomicLong()
-
+  /** Run a mutation as the writer, under the root monitor. */
   private def mutating[T](f: => T): T = {
     ensureWriteLock()
-    mutations.incrementAndGet(): Unit
-    try shared.synchronized(f) finally mutations.incrementAndGet(): Unit
+    shared.synchronized(f)
   }
 
   /** Q-20 / I-11: idempotent append of one flattened batch — the
@@ -496,10 +494,6 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
     log.prune(next.version)
   }
 
-  /** The numbers of a table's buckets that hold rows, ascending, from
-    * the manifest (no listing, no Spark job). */
-  private[graft] def buckets(table: String): Seq[Long] = current.buckets(table)
-
   /** The table's live files, as paths under the root: what a frame
     * resolved now reads. */
   private[graft] def liveFiles(table: String): Seq[String] =
@@ -551,37 +545,28 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
     * O(buckets) in memory, no listing, at any chain length. The old
     * files stay readable for frames resolved before the commit until
     * the grace period has passed. */
-  def compact(table: String): Unit = {
-    ensureWriteLock()
-    shared.synchronized {
-      val m = shared.manifest
-      val multi = m.files(table).groupBy(_.bucket).filter(_._2.size > 1)
-      if (multi.nonEmpty) {
-        val key = keyOf(table)
-        val out = stagingRoot
-        try {
-          frameOver(table, m.schemas(table), multi.values.flatten.toSeq).coalesce(1)
-            .sortWithinPartitions(col("bucket"), col("block_number"), col(key))
-            .write.options(keyBloom(key, multi.values.map(_.map(_.rows).sum).max))
-            .partitionBy("bucket").parquet(out.toString)
-          val adds = placeStaged(table, out, bucket = None)
-          commit(adds.map(Change.Add(_)), multi.values.flatten.toSeq)
-        } finally fs.delete(out, true)
-      }
+  def compact(table: String): Unit = mutating {
+    val m = shared.manifest
+    val multi = m.files(table).groupBy(_.bucket).filter(_._2.size > 1)
+    if (multi.nonEmpty) {
+      val key = keyOf(table)
+      val out = stagingRoot
+      try {
+        frameOver(table, m.schemas(table), multi.values.flatten.toSeq).coalesce(1)
+          .sortWithinPartitions(col("bucket"), col("block_number"), col(key))
+          .write.options(keyBloom(key, multi.values.map(_.map(_.rows).sum).max))
+          .partitionBy("bucket").parquet(out.toString)
+        val adds = placeStaged(table, out, bucket = None)
+        commit(adds.map(Change.Add(_)), multi.values.flatten.toSeq)
+      } finally fs.delete(out, true)
     }
   }
-
-  /** The same as [[compact]]: the manifest names every multi-file
-    * bucket, so a full sweep finds nothing more. */
-  def compactAll(table: String): Unit = compact(table)
 
   /** Q-19: the reference's `indexer_status` single-row upsert
     * (`ON CONFLICT DO UPDATE`, `src/db.rs:53-77`) — last-writer-wins,
     * committed as a manifest version written on the driver alone. */
-  def writeStatus(lastProcessedBlock: Long, chainHeadAtLastPoll: Long): Unit = {
-    ensureWriteLock()
-    shared.synchronized(commit(Seq(Change.Status(lastProcessedBlock, chainHeadAtLastPoll))))
-  }
+  def writeStatus(lastProcessedBlock: Long, chainHeadAtLastPoll: Long): Unit =
+    mutating(commit(Seq(Change.Status(lastProcessedBlock, chainHeadAtLastPoll))))
 
   /** Deep-reorg repair marker: set when a detected fork height falls
     * below the triggering batch's own range, i.e. the store was rolled
@@ -643,6 +628,21 @@ object ChainStore {
     * read next. */
   private[ingest] final class Shared {
     @volatile var manifest: Manifest = Manifest.empty
+  }
+
+  /** A store's tables at one manifest version. Each frame resolves on
+    * first use, from the version's file list and stored schema (no
+    * listing, no Spark job), and keeps reading that version while later
+    * commits land. */
+  final class Snapshot private[ingest] (m: Manifest, frameAt: (String, Manifest) => DataFrame) {
+    def version: Long = m.version
+    private val frames = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+
+    def table(t: String): Option[DataFrame] =
+      if (m.schemas.contains(t)) Some(frames.computeIfAbsent(t, frameAt(_, m))) else None
+
+    /** The numbers of a table's buckets that hold rows, ascending. */
+    def buckets(t: String): Seq[Long] = m.buckets(t)
   }
 
   private val roots = new java.util.concurrent.ConcurrentHashMap[String, Shared]()

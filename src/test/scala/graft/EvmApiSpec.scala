@@ -122,7 +122,7 @@ class EvmApiSpec extends AnyFunSuite with SparkSpec {
     val results = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
     val threads = (1 to 8).map { _ =>
       val t = new Thread(() => {
-        val r = cache.getOrCompute("k", "hot") {
+        val r = cache.getOrCompute("k", "hot", at = 0L) {
           computes.incrementAndGet()
           entered.countDown()
           proceed.await() // hold the flight open until all herd members arrive
@@ -152,19 +152,61 @@ class EvmApiSpec extends AnyFunSuite with SparkSpec {
     assert(before.blockHash == SimChain.blockOn(8, None).block_hash)
     // a FRESH facade instance (new request) must still hit the memo
     assert(p().block("8").get == before && cache.hits == 1)
-    // a reorg CHANGES the answer at height 8: the rollback+append bumps
-    // the store's mutation version, so the stale entry must not serve
+    // a reorg CHANGES the answer at height 8: the rollback and the
+    // append each commit a manifest version, so the stale entry must
+    // not serve
     val vBefore = store.mutationCount
     StreamingIngester.processBatch(store, SimChain.forked(6, 13).toDF())
-    // entry AND exit bumps per mutator: an answer computed against
-    // half-written state mid-mutation can never share the settled
-    // state's version (rollback + append here => >= 4 bumps)
-    assert(store.mutationCount >= vBefore + 4,
-      s"expected entry+exit bumps for rollback and append, got ${store.mutationCount - vBefore}")
+    assert(store.mutationCount > vBefore, "the reorg must move the store's version")
     val after = p().block("8").get
     assert(after.blockHash == SimChain.blockOn(8, Some(6L)).block_hash,
       "post-reorg lookups must see the fork branch")
     assert(after != before, "the memo must not have served the dead branch")
+  }
+
+  test("an answer computed from frames a commit has since replaced is not served as the newer version's") {
+    import spark.implicits._
+    val store = new ChainStore(spark, Files.createTempDirectory("apirace").toString, 10)
+    StreamingIngester.processBatch(store, SimChain.canonical(12).toDF())
+    // the first version read lands a commit: after the facade resolved
+    // its frames, before its memo reads the version
+    val committed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val cache = new graft.api.LookupCache(version = () => {
+      if (committed.compareAndSet(false, true))
+        StreamingIngester.processBatch(store, SimChain.canonical(15).toDF())
+      store.mutationCount
+    })
+    val p = EvmApi.providerOnStore(store, cache)
+    assert(p().block("13").isEmpty, "the facade answers as of the version it resolved")
+    assert(committed.get, "the lookup read the version")
+    assert(p().block("13").map(_.blockHash).contains(SimChain.blockOn(13, None).block_hash),
+      "the next provider call must answer the committed block, not the cached 404")
+  }
+
+  test("every facade reads its three tables at one version while batches land") {
+    import spark.implicits._
+    val store = new ChainStore(spark, Files.createTempDirectory("apisnapshot").toString, 10)
+    StreamingIngester.processBatch(store, SimChain.canonical(5).toDF())
+    val p = EvmApi.providerOnStore(store)
+    val landed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val writer = new Thread(() =>
+      try (5L until 45L by 5L).foreach(n =>
+        StreamingIngester.processBatch(store, SimChain.blocks(n, n + 5).toDF()))
+      finally landed.set(true))
+    writer.start()
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
+    try while (!landed.get) {
+      val st = p().stats()
+      seen += ((st.blocksCount, st.transactionsCount, st.logsCount))
+    } finally writer.join()
+    val txs = SimChain.canonical(45).map(_.transactions)
+    seen.foreach { case (b, t, l) =>
+      val prefix = txs.take(b.toInt)
+      assert((t, l) == ((prefix.map(_.size).sum.toLong, prefix.map(_.map(_.logs.size).sum).sum.toLong)),
+        s"a facade over $b blocks counted $t transactions and $l logs")
+    }
+    assert(seen.map(_._1).distinct.size > 1, s"no read overlapped a commit: ${seen.map(_._1).distinct}")
+    assert(p().stats().blocksCount == 45)
   }
 
   test("store facade: same endpoints serve an ingested chain") {
@@ -201,7 +243,7 @@ class EvmApiSpec extends AnyFunSuite with SparkSpec {
     val store = new ChainStore(spark, root, bucketSize = 400)
     val chain = SimChain.canonical(13200)
     StreamingIngester.processBatch(store, chain.toDF())
-    val api = EvmApi.onStore(store).get // resolves the frames: listing and footer jobs
+    val api = EvmApi.onStore(store).get // builds the hot tail: two jobs
     def tableBytes(t: String): Long =
       new java.io.File(root, t).listFiles().filter(_.getName.startsWith("bucket="))
         .flatMap(_.listFiles()).filter(_.getName.endsWith(".parquet")).map(_.length).sum

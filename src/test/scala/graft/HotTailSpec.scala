@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
-import graft.api.EvmApi
+import graft.api.{EvmApi, LookupCache}
 import graft.ingest.{ChainStore, SimChain, StreamingIngester}
 
 /** The store factories' in-memory tail of the two newest buckets: a
@@ -25,8 +25,6 @@ class HotTailSpec extends AnyFunSuite with SparkSpec {
     ingest(store, chain)
     val p = EvmApi.providerOnStore(store)
     assert(p().hotTail.isDefined, "the factory builds the tail")
-    assert(EvmApi.onStore(new ChainStore(spark, root, 10)).get.hotTail.isEmpty,
-      "a store that does not write the root sees no version move, so it gets no tail")
     val jobs = new JobCounter(spark)
     def jobsOf[T](lookup: => T): (T, Int) = {
       val j0 = jobs.settle()
@@ -57,6 +55,35 @@ class HotTailSpec extends AnyFunSuite with SparkSpec {
     } finally spark.sparkContext.removeSparkListener(jobs)
   }
 
+  test("a store without the writer lock serves its tail with zero Spark jobs and answers the writer's next batch") {
+    val root = Files.createTempDirectory("hottail-reader").toString
+    val writer = new ChainStore(spark, root, 10)
+    val chain = SimChain.canonical(50)
+    ingest(writer, chain.take(45))
+    val reader = new ChainStore(spark, root, 10)
+    val cache = new LookupCache(version = () => reader.mutationCount)
+    val p = EvmApi.providerOnStore(reader, cache)
+    assert(p().hotTail.isDefined, "a reader-only store gets a tail")
+    val jobs = new JobCounter(spark)
+    spark.sparkContext.addSparkListener(jobs)
+    try {
+      val j0 = jobs.settle()
+      assert(p().block("41").map(_.blockHash).contains(chain(41).block_hash))
+      assert(p().block(chain(30).block_hash).map(_.blockNumber).contains(30L))
+      val tx = chain(44).transactions.last
+      assert(p().transaction(tx.tx_hash).map(_.txHash).contains(tx.tx_hash))
+      assert(p().block("47").isEmpty, "a height above the tip is a miss")
+      val ran = jobs.settle() - j0
+      assert(ran == 0, s"the reader's tail keys ran $ran Spark jobs")
+    } finally spark.sparkContext.removeSparkListener(jobs)
+    ingest(writer, chain.drop(45))
+    val misses = cache.misses
+    assert(p().block("47").map(_.blockHash).contains(chain(47).block_hash),
+      "the reader's next call must answer the new tip, not the cached 404")
+    assert(cache.misses == misses + 1, "the pre-commit entry must not hit")
+    assert(p().stats().blocksCount == 50)
+  }
+
   test("property: over random extend, fork and compact walks, the provider answers like a fresh scan") {
     val bucket = 5L
     val root = Files.createTempDirectory("hottail-walk").toString
@@ -78,7 +105,7 @@ class HotTailSpec extends AnyFunSuite with SparkSpec {
       // no cache, no tail, frames listed afresh: the plain scan
       val fresh = new EvmApi(raw("blocks"), raw("transactions"), raw("logs"))
       val tail = api.hotTail.getOrElse(fail(s"$step: no tail was built"))
-      val lowest = store.buckets("blocks").takeRight(2).head * bucket
+      val lowest = store.snapshot.buckets("blocks").takeRight(2).head * bucket
       assert(tail.blockCount <= 2 * bucket && tail.blockCount == tip - lowest + 1,
         s"$step: the tail holds ${tail.blockCount} blocks for heights $lowest..$tip")
       assert(tail.txCount == (lowest to tip).map(onChain(_).transactions.size).sum,
