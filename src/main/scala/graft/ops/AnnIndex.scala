@@ -61,9 +61,22 @@ import graft.tables.{Bucketed, Fixtures}
   * k centroids on executors, never collected — only the DISTINCT
   * probed cell ids (≤ queries · nProbe ints) come back to the driver,
   * because only a driver-side literal cell list lets the scan prune
-  * buckets at plan time. The quantizer itself (k·d doubles) is a
-  * session-cached artifact and rides the plan as one referenced
-  * constant ([[graft.functions.NearestCellF64]]'s JIT-safety argument).
+  * buckets at plan time. The quantizer itself (k·d doubles) is held
+  * in the index's generation record and rides the plan as one
+  * referenced constant ([[graft.functions.NearestCellF64]]'s JIT-safety
+  * argument).
+  *
+  * GENERATIONS: each index (one per source directory and tag) has one
+  * in-memory generation record per `SparkContext`, shared by every
+  * `newSession()` sibling like the catalog. It names the live table of
+  * each role and holds the driver-side artifacts the writer fitted.
+  * Build and [[requantize]] write a full generation under fresh names,
+  * [[removeBatch]] a fresh tombstone table; [[appendBatch]] appends in
+  * place. A commit replaces the record; the tables it stops naming
+  * stay until the next commit of that index, so a probe planned
+  * before a commit still completes. A record names only fully written
+  * tables, so a probe, which reads the record without the lock, never
+  * sees a mixed or half-written generation; no table is ever renamed.
   *
   * DELETE / RETIRE ([[removeBatch]]): a curation pipeline's whole
   * output is retired documents, so the serving index must drop
@@ -124,21 +137,14 @@ object AnnIndex {
     *  - `pq`: the PQ codebook (i, centroid) — ksub FULL-dim rows,
     *    subspace j's centroid i = row i's j-th slice.
     *  - `tombstones`: (vec_id, cell key), one row per retired vector,
-    *    bucketed like the assignment. The only generation table a
-    *    delete rewrites — see [[healTombstoneSwap]].
+    *    bucketed like the assignment. The only table a delete writes:
+    *    [[removeBatch]] commits a fresh one beside the other roles.
     *
     * Each artifact is written with the generation, appends encode with
     * it, and [[requantize]] refreshes it with the generation. */
   final case class Tables(assign: String, quantizer: String, fine: Option[String],
                           sq: String, pq: String, tombstones: String) {
-    /** The replayable delete ledger ([[retireBatch]]) — beside the
-      * generation, never part of it: a rebuild keeps its history. */
-    def ledger: String = assign + "_ledger"
-    /** Assignment first: the rename swap moves it aside first and
-      * promotes it last (see [[requantize]]). */
     def all: Seq[String] = Seq(assign, quantizer) ++ fine ++ Seq(sq, pq, tombstones)
-    def suffixed(s: String): Tables =
-      Tables(assign + s, quantizer + s, fine.map(_ + s), sq + s, pq + s, tombstones + s)
   }
 
   /** How the index routes a vector to its bucket and a query to its
@@ -149,10 +155,18 @@ object AnnIndex {
                                val keys: Seq[String]) {
     /** One index per (source directory, tag): sf0.01 and sf0.1 runs in
       * the same warehouse must never read each other's index, and a
-      * tagged generation (e.g. the registry's deletion entries) must
-      * never mutate the shared untagged one. */
-    def tables(dir: String, tag: String = ""): Tables = {
-      val t = prefix + graft.evm.EvmDerive.md5hex(dir + "#" + tag).take(8)
+      * tagged index (e.g. the registry's deletion entries) must never
+      * mutate the shared untagged one. The base name keys the index's
+      * generation record; every table of the index is named under it. */
+    private[graft] def base(dir: String, tag: String = ""): String =
+      prefix + graft.evm.EvmDerive.md5hex(dir + "#" + tag).take(8)
+    /** The replayable delete ledger ([[retireBatch]]): beside the
+      * generations under a fixed name, never part of one, so a rebuild
+      * keeps its history. */
+    def ledger(dir: String, tag: String = ""): String = base(dir, tag) + "_ledger"
+    /** The tables of generation `n` under `base`. */
+    private[AnnIndex] def named(base: String, n: Long): Tables = {
+      val t = s"${base}_g$n"
       Tables(t, t + quantizerSuffix, fineSuffix.map(t + _), t + "_sq", t + "_pq", t + "_ts")
     }
     /** The cell count a corpus of n vectors should have — the knee
@@ -233,9 +247,83 @@ object AnnIndex {
     * STORED codebook, keep `rerank` per query, re-score exactly. */
   final case class Pq(rerank: Int) extends Codec
 
-  /** Build the index generation if this session/warehouse does not
-    * have it yet; returns the assignment table name. Idempotent — the
-    * "write once" of write-once-probe-many.
+  /** Driver-side artifacts of one generation, fitted by its writer. */
+  private final case class Artifacts(quantizer: Array[Array[Double]],
+                                     sq: (Array[Double], Array[Double]),
+                                     pq: Array[Array[Double]])
+
+  /** The generation record of one index: the live table of each role,
+    * the artifacts the writer fitted (equal to the stored tables:
+    * doubles round-trip parquet exactly), and the assignment table's
+    * file count after its last write. The count is what keeps a sibling
+    * session coherent with an append it did not make: the assignment
+    * is the one table written in place, and a session keeps the file
+    * listing it first resolved. */
+  private final case class Generation(tables: Tables, artifacts: Artifacts, assignFiles: Int)
+
+  /** One record per (context, base name). `newSession()` siblings share
+    * the context and its catalog, so they share the record. Replaced
+    * only under this object's lock; read without it. */
+  private val records =
+    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.SparkContext, String), Generation]()
+
+  /** Generation numbers, JVM-wide: no two attempts, a failed one
+    * included, ever write under the same name. */
+  private val generations = new java.util.concurrent.atomic.AtomicLong()
+
+  /** The index's live generation. A probe reads the record without the
+    * lock; only when there is no record, or a table it names is gone,
+    * does it take the lock and build from the source corpus (a new
+    * JVM's in-memory catalog holds none of the tables; appended batches
+    * and deletions re-enter through their producer's ledger, the same
+    * source-of-truth rule ChainStore's replay makes). A session whose
+    * listing of the assignment table misses another session's append
+    * re-lists it. */
+  private def live(spark: SparkSession, dir: String, tag: String, layout: Layout,
+                   learnedPq: Boolean = false): Generation = {
+    val base = layout.base(dir, tag)
+    def intact(g: Generation) = g != null && g.tables.all.forall(spark.catalog.tableExists)
+    val found = records.get((spark.sparkContext, base))
+    val g =
+      if (intact(found)) found
+      else synchronized {
+        val prev = records.get((spark.sparkContext, base))
+        if (intact(prev)) prev
+        else {
+          val emb = Fixtures.embeddings(spark, dir)
+          commit(spark, layout, base, Option(prev))(
+            writeGeneration(spark, layout, _, Similarity.prepared(emb), emb.count(), learnedPq))
+        }
+      }
+    if (filesOf(spark, g.tables.assign) != g.assignFiles) spark.catalog.refreshTable(g.tables.assign)
+    g
+  }
+
+  private def filesOf(spark: SparkSession, table: String): Int = spark.table(table).inputFiles.length
+
+  /** Commit a generation of the index under `base`, under the lock:
+    * remove every table and warehouse location under the base name
+    * that `prev` does not name (the generation before it, a failed
+    * attempt's tables, an earlier JVM's locations), write the new
+    * tables under fresh names (`write` gets them and returns the
+    * record), then replace the record. A crash before the replace
+    * leaves the record, and every table it names, as they were. */
+  private def commit(spark: SparkSession, layout: Layout, base: String, prev: Option[Generation])(
+      write: Tables => Generation): Generation = synchronized {
+    val wh = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"))
+    val fs = wh.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val keep = prev.toSeq.flatMap(_.tables.all).toSet
+    Option(fs.globStatus(new org.apache.hadoop.fs.Path(wh, base + "_g*"))).toSeq.flatten
+      .map(_.getPath.getName).filterNot(keep).foreach(Bucketed.resetTable(spark, _))
+    val g = write(layout.named(base, generations.incrementAndGet()))
+    records.keySet.removeIf(_._1.isStopped)
+    records.put((spark.sparkContext, base), g)
+    g
+  }
+
+  /** Build the index if it has no live generation; returns the
+    * assignment table name. Idempotent — the "write once" of
+    * write-once-probe-many.
     *
     * `learnedPq` selects the PQ codebook the generation stores:
     * `false` (default) = the md5-sampled rows (deterministic,
@@ -244,43 +332,19 @@ object AnnIndex {
     * Lloyd fit (SCALING.md's first recall dial). Serving needs ZERO
     * changes either way: every stored probe reads the STORED codebook. */
   def ensureBuilt(spark: SparkSession, dir: String, tag: String = "",
-                  learnedPq: Boolean = false, layout: Layout = Flat): String = synchronized {
-    val tb = layout.tables(dir, tag)
-    healTombstoneSwap(spark, tb)
-    if (tb.all.exists(!spark.catalog.tableExists(_))) {
-      // an orphaned location from a previous JVM is stale, not
-      // reusable: the in-memory catalog lost its bucketing metadata,
-      // so clear and rebuild deterministically — every artifact
-      // location too (saveAsTable dies on a leftover directory the
-      // in-memory catalog no longer knows about), and any stage/old
-      // generation a crashed swap left behind (recovery contract: a
-      // crash mid-swap rebuilds from the source corpus; appended
-      // batches and deletions re-enter through their producer's ledger,
-      // the same source-of-truth rule ChainStore's replay makes)
-      tb.all.flatMap(x => Seq(x, x + "__stage", x + "__old"))
-        .foreach(Bucketed.resetTable(spark, _))
-      // a rebuild writes a NEW generation under the same names — any
-      // artifacts cached from a previous incarnation are stale
-      invalidateArtifacts(spark, tb.all)
-      val emb = Fixtures.embeddings(spark, dir)
-      seedArtifacts(spark, tb,
-        writeGeneration(spark, layout, tb, Similarity.prepared(emb), emb.count(), learnedPq))
-    }
-    tb.assign
-  }
+                  learnedPq: Boolean = false, layout: Layout = Flat): String =
+    live(spark, dir, tag, layout, learnedPq).tables.assign
 
-  /** Driver-side artifacts of one generation, returned by the writer so
-    * the cache can be seeded once the generation's names are FINAL. */
-  private final case class Artifacts(quantizer: Array[Array[Double]],
-                                     sq: (Array[Double], Array[Double]),
-                                     pq: Array[Array[Double]])
+  /** The live generation's tables, for specs that read one directly. */
+  private[graft] def liveTables(spark: SparkSession, dir: String, tag: String = "",
+                                layout: Layout = Flat): Tables =
+    live(spark, dir, tag, layout).tables
 
-  /** Write one full generation into the named tables — the build
-    * (straight into the live names) and [[requantize]] (into the
-    * `__stage` names). Every artifact is fitted ONCE over `prep` and
+  /** Write one full generation into the named tables — the build and
+    * [[requantize]]. Every artifact is fitted ONCE over `prep` and
     * every row's codes are quantized ONCE here, at write time. */
   private def writeGeneration(spark: SparkSession, layout: Layout, tb: Tables,
-                              prep: DataFrame, n: Long, learnedPq: Boolean): Artifacts = {
+                              prep: DataFrame, n: Long, learnedPq: Boolean): Generation = {
     val k = layout.cellsFor(n)
     // ONE md5-ranked sample serves both sampled artifacts: the
     // quantizer is its k-prefix and the default PQ codebook its
@@ -319,7 +383,7 @@ object AnnIndex {
     // topk_requant's r16 recording before this)
     writeTombstones(spark.range(0).select(col("id").as("vec_id"), lit(0).as(layout.cell)),
       tb.tombstones, 1, layout.cell)
-    Artifacts(quantizer, (mns, mxs), pqCb)
+    Generation(tb, Artifacts(quantizer, (mns, mxs), pqCb), filesOf(spark, tb.assign))
   }
 
   /** An assignment frame projected to the stored row: routing keys plus
@@ -339,152 +403,23 @@ object AnnIndex {
       .bucketBy(nBuckets, cell).sortBy(cell)
       .saveAsTable(table)
 
-  /** Commit staged tables: every `x__stage` is fully written, so rename
-    * each live table aside IN ORDER, promote the stages in REVERSE
-    * order, and drop the aside copies. Each rename is one atomic
-    * catalog+dir move; with the assignment first in `names` it is
-    * renamed aside first and promoted last, so every crash point inside
-    * the window leaves it ABSENT — [[ensureBuilt]]'s rebuild trigger,
-    * never a mixed-generation state. */
-  private def swap(spark: SparkSession, names: Seq[String]): Unit = {
-    names.foreach(x => Bucketed.resetTable(spark, x + "__old"))
-    names.foreach(x => spark.sql(s"ALTER TABLE $x RENAME TO ${x}__old"))
-    names.reverse.foreach(x => spark.sql(s"ALTER TABLE ${x}__stage RENAME TO $x"))
-    names.foreach(x => Bucketed.resetTable(spark, x + "__old"))
-  }
-
-  /** Narrow the DELETE-crash blast radius (it used to be a full source
-    * rebuild): [[removeBatch]]'s rename window is the ONLY state that
-    * leaves exactly the TOMBSTONE table absent while every other
-    * generation table is live — [[requantize]] renames the ASSIGNMENT
-    * aside first and promotes it last, so all of its crash states have
-    * the assignment absent too and fall through to the full-rebuild
-    * sweep. Inside removeBatch's window the staged merged tombstone
-    * table is already fully written (the stage write strictly precedes
-    * the first rename), so promoting it recovers EVERYTHING, in-flight
-    * batch included; if only the renamed-aside live table survives (a
-    * state no removeBatch crash point produces, but cheap to tolerate),
-    * restoring it recovers every previously committed tombstone and
-    * loses only the in-flight batch — which the producer's ledger
-    * replays. A routine O(batch) delete never carries a corpus-rebuild
-    * cost. */
-  private def healTombstoneSwap(spark: SparkSession, tb: Tables): Unit = {
-    val ts = tb.tombstones
-    if (!spark.catalog.tableExists(ts) &&
-        tb.all.filterNot(_ == ts).forall(spark.catalog.tableExists)) {
-      if (spark.catalog.tableExists(ts + "__stage")) {
-        spark.sql(s"ALTER TABLE ${ts}__stage RENAME TO $ts")
-        Bucketed.resetTable(spark, ts + "__old")
-      } else if (spark.catalog.tableExists(ts + "__old")) {
-        spark.sql(s"ALTER TABLE ${ts}__old RENAME TO $ts")
-      }
-    }
-  }
-
-  // ---- session-scoped stored-artifact cache --------------------------
-  //
-  // Every probe needs the SMALL stored artifacts (quantizer centroids,
-  // SQ affine params, PQ codebook — k·dim / 2·d / ksub·dim doubles) as
-  // driver-side arrays, and each read is a separate Spark collect job.
-  // At serving cadence those collects dominate the driver round-trip
-  // count of a probe (guide §5: the driver should do almost no data
-  // work — and no REPEATED data work either). The artifacts are
-  // immutable for the lifetime of a generation by the index's own
-  // coherence contract (append/delete never touch them; only a
-  // build/requantize writes new ones), so a session can hold them in
-  // memory like any open index handle and re-read only when the
-  // generation swaps. Keyed by (session, table) — but sessions created
-  // via newSession() SHARE the ExternalCatalog, so a generation swap in
-  // one session makes every sibling session's cached artifacts stale
-  // too: the generation-swap paths ([[ensureBuilt]]'s rebuild branch,
-  // [[requantize]]) therefore invalidate by TABLE NAME across ALL
-  // sessions. (Sessions keyed separately at all because two *contexts*
-  // in one JVM — the test suites — may hold same-named tables with
-  // different contents.) Entries of stopped sessions are swept on any
-  // miss (same rule as [[SharedCaches]]).
-  private val artifactCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String), AnyRef]
-
-  private def cachedArtifact[T <: AnyRef](spark: SparkSession, table: String)(
-      load: => T): T = {
-    val key = (spark, table)
-    artifactCache.synchronized(artifactCache.get(key)) match {
-      case Some(v) => v.asInstanceOf[T]
-      case None =>
-        // a miss is either first touch or a generation swap — and a
-        // swap committed by a SIBLING session leaves THIS session's
-        // relation/file-listing caches pointing at the renamed-away
-        // generation's files (Spark DDL refreshes only the executing
-        // session's SessionCatalog), so the stale listing must be
-        // dropped before re-reading. Cheap: once per generation per
-        // session, a catalog-cache eviction + one directory re-list.
-        try spark.catalog.refreshTable(table)
-        catch { case scala.util.control.NonFatal(_) => () }
-        val v = load // the collect runs OUTSIDE the lock (SharedCaches' rule)
-        artifactCache.synchronized {
-          artifactCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-          artifactCache.getOrElseUpdate(key, v)
-        }.asInstanceOf[T]
-    }
-  }
-
-  /** Drop the cached artifacts of this generation's tables — called by
-    * every path that writes a NEW generation under the same names.
-    * Invalidates across ALL sessions, not just the writer's:
-    * newSession() siblings share the catalog, so their cached
-    * quantizer/params/codebook describe the old generation the moment
-    * the swap commits — a writer-only invalidation would leave a
-    * sibling scoring NEW codes against OLD artifacts, silently wrong. */
-  private def invalidateArtifacts(spark: SparkSession, tables: Seq[String]): Unit =
-    artifactCache.synchronized {
-      val stale = tables.toSet
-      artifactCache.filterInPlace { case ((_, t), _) => !stale.contains(t) }
-    }
-
-  /** Seed the writer's cache entries with the artifacts it JUST wrote —
-    * valid precisely because the stored tables' contents are these
-    * values (doubles round-trip parquet exactly; the load's orderBy
-    * returns the write's array order), so the first post-write probes
-    * skip their collect jobs. Only ever called after the generation's
-    * writes committed under their final names. */
-  private def seedArtifacts(spark: SparkSession, tb: Tables, a: Artifacts): Unit =
-    artifactCache.synchronized {
-      Seq(tb.quantizer -> a.quantizer, tb.sq -> a.sq, tb.pq -> a.pq)
-        .foreach { case (t, v) => artifactCache.put((spark, t), v) }
-    }
-
-  private def storedMatrix(spark: SparkSession, table: String,
-                           key: String): Array[Array[Double]] =
-    cachedArtifact(spark, table) {
-      spark.table(table).select(col(key), col("centroid")).orderBy(col(key)).collect()
-        .map(_.getSeq[Double](1).toArray)
-    }
-
-  /** The stored quantizer read back as the centroid matrix — k·dim on
-    * the flat layout, the ~n^¼·dim coarse matrix on the two-level one
-    * (the ONLY quantizer collect that layout ever performs). Bounded,
-    * and session-cached: one collect per generation, not per probe. */
+  /** The stored quantizer as the centroid matrix — k·dim on the flat
+    * layout, the ~n^¼·dim coarse matrix on the two-level one. Read from
+    * the generation record: no collect. */
   def storedQuantizer(spark: SparkSession, dir: String, tag: String = "",
                       layout: Layout = Flat): Array[Array[Double]] =
-    storedMatrix(spark, layout.tables(dir, tag).quantizer, layout.cell)
+    live(spark, dir, tag, layout).artifacts.quantizer
 
-  /** The stored SQ8 params read back as the (mns, mxs) pair (2·d
-    * doubles — bounded, same contract as the quantizer collect). */
+  /** The stored SQ8 params as the (mns, mxs) pair (2·d doubles). */
   def storedSqParams(spark: SparkSession, dir: String, tag: String = "",
-                     layout: Layout = Flat): (Array[Double], Array[Double]) = {
-    val table = layout.tables(dir, tag).sq
-    cachedArtifact(spark, table) {
-      val rows = spark.table(table)
-        .select(col("dim"), col("mn"), col("mx")).orderBy(col("dim")).collect()
-      (rows.map(_.getDouble(1)), rows.map(_.getDouble(2)))
-    }
-  }
+                     layout: Layout = Flat): (Array[Double], Array[Double]) =
+    live(spark, dir, tag, layout).artifacts.sq
 
-  /** The stored PQ codebook read back as ksub full-dim rows
-    * ([[PqKsub]]·[[Dim]] doubles — bounded, session-cached). */
+  /** The stored PQ codebook as ksub full-dim rows ([[PqKsub]]·[[Dim]]
+    * doubles). */
   def storedPqCodebook(spark: SparkSession, dir: String, tag: String = "",
                        layout: Layout = Flat): Array[Array[Double]] =
-    storedMatrix(spark, layout.tables(dir, tag).pq, "i")
+    live(spark, dir, tag, layout).artifacts.pq
 
   /** MAINTENANCE half of write-once/probe-many: append a fresh vector
     * batch to the existing index WITHOUT a rebuild. The batch is
@@ -512,6 +447,10 @@ object AnnIndex {
     * [[requantizeAdvice]] is the trigger for when to pay the full
     * rebuild; [[requantize]] executes it.
     *
+    * The append is the one write in place: it keeps the generation and
+    * replaces the record with the assignment's new file count, which
+    * tells every other session to re-list the table (see [[live]]).
+    *
     * Synchronized on the mutator lock (O(batch) work, so holding it is
     * cheap): an append racing [[requantize]] would otherwise land in
     * the generation snapshotted BEFORE the batch and be silently
@@ -520,15 +459,15 @@ object AnnIndex {
     * after it. */
   def appendBatch(spark: SparkSession, dir: String, fresh: DataFrame,
                   tag: String = "", layout: Layout = Flat): Unit = synchronized {
-    val tb = layout.tables(dir, tag)
-    ensureBuilt(spark, dir, tag, layout = layout)
-    val q = storedQuantizer(spark, dir, tag, layout)
-    val (mns, mxs) = storedSqParams(spark, dir, tag, layout)
-    val pqCb = storedPqCodebook(spark, dir, tag, layout)
-    encoded(layout.assign(spark, tb, Similarity.prepared(fresh), q), layout, mns, mxs, pqCb)
+    val g = live(spark, dir, tag, layout)
+    val a = g.artifacts
+    encoded(layout.assign(spark, g.tables, Similarity.prepared(fresh), a.quantizer),
+        layout, a.sq._1, a.sq._2, a.pq)
       .write.mode("append").format("parquet")
-      .bucketBy(q.length, layout.cell).sortBy(layout.cell)
-      .saveAsTable(tb.assign)
+      .bucketBy(a.quantizer.length, layout.cell).sortBy(layout.cell)
+      .saveAsTable(g.tables.assign)
+    records.put((spark.sparkContext, layout.base(dir, tag)),
+      g.copy(assignFiles = filesOf(spark, g.tables.assign)))
   }
 
   /** RETIRE half of the lifecycle: tombstone a batch of vec_ids —
@@ -537,15 +476,13 @@ object AnnIndex {
     * the index, so the tombstone table carries the probe's pruning
     * key), merged with the existing tombstone set (distinct — a
     * re-delete is idempotent, which also makes the registry's
-    * deletion entries re-runnable), and committed under the
-    * stage→rename-aside→promote protocol ([[swap]]): every crash point
-    * inside the window leaves the tombstone table ABSENT — a state
-    * [[ensureBuilt]] detects and heals CHEAPLY via [[healTombstoneSwap]]
-    * (the full source rebuild remains the fallback only when no
-    * tombstone generation survives — then the delete producer replays
-    * its ledger, [[replayDeleteLedger]]). Ids not present in the index
-    * resolve to no cell and are dropped — retiring an unknown id is a
-    * no-op, not an error.
+    * deletion entries re-runnable), and committed as a fresh tombstone
+    * table that a new record names beside the generation's other
+    * tables: a crash before the record is replaced leaves the
+    * tombstones before, and the delete producer's retry or ledger
+    * replay ([[replayDeleteLedger]]) applies the batch. Ids not present
+    * in the index resolve to no cell and are dropped — retiring an
+    * unknown id is a no-op, not an error.
     *
     * Deleted rows stay physically in the assignment buckets until
     * [[requantize]] compacts them (probes filter them out via the
@@ -553,12 +490,12 @@ object AnnIndex {
     * trigger bounds how long that debt can accumulate. */
   def removeBatch(spark: SparkSession, dir: String, ids: DataFrame,
                   tag: String = "", layout: Layout = Flat): Unit = synchronized {
-    val tb = layout.tables(dir, tag)
-    ensureBuilt(spark, dir, tag, layout = layout)
+    val g = live(spark, dir, tag, layout)
+    val tb = g.tables
     val ts = tb.tombstones
     // idempotent fast path, CHEAP side first: a batch already fully
     // tombstoned (the at-least-once delete producer's replay, or a
-    // re-run registry entry) must not pay the table swap — and
+    // re-run registry entry) must not pay the table write — and
     // deciding that needs only ids ∖ tombstones (batch-sized against
     // the pruned tombstone scan), never the k-bucket index scan the
     // cell resolution costs. Only genuinely fresh ids pay the resolve;
@@ -575,19 +512,19 @@ object AnnIndex {
     // relation propagation collapses the semi-join before the k-bucket
     // index scan runs, so the replayed-batch fast path keeps its
     // cheap-side-only cost; ids not present in the index resolve to no
-    // cell — retiring an unknown id stays a no-op, never a table swap
+    // cell — retiring an unknown id stays a no-op, never a table write
     if (!resolved.isEmpty) {
-      val k = storedQuantizer(spark, dir, tag, layout).length
       val merged = spark.table(ts).select(col("vec_id"), col(layout.cell))
         .unionByName(resolved).distinct()
-      Bucketed.resetTable(spark, ts + "__stage")
-      writeTombstones(merged, ts + "__stage", k, layout.cell)
-      swap(spark, Seq(ts))
+      commit(spark, layout, layout.base(dir, tag), Some(g)) { fresh =>
+        writeTombstones(merged, fresh.tombstones, g.artifacts.quantizer.length, layout.cell)
+        g.copy(tables = tb.copy(tombstones = fresh.tombstones))
+      }
     }
   }
 
   /** The CURATION → INDEX seam, closed: persist a curation output's
-    * retired ids to the delete LEDGER ([[Tables.ledger]] — one row per
+    * retired ids to the delete LEDGER ([[Layout.ledger]] — one row per
     * retired vec_id, append-only), then tombstone the batch. This is
     * the producer the removeBatch crash contract names — a near-dup
     * pass's losers, [[graft.ops.Dedup.applyNearDedup]]'s drops, or a
@@ -617,58 +554,16 @@ object AnnIndex {
   def retireBatch(spark: SparkSession, dir: String, ids: DataFrame,
                   tag: String = "", layout: Layout = Flat): Unit = synchronized {
     ensureBuilt(spark, dir, tag, layout = layout)
-    val ledger = layout.tables(dir, tag).ledger
-    val mig = ledger + "__mig"
-    val lold = ledger + "__old"
-    // heal a half-done migration swap FIRST (the two-rename window
-    // below): the staged __mig is complete before the first rename, so
-    // if the ledger name is absent promoting it recovers everything;
-    // if only the renamed-aside __old survives (no crash point here
-    // produces that alone, but cheap to tolerate) restoring it
-    // recovers the pre-migration history. Without this heal a crash
-    // inside the window would read as fresh=true below and strand the
-    // migrated batch-0 rows — replay history silently lost.
-    if (!spark.catalog.tableExists(ledger)) {
-      if (spark.catalog.tableExists(mig)) {
-        spark.sql(s"ALTER TABLE $mig RENAME TO $ledger")
-        Bucketed.resetTable(spark, lold)
-      } else if (spark.catalog.tableExists(lold)) {
-        spark.sql(s"ALTER TABLE $lold RENAME TO $ledger")
-      }
-    } else if (spark.catalog.tableExists(lold)) {
-      // completed swap that crashed before dropping the aside copy
-      Bucketed.resetTable(spark, lold)
-    }
+    val ledger = layout.ledger(dir, tag)
     // a ledger LOCATION without a catalog entry is a previous JVM's
     // orphan (the in-memory catalog forgot it): under this harness's
     // recovery contract the index itself was already rebuilt from
-    // source by ensureBuilt's sweep — the stale ledger describes
-    // tombstones that no longer exist, so it resets with the same rule
-    // (a durable-metastore deployment never hits this branch: its
-    // catalog remembers the table and the append just appends)
+    // source by ensureBuilt — the stale ledger describes tombstones
+    // that no longer exist, so it resets with the same rule (a
+    // durable-metastore deployment never hits this branch: its catalog
+    // remembers the table and the append just appends)
     val fresh = !spark.catalog.tableExists(ledger)
     if (fresh) Bucketed.resetTable(spark, ledger)
-    // backward compatibility with the pre-batch ledger shape (vec_id
-    // only — written before the read-back protocol): against a durable
-    // metastore an old-schema ledger would fail the max(batch) read
-    // AND the widened append, so migrate it once — existing rows
-    // become batch 0 (they were already applied or are replayable; 0
-    // never collides with the monotone ids starting at 1). Commit =
-    // the rename-aside protocol the tombstone swap uses (never
-    // DROP-then-RENAME: a crash between those two loses the ledger
-    // name with no heal state): stage __mig fully, rename the live
-    // ledger aside, promote the stage, drop the aside copy — every
-    // crash point leaves either the live name or a healable pair.
-    if (!fresh && !spark.table(ledger).columns.contains("batch")) {
-      Bucketed.resetTable(spark, mig)
-      spark.table(ledger).select(col("vec_id").cast("long"))
-        .withColumn("batch", lit(0L))
-        .write.mode("overwrite").format("parquet").saveAsTable(mig)
-      Bucketed.resetTable(spark, lold)
-      spark.sql(s"ALTER TABLE $ledger RENAME TO $lold")
-      spark.sql(s"ALTER TABLE $mig RENAME TO $ledger")
-      Bucketed.resetTable(spark, lold)
-    }
     // monotone per-append batch id: one bounded max() over the ledger
     // (O(ledger rows read, 1 row returned) — a table the producer
     // keeps batch-bounded by contract)
@@ -695,7 +590,7 @@ object AnnIndex {
     * scaladoc enumerates, including the tombstone-table rebuild. */
   def replayDeleteLedger(spark: SparkSession, dir: String, tag: String = "",
                          layout: Layout = Flat): Unit = {
-    val ledger = layout.tables(dir, tag).ledger
+    val ledger = layout.ledger(dir, tag)
     if (spark.catalog.tableExists(ledger))
       removeBatch(spark, dir, spark.table(ledger), tag, layout)
   }
@@ -726,9 +621,9 @@ object AnnIndex {
   def requantizeAdvice(spark: SparkSession, dir: String,
                        skewBound: Long = 8L, deadBound: Long = 5L,
                        tag: String = "", layout: Layout = Flat): RequantizeAdvice = {
-    val tb = layout.tables(dir, tag)
-    ensureBuilt(spark, dir, tag, layout = layout)
-    val k = storedQuantizer(spark, dir, tag, layout).length
+    val g = live(spark, dir, tag, layout)
+    val tb = g.tables
+    val k = g.artifacts.quantizer.length
     // one driver action for all three measurements: the occupancy agg
     // and the tombstone count cross-join into a single 1-row collect
     // (guide §5 — the former two-action shape paid an extra round-trip
@@ -755,7 +650,7 @@ object AnnIndex {
     * artifact over the CURRENT corpus (build rows ∪ every appended
     * batch, MINUS the tombstoned rows — compaction happens here, and
     * the tombstone table resets to empty in the same commit), reassign
-    * and re-encode everything, and swap the new generation in.
+    * and re-encode everything, and commit it as the new generation.
     *
     * Sizing and sampling are exactly [[ensureBuilt]]'s over the
     * surviving corpus, so a probe after the rebuild is bit-identical to
@@ -768,28 +663,17 @@ object AnnIndex {
     * corpus (the build flag, carried through the rebuild so a learned
     * index stays learned).
     *
-    * Commit protocol = temp-write-then-swap at table granularity: the new
-    * generation is fully written BESIDE the live tables (readers keep
-    * serving the old index during the corpus-wide reassignment — no
-    * downtime window the length of a rebuild), then swapped in via
-    * catalog renames ([[swap]]). Rename ORDER is load-bearing: the live
-    * assignment table is renamed aside FIRST and the staged one
-    * promoted LAST, so every crash point inside the window leaves the
-    * assignment table ABSENT — which is exactly the state
-    * [[ensureBuilt]]'s orphan sweep detects and heals (rebuild from
-    * the source corpus; append/delete producers replay from their
-    * ledger). Promoting the assignment before the quantizer swap would
-    * open a silent-wrong-buckets window (both tables present but from
-    * different generations, so no sweep triggers and probes scan wrong
-    * cells with no error); this ordering makes that state unreachable.
-    * Mutators ([[appendBatch]], [[removeBatch]], this method) serialize
-    * on this object's lock, the same single-maintainer contract as the
-    * store's write lock — an append can therefore never land in the
-    * old generation mid-swap and be dropped with it. Probes call
-    * [[ensureBuilt]] (same lock), so an in-JVM probe issued during the
-    * swap blocks until commit; a probe that planned BEFORE the swap can
-    * still see a mixed view — run requantize in the maintenance window,
-    * like any index rebuild.
+    * Commit: the new generation is fully written under fresh names
+    * BESIDE the live tables (readers keep serving the old index during
+    * the corpus-wide reassignment — no downtime window the length of a
+    * rebuild), then one record replace makes it live. A crash before
+    * the replace leaves the old generation serving; a probe planned
+    * before the replace completes on the old generation, whose tables
+    * stay until the next commit. Mutators ([[appendBatch]],
+    * [[removeBatch]], this method) serialize on this object's lock,
+    * the same single-maintainer contract as the store's write lock —
+    * an append can therefore never land in the old generation
+    * mid-rebuild and be dropped with it.
     *
     * Clears the KNEE trigger by construction, the DEAD trigger always
     * (compaction), and the SKEW trigger whenever skew came from
@@ -804,15 +688,15 @@ object AnnIndex {
                  skewBound: Long = 8L, tag: String = "",
                  learnedPq: Boolean = false,
                  layout: Layout = Flat): RequantizeAdvice = synchronized {
-    val tb = layout.tables(dir, tag)
-    ensureBuilt(spark, dir, tag, layout = layout)
+    val g = live(spark, dir, tag, layout)
+    val tb = g.tables
     // compaction: tombstoned rows leave the corpus here — the rebuild
     // is the one corpus-wide job of the lifecycle, so the anti-join
     // rides it for free (vec_id-keyed, never wider than the reassign
     // scan that follows)
-    val live = spark.table(tb.assign).select(col("vec_id"), col("v"), col("nrm"))
+    val survivors = spark.table(tb.assign).select(col("vec_id"), col("v"), col("nrm"))
       .join(spark.table(tb.tombstones).select(col("vec_id")), Seq("vec_id"), "left_anti")
-    // live count WITHOUT evaluating the anti-join: every tombstone row
+    // survivor count WITHOUT evaluating the anti-join: every tombstone row
     // was resolved from the live assignment at removeBatch time and
     // vec_id is unique in the index (appendBatch's fresh-ids contract;
     // re-adding a retired id is an explicit un-retire), so
@@ -823,24 +707,16 @@ object AnnIndex {
       .crossJoin(spark.table(tb.tombstones).agg(count(lit(1)).as("nts"))).head()
     val n = cnt.getLong(0) - cnt.getLong(1)
     require(n > 0, s"cannot requantize an empty index (${tb.assign})")
-    val stage = tb.suffixed("__stage")
-    stage.all.foreach(Bucketed.resetTable(spark, _))
-    val written = writeGeneration(spark, layout, stage, live, n, learnedPq)
-    swap(spark, tb.all)
-    // the generation swapped: cached artifacts describe the OLD one —
-    // invalidate every session's, then SEED the writer's with the
-    // values just written, so the post-swap probes pay zero artifact
-    // collects
-    invalidateArtifacts(spark, tb.all)
-    seedArtifacts(spark, tb, written)
+    val next = commit(spark, layout, layout.base(dir, tag), Some(g))(
+      writeGeneration(spark, layout, _, survivors, n, learnedPq))
     // post-rebuild advice from facts the rebuild just established — n
     // and k are the written generation's own parameters and the fresh
     // tombstone table is empty by construction, so only the occupancy
     // max needs a job (ONE map-side-combined groupBy over the new
     // table; field-for-field requantizeAdvice's values)
-    val occMax = spark.table(tb.assign).groupBy(col(layout.cell)).agg(count(lit(1)).as("n"))
-      .agg(max(col("n")).as("m")).head().getLong(0)
-    advice(layout, n, written.quantizer.length, occMax, 0L, skewBound, deadBound = 5L)
+    val occMax = spark.table(next.tables.assign).groupBy(col(layout.cell))
+      .agg(count(lit(1)).as("n")).agg(max(col("n")).as("m")).head().getLong(0)
+    advice(layout, n, next.artifacts.quantizer.length, occMax, 0L, skewBound, deadBound = 5L)
   }
 
   /** Top-k probe over the persisted index — every stored (layout ×
@@ -868,8 +744,10 @@ object AnnIndex {
     *     rerank of the `rerank` survivors, still inside the probed
     *     buckets.
     *
-    * Every quantization artifact is READ, never derived: a probe costs
-    * zero corpus-wide jobs. Results are identical to the inline twin
+    * Every quantization artifact is READ from the generation record,
+    * never derived: a probe costs zero corpus-wide jobs and takes no
+    * lock, and the frame it returns stays on the generation it was
+    * planned on through the next commit. Results are identical to the inline twin
     * ([[Similarity.topKIvfKmeans]], [[Similarity.topKIvfSq]],
     * [[Similarity.topKIvfPq]], [[Similarity.topKIvf2]]) over the same
     * corpus by construction — `AnnIndexSpec` pins it and the `topk_*`
@@ -877,25 +755,24 @@ object AnnIndex {
   def topK(spark: SparkSession, dir: String, queries: Queries, codec: Codec = Exact,
            k: Int = 5, nProbe: Int = 2, nProbeFine: Int = 3, tag: String = "",
            layout: Layout = Flat): DataFrame = {
-    val tb = layout.tables(dir, tag)
-    ensureBuilt(spark, dir, tag, layout = layout)
+    val g = live(spark, dir, tag, layout)
+    val tb = g.tables
     val prep = Similarity.prepared(Fixtures.embeddings(spark, dir))
     val selected = queries match {
       case Prefix(maxQueryId) => prep.filter(col("vec_id") < maxQueryId)
       case Ids(ids) =>
         prep.join(broadcast(ids.select(col("vec_id"))), Seq("vec_id"), "left_semi")
     }
-    val probes = Similarity.probeQueries(selected,
-      storedQuantizer(spark, dir, tag, layout), nProbe)
+    val probes = Similarity.probeQueries(selected, g.artifacts.quantizer, nProbe)
     val cells = probes.select(col("cell")).distinct()
       .collect().map(_.getInt(0)).sorted.map(Int.box).toSeq
     val scoring = codec match {
       case Exact => None
       case Sq8(rerank) =>
-        val (mns, mxs) = storedSqParams(spark, dir, tag, layout)
+        val (mns, mxs) = g.artifacts.sq
         Some(Similarity.sq8Scoring(mns, mxs, rerank))
       case Pq(rerank) =>
-        val cb = storedPqCodebook(spark, dir, tag, layout)
+        val cb = g.artifacts.pq
         // the stored codebook must carry exactly PqKsub rows — the ADC
         // fold's gather stride; a truncated/mismatched artifact would
         // read out of bounds silently

@@ -1,5 +1,6 @@
 package graft
 
+import scala.util.control.NonFatal
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{AnnIndex, Similarity}
@@ -31,7 +32,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     // also cross-checks AnnIndex's driver-side probe-cell arithmetic
     // against probeQueries' DataFrame formulation — the two must rank
     // (score, cell) identically
-    Bucketed.resetTable(spark, Flat.tables(sf).assign)
+    Bucketed.resetTable(spark, AnnIndex.liveTables(spark, sf).assign)
     val indexed = AnnIndex.topK(spark, sf, Prefix(8), k = 5, nProbe = 2)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     val emb = Fixtures.embeddings(spark, sf)
@@ -104,58 +105,69 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     dir
   }
 
-  test("stored-artifact session cache: one collect per generation, invalidated by requantize") {
-    val dir = tempCorpus("artcache")
-    AnnIndex.ensureBuilt(spark, dir, tag = "ac")
-    // a re-read inside one generation is the CACHED driver-side array
-    // (reference identity = no second collect job ran)
-    val q1 = AnnIndex.storedQuantizer(spark, dir, tag = "ac")
-    assert(AnnIndex.storedQuantizer(spark, dir, tag = "ac") eq q1,
-      "same generation must serve the cached quantizer instance")
-    val sq1 = AnnIndex.storedSqParams(spark, dir, tag = "ac")
-    assert(AnnIndex.storedSqParams(spark, dir, tag = "ac") eq sq1)
-    val pq1 = AnnIndex.storedPqCodebook(spark, dir, tag = "ac")
-    assert(AnnIndex.storedPqCodebook(spark, dir, tag = "ac") eq pq1)
-    // a generation swap must drop every cached artifact: after a
-    // knee-crossing requantize the quantizer is re-sized, and the
-    // re-read must reflect the NEW stored table, not the old array
-    val emb = Fixtures.embeddings(spark, dir)
-    (1 to 4).foreach(r => AnnIndex.appendBatch(spark, dir,
-      emb.withColumn("vec_id", col("vec_id") + lit(r * 100000L)), tag = "ac"))
-    AnnIndex.requantize(spark, dir, tag = "ac")
-    val q2 = AnnIndex.storedQuantizer(spark, dir, tag = "ac")
-    assert(!(q2 eq q1) && q2.length > q1.length,
-      s"requantize must invalidate the cached quantizer (${q1.length} -> ${q2.length})")
-    assert(q2.length == spark.table(Flat.tables(dir, "ac").quantizer).count(),
-      "the re-read must match the stored table of the new generation")
+  /** Every table and warehouse location under an index's base name —
+    * its generations; the fixed-name ledger aside. */
+  private def underBase(dir: String, tag: String = "", layout: AnnIndex.Layout = Flat): Set[String] = {
+    val prefix = layout.base(dir, tag) + "_g"
+    val wh = new java.io.File(new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath)
+    Option(wh.list()).toSeq.flatten.filter(_.startsWith(prefix)).toSet ++
+      spark.catalog.listTables(spark.catalog.currentDatabase, prefix + "*").collect().map(_.name)
   }
 
-  test("artifact cache invalidates ACROSS sessions: a newSession sibling never scores against a stale generation") {
-    val dir = tempCorpus("xsession")
-    AnnIndex.ensureBuilt(spark, dir, tag = "xs")
-    // a SIBLING session (shared ExternalCatalog — the supported
-    // multi-session-one-context pattern) fills ITS cache entry
+  /** Commits once more (a one-id removeBatch) and checks that only the
+    * live generation's tables, and the tombstone table that commit
+    * replaced, remain under the base name: the generation the last
+    * commit replaced is gone, and nothing was written aside. */
+  private def assertOnlyLiveAfterNextCommit(dir: String, layout: AnnIndex.Layout): Unit = {
+    import spark.implicits._
+    val before = AnnIndex.liveTables(spark, dir, layout = layout)
+    AnnIndex.removeBatch(spark, dir, Seq(1L).toDF("vec_id"), layout = layout)
+    val after = AnnIndex.liveTables(spark, dir, layout = layout)
+    assert(after.tombstones != before.tombstones, "sanity: the removal committed")
+    assert(underBase(dir, layout = layout) == (after.all :+ before.tombstones).toSet,
+      s"after the next commit only the live generation's tables may remain: ${underBase(dir, layout = layout)}")
+  }
+
+  test("the record's artifacts equal the stored tables, and a sibling reads the new generation's") {
+    val dir = tempCorpus("record")
+    AnnIndex.ensureBuilt(spark, dir, tag = "rec")
+    def fromRecord(s: org.apache.spark.sql.SparkSession) = {
+      val (mns, mxs) = AnnIndex.storedSqParams(s, dir, tag = "rec")
+      (AnnIndex.storedQuantizer(s, dir, tag = "rec").map(_.toSeq).toSeq, mns.toSeq.zip(mxs.toSeq),
+        AnnIndex.storedPqCodebook(s, dir, tag = "rec").map(_.toSeq).toSeq)
+    }
+    def fromTables(s: org.apache.spark.sql.SparkSession) = {
+      val t = AnnIndex.liveTables(s, dir, tag = "rec")
+      def matrix(table: String, key: String) =
+        s.table(table).orderBy(key).collect().map(_.getSeq[Double](1)).toSeq
+      (matrix(t.quantizer, "cell"),
+        s.table(t.sq).orderBy("dim").collect().map(r => (r.getDouble(1), r.getDouble(2))).toSeq,
+        matrix(t.pq, "i"))
+    }
+    assert(fromRecord(spark) == fromTables(spark),
+      "the writer's fitted artifacts must equal what the generation stored")
+    // reading the artifacts is a record read: no Spark job
+    val c = new JobCounter(spark)
+    spark.sparkContext.addSparkListener(c)
+    try {
+      val before = c.settle()
+      fromRecord(spark)
+      assert(c.settle() == before, "reading the stored artifacts must run no Spark job")
+    } finally spark.sparkContext.removeSparkListener(c)
+    // a SIBLING session (shared catalog and context) reads the same
+    // record; after the writer commits a knee-crossing rebuild, the
+    // sibling's next read is the new generation's, re-sized quantizer
     val sib = spark.newSession()
-    val qSib1 = AnnIndex.storedQuantizer(sib, dir, tag = "xs")
-    val sqSib1 = AnnIndex.storedSqParams(sib, dir, tag = "xs")
-    // the WRITER session swaps the generation (knee-crossing rebuild,
-    // so the new quantizer is visibly re-sized)
+    val q1 = AnnIndex.storedQuantizer(sib, dir, tag = "rec")
     val emb = Fixtures.embeddings(spark, dir)
     (1 to 4).foreach(r => AnnIndex.appendBatch(spark, dir,
-      emb.withColumn("vec_id", col("vec_id") + lit(r * 100000L)), tag = "xs"))
-    AnnIndex.requantize(spark, dir, tag = "xs")
-    // the sibling's next read must see the NEW generation — the r20
-    // writer-only invalidation left it holding the OLD centroids and
-    // silently scoring them against the new generation's codes
-    val qSib2 = AnnIndex.storedQuantizer(sib, dir, tag = "xs")
-    assert(!(qSib2 eq qSib1) && qSib2.length > qSib1.length,
-      s"requantize in session A must invalidate session B's cached quantizer " +
-        s"(${qSib1.length} -> ${qSib2.length})")
-    assert(qSib2.length ==
-      sib.table(Flat.tables(dir, "xs").quantizer).count(),
-      "the sibling's re-read must match the new generation's stored table")
-    assert(!(AnnIndex.storedSqParams(sib, dir, tag = "xs") eq sqSib1),
-      "the sibling's cached SQ params must be invalidated too")
+      emb.withColumn("vec_id", col("vec_id") + lit(r * 100000L)), tag = "rec"))
+    AnnIndex.requantize(spark, dir, tag = "rec")
+    val q2 = AnnIndex.storedQuantizer(sib, dir, tag = "rec")
+    assert(q2.length > q1.length,
+      s"the sibling must read the new generation's quantizer (${q1.length} -> ${q2.length})")
+    assert(fromRecord(sib) == fromTables(sib) && fromRecord(sib) == fromRecord(spark),
+      "the sibling's artifacts must be the new generation's stored ones")
   }
 
   test("requantize's count fold: |t| − |ts| == the anti-join live count, and the rebuild is sized by it") {
@@ -169,15 +181,15 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
       emb.select(col("vec_id")).filter(col("vec_id") % 10 === 3), tag = "cf")
     AnnIndex.removeBatch(spark, dir,
       emb.select(col("vec_id")).filter(col("vec_id") % 10 === 3), tag = "cf")
-    val t = spark.table(Flat.tables(dir, "cf").assign)
-    val ts = spark.table(Flat.tables(dir, "cf").tombstones)
+    val t = spark.table(AnnIndex.liveTables(spark, dir, "cf").assign)
+    val ts = spark.table(AnnIndex.liveTables(spark, dir, "cf").tombstones)
     val anti = t.join(ts.select(col("vec_id")), Seq("vec_id"), "left_anti").count()
     assert(t.count() - ts.count() == anti,
       "the subtraction identity requantize's count fold relies on must hold mid-lifecycle")
     val adv = AnnIndex.requantize(spark, dir, tag = "cf")
     assert(adv.nVectors == anti,
       s"requantize must size the rebuild from the live count (got ${adv.nVectors}, want $anti)")
-    assert(spark.table(Flat.tables(dir, "cf").assign).count() == anti,
+    assert(spark.table(AnnIndex.liveTables(spark, dir, "cf").assign).count() == anti,
       "the compacted generation must hold exactly the live rows")
     assert(adv.tombstoned == 0L && !adv.dead,
       "the fresh generation's advice must report zero tombstones")
@@ -187,7 +199,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     val dir = tempCorpus("append")
     AnnIndex.ensureBuilt(spark, dir)
     val cs = AnnIndex.storedQuantizer(spark, dir)
-    val before = spark.table(Flat.tables(dir).assign).count()
+    val before = spark.table(AnnIndex.liveTables(spark, dir).assign).count()
     // the batch clones existing vectors under fresh ids: each clone
     // lands in ITS original's cell (same vector, same stored quantizer
     // => same assignment), so a query must now find its own clone at
@@ -195,7 +207,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     val emb = Fixtures.embeddings(spark, dir)
     AnnIndex.appendBatch(spark, dir,
       emb.withColumn("vec_id", col("vec_id") + 500000L))
-    assert(spark.table(Flat.tables(dir).assign).count() == before * 2)
+    assert(spark.table(AnnIndex.liveTables(spark, dir).assign).count() == before * 2)
     val probed = AnnIndex.topK(spark, dir, Prefix(5), k = 4, nProbe = 2)
     val plan = probed.queryExecution.executedPlan.toString
     assert("SelectedBucketsCount: (\\d+) out of (\\d+)".r.findFirstMatchIn(plan).isDefined,
@@ -214,7 +226,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
         Similarity.prepared(emb.union(emb.withColumn("vec_id", col("vec_id") + 500000L))), cs)
       .select(col("vec_id"), col("cell"))
       .orderBy(col("vec_id")).collect().toSeq
-    val stored = spark.table(Flat.tables(dir).assign)
+    val stored = spark.table(AnnIndex.liveTables(spark, dir).assign)
       .select(col("vec_id"), col("cell"))
       .orderBy(col("vec_id")).collect().toSeq
     assert(stored == unionAssigned,
@@ -278,18 +290,12 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     assert(indexed.nonEmpty && indexed == inline,
       "the requantized index must stay a pure physical optimization")
-    // the commit left no stage/old generation behind
-    Seq("__stage", "__old").foreach { sfx =>
-      assert(!spark.catalog.tableExists(Flat.tables(dir).assign + sfx) &&
-        !spark.catalog.tableExists(Flat.tables(dir).quantizer + sfx) &&
-        !spark.catalog.tableExists(Flat.tables(dir).sq + sfx),
-        s"generation leftovers ($sfx) must be dropped at commit")
-    }
+    assertOnlyLiveAfterNextCommit(dir, Flat)
   }
 
   test("stored IVF×SQ probe == inline topKIvfSq (codes + params read back, never re-derived)") {
-    Seq(Flat.tables(sf).assign, Flat.tables(sf).quantizer, Flat.tables(sf).sq)
-      .foreach(graft.tables.Bucketed.resetTable(spark, _))
+    val live = AnnIndex.liveTables(spark, sf)
+    Seq(live.assign, live.quantizer, live.sq).foreach(Bucketed.resetTable(spark, _))
     val stored = AnnIndex.topK(spark, sf, Prefix(7), Sq8(12), k = 4, nProbe = 2)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     val inline = Similarity.topKIvfSq(Fixtures.embeddings(spark, sf),
@@ -404,7 +410,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
   test("pqcodes is PHYSICALLY 4 bits/dim: binary column at exactly m/2 bytes per row, " +
       "nibble decode round-trips the inline assignment bit for bit") {
     AnnIndex.ensureBuilt(spark, sf)
-    val t = Flat.tables(sf).assign
+    val t = AnnIndex.liveTables(spark, sf).assign
     assert(spark.table(t).schema("pqcodes").dataType ==
       org.apache.spark.sql.types.BinaryType,
       "the stored codes column must be binary, not array<int>")
@@ -458,46 +464,9 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
       "the requantized PQ index must reproduce the inline IVF×PQ pipeline")
   }
 
-  test("a crash inside the rename window is healed: t is absent at every crash point, ensureBuilt sweeps and rebuilds") {
-    // the swap protocol is shared, so every layout's window must heal
-    Seq(Flat, TwoLevel).foreach { layout =>
-      val dir = tempCorpus(s"crash-$layout")
-      val t = AnnIndex.ensureBuilt(spark, dir, layout = layout)
-      val qt = layout.tables(dir).quantizer
-      val before = AnnIndex.topK(spark, dir, Prefix(5), k = 4, nProbe = 2, layout = layout)
-        .orderBy(col("q_id"), col("rn")).collect().toSeq
-      assert(before.nonEmpty)
-      // Simulate the DEEPEST mid-window crash the reordered commit can
-      // produce: live pair renamed aside AND the new quantizer already
-      // promoted, but the assignment promotion (the LAST rename) never
-      // ran — t absent, qt present, stage + old leftovers on disk. Under
-      // the pre-fix order (assignment promoted first) this state was
-      // instead both-tables-present-but-mismatched, which no sweep could
-      // detect; the reorder makes "t absent" the invariant of EVERY
-      // crash point, so one detection rule heals them all.
-      spark.sql(s"ALTER TABLE $t RENAME TO ${t}__old")
-      spark.sql(s"ALTER TABLE $qt RENAME TO ${qt}__old")
-      import spark.implicits._
-      Seq((0, Seq(0.0))).toDF(layout.cell, "centroid")
-        .write.mode("overwrite").saveAsTable(qt) // the promoted new-gen quantizer
-      spark.range(3).toDF("junk").write.mode("overwrite").saveAsTable(t + "__stage")
-      assert(!spark.catalog.tableExists(t) && spark.catalog.tableExists(qt))
-      // first probe after the crash: ensureBuilt detects the missing
-      // assignment table, sweeps every generation, rebuilds from the
-      // source corpus — and the probes come back identical
-      val healed = AnnIndex.topK(spark, dir, Prefix(5), k = 4, nProbe = 2, layout = layout)
-        .orderBy(col("q_id"), col("rn")).collect().toSeq
-      assert(healed == before,
-        s"the healed $layout index must serve identical probes (deterministic rebuild)")
-      Seq(t + "__stage", t + "__old", qt + "__old").foreach(n =>
-        assert(!spark.catalog.tableExists(n), s"orphan $n must be swept"))
-    }
-  }
-
   test("persisted two-level index: stored probe == inline topKIvf2, both stored scans bucket-pruned") {
-    Seq(TwoLevel.tables(sf).assign, TwoLevel.tables(sf).quantizer,
-      TwoLevel.tables(sf).fine.get)
-      .foreach(graft.tables.Bucketed.resetTable(spark, _))
+    val live = AnnIndex.liveTables(spark, sf, layout = TwoLevel)
+    Seq(live.assign, live.quantizer, live.fine.get).foreach(Bucketed.resetTable(spark, _))
     val probed = AnnIndex.topK(spark, sf, Prefix(5), k = 4,
       nProbe = 2, nProbeFine = 3, layout = TwoLevel)
     val stored = probed.orderBy(col("q_id"), col("rn")).collect().toSeq
@@ -544,12 +513,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     assert(stored.nonEmpty && stored == inline,
       "the requantized two-level index must stay a pure physical optimization")
-    Seq("__stage", "__old").foreach { sfx =>
-      Seq(TwoLevel.tables(dir).assign, TwoLevel.tables(dir).quantizer,
-        TwoLevel.tables(dir).fine.get).foreach(n =>
-        assert(!spark.catalog.tableExists(n + sfx),
-          s"generation leftovers ($n$sfx) must be dropped at commit"))
-    }
+    assertOnlyLiveAfterNextCommit(dir, TwoLevel)
   }
 
   test("two-level SQ probe: zero loss at rerank = 2k; candidate scan reads codes, not full vectors") {
@@ -684,12 +648,12 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     assert(after == inline,
       "tombstone filtering must equal the surviving-corpus inline probe")
     // re-deleting is idempotent; deleting an unknown id is a no-op
-    val tsCount = spark.table(Flat.tables(dir).tombstones).count()
+    val tsCount = spark.table(AnnIndex.liveTables(spark, dir).tombstones).count()
     AnnIndex.removeBatch(spark, dir,
       emb.select(col("vec_id")).filter(col("vec_id") % 10 === 7))
     import spark.implicits._
     AnnIndex.removeBatch(spark, dir, Seq(987654321L).toDF("vec_id"))
-    assert(spark.table(Flat.tables(dir).tombstones).count() == tsCount,
+    assert(spark.table(AnnIndex.liveTables(spark, dir).tombstones).count() == tsCount,
       "re-deletes and unknown ids must not grow the tombstone set")
     assert(AnnIndex.topK(spark, dir, Prefix(6), k = 4, nProbe = 2)
       .orderBy(col("q_id"), col("rn")).collect().toSeq == after)
@@ -736,7 +700,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     // with the FULL query set: probes are external callers, so deleted
     // ids still query even though they can no longer be returned
     val surviving = emb.filter(col("vec_id") % 10 >= 3)
-    assert(spark.table(Flat.tables(dir).assign).count() == surviving.count(),
+    assert(spark.table(AnnIndex.liveTables(spark, dir).assign).count() == surviving.count(),
       "compaction must drop exactly the tombstoned rows")
     val k = AnnIndex.annCellsFor(surviving.count())
     val cs = Similarity.sampledCentroids(Similarity.prepared(surviving), k)
@@ -750,60 +714,6 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     assert(indexed.nonEmpty && indexed == inline,
       "the compacted index must equal the surviving-corpus inline pipeline")
-  }
-
-  test("a crash inside removeBatch's rename window is healed by the sweep") {
-    val dir = tempCorpus("del-crash")
-    AnnIndex.ensureBuilt(spark, dir)
-    val emb = Fixtures.embeddings(spark, dir)
-    AnnIndex.removeBatch(spark, dir,
-      emb.select(col("vec_id")).filter(col("vec_id") % 10 === 7))
-    val afterDelete = AnnIndex.topK(spark, dir, Prefix(5), k = 4, nProbe = 2)
-      .orderBy(col("q_id"), col("rn")).collect().toSeq
-    val ts = Flat.tables(dir).tombstones
-    import spark.implicits._
-    // THE crash window removeBatch can actually produce: live table
-    // renamed aside, staged merged table (committed ∪ in-flight batch)
-    // fully written but not yet promoted. The heal must promote the
-    // stage — recovering EVERYTHING, in-flight batch included — at
-    // O(rename), never the old full-source-rebuild blast radius.
-    val k = AnnIndex.storedQuantizer(spark, dir).length
-    val inFlight = spark.table(Flat.tables(dir).assign)
-      .select(col("vec_id"), col("cell"))
-      .filter(col("vec_id") % 10 === 8)
-      .unionByName(spark.table(ts).select(col("vec_id"), col("cell")))
-    Seq(ts + "__stage", ts + "__old").foreach(Bucketed.resetTable(spark, _))
-    inFlight.write.mode("overwrite").format("parquet")
-      .bucketBy(k, "cell").sortBy("cell").saveAsTable(ts + "__stage")
-    spark.sql(s"ALTER TABLE $ts RENAME TO ${ts}__old")
-    assert(!spark.catalog.tableExists(ts))
-    val assignmentFiles = spark.table(Flat.tables(dir).assign)
-      .inputFiles.toSet
-    val healed = AnnIndex.topK(spark, dir, Prefix(5), k = 4, nProbe = 2)
-      .orderBy(col("q_id"), col("rn")).collect().toSeq
-    assert(healed.forall { r =>
-      val id = r.getAs[Long]("vec_id"); id % 10 != 7 && id % 10 != 8 },
-      "the promoted stage must carry BOTH the committed and the in-flight batch")
-    assert(spark.table(ts).count() ==
-      emb.filter(col("vec_id") % 10 === 7 || col("vec_id") % 10 === 8).count(),
-      "the healed tombstone set is exactly committed ∪ in-flight")
-    assert(spark.table(Flat.tables(dir).assign).inputFiles.toSet == assignmentFiles,
-      "the heal must be a rename, never an index rebuild")
-    assert(!spark.catalog.tableExists(ts + "__old"), "orphan must be swept")
-    // the degenerate only-__old state (no removeBatch crash point
-    // produces it, but the sweep tolerates it): restoring the live
-    // table keeps every COMMITTED tombstone — only the in-flight batch
-    // is lost, and the ledger replays it
-    spark.sql(s"DROP TABLE $ts") // lose the healed generation entirely
-    AnnIndex.removeBatch(spark, dir, Seq(1L).toDF("vec_id")) // rebuild + re-delete id 1
-    val committed = AnnIndex.topK(spark, dir, Prefix(5), k = 4, nProbe = 2)
-      .orderBy(col("q_id"), col("rn")).collect().toSeq
-    spark.sql(s"ALTER TABLE $ts RENAME TO ${ts}__old")
-    val restored = AnnIndex.topK(spark, dir, Prefix(5), k = 4, nProbe = 2)
-      .orderBy(col("q_id"), col("rn")).collect().toSeq
-    assert(restored == committed,
-      "__old restore must preserve the committed tombstones")
-    assert(afterDelete.nonEmpty && healed.nonEmpty)
   }
 
   test("requantizeAdvice2: fresh two-level build clean; coarse knee fires on 30x growth") {
@@ -841,10 +751,10 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     assert(after.forall(_.getAs[Long]("vec_id") % 10 != 3) && after != before,
       s"gen-2 tombstones must filter and visibly change results")
     // idempotent re-delete
-    val tsCount = spark.table(TwoLevel.tables(dir).tombstones).count()
+    val tsCount = spark.table(AnnIndex.liveTables(spark, dir, layout = TwoLevel).tombstones).count()
     AnnIndex.removeBatch(spark, dir,
       emb.select(col("vec_id")).filter(col("vec_id") % 10 === 3), layout = TwoLevel)
-    assert(spark.table(TwoLevel.tables(dir).tombstones).count() == tsCount)
+    assert(spark.table(AnnIndex.liveTables(spark, dir, layout = TwoLevel).tombstones).count() == tsCount)
     // 10% dead — below the 20% trigger; delete two more residues to trip it
     AnnIndex.removeBatch(spark, dir,
       emb.select(col("vec_id")).filter(col("vec_id") % 10 === 4 ||
@@ -856,7 +766,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     val cleared = AnnIndex.requantizeAdvice(spark, dir, layout = TwoLevel)
     assert(cleared.tombstoned == 0 && !cleared.dead, s"compaction must clear: $cleared")
     val surviving = emb.filter(col("vec_id") % 10 < 3 || col("vec_id") % 10 > 5)
-    assert(spark.table(TwoLevel.tables(dir).assign).count() == surviving.count(),
+    assert(spark.table(AnnIndex.liveTables(spark, dir, layout = TwoLevel).assign).count() == surviving.count(),
       "requantize2 must physically drop exactly the tombstoned rows")
     // the compacted index == the inline two-level pipeline over the
     // surviving corpus, probed with the FULL query set
@@ -870,27 +780,16 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     assert(indexed.nonEmpty && indexed == inline,
       "the compacted two-level index must equal the surviving-corpus inline pipeline")
-    // crash between removeBatch2's renames: ts2 absent with the live
-    // set renamed aside → the sweep RESTORES it (healTombstoneSwap's
-    // cheap path, one level up from the flat case) — the compacted
-    // generation keeps serving, no rebuild, no lost tombstones
-    val ts = TwoLevel.tables(dir).tombstones
-    spark.sql(s"ALTER TABLE $ts RENAME TO ${ts}__old")
-    val healed = AnnIndex.topK(spark, dir, Prefix(5), k = 4, layout = TwoLevel)
-      .orderBy(col("q_id"), col("rn")).collect().toSeq
-    assert(healed == indexed,
-      "the restored gen-2 tombstone table must keep the compacted generation serving")
-    // only when NO tombstone generation survives does the sweep fall
-    // back to the full source rebuild (the delete producer's ledger
-    // replays) — the pre-17 blast radius, now the last resort
-    spark.sql(s"DROP TABLE $ts")
+    // a lost table the record names (here the tombstones) is healed by
+    // the full source rebuild — the delete producer's ledger replays
+    // the retired ids (crash points of every commit: the crash spec)
+    spark.sql(s"DROP TABLE ${AnnIndex.liveTables(spark, dir, layout = TwoLevel).tombstones}")
     val rebuilt = AnnIndex.topK(spark, dir, Prefix(5), k = 4, layout = TwoLevel)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     val freshInline = Similarity.topKIvf2(emb, maxQueryId = 5, k = 4)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     assert(rebuilt == freshInline,
-      "with no surviving tombstone generation the sweep rebuilds from source")
-    assert(!spark.catalog.tableExists(ts + "__old"), "orphan must be swept")
+      "with no tombstone table the index rebuilds from source")
   }
 
   test("curation -> ledger -> removeBatch: ledger-first ordering, replay idempotent, crash window heals") {
@@ -910,7 +809,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
       !victims.contains(r.getAs[Long]("vec_id"))),
       "retired ids must leave the serving results")
     // the ledger durably recorded exactly the batch
-    val ledger = Flat.tables(dir, "led").ledger
+    val ledger = Flat.ledger(dir, "led")
     assert(spark.table(ledger).collect().map(_.getLong(0)).sorted.toSeq
       == victims.sorted.toSeq)
     // replay TWICE: at-least-once delivery converges (the idempotent
@@ -967,9 +866,9 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     val flip = udf(() => scala.util.Random.nextBoolean()).asNondeterministic()
     AnnIndex.retireBatch(spark, dir, emb.select(col("vec_id")).where(flip()),
       tag = "nd")
-    val ledgered = spark.table(Flat.tables(dir, "nd").ledger)
+    val ledgered = spark.table(Flat.ledger(dir, "nd"))
       .select(col("vec_id")).collect().map(_.getLong(0)).toSet
-    val tombstoned = spark.table(Flat.tables(dir, "nd").tombstones)
+    val tombstoned = spark.table(AnnIndex.liveTables(spark, dir, "nd").tombstones)
       .select(col("vec_id")).collect().map(_.getLong(0)).toSet
     // every ledgered id is a corpus member, so resolution drops none:
     // the tombstone set must be EXACTLY the durably recorded batch —
@@ -980,7 +879,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
         s"the producer plan was evaluated more than once")
     // and replay converges as before
     AnnIndex.replayDeleteLedger(spark, dir, "nd")
-    assert(spark.table(Flat.tables(dir, "nd").tombstones)
+    assert(spark.table(AnnIndex.liveTables(spark, dir, "nd").tombstones)
       .select(col("vec_id")).collect().map(_.getLong(0)).toSet == ledgered)
   }
 
@@ -1248,40 +1147,6 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
       "explicit-id PQ probe must see the same tombstones as the prefix probe")
   }
 
-  test("pre-batch ledger schema migrates in place: old (vec_id-only) rows become batch 0, " +
-      "retire still reads back the fresh batch, replay converges") {
-    import spark.implicits._
-    val dir = tempCorpus("ledmig")
-    AnnIndex.ensureBuilt(spark, dir, tag = "mig")
-    val ledger = Flat.tables(dir, "mig").ledger
-    // plant an OLD-shape ledger (the pre-read-back schema: vec_id only)
-    val before = AnnIndex.topK(spark, dir, Prefix(6), k = 4, tag = "mig")
-      .orderBy(col("q_id"), col("rn")).collect().toSeq
-    val oldVictims = before.map(_.getAs[Long]("vec_id")).distinct.take(2)
-    oldVictims.toDF("vec_id")
-      .write.mode("overwrite").format("parquet").saveAsTable(ledger)
-    // a retire against the old-schema ledger must not throw, must
-    // widen the schema, and must retire exactly its own batch
-    val freshVictims = before.map(_.getAs[Long]("vec_id")).distinct
-      .filterNot(oldVictims.contains).take(2)
-    AnnIndex.retireBatch(spark, dir, freshVictims.toDF("vec_id"), tag = "mig")
-    val led = spark.table(ledger).collect()
-      .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("batch"))).toSeq
-    assert(oldVictims.forall(v => led.contains((v, 0L))),
-      s"migrated rows must carry batch 0: $led")
-    assert(freshVictims.forall(v => led.contains((v, 1L))),
-      s"the fresh batch must be read back as batch 1: $led")
-    val after = AnnIndex.topK(spark, dir, Prefix(6), k = 4, tag = "mig")
-      .orderBy(col("q_id"), col("rn")).collect().toSeq
-    assert(after.forall(r => !freshVictims.contains(r.getAs[Long]("vec_id"))))
-    // replay applies the migrated batch-0 rows too and converges
-    AnnIndex.replayDeleteLedger(spark, dir, "mig")
-    val replayed = AnnIndex.topK(spark, dir, Prefix(6), k = 4, tag = "mig")
-      .orderBy(col("q_id"), col("rn")).collect().toSeq
-    assert(replayed.forall(r =>
-      !(oldVictims ++ freshVictims).contains(r.getAs[Long]("vec_id"))))
-  }
-
   test("gen-2 ledger: retireBatch2 records then retires, replay idempotent, stranded batch applied") {
     import spark.implicits._
     val dir = tempCorpus("ledger2")
@@ -1297,7 +1162,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     AnnIndex.replayDeleteLedger(spark, dir, "led2", layout = TwoLevel)
     assert(probe() == after1, "gen-2 ledger replay must be idempotent")
     // stranded second batch (crash before removeBatch2) applied on replay
-    val ledger = TwoLevel.tables(dir, "led2").ledger
+    val ledger = TwoLevel.ledger(dir, "led2")
     val victims2 = after1.map(_.getAs[Long]("vec_id")).distinct.take(2)
     victims2.map((_, 99L)).toDF("vec_id", "batch")
       .write.mode("append").format("parquet").saveAsTable(ledger)
@@ -1313,20 +1178,22 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     val emb = Fixtures.embeddings(spark, dir)
     AnnIndex.removeBatch(spark, dir,
       emb.select(col("vec_id")).filter(col("vec_id") % 10 === 7))
-    val ts = Flat.tables(dir).tombstones
+    val ts = AnnIndex.liveTables(spark, dir).tombstones
     val loc = new java.io.File(
       new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath, ts)
     val before = loc.listFiles().map(f => f.getName -> f.lastModified()).toMap
     // a replayed (fully-covered) batch and an unknown id must both be
     // complete no-ops on disk — the row-count assertion elsewhere
-    // would pass even if the swap rewrote identical rows; this pins
-    // that the k-bucket rewrite + renames genuinely do not run
+    // would pass even if a commit rewrote identical rows; this pins
+    // that the k-bucket rewrite genuinely does not run
     AnnIndex.removeBatch(spark, dir,
       emb.select(col("vec_id")).filter(col("vec_id") % 10 === 7))
     import spark.implicits._
     AnnIndex.removeBatch(spark, dir, Seq(987654321L).toDF("vec_id"))
     val after = loc.listFiles().map(f => f.getName -> f.lastModified()).toMap
     assert(after == before, "covered re-deletes must not rewrite the tombstone table")
+    assert(AnnIndex.liveTables(spark, dir).tombstones == ts,
+      "covered re-deletes must not commit a generation")
   }
 
   test("learnedPq build flag: the STORED codebook == the inline Lloyd fit, " +
@@ -1379,44 +1246,6 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
       "gen-2 learnedPq build must store exactly the inline Lloyd fit")
   }
 
-  test("ledger migration commits via rename-aside: a crash between the renames is healed, " +
-      "batch-0 history survives") {
-    import spark.implicits._
-    val dir = tempCorpus("ledheal")
-    AnnIndex.ensureBuilt(spark, dir, tag = "heal")
-    val ledger = Flat.tables(dir, "heal").ledger
-    val before = AnnIndex.topK(spark, dir, Prefix(6), k = 4, tag = "heal")
-      .orderBy(col("q_id"), col("rn")).collect().toSeq
-    val oldVictims = before.map(_.getAs[Long]("vec_id")).distinct.take(2)
-    // simulate the EXACT mid-swap crash state the old DROP-then-RENAME
-    // protocol lost: the migrated stage (__mig) fully written, the old
-    // ledger renamed aside (__old), the live name ABSENT
-    oldVictims.toDF("vec_id").withColumn("batch", lit(0L))
-      .write.mode("overwrite").format("parquet").saveAsTable(ledger + "__mig")
-    oldVictims.toDF("vec_id")
-      .write.mode("overwrite").format("parquet").saveAsTable(ledger + "__old")
-    // the next retire must HEAL (promote __mig), see batch 0, and
-    // append its own batch as 1 — NOT reset a fresh empty ledger
-    val freshVictims = before.map(_.getAs[Long]("vec_id")).distinct
-      .filterNot(oldVictims.contains).take(2)
-    AnnIndex.retireBatch(spark, dir, freshVictims.toDF("vec_id"), tag = "heal")
-    val led = spark.table(ledger).collect()
-      .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("batch"))).toSeq
-    assert(oldVictims.forall(v => led.contains((v, 0L))),
-      s"healed ledger must keep the migrated batch-0 history: $led")
-    assert(freshVictims.forall(v => led.contains((v, 1L))),
-      s"the fresh batch must follow as batch 1, not restart at a fresh ledger: $led")
-    assert(!spark.catalog.tableExists(ledger + "__mig") &&
-      !spark.catalog.tableExists(ledger + "__old"),
-      "the heal must clear both swap-protocol side tables")
-    // replay applies the healed batch-0 rows
-    AnnIndex.replayDeleteLedger(spark, dir, "heal")
-    val after = AnnIndex.topK(spark, dir, Prefix(6), k = 4, tag = "heal")
-      .orderBy(col("q_id"), col("rn")).collect().toSeq
-    assert(after.forall(r =>
-      !(oldVictims ++ freshVictims).contains(r.getAs[Long]("vec_id"))))
-  }
-
   test("nibble_pack fails loudly on an odd code count (the packed-ADC m = 2·bytes contract)") {
     import spark.implicits._
     val odd = Seq(Tuple1(Seq(1, 2, 3))).toDF("codes")
@@ -1455,6 +1284,201 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     assert(after == before, "second ensureBuilt must not rewrite the table")
   }
 
+  // ---- coherence across sessions and commits --------------------------
+
+  Seq("removeBatch", "requantize", "appendBatch").foreach { op =>
+    test(s"a newSession sibling that probed before the writer's $op answers as the writer does after it") {
+      val dir = tempCorpus(s"sib-$op")
+      val emb = Fixtures.embeddings(spark, dir)
+      def retire(residue: Int): Unit = AnnIndex.removeBatch(spark, dir,
+        emb.select(col("vec_id")).filter(col("vec_id") % 10 === residue))
+      def probe(s: org.apache.spark.sql.SparkSession) =
+        AnnIndex.topK(s, dir, Prefix(6), k = 4, nProbe = 2).orderBy(col("q_id"), col("rn")).collect().toSeq
+      // the rebuild must compact something, so it changes what it stores
+      if (op == "requantize") retire(3)
+      val sib = spark.newSession()
+      val before = probe(sib)
+      op match {
+        case "removeBatch" => retire(7)
+        case "requantize" => AnnIndex.requantize(spark, dir)
+        case "appendBatch" => AnnIndex.appendBatch(spark, dir,
+          emb.filter(col("vec_id") === 0L).withColumn("vec_id", lit(900000L)))
+      }
+      val writer = probe(spark)
+      assert(probe(sib) == writer, s"the sibling must answer as the writer after its $op")
+      op match {
+        case "removeBatch" => assert(writer != before && writer.forall(_.getAs[Long]("vec_id") % 10 != 7),
+          "sanity: the removal changed the answer")
+        case "appendBatch" => assert(writer.exists(r => r.getAs[Long]("q_id") == 0L &&
+          r.getAs[Long]("vec_id") == 900000L && r.getAs[Double]("score") == 1.0),
+          "the appended clone of query 0 must be served")
+        case _ =>
+      }
+    }
+  }
+
+  Seq("removeBatch", "requantize").foreach { op =>
+    test(s"a topK frame planned before a $op commit collects the answer of the generation it was planned on") {
+      import spark.implicits._
+      val dir = tempCorpus(s"planned-$op")
+      def planned() = AnnIndex.topK(spark, dir, Prefix(6), k = 4, nProbe = 2)
+      def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy(col("q_id"), col("rn")).collect().toSeq
+      // a first removal, so the planned frame reads tombstone files
+      AnnIndex.removeBatch(spark, dir, Fixtures.embeddings(spark, dir).select(col("vec_id"))
+        .filter(col("vec_id") % 10 === 7))
+      val frame = planned()
+      val expected = rows(planned())
+      if (op == "removeBatch")
+        AnnIndex.removeBatch(spark, dir, expected.map(_.getAs[Long]("vec_id")).distinct.take(3).toDF("vec_id"))
+      else AnnIndex.requantize(spark, dir)
+      assert(rows(frame) == expected, s"the frame planned before the $op must answer its own generation")
+      if (op == "removeBatch") assert(rows(planned()) != expected, "sanity: the removal changed the answer")
+    }
+  }
+
+  /** Crash points of the index's commits. A file system that fails at
+    * its k-th mutating call and every one after serves the warehouse
+    * during each walk ([[CrashLocalFs]]); every table write is crashed
+    * at its first, middle and last step. After each crash the index
+    * must answer from the generation before (the record and every
+    * table it names untouched), a retry must reach the generation a
+    * clean run reaches, and no table or warehouse location of the
+    * failed attempt may remain under the base name. The crash before
+    * the record replace is the last step of each operation's last
+    * write. */
+  test("crash points: a crash at any write of build, requantize, removeBatch or retireBatch leaves " +
+      "the generation before; a retry reaches the one after and leaves no table of the failed attempt") {
+    import spark.implicits._
+    // 60 vectors (8 cells) keep the 39 crash points near 90 s
+    val dir = java.nio.file.Files.createTempDirectory("ann-crash").toString
+    Fixtures.embeddings(spark, sf).filter(col("vec_id") < 60).coalesce(1)
+      .write.parquet(dir + "/embeddings.parquet")
+    def probe(tag: String) = AnnIndex.topK(spark, dir, Prefix(6), k = 3, nProbe = 2, tag = tag)
+      .orderBy(col("q_id"), col("rn")).collect().toSeq
+    def live(tag: String) = AnnIndex.liveTables(spark, dir, tag).all.toSet
+    // what a generation holds, cheaper than a probe: the fitted
+    // artifacts (a record read) and the assignment's row count
+    def contents(tag: String) = {
+      val (mns, mxs) = AnnIndex.storedSqParams(spark, dir, tag = tag)
+      (AnnIndex.storedQuantizer(spark, dir, tag = tag).map(_.toSeq).toSeq, mns.toSeq, mxs.toSeq,
+        AnnIndex.storedPqCodebook(spark, dir, tag = tag).map(_.toSeq).toSeq,
+        spark.table(AnnIndex.liveTables(spark, dir, tag).assign).count())
+    }
+    val wh = new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath.stripSuffix("/") + "/"
+    // the warehouse entry each step of the last walk changed, in order
+    def stepTables: Seq[String] = CrashFs.paths.map { p =>
+      val path = p.toUri.getPath
+      if (path.startsWith(wh)) path.stripPrefix(wh).takeWhile(_ != '/') else path
+    }
+    // runs `op` clean; the steps to crash at: first, middle and last of
+    // each run of steps under one table
+    def crashPoints(op: => Unit): Seq[Int] = {
+      CrashFs.arm(Long.MaxValue)
+      try op finally CrashFs.disarm()
+      val runs = stepTables.zipWithIndex.foldLeft(Vector.empty[(String, Vector[Int])]) {
+        case (acc, (t, i)) =>
+          if (acc.nonEmpty && acc.last._1 == t) acc.init :+ (t -> (acc.last._2 :+ (i + 1)))
+          else acc :+ (t -> Vector(i + 1))
+      }
+      runs.flatMap { case (_, r) => Seq(r.head, r(r.size / 2), r.last).distinct }
+    }
+    def crashAt(what: String, k: Int)(op: => Unit): Unit = {
+      CrashFs.arm(k)
+      val crashed = try { op; false } catch { case NonFatal(_) => true } finally CrashFs.disarm()
+      assert(crashed, s"$what: no crash at step $k")
+    }
+    // after the retry, the base name holds the live generation and the
+    // one it replaced, on disk and in the catalog, and nothing else
+    def noLeftovers(what: String, tag: String, kept: Set[String]): Unit = {
+      val (found, keep) = (underBase(dir, tag), live(tag) ++ kept)
+      assert(found == keep, s"$what: ${found -- keep} outlived the retry, ${keep -- found} is missing")
+    }
+
+    val start = System.nanoTime()
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.file.impl", classOf[CrashLocalFs].getName)
+    hc.setBoolean("fs.file.impl.disable.cache", true)
+    // a failed task logs its stack trace; a hundred of them say nothing
+    spark.sparkContext.setLogLevel("OFF")
+    try {
+      // build: every crash point builds its own index (its own tag),
+      // with no generation before it. The retried indexes are the fresh
+      // ones the removeBatch and retireBatch walks start from, which
+      // probe each of them.
+      val buildPoints = crashPoints(AnnIndex.ensureBuilt(spark, dir, tag = "b"))
+      val built = probe("b")
+      val clean = contents("b")
+      buildPoints.foreach { k =>
+        val tag = s"b$k"
+        crashAt(s"build, step $k", k)(AnnIndex.ensureBuilt(spark, dir, tag = tag))
+        AnnIndex.ensureBuilt(spark, dir, tag = tag)
+        assert(contents(tag) == clean, s"build, step $k: the retry must build the clean generation")
+        noLeftovers(s"build, step $k", tag, Set.empty)
+      }
+      val freshIndexes = ("b" +: buildPoints.map(k => s"b$k")).iterator
+      val victims = built.map(_.getAs[Long]("vec_id")).distinct.take(3).toDF("vec_id")
+
+      // requantize: one index crashed and retried at every point; each
+      // attempt re-fits the same survivors, so each walks the same steps
+      def compactable(tag: String): Unit = {
+        AnnIndex.ensureBuilt(spark, dir, tag = tag)
+        AnnIndex.removeBatch(spark, dir, victims, tag = tag)
+        AnnIndex.requantize(spark, dir, tag = tag)
+      }
+      compactable("rq")
+      val rqPoints = crashPoints(AnnIndex.requantize(spark, dir, tag = "rq"))
+      val requantized = (probe("rq"), contents("rq"))
+      rqPoints.foreach { k =>
+        val tables = live("rq")
+        crashAt(s"requantize, step $k", k)(AnnIndex.requantize(spark, dir, tag = "rq"))
+        assert(live("rq") == tables && probe("rq") == requantized._1,
+          s"requantize, step $k: the crash must leave the generation before")
+        AnnIndex.requantize(spark, dir, tag = "rq")
+        assert(live("rq") != tables && contents("rq") == requantized._2,
+          s"requantize, step $k: the retry must reach the generation after")
+        noLeftovers(s"requantize, step $k", "rq", tables)
+      }
+
+      // removeBatch and retireBatch: a fresh index per crash point; the
+      // generation after differs from the one before in its tombstones
+      def tombstones(tag: String) = spark.table(AnnIndex.liveTables(spark, dir, tag).tombstones)
+        .select(col("vec_id")).collect().map(_.getLong(0)).toSet
+      def crashWalk(name: String, op: String => Unit): Seq[(Int, String)] = {
+        val clean = freshIndexes.next()
+        val points = crashPoints(op(clean))
+        assert(probe(clean) != built, s"sanity: the $name changes the answer")
+        val after = tombstones(clean)
+        points.map { k =>
+          val tag = freshIndexes.next()
+          val tables = live(tag)
+          crashAt(s"$name, step $k", k)(op(tag))
+          assert(live(tag) == tables && probe(tag) == built,
+            s"$name, step $k: the crash must leave the generation before")
+          op(tag)
+          assert(tombstones(tag) == after, s"$name, step $k: the retry must reach the generation after")
+          noLeftovers(s"$name, step $k", tag, tables)
+          k -> tag
+        }
+      }
+      val rmPoints = crashWalk("removeBatch", tag => AnnIndex.removeBatch(spark, dir, victims, tag = tag))
+      val retirePoints = crashWalk("retireBatch", tag => AnnIndex.retireBatch(spark, dir, victims, tag = tag))
+      // the retry after a crash past the ledger append records the batch
+      // again; the ledger still holds exactly the retired ids
+      retirePoints.foreach { case (k, tag) =>
+        assert(spark.table(Flat.ledger(dir, tag)).select(col("vec_id")).distinct()
+          .collect().map(_.getLong(0)).toSet == victims.collect().map(_.getLong(0)).toSet,
+          s"retireBatch, step $k: the ledger must hold exactly the retired ids")
+      }
+      info(s"crash points: build ${buildPoints.size}, requantize ${rqPoints.size}, " +
+        s"removeBatch ${rmPoints.size}, retireBatch ${retirePoints.size} " +
+        f"in ${(System.nanoTime() - start) / 1e9}%.0f s")
+    } finally {
+      hc.unset("fs.file.impl")
+      hc.unset("fs.file.impl.disable.cache")
+      spark.sparkContext.setLogLevel("WARN")
+    }
+  }
+
   /** Pins the driver round-trips of a warm stored probe. For each
     * (layout, codec) pair, the Spark jobs one probe runs — building the
     * frame (the distinct probed-cell collect) plus collecting its
@@ -1474,7 +1498,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
       AnnIndex.ensureBuilt(spark, sf, tag = "jobs", layout = layout)
       def probe() = AnnIndex.topK(spark, sf, Prefix(5), codec, k = 4, nProbe = 2,
         nProbeFine = 3, tag = "jobs", layout = layout).collect()
-      probe() // warm: artifact cache and relation listings
+      probe() // warm: relation listings
       val before = c.settle()
       assert(probe().nonEmpty)
       val jobs = c.settle() - before

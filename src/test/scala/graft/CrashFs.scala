@@ -50,26 +50,42 @@ class CrashFs extends RawLocalFileSystem {
   }
 }
 
+/** [[CrashFs]] serving the `file` scheme itself. Set as `fs.file.impl`,
+  * with `fs.file.impl.disable.cache` on so that new instances replace
+  * the cached local file system, it crashes writes to local paths that
+  * cannot take another scheme, such as the warehouse's catalog tables.
+  * The catalog's own directory calls keep the file system it was
+  * created with, so they are not counted. */
+class CrashLocalFs extends CrashFs {
+  override def getUri: URI = URI.create("file:///")
+  override def getScheme: String = "file"
+}
+
 object CrashFs {
   @volatile private var crashAt = Long.MaxValue
   private val calls = new AtomicLong()
-  private val callers = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]()
+  private val made = new java.util.concurrent.ConcurrentLinkedQueue[(Boolean, Path)]()
 
   /** Crash at the k-th mutating call from now on. */
-  def arm(k: Long): Unit = { calls.set(0L); callers.clear(); crashAt = k }
+  def arm(k: Long): Unit = { calls.set(0L); made.clear(); crashAt = k }
 
   /** Stop crashing; returns the mutating calls made since [[arm]]. */
   def disarm(): Long = { crashAt = Long.MaxValue; calls.get() }
 
   /** For each call since [[arm]], in order: whether the code of this
     * project made it (rather than Spark's or Hadoop's writers). */
-  def byProject: Seq[Boolean] = callers.toArray.toSeq.map(_.asInstanceOf[Boolean])
+  def byProject: Seq[Boolean] = steps.map(_._1)
+
+  /** For each call since [[arm]], in order: the path it changed. */
+  def paths: Seq[Path] = steps.map(_._2)
+
+  private def steps: Seq[(Boolean, Path)] = made.toArray.toSeq.map(_.asInstanceOf[(Boolean, Path)])
 
   private def step(what: String, p: Path): Unit = {
     val n = calls.incrementAndGet()
-    callers.add(Thread.currentThread().getStackTrace.iterator
+    made.add((Thread.currentThread().getStackTrace.iterator
       .map(_.getClassName).dropWhile(c => c.startsWith("java.") || c.startsWith("graft.CrashFs") ||
-        c.startsWith("org.apache.hadoop.fs.")).nextOption().exists(_.startsWith("graft.")))
+        c.startsWith("org.apache.hadoop.fs.")).nextOption().exists(_.startsWith("graft.")), p))
     if (n >= crashAt) throw new java.io.IOException(s"injected crash at step $n: $what $p")
   }
 }

@@ -221,7 +221,7 @@ class StreamAnalyticsSpec extends AnyFunSuite with SparkSpec {
       graft.ops.AnnIndex.retireBatch(spark, sfDir, losers, tag = "feed")
       assert(!probe().contains(2L),
         "the stream's loser must be absent from the post-retire probe")
-      assert(spark.table(graft.ops.AnnIndex.Flat.tables(sfDir, "feed").ledger)
+      assert(spark.table(graft.ops.AnnIndex.Flat.ledger(sfDir, "feed"))
         .select(col("vec_id")).collect().map(_.getLong(0)).toSeq == Seq(2L),
         "the loser must be durably ledgered exactly once")
     } finally { qRaw.stop(); qDeduped.stop() }
