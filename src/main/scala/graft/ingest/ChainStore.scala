@@ -1,11 +1,14 @@
 package graft.ingest
 
 import scala.jdk.CollectionConverters._
+import scala.util.Try
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.mapreduce.{JobContext, OutputCommitter, TaskAttemptContext}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, Metadata, MetadataBuilder, StructType}
 
 /** Parquet-backed chain store: the reference's PostgreSQL tables
@@ -25,10 +28,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, Metadata, Metad
   * the only source of truth for which files the store holds: per
   * table, the live files by bucket with size, rows and height range;
   * the stored schemas; and the status pair. A file on disk that no
-  * version names is not part of the store. Every mutation writes new
-  * parquet files only and then commits with one atomic rename of a
-  * manifest version (Structured Streaming's write-ahead-then-commit,
-  * SIGMOD 2018):
+  * version names is not part of the store. Every mutation writes its
+  * new parquet files straight into their bucket directories and then
+  * commits them with one atomic rename of a manifest version, the only
+  * rename it makes (Structured Streaming's file sink, SIGMOD 2018):
   *  - [[append]] is one commit covering all three tables;
   *  - [[rollback]] is one commit: it drops the buckets above the fork
   *    and rewrites the files that straddle it, O(bucketSize) work per
@@ -39,9 +42,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, Metadata, Metad
   * commit or the one after it. Nothing is overwritten or renamed in
   * place, so a frame resolved at one version stays readable while
   * later commits land: a dropped file is deleted by a later commit
-  * once [[ChainStore.GcGraceMs]] has passed. Files a crashed write
-  * left behind, which no version names, are removed when a writer
-  * opens the root.
+  * once [[ChainStore.GcGraceMs]] has passed. Files a failed write left
+  * behind, which no version names, are removed by the write itself,
+  * by the next write to their buckets, or, after a crash, when a
+  * writer opens the root.
   *
   * Storage-schema note: U256 money/gas columns are decimal-string TEXT
   * (the reference's contract, `init.sql:18-20,34-38`). A root written
@@ -143,24 +147,17 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
   }
 
   /** Load the newest version for the writer and remove what crashed
-    * writes left: temp manifests, staging directories and data files
-    * no version names. Runs under the root monitor, which every commit
-    * holds, so no write of this process is in flight. */
+    * writes left: temp manifests, data files no version names and the
+    * staging directory of a root written before writes went in place.
+    * Runs under the root monitor, which every commit holds, so no
+    * write of this process is in flight. */
   private def open(): Unit = {
-    val m = currentOnDisk(Manifest.empty)
+    shared.manifest = currentOnDisk(Manifest.empty)
     fs.mkdirs(log.dir)
     log.removeTemps()
-    fs.delete(stagingRoot, true)
-    Tables.map(t => new Path(tablePath(t))).filter(fs.exists).foreach { dir =>
-      fs.listStatus(dir).filter(_.getPath.getName.startsWith("bucket=")).foreach { b =>
-        val n = b.getPath.getName.stripPrefix("bucket=").toLong
-        fs.listStatus(b.getPath).map(_.getPath)
-          .filter(p => p.getName.endsWith(".parquet") &&
-            !m.named(FileRef(dir.getName, n, p.getName)))
-          .foreach(fs.delete(_, false))
-      }
-    }
-    shared.manifest = m
+    fs.delete(new Path(root, "_staging"), true)
+    sweep(Tables.map(t => t -> listed(new Path(tablePath(t))).map(_.getPath.getName)
+      .collect { case ChainStore.BucketDir(n) => n.toLong }))
   }
 
   /** The newest version on disk, from `prev` on. */
@@ -311,7 +308,7 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
     * The cost is O(batch), never O(store), and one Spark job per table
     * written:
     *  - each table's height range and the row bound per bucket that
-    *    sizes its key bloom filter (see [[keyBloom]]) come from
+    *    sizes its key bloom filter (see [[inPlace]]) come from
     *    metadata on `block_number` that [[StreamingIngester.processBatch]]
     *    stamps from its header collect ([[withRowCounts]]); a frame
     *    without it costs one more single-task job;
@@ -335,20 +332,14 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
       if (stamped.forall(_.isDefined)) dfs.map(_._1).zip(stamped.map(_.get)).toMap
       else measuredBounds(dfs)
     val m = shared.manifest
-    val out = stagingRoot
-    try {
-      val written = dfs.flatMap { case (t, df) =>
-        bounds(t).map { case (lo, _, maxRows) =>
-          val incoming = ChainStore.unstamped(df)
-          val dir = new Path(out, t)
-          writeFresh(m, t, incoming, lo, maxRows, dir)
-          (t, ChainStore.asStored(incoming.schema), dir)
-        }
-      }
-      val adds = written.flatMap { case (t, _, dir) => placeStaged(t, dir, bucket = None) }
-      val schemas = written.collect { case (t, s, _) if !m.schemas.contains(t) => Change.Schema(t, s) }
-      if (adds.nonEmpty) commit(schemas ++ adds.map(Change.Add(_)))
-    } finally fs.delete(out, true)
+    val batch = dfs.flatMap { case (t, df) => bounds(t).map(b => (t, ChainStore.unstamped(df), b)) }
+    val touched = batch.map { case (t, _, (lo, hi, _)) => t -> (lo / bucketSize to hi / bucketSize) }
+    val adds = writtenInPlace(touched) {
+      batch.foreach { case (t, incoming, (lo, _, maxRows)) => writeFresh(m, t, incoming, lo, maxRows) }
+    }
+    val schemas = batch.collect { case (t, in, _) if !m.schemas.contains(t) =>
+      Change.Schema(t, ChainStore.asStored(in.schema)) }
+    if (adds.nonEmpty) commit(schemas ++ adds.map(Change.Add(_)))
   }
 
   /** Stamp a batch frame with what [[append]] would otherwise measure
@@ -382,9 +373,8 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
   }
 
   /** Write the batch rows of table `t` whose key the store lacks into
-    * `dir`, partitioned by bucket: one Spark job, one task. */
-  private def writeFresh(m: Manifest, t: String, incoming: DataFrame, lo: Long, maxRows: Long,
-                         dir: Path): Unit = {
+    * its bucket directories: one Spark job, one task. */
+  private def writeFresh(m: Manifest, t: String, incoming: DataFrame, lo: Long, maxRows: Long): Unit = {
     val key = keyOf(t)
     val tagged = incoming.select(col(key).as("_key"), lit(1).as("_new"),
       struct(incoming.columns.map(col).toSeq: _*).as("_row"))
@@ -407,68 +397,67 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
     // `bucket` leads because the partitioned writer needs its rows
     // grouped by it; it is monotone in block_number, so the order
     // is the same.
-    withBucket(fresh.select(columns.map(col): _*))
-      .sortWithinPartitions(col("bucket"), col("block_number"), col(key))
-      .write.options(keyBloom(key, maxRows))
-      .partitionBy("bucket").parquet(dir.toString)
+    inPlace(withBucket(fresh.select(columns.map(col): _*))
+      .sortWithinPartitions(col("bucket"), col("block_number"), col(key)), key, maxRows)
+      .partitionBy("bucket").parquet(tablePath(t))
   }
 
-  /** Write options for a bloom filter on the table's key, sized for
-    * `maxRows` distinct keys per file. Without a size parquet writes a
-    * 1 MiB filter into every file, ~40× the bytes of the rows a
-    * 100-block bucket holds.
-    * The point lookups ([[graft.api.Lookups]]) push their hash equality
-    * to parquet, which reads this filter to skip a file; the append's
-    * anti-join does not use it. */
-  private def keyBloom(key: String, maxRows: Long): Map[String, String] = Map(
-    s"parquet.bloom.filter.enabled#$key" -> "true",
-    s"parquet.bloom.filter.expected.ndv#$key" -> math.max(1L, maxRows).toString)
+  /** The writer of a store file: it appends into the store's own
+    * directories through [[InPlaceCommitter]], so each task's file
+    * lands where it lives, and carries a bloom filter on the table's
+    * key sized for `maxRows` distinct keys per file. Without a size
+    * parquet writes a 1 MiB filter into every file, ~40× the bytes of
+    * the rows a 100-block bucket holds. The point lookups
+    * ([[graft.api.Lookups]]) push their hash equality to parquet,
+    * which reads this filter to skip a file; the append's anti-join
+    * does not use it. The committer is a write option, so the session's
+    * other writes keep theirs. */
+  private def inPlace(df: DataFrame, key: String, maxRows: Long) =
+    df.write.mode("append")
+      .option(SQLConf.PARQUET_OUTPUT_COMMITTER_CLASS.key, classOf[InPlaceCommitter].getName)
+      .option(s"parquet.bloom.filter.enabled#$key", "true")
+      .option(s"parquet.bloom.filter.expected.ndv#$key", math.max(1L, maxRows))
 
-  /** Where a mutation writes its files before placing them; mutations
-    * run one at a time under the root monitor, and each removes it. */
-  private def stagingRoot = new Path(root, "_staging")
-
-  /** Move the parquet files a write left in `dir` into their bucket
-    * directories and describe them from their footers (rows and height
-    * range; read on the driver, no Spark job). `bucket` names the
-    * bucket of an unpartitioned write; otherwise the files sit in
-    * `bucket=<n>` subdirectories. Empty files are left behind. Until a
-    * manifest version names them, the moved files are not part of the
-    * store. */
-  private def placeStaged(t: String, dir: Path, bucket: Option[Long]): Seq[DataFile] = {
-    val listed = if (fs.exists(dir)) fs.listStatus(dir).toSeq else Seq.empty
-    val staged: Seq[(Long, FileStatus)] = bucket match {
-      case Some(b) => listed.map(b -> _)
-      case None => listed.filter(_.getPath.getName.startsWith("bucket="))
-        .flatMap(d => fs.listStatus(d.getPath).toSeq
-          .map(d.getPath.getName.stripPrefix("bucket=").toLong -> _))
-    }
-    staged.filter(_._2.getPath.getName.endsWith(".parquet")).flatMap { case (b, s) =>
-      val (rows, lo, hi) = footer(s)
-      if (rows == 0) None
-      else {
-        val f = DataFile(t, b, s.getPath.getName, s.getLen, rows, lo, hi)
-        val target = new Path(s"$root/${f.ref.relative}")
-        fs.mkdirs(target.getParent)
-        if (!fs.rename(s.getPath, target)) throw new java.io.IOException(s"could not place $target")
-        Some(f)
-      }
-    }
+  /** Run `write`, which puts new parquet files straight into the
+    * `touched` buckets of each table, and describe the files it wrote.
+    * Until a commit names them they are not part of the store. Unnamed
+    * files in those buckets are removed first, so a failed write's
+    * leftover never passes for this write's, and again if it fails. */
+  private def writtenInPlace(touched: Seq[(String, Seq[Long])])(write: => Unit): Seq[DataFile] = {
+    sweep(touched)
+    try write catch { case e: Throwable => Try(sweep(touched)).failed.foreach(e.addSuppressed); throw e }
+    unnamed(touched).flatMap { case (t, b, s) => described(t, b, s) }
   }
 
-  /** (rows, lowest block_number, highest block_number) of a parquet
-    * file, from its footer. */
-  private def footer(s: FileStatus): (Long, Long, Long) = {
+  /** The parquet files in the `touched` buckets of each table that the
+    * writer's manifest names neither as live nor as dropped. */
+  private def unnamed(touched: Seq[(String, Seq[Long])]): Seq[(String, Long, FileStatus)] = {
+    val m = shared.manifest
+    for ((t, buckets) <- touched; b <- buckets.distinct; f <- listed(new Path(s"${tablePath(t)}/bucket=$b"))
+         if f.getPath.getName.endsWith(".parquet") && !m.named(FileRef(t, b, f.getPath.getName)))
+      yield (t, b, f)
+  }
+
+  private def sweep(touched: Seq[(String, Seq[Long])]): Unit =
+    unnamed(touched).foreach { case (_, _, s) => fs.delete(s.getPath, false) }
+
+  private def listed(dir: Path): Seq[FileStatus] =
+    try fs.listStatus(dir).toSeq catch { case _: java.io.FileNotFoundException => Nil }
+
+  /** A parquet file of table `t` in bucket `b`, described from its
+    * footer (rows and height range; read on the driver, no Spark job);
+    * None when it holds no rows. */
+  private def described(t: String, b: Long, s: FileStatus): Option[DataFile] = {
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(s, spark.sparkContext.hadoopConfiguration))
     try {
       val stats = r.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala
         .find(_.getPath.toDotString == "block_number").map(_.getStatistics))
         .filter(_.hasNonNullValue)
-      if (stats.isEmpty) (0L, 0L, 0L)
-      else (r.getRecordCount,
+      if (stats.isEmpty) None
+      else Some(DataFile(t, b, s.getPath.getName, s.getLen, r.getRecordCount,
         stats.map(_.genericGetMin.asInstanceOf[java.lang.Long].longValue).min,
-        stats.map(_.genericGetMax.asInstanceOf[java.lang.Long].longValue).max)
+        stats.map(_.genericGetMax.asInstanceOf[java.lang.Long].longValue).max))
     } finally r.close()
   }
 
@@ -511,27 +500,22 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
 
   private def rollbackImpl(forkHeight: Long): Unit = {
     val m = shared.manifest
-    val out = stagingRoot
-    try {
-      val (drops, adds) = Seq("logs", "transactions", "blocks").filter(m.schemas.contains).map { t =>
-        val above = m.files(t).filter(_.maxBlock >= forkHeight)
-        // only the fork's bucket can hold a file on both sides of it
-        val straddling = above.filter(_.minBlock < forkHeight)
-        val kept =
-          if (straddling.isEmpty) Nil
-          else {
-            val dir = new Path(out, t)
-            frameOver(t, m.schemas(t), straddling).filter(col("block_number") < forkHeight)
-              .drop("bucket").coalesce(1)
-              .sortWithinPartitions(col("block_number"), col(keyOf(t)))
-              .write.options(keyBloom(keyOf(t), straddling.map(_.rows).sum))
-              .parquet(dir.toString)
-            placeStaged(t, dir, Some(forkHeight / bucketSize))
-          }
-        (above, kept)
-      }.unzip
-      if (drops.flatten.nonEmpty) commit(adds.flatten.map(Change.Add(_)), drops.flatten)
-    } finally fs.delete(out, true)
+    val above = Seq("logs", "transactions", "blocks").filter(m.schemas.contains)
+      .map(t => t -> m.files(t).filter(_.maxBlock >= forkHeight))
+    // only the fork's bucket can hold a file on both sides of it
+    val straddling = above.map { case (t, files) => t -> files.filter(_.minBlock < forkHeight) }
+      .filter(_._2.nonEmpty)
+    val forkBucket = forkHeight / bucketSize
+    val kept = writtenInPlace(straddling.map { case (t, _) => t -> Seq(forkBucket) }) {
+      straddling.foreach { case (t, files) =>
+        inPlace(frameOver(t, m.schemas(t), files).filter(col("block_number") < forkHeight)
+          .drop("bucket").coalesce(1)
+          .sortWithinPartitions(col("block_number"), col(keyOf(t))), keyOf(t), files.map(_.rows).sum)
+          .parquet(s"${tablePath(t)}/bucket=$forkBucket")
+      }
+    }
+    val drops = above.flatMap(_._2)
+    if (drops.nonEmpty) commit(kept.map(Change.Add(_)), drops)
   }
 
   /** Small-file compaction: every micro-batch append leaves one file
@@ -550,15 +534,13 @@ class ChainStore(spark: SparkSession, root: String, bucketSize: Long = 100L) {
     val multi = m.files(table).groupBy(_.bucket).filter(_._2.size > 1)
     if (multi.nonEmpty) {
       val key = keyOf(table)
-      val out = stagingRoot
-      try {
-        frameOver(table, m.schemas(table), multi.values.flatten.toSeq).coalesce(1)
-          .sortWithinPartitions(col("bucket"), col("block_number"), col(key))
-          .write.options(keyBloom(key, multi.values.map(_.map(_.rows).sum).max))
-          .partitionBy("bucket").parquet(out.toString)
-        val adds = placeStaged(table, out, bucket = None)
-        commit(adds.map(Change.Add(_)), multi.values.flatten.toSeq)
-      } finally fs.delete(out, true)
+      val adds = writtenInPlace(Seq(table -> multi.keys.toSeq)) {
+        inPlace(frameOver(table, m.schemas(table), multi.values.flatten.toSeq).coalesce(1)
+          .sortWithinPartitions(col("bucket"), col("block_number"), col(key)),
+          key, multi.values.map(_.map(_.rows).sum).max)
+          .partitionBy("bucket").parquet(tablePath(table))
+      }
+      commit(adds.map(Change.Add(_)), multi.values.flatten.toSeq)
     }
   }
 
@@ -648,6 +630,8 @@ object ChainStore {
   private val roots = new java.util.concurrent.ConcurrentHashMap[String, Shared]()
   private[ingest] def sharedFor(rootKey: String): Shared =
     roots.computeIfAbsent(rootKey, _ => new Shared)
+
+  private val BucketDir = """bucket=(\d+)""".r
 
   private val BatchLo = "graft.batchLo"
   private val BatchHi = "graft.batchHi"
@@ -751,4 +735,17 @@ object ChainStore {
       Some((parts(0).toLong, if (parts.length > 1) parts(1).toLong else 1L))
     }
   }
+}
+
+/** The committer of the store's writes: it commits nothing, since a
+  * manifest version makes a file part of the store ([[ChainStore]]).
+  * Spark writes the files of a committer that is not a
+  * `FileOutputCommitter` straight under the output path: no
+  * `_temporary` tree, no rename and no `_SUCCESS` file. */
+final class InPlaceCommitter extends OutputCommitter {
+  def setupJob(job: JobContext): Unit = ()
+  def setupTask(task: TaskAttemptContext): Unit = ()
+  def needsTaskCommit(task: TaskAttemptContext): Boolean = false
+  def commitTask(task: TaskAttemptContext): Unit = ()
+  def abortTask(task: TaskAttemptContext): Unit = ()
 }

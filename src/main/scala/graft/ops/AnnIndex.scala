@@ -124,34 +124,22 @@ object AnnIndex {
     *
     *  - `assign`: the cell assignment plus codes, bucketed on the
     *    layout's cell key — the only corpus-sized table.
-    *  - `quantizer`: (cell key, centroid), the centroids that assigned
-    *    the cells. The quantizer is part of the index, not a derivable
-    *    property of the corpus: re-deriving it from the LIVE corpus
-    *    silently decoheres the moment the corpus grows past the build
-    *    (count → different k → different sample → probes scan the
-    *    wrong buckets with no error).
     *  - `fine`: the two-level layout's (ccell, fcell, fv, f2) fine
     *    quantizer — data, never a literal (≈ Σ⌈√occ⌉ rows).
-    *  - `sq`: the SQ8 (dim, mn, mx) params every stored code was
-    *    produced with; a probe decodes against the SAME affine terms.
-    *  - `pq`: the PQ codebook (i, centroid) — ksub FULL-dim rows,
-    *    subspace j's centroid i = row i's j-th slice.
     *  - `tombstones`: (vec_id, cell key), one row per retired vector,
     *    bucketed like the assignment. The only table a delete writes:
     *    [[removeBatch]] commits a fresh one beside the other roles.
     *
-    * Each artifact is written with the generation, appends encode with
-    * it, and [[requantize]] refreshes it with the generation. */
-  final case class Tables(assign: String, quantizer: String, fine: Option[String],
-                          sq: String, pq: String, tombstones: String) {
-    def all: Seq[String] = Seq(assign, quantizer) ++ fine ++ Seq(sq, pq, tombstones)
+    * The small artifacts (quantizer, SQ8 params, PQ codebook) are not
+    * tables: they live in the generation record ([[Artifacts]]). */
+  final case class Tables(assign: String, fine: Option[String], tombstones: String) {
+    def all: Seq[String] = Seq(assign) ++ fine :+ tombstones
   }
 
   /** How the index routes a vector to its bucket and a query to its
     * candidates. `cell` is the bucket key (and the quantizer's key
     * column); `keys` are the columns a candidate joins its probes on. */
-  sealed abstract class Layout(prefix: String, quantizerSuffix: String,
-                               fineSuffix: Option[String], val cell: String,
+  sealed abstract class Layout(prefix: String, fineSuffix: Option[String], val cell: String,
                                val keys: Seq[String]) {
     /** One index per (source directory, tag): sf0.01 and sf0.1 runs in
       * the same warehouse must never read each other's index, and a
@@ -167,7 +155,7 @@ object AnnIndex {
     /** The tables of generation `n` under `base`. */
     private[AnnIndex] def named(base: String, n: Long): Tables = {
       val t = s"${base}_g$n"
-      Tables(t, t + quantizerSuffix, fineSuffix.map(t + _), t + "_sq", t + "_pq", t + "_ts")
+      Tables(t, fineSuffix.map(t + _), t + "_ts")
     }
     /** The cell count a corpus of n vectors should have — the knee
       * [[requantizeAdvice]] measures against. */
@@ -190,7 +178,7 @@ object AnnIndex {
 
   /** One ⌈√n⌉-cell quantizer: the right answer while k centroids fit a
     * driver collect and a plan literal. */
-  case object Flat extends Layout("ann_cells_", "_q", None, "cell", Seq("cell")) {
+  case object Flat extends Layout("ann_cells_", None, "cell", Seq("cell")) {
     private[AnnIndex] def cellsFor(n: Long) = annCellsFor(n)
     private[AnnIndex] def fit(prep: DataFrame, n: Long, quantizer: Array[Array[Double]]) =
       (Similarity.assignCells(prep, quantizer), None)
@@ -207,7 +195,7 @@ object AnnIndex {
     * probed by coarse-cell literals, and the assignment is bucketed on
     * the coarse cell — nothing k-sized touches the driver or the plan
     * at any corpus size ([[Similarity.topKIvf2]] is the inline twin). */
-  case object TwoLevel extends Layout("ann2_", "_qc", Some("_qf"), "ccell", Seq("ccell", "fcell")) {
+  case object TwoLevel extends Layout("ann2_", Some("_qf"), "ccell", Seq("ccell", "fcell")) {
     private[AnnIndex] def cellsFor(n: Long) = annCellsFor(annCellsFor(n))
     private[AnnIndex] def fit(prep: DataFrame, n: Long, quantizer: Array[Array[Double]]) = {
       val (fine, asg) = Similarity.ivf2Levels(prep, n, quantizer)
@@ -247,14 +235,27 @@ object AnnIndex {
     * STORED codebook, keep `rerank` per query, re-score exactly. */
   final case class Pq(rerank: Int) extends Codec
 
-  /** Driver-side artifacts of one generation, fitted by its writer. */
+  /** Driver-side artifacts of one generation, fitted by its writer and
+    * held only in its record; every stored code was produced with them.
+    *
+    *  - `quantizer`: the centroids that assigned the cells. It is part
+    *    of the index, not a derivable property of the corpus:
+    *    re-deriving it from the LIVE corpus silently decoheres the
+    *    moment the corpus grows past the build (count → different k →
+    *    different sample → probes scan the wrong buckets with no error).
+    *  - `sq`: the SQ8 (mn, mx) params per dim; a probe decodes against
+    *    the SAME affine terms.
+    *  - `pq`: the PQ codebook — ksub FULL-dim rows, subspace j's
+    *    centroid i = row i's j-th slice.
+    *
+    * Appends encode with them and [[requantize]] refits them with the
+    * generation. */
   private final case class Artifacts(quantizer: Array[Array[Double]],
                                      sq: (Array[Double], Array[Double]),
                                      pq: Array[Array[Double]])
 
   /** The generation record of one index: the live table of each role,
-    * the artifacts the writer fitted (equal to the stored tables:
-    * doubles round-trip parquet exactly), and the assignment table's
+    * the artifacts the writer fitted, and the assignment table's
     * file count after its last write. The count is what keeps a sibling
     * session coherent with an append it did not make: the assignment
     * is the one table written in place, and a session keeps the file
@@ -360,21 +361,7 @@ object AnnIndex {
       else sample.take(PqKsub)
     Bucketed.writeBucketed(encoded(asg, layout, mns, mxs, pqCb),
       tb.assign, layout.cell, nBuckets = k)
-    import spark.implicits._
-    // single-partition writes for the tiny driver-local artifacts (k /
-    // d / ksub rows): a local Seq.toDF otherwise fans out to
-    // default-parallelism tasks — 32 commit-protocol files of ~2 rows
-    // each per table per rebuild, measured ~0.3-0.4 s apiece in the
-    // r21 event logs (guide §6: sensible output file sizing). The fine
-    // quantizer stays a distributed write: it is a computed frame.
-    def save(df: DataFrame, table: String): Unit =
-      df.repartition(1).write.mode("overwrite").saveAsTable(table)
-    save(quantizer.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF(layout.cell, "centroid"), tb.quantizer)
     fine.foreach(_.write.mode("overwrite").saveAsTable(tb.fine.get))
-    save(mns.indices.map(i => (i, mns(i), mxs(i))).toDF("dim", "mn", "mx"), tb.sq)
-    save(pqCb.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("i", "centroid"), tb.pq)
     // the generation starts with NO tombstones, written with ONE
     // bucket: bucket pruning only matters once tombstones exist, and
     // removeBatch rewrites with the quantizer's bucket count then — a

@@ -61,11 +61,8 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
 
   test("probes stay coherent with the stored quantizer after the corpus grows past the build") {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val dir = Files.createTempDirectory("ann-drift").toString
+    val dir = tempCorpus("drift")
     val embDir = Paths.get(dir, "embeddings.parquet")
-    Files.createDirectories(embDir)
-    Files.copy(Paths.get(sf, "embeddings.parquet"),
-      embDir.resolve("part-00000.parquet"), StandardCopyOption.REPLACE_EXISTING)
     val before = AnnIndex.topK(spark, dir, Prefix(5), k = 4, nProbe = 2)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     assert(before.nonEmpty)
@@ -73,7 +70,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     // would use a DIFFERENT k and centroid sample than the build did —
     // the stored quantizer must keep probes coherent with the stored
     // assignment (the index is a snapshot; new vectors join at rebuild)
-    val staging = Files.createTempDirectory("ann-drift-extra").toString
+    val staging = s"$dir/extra"
     Fixtures.embeddings(spark, dir)
       .withColumn("vec_id", col("vec_id") + 100000L)
       .write.mode("overwrite").parquet(staging)
@@ -93,16 +90,23 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
       "a grown corpus must not decohere probes from the stored index")
   }
 
-  /** A throwaway corpus dir seeded from the sf0.001 embeddings, so
-    * index-mutation tests never touch the shared fixture's index. */
+  private val corpusTags = scala.collection.mutable.Set.empty[String]
+
+  /** A corpus dir seeded from the sf0.001 embeddings, so index-mutation
+    * tests never touch the shared fixture's index. Its path, and so the
+    * base name of every index built over it, is fixed by `tag`: a rerun
+    * of the suite builds the same indexes again, and each first build
+    * removes what an earlier run left under its base name in the
+    * warehouse, so reruns do not pile up tables there. */
   private def tempCorpus(tag: String): String = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val dir = Files.createTempDirectory(s"ann-$tag").toString
-    val embDir = Paths.get(dir, "embeddings.parquet")
-    Files.createDirectories(embDir)
-    Files.copy(Paths.get(sf, "embeddings.parquet"),
-      embDir.resolve("part-00000.parquet"), StandardCopyOption.REPLACE_EXISTING)
-    dir
+    import java.nio.file.{Files, Paths}
+    assert(corpusTags.add(tag), s"corpus tag $tag serves two tests")
+    val dir = Paths.get(System.getProperty("java.io.tmpdir"), "graft-ann-corpora", tag)
+    if (Files.exists(dir))
+      Files.walk(dir).sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
+    val embDir = Files.createDirectories(dir.resolve("embeddings.parquet"))
+    Files.copy(Paths.get(sf, "embeddings.parquet"), embDir.resolve("part-00000.parquet"))
+    dir.toString
   }
 
   /** Every table and warehouse location under an index's base name —
@@ -128,7 +132,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
       s"after the next commit only the live generation's tables may remain: ${underBase(dir, layout = layout)}")
   }
 
-  test("the record's artifacts equal the stored tables, and a sibling reads the new generation's") {
+  test("the record's artifacts produced the stored cells and codes, and a sibling reads the new generation's") {
     val dir = tempCorpus("record")
     AnnIndex.ensureBuilt(spark, dir, tag = "rec")
     def fromRecord(s: org.apache.spark.sql.SparkSession) = {
@@ -136,16 +140,21 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
       (AnnIndex.storedQuantizer(s, dir, tag = "rec").map(_.toSeq).toSeq, mns.toSeq.zip(mxs.toSeq),
         AnnIndex.storedPqCodebook(s, dir, tag = "rec").map(_.toSeq).toSeq)
     }
-    def fromTables(s: org.apache.spark.sql.SparkSession) = {
-      val t = AnnIndex.liveTables(s, dir, tag = "rec")
-      def matrix(table: String, key: String) =
-        s.table(table).orderBy(key).collect().map(_.getSeq[Double](1)).toSeq
-      (matrix(t.quantizer, "cell"),
-        s.table(t.sq).orderBy("dim").collect().map(r => (r.getDouble(1), r.getDouble(2))).toSeq,
-        matrix(t.pq, "i"))
+    // the live assignment's rows whose cell, SQ8 codes or PQ codes are
+    // not what the session's record artifacts give their vector
+    def incoherent(s: org.apache.spark.sql.SparkSession): Long = {
+      val (mns, mxs) = AnnIndex.storedSqParams(s, dir, tag = "rec")
+      val pqCb = AnnIndex.storedPqCodebook(s, dir, tag = "rec")
+      val stored = s.table(AnnIndex.liveTables(s, dir, tag = "rec").assign)
+        .withColumnRenamed("cell", "stored_cell")
+      Similarity.assignCells(stored, AnnIndex.storedQuantizer(s, dir, tag = "rec"))
+        .filter(col("cell") =!= col("stored_cell") ||
+          col("codes") =!= Similarity.sqCodesCol(col("v"), mns, mxs) ||
+          col("pqcodes") =!= graft.functions.VectorExprs.nibblePack(
+            Similarity.pqCodesCol(col("v"), pqCb, AnnIndex.PqM)))
+        .count()
     }
-    assert(fromRecord(spark) == fromTables(spark),
-      "the writer's fitted artifacts must equal what the generation stored")
+    assert(incoherent(spark) == 0, "every stored cell and code must come from the record's artifacts")
     // reading the artifacts is a record read: no Spark job
     val c = new JobCounter(spark)
     spark.sparkContext.addSparkListener(c)
@@ -166,8 +175,8 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     val q2 = AnnIndex.storedQuantizer(sib, dir, tag = "rec")
     assert(q2.length > q1.length,
       s"the sibling must read the new generation's quantizer (${q1.length} -> ${q2.length})")
-    assert(fromRecord(sib) == fromTables(sib) && fromRecord(sib) == fromRecord(spark),
-      "the sibling's artifacts must be the new generation's stored ones")
+    assert(incoherent(sib) == 0 && fromRecord(sib) == fromRecord(spark),
+      "the sibling's artifacts must be the ones the new generation's codes were produced with")
   }
 
   test("requantize's count fold: |t| − |ts| == the anti-join live count, and the rebuild is sized by it") {
@@ -294,8 +303,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("stored IVF×SQ probe == inline topKIvfSq (codes + params read back, never re-derived)") {
-    val live = AnnIndex.liveTables(spark, sf)
-    Seq(live.assign, live.quantizer, live.sq).foreach(Bucketed.resetTable(spark, _))
+    Bucketed.resetTable(spark, AnnIndex.liveTables(spark, sf).assign)
     val stored = AnnIndex.topK(spark, sf, Prefix(7), Sq8(12), k = 4, nProbe = 2)
       .orderBy(col("q_id"), col("rn")).collect().toSeq
     val inline = Similarity.topKIvfSq(Fixtures.embeddings(spark, sf),
@@ -466,7 +474,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
 
   test("persisted two-level index: stored probe == inline topKIvf2, both stored scans bucket-pruned") {
     val live = AnnIndex.liveTables(spark, sf, layout = TwoLevel)
-    Seq(live.assign, live.quantizer, live.fine.get).foreach(Bucketed.resetTable(spark, _))
+    Seq(live.assign, live.fine.get).foreach(Bucketed.resetTable(spark, _))
     val probed = AnnIndex.topK(spark, sf, Prefix(5), k = 4,
       nProbe = 2, nProbeFine = 3, layout = TwoLevel)
     val stored = probed.orderBy(col("q_id"), col("rn")).collect().toSeq
@@ -1349,8 +1357,14 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
   test("crash points: a crash at any write of build, requantize, removeBatch or retireBatch leaves " +
       "the generation before; a retry reaches the one after and leaves no table of the failed attempt") {
     import spark.implicits._
-    // 60 vectors (8 cells) keep the 39 crash points near 90 s
+    // 60 vectors (8 cells) keep the 21 crash points near 50 s. The
+    // walk counts the steps of a first build, which would also sweep
+    // what an earlier run left under a fixed base name: its corpus dir
+    // is new each run, and the test drops the tables it made instead.
     val dir = java.nio.file.Files.createTempDirectory("ann-crash").toString
+    val wh = new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath.stripSuffix("/") + "/"
+    def warehouse = Option(new java.io.File(wh).list()).toSeq.flatten.toSet
+    val before = warehouse
     Fixtures.embeddings(spark, sf).filter(col("vec_id") < 60).coalesce(1)
       .write.parquet(dir + "/embeddings.parquet")
     def probe(tag: String) = AnnIndex.topK(spark, dir, Prefix(6), k = 3, nProbe = 2, tag = tag)
@@ -1364,7 +1378,6 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
         AnnIndex.storedPqCodebook(spark, dir, tag = tag).map(_.toSeq).toSeq,
         spark.table(AnnIndex.liveTables(spark, dir, tag).assign).count())
     }
-    val wh = new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath.stripSuffix("/") + "/"
     // the warehouse entry each step of the last walk changed, in order
     def stepTables: Seq[String] = CrashFs.paths.map { p =>
       val path = p.toUri.getPath
@@ -1404,7 +1417,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
       // build: every crash point builds its own index (its own tag),
       // with no generation before it. The retried indexes are the fresh
       // ones the removeBatch and retireBatch walks start from, which
-      // probe each of them.
+      // probe each of them; when the walks need more, more are built.
       val buildPoints = crashPoints(AnnIndex.ensureBuilt(spark, dir, tag = "b"))
       val built = probe("b")
       val clean = contents("b")
@@ -1415,7 +1428,8 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
         assert(contents(tag) == clean, s"build, step $k: the retry must build the clean generation")
         noLeftovers(s"build, step $k", tag, Set.empty)
       }
-      val freshIndexes = ("b" +: buildPoints.map(k => s"b$k")).iterator
+      val freshIndexes = ("b" +: buildPoints.map(k => s"b$k")).iterator ++
+        Iterator.from(1).map { i => AnnIndex.ensureBuilt(spark, dir, tag = s"f$i"); s"f$i" }
       val victims = built.map(_.getAs[Long]("vec_id")).distinct.take(3).toDF("vec_id")
 
       // requantize: one index crashed and retried at every point; each
@@ -1476,6 +1490,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
       hc.unset("fs.file.impl")
       hc.unset("fs.file.impl.disable.cache")
       spark.sparkContext.setLogLevel("WARN")
+      (warehouse -- before).foreach(Bucketed.resetTable(spark, _))
     }
   }
 

@@ -124,8 +124,9 @@ class ChainStoreManifestSpec extends AnyFunSuite with SparkSpec {
     store.writeStatus(7L, 7L)
     assert(store.droppedFiles.isEmpty && dropped.forall(f => !Files.exists(Paths.get(f))))
     assert(rowsIn(store) == rowsOf(chain))
-    // what a crashed write leaves: a data file no version names, a
-    // staging directory and a manifest temp file
+    // what a crashed write leaves: a data file no version names and a
+    // manifest temp file; and the staging directory of a root written
+    // before the store wrote its files in place
     val stray = Paths.get(root, "blocks", "bucket=0", "part-stray.parquet")
     Files.copy(Paths.get(store.liveFiles("blocks").head), stray)
     Files.createDirectories(Paths.get(root, "_staging", "x"))
@@ -160,15 +161,41 @@ class ChainStoreManifestSpec extends AnyFunSuite with SparkSpec {
       s.droppedFiles.map(rel).toSet)
   }
 
-  /** Every parquet file under the table directories is named by the
-    * newest version, live or dropped. */
-  private def assertNoLeftovers(dir: JPath, step: String): Unit = {
+  /** (the parquet files under the table directories, the files the
+    * newest version names, live or dropped). */
+  private def filesOf(dir: JPath): (Set[String], Set[String]) = {
     val s = new ChainStore(spark, dir.toString, CrashBucket)
     val named = (s.Tables.flatMap(s.liveFiles) ++ s.droppedFiles).map(p => Paths.get(p).toString).toSet
     val onDisk = Seq("blocks", "transactions", "logs").map(dir.resolve).filter(Files.exists(_))
       .flatMap(t => Files.walk(t).iterator().asScala.filter(_.toString.endsWith(".parquet")).map(_.toString))
-    assert(onDisk.toSet == named, s"$step: unnamed files ${onDisk.toSet -- named}, missing ${named -- onDisk}")
+    (onDisk.toSet, named)
+  }
+
+  private def unnamedFiles(dir: JPath): Set[String] = { val (onDisk, named) = filesOf(dir); onDisk -- named }
+
+  /** Every parquet file under the table directories is named by the
+    * newest version, live or dropped. */
+  private def assertNoLeftovers(dir: JPath, step: String): Unit = {
+    val (onDisk, named) = filesOf(dir)
+    assert(onDisk == named, s"$step: unnamed files ${onDisk -- named}, missing ${named -- onDisk}")
     assert(!Files.exists(dir.resolve("_staging")), s"$step: staging left behind")
+  }
+
+  /** A root holding heights 0..7 of `chain` in two appends, so bucket 1
+    * (heights 4..7) of every table holds two files: height 4, and 5..7. */
+  private def twoAppendRoot(chain: Seq[SimChain.SimBlock]): JPath = {
+    val root = Files.createTempDirectory("crash-template")
+    val t = new ChainStore(spark, root.toString, CrashBucket)
+    ingest(t, chain.take(5))
+    ingest(t, chain.slice(5, 8))
+    root
+  }
+
+  /** A copy of `template` under a new directory. */
+  private def copyOf(template: JPath, name: String): JPath = {
+    val dir = Files.createTempDirectory(name).resolve("root")
+    copyTree(template, dir)
+    dir
   }
 
   private def copyTree(from: JPath, to: JPath): Unit =
@@ -182,15 +209,15 @@ class ChainStoreManifestSpec extends AnyFunSuite with SparkSpec {
     * one of `allowed` states, and `replay` must then reach `replayed`
     * with no unnamed file left. Returns (steps crashed at, steps).
     *
-    * Every step the store's own code takes is crashed at: placing data
-    * files, the manifest temp file and its rename, garbage collection
-    * and cleanup. Of each run of steps inside one Spark or Hadoop
-    * write (~10 a write: job and task directories, the data file,
-    * task and job commit), the first, the middle and the last are
-    * crashed at, which keeps the spec near a minute; every such step
-    * leaves files only under the store's staging directory.
-    * GRAFT_CRASH_ALL=1 crashes at every step (132 for the four
-    * operations, ~140 s on a 4-core VM). */
+    * Every step the store's own code takes is crashed at: opening the
+    * root, the manifest temp file and its rename, garbage collection
+    * and cleanup. Of each run of steps inside Spark's writes (3 a
+    * write: the data file, its bucket directory and the job's cleanup;
+    * an append's three writes make one run), the first, the middle and
+    * the last are crashed at, 34 of the four operations' 46 steps;
+    * every such step leaves only files that no version names in the
+    * buckets the write touches. GRAFT_CRASH_ALL=1 crashes at all 46
+    * (~1 min on a 4-core VM). */
   private def crashEveryStep(name: String, template: JPath, op: ChainStore => Unit,
                              allowed: Seq[State], replay: ChainStore => Unit, replayed: State): (Int, Int) = {
     val work = Files.createTempDirectory(s"crash-$name")
@@ -229,13 +256,9 @@ class ChainStoreManifestSpec extends AnyFunSuite with SparkSpec {
 
   test("crash-point property: a crash at any file-system step of append, rollback, compaction or GC leaves the version before or after, and a replay lands the chain exactly once") {
     spark.sparkContext.hadoopConfiguration.set("fs.crashfs.impl", classOf[CrashFs].getName)
+    val start = System.nanoTime()
     val chain = SimChain.canonical(11)
-    // the template: heights 0..7 in two appends, so bucket 1 (heights
-    // 4..7) of every table holds two files: height 4, and 5..7
-    val template = Files.createTempDirectory("crash-template")
-    val t = new ChainStore(spark, template.toString, CrashBucket)
-    ingest(t, chain.take(5))
-    ingest(t, chain.slice(5, 8))
+    val template = twoAppendRoot(chain)
     val base = stateOf(template.toString)
     assert(base.rows == rowsOf(chain.take(8)) && base.status.contains((7L, 7L)) && base.dropped.isEmpty)
 
@@ -279,8 +302,80 @@ class ChainStoreManifestSpec extends AnyFunSuite with SparkSpec {
       val gcSteps = crashEveryStep("gc", gcTemplate, _.writeStatus(7L, 7L), Seq(compacted, collected),
         _.writeStatus(7L, 7L), collected)
       info(s"crash points (crashed at, steps): append $appendSteps, rollback $rollbackSteps, " +
-        s"compact $compactSteps, gc $gcSteps")
+        s"compact $compactSteps, gc $gcSteps" + f" in ${(System.nanoTime() - start) / 1e9}%.0f s")
     } finally spark.sparkContext.setLogLevel("WARN")
+  }
+
+  test("a clean processBatch, rollback or compaction writes its files in place: it renames nothing " +
+      "outside _manifest and takes a bounded number of file-system steps") {
+    spark.sparkContext.hadoopConfiguration.set("fs.crashfs.impl", classOf[CrashFs].getName)
+    val chain = SimChain.canonical(11)
+    val template = twoAppendRoot(chain)
+    // the bounds are the counts measured with in-place writes; through
+    // a staging tree and Hadoop's rename committer, processBatch took
+    // 55 steps, rollback 49 and compaction 21
+    Seq[(String, ChainStore => Unit, Int)](
+      ("processBatch", ingest(_, chain.slice(7, 11)), 17),
+      ("rollback", _.rollback(6), 14),
+      ("compaction", _.compact("logs"), 8)).foreach { case (name, op, bound) =>
+      val dir = copyOf(template, s"inplace-$name")
+      CrashFs.arm(Long.MaxValue)
+      try op(new ChainStore(spark, s"crashfs://$dir", CrashBucket)) finally CrashFs.disarm()
+      val steps = CrashFs.steps
+      val renamed = steps.filter(_.op == "rename").map(_.path.toUri.getPath.stripPrefix(dir.toString))
+      assert(renamed.nonEmpty && renamed.forall(_.startsWith("/_manifest/")),
+        s"$name renamed outside _manifest: $renamed")
+      // (open() still deletes the staging directory of an older root)
+      assert(!steps.exists(s => s.op != "delete" &&
+        Seq("_temporary", "_SUCCESS", "_staging").exists(s.path.toString.contains)),
+        s"$name made a staging or committer file")
+      assert(steps.size <= bound, s"$name took ${steps.size} file-system steps, bound $bound")
+      info(s"$name: ${steps.size} file-system steps, ${renamed.size} renames")
+    }
+  }
+
+  test("a write that fails inside Spark leaves no file behind, and the same store object's next " +
+      "append lands the batch exactly once") {
+    spark.sparkContext.hadoopConfiguration.set("fs.crashfs.impl", classOf[CrashFs].getName)
+    val chain = SimChain.canonical(11)
+    val template = twoAppendRoot(chain)
+    val batch = chain.slice(7, 11)
+    // the step that ends the first table's Spark write: the job's
+    // cleanup, after the data file is complete
+    val dry = copyOf(template, "fail-dry")
+    CrashFs.arm(Long.MaxValue)
+    try ingest(new ChainStore(spark, s"crashfs://$dry", CrashBucket), batch) finally CrashFs.disarm()
+    val k = CrashFs.steps.indexWhere(s => s.op == "delete" && s.path.getName.startsWith(".spark-staging")) + 1
+    assert(k > 0 && CrashFs.steps.take(k).exists(s => s.op == "create" && s.path.getName.endsWith(".parquet")),
+      "sanity: the write's data file precedes its job cleanup")
+    spark.sparkContext.setLogLevel("OFF")
+    try Seq(true, false).foreach { transient =>
+      val what = if (transient) "a transient fault" else "a fault that outlasts the write's own cleanup"
+      val dir = copyOf(template, "fail-live")
+      val store = new ChainStore(spark, s"crashfs://$dir", CrashBucket)
+      if (transient) CrashFs.fault(k) else CrashFs.arm(k)
+      val failed = try { ingest(store, batch); false } catch { case NonFatal(_) => true } finally CrashFs.disarm()
+      assert(failed, s"$what: no failure at step $k")
+      assert(rowsIn(store) == rowsOf(chain.take(8)), s"$what: the failed write must stay invisible")
+      if (transient)
+        assert(unnamedFiles(dir).isEmpty, s"$what: the failed write left ${unnamedFiles(dir)}")
+      else assert(unnamedFiles(dir).nonEmpty, s"sanity, $what: the data file outlived the cleanup")
+      ingest(store, batch)
+      assert(rowsIn(store) == rowsOf(chain), s"$what: the next append must land the batch exactly once")
+      assert(unnamedFiles(dir).isEmpty, s"$what: the next append left ${unnamedFiles(dir)}")
+    } finally spark.sparkContext.setLogLevel("WARN")
+  }
+
+  test("the in-place committer is the store's alone: a plain parquet write on the shared session " +
+      "still commits through the default committer") {
+    val root = newRoot("inplace-scope")
+    ingest(new ChainStore(spark, root, 10), SimChain.canonical(4))
+    assert(!Files.walk(Paths.get(root)).iterator().asScala.exists(p =>
+      p.getFileName.toString == "_SUCCESS" || p.toString.contains("_temporary")),
+      "the store's writes must not go through the rename committer")
+    val out = Files.createTempDirectory("plain-write").resolve("out")
+    spark.range(3).write.parquet(out.toString)
+    assert(Files.exists(out.resolve("_SUCCESS")), "a plain write must keep the default committer")
   }
 
   // ---- a reader under commits ---------------------------------------

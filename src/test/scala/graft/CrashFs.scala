@@ -9,9 +9,10 @@ import org.apache.hadoop.util.Progressable
 /** The local file system under the `crashfs:` scheme, with a crash
   * switch: once armed at k, its k-th mutating call (create, mkdirs,
   * rename, delete) and every one after it throw, the way a process
-  * that died at that step would make no further change. Register it
-  * with `fs.crashfs.impl`; the counter is JVM-wide, so it counts the
-  * calls of Spark tasks in local mode too. */
+  * that died at that step would make no further change; a fault at k
+  * fails the k-th call alone, a transient error in a process that goes
+  * on. Register it with `fs.crashfs.impl`; the counter is JVM-wide, so
+  * it counts the calls of Spark tasks in local mode too. */
 class CrashFs extends RawLocalFileSystem {
   override def getUri: URI = URI.create("crashfs:///")
   override def getScheme: String = "crashfs"
@@ -63,29 +64,39 @@ class CrashLocalFs extends CrashFs {
 
 object CrashFs {
   @volatile private var crashAt = Long.MaxValue
+  @volatile private var crashTo = Long.MaxValue
   private val calls = new AtomicLong()
-  private val made = new java.util.concurrent.ConcurrentLinkedQueue[(Boolean, Path)]()
+
+  /** One mutating call: the operation, the path it changed and whether
+    * the code of this project made it (rather than Spark's or Hadoop's
+    * writers). */
+  final case class Step(op: String, path: Path, byProject: Boolean)
+  private val made = new java.util.concurrent.ConcurrentLinkedQueue[Step]()
 
   /** Crash at the k-th mutating call from now on. */
-  def arm(k: Long): Unit = { calls.set(0L); made.clear(); crashAt = k }
+  def arm(k: Long): Unit = { calls.set(0L); made.clear(); crashTo = Long.MaxValue; crashAt = k }
+
+  /** Fail the k-th mutating call from now on, and no other. */
+  def fault(k: Long): Unit = { arm(k); crashTo = k }
 
   /** Stop crashing; returns the mutating calls made since [[arm]]. */
   def disarm(): Long = { crashAt = Long.MaxValue; calls.get() }
 
+  /** The mutating calls made since [[arm]], in order. */
+  def steps: Seq[Step] = made.toArray(Array.empty[Step]).toSeq
+
   /** For each call since [[arm]], in order: whether the code of this
-    * project made it (rather than Spark's or Hadoop's writers). */
-  def byProject: Seq[Boolean] = steps.map(_._1)
+    * project made it. */
+  def byProject: Seq[Boolean] = steps.map(_.byProject)
 
   /** For each call since [[arm]], in order: the path it changed. */
-  def paths: Seq[Path] = steps.map(_._2)
-
-  private def steps: Seq[(Boolean, Path)] = made.toArray.toSeq.map(_.asInstanceOf[(Boolean, Path)])
+  def paths: Seq[Path] = steps.map(_.path)
 
   private def step(what: String, p: Path): Unit = {
     val n = calls.incrementAndGet()
-    made.add((Thread.currentThread().getStackTrace.iterator
+    made.add(Step(what, p, Thread.currentThread().getStackTrace.iterator
       .map(_.getClassName).dropWhile(c => c.startsWith("java.") || c.startsWith("graft.CrashFs") ||
-        c.startsWith("org.apache.hadoop.fs.")).nextOption().exists(_.startsWith("graft.")), p))
-    if (n >= crashAt) throw new java.io.IOException(s"injected crash at step $n: $what $p")
+        c.startsWith("org.apache.hadoop.fs.")).nextOption().exists(_.startsWith("graft."))))
+    if (n >= crashAt && n <= crashTo) throw new java.io.IOException(s"injected crash at step $n: $what $p")
   }
 }
